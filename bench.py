@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Benchmark runner — headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+The LAST line printed is one JSON object:
+``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"work": {...}}``
 
 Methodology: each query is planned ONCE, a warm-up pass runs the
 physical plan (JIT + whole-stage-codegen Janino compile + file-footer
@@ -13,6 +14,15 @@ amortizes to zero against 100 TB of data; at sf0.1 it would otherwise
 dominate and misrepresent data throughput (measured: ~8 s Janino
 compile vs 0.1 s execution for the regex-heavy report queries).
 Set BENCH_WARMUP=0 to fold the one-time costs into the number.
+
+Work counters: each query runs in its own job group, and afterwards
+the group's executor CPU time, shuffle bytes, spill and stage count are
+read from Spark's status store (``perfbench.probes.SparkProbe``). They
+cover every job the query ran, construction included, so a regression
+shows as extra work — which host load barely moves — rather than as a
+wall-clock delta. Per-query counters go on a detail line; the headline
+line carries their totals, because only the last 2,000 bytes of output
+are kept. The gated end-to-end bench is ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -27,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from __spark_entry__ import queries
 from fintrack_etl_spark.session import get_spark
+from perfbench.probes import SparkProbe
 
 #: The headline subset — one representative per operator family, biased
 #: toward the scans/joins/windows that dominate a 100 TB workload.
@@ -93,7 +104,7 @@ CORE50 = HEADLINE + [
 ]
 
 
-def skew_bench(spark, sf_dir: str, run) -> dict[str, float]:
+def skew_bench(spark, sf_dir: str) -> dict[str, float]:
     """Deliberately skewed fixture (BASELINE.md §C): a zipf-ish ladder
     key over lineitem (~50 % of rows on key 0, 25 % on key 1, … tail
     uniform over 1024 keys), amplified 20× to ~12 M rows at sf0.1 so
@@ -145,19 +156,19 @@ def skew_bench(spark, sf_dir: str, run) -> dict[str, float]:
         except Exception:  # noqa: BLE001 — unset conf: restore via unset
             saved[k] = None
     try:
-        res["agg_unsalted"] = run(fact.groupBy("k").agg(F.sum("v").alias("s")))
-        res["agg_salted"] = run(salted_group_agg(fact, ["k"], "v", buckets=32))
+        res["agg_unsalted"] = time_count(fact.groupBy("k").agg(F.sum("v").alias("s")))
+        res["agg_salted"] = time_count(salted_group_agg(fact, ["k"], "v", buckets=32))
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        res["join_unsalted"] = run(fact.join(dim, "k"))
+        res["join_unsalted"] = time_count(fact.join(dim, "k"))
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m"
         )
         spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        res["join_aqe_skew_split"] = run(fact.join(dim, "k"))
-        res["join_salted"] = run(salted_join(fact, dim, ["k"], "v", buckets=32))
+        res["join_aqe_skew_split"] = time_count(fact.join(dim, "k"))
+        res["join_salted"] = time_count(salted_join(fact, dim, ["k"], "v", buckets=32))
     finally:
         for k, v in saved.items():
             if v is None:
@@ -175,110 +186,60 @@ def skew_bench(spark, sf_dir: str, run) -> dict[str, float]:
     return res
 
 
-def calibrate(spark, sf_dir: str) -> dict[str, float]:
-    """Host-weather micro-calibration (VERDICT r8 #2): two FIXED
-    micro-ops timed at bench start and again at bench end, recorded
-    into the bench JSON as ``calib_start`` / ``calib_end`` so
-    cross-round point deltas can be normalized numerically instead of
-    argued from bands. The r8-continuation session measured the same
-    tree swinging headline 2.36–5.61 s run-to-run with zero diff —
-    noisy-neighbor host weather; these two numbers are the
-    weather gauge. ``cpu_spin_sec``: 2 M iterations of a fixed 32-bit
-    LCG in pure Python — pure-CPU, no JVM, no I/O; scales with host
-    CPU contention only. ``scan8_sec``: 8 re-counts of the warmed
-    25-row nation scan — JVM task dispatch + scheduler latency, the
-    term that inflates every per-query number when the JVM is starved.
-    Both are O(100 ms) — noise-level cost against the bench itself."""
-    t0 = time.perf_counter()
-    x = 0
-    for _ in range(2_000_000):
-        x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-    cpu = round(time.perf_counter() - t0, 4)
-    scan = None
-    scan_warm = None
-    try:
-        n = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
-        rdd = n._jdf.queryExecution().toRdd()
-        rdd.count()  # warm: footer cache + codegen out of the gauge
-        t1 = time.perf_counter()
-        for _ in range(8):
-            rdd.count()
-        scan = round(time.perf_counter() - t1, 4)
-        # SECOND batch (r10): a fresh session's first batch carries a
-        # JIT-warmup term — r9's own record shows START gauges 0.38–0.56
-        # vs END gauges 0.12–0.21 on the same runs, so judging calmness
-        # from the first batch alone would brand every fresh-session
-        # start "weather" and no above-band family could ever earn the
-        # above_band (code-regression) verdict. The warmer batch
-        # separates the terms: true contention inflates BOTH batches;
-        # warmup inflates only the first.
-        t2 = time.perf_counter()
-        for _ in range(8):
-            rdd.count()
-        scan_warm = round(time.perf_counter() - t2, 4)
-    except Exception:  # noqa: BLE001 — calibration must never fail the bench
-        pass
-    return {"cpu_spin_sec": cpu, "scan8_sec": scan, "scan8_warm_sec": scan_warm}
+#: Per-query work counters read from the query's job group.
+WORK_KEYS = (
+    "task_cpu_s",
+    "shuffle_write_bytes",
+    "shuffle_read_bytes",
+    "spill_bytes",
+    "stages",
+)
 
 
-#: Calm-host gauge maxima (this node; BASELINE.md r9 calibration):
-#: spin ~0.23–0.26 s, scan8 ~0.12–0.21 s on a calm host. ABOVE either
-#: max ⇒ neighbor contention; below-min is a faster-than-calm host and
-#: counts as calm. Small spin headroom (0.27) because the LCG gauge
-#: jitters ±0.01 s even calm.
-CALM_GAUGE_MAX = {"cpu_spin_sec": 0.27, "scan8_sec": 0.21}
-
-#: Sealed calm-host band MAXIMA at sf0.1 (BASELINE.md §"sealed bands";
-#: compare bands, not points). Consulted only when sf == 0.1 — the
-#: verdict fields are omitted at other scale factors.
-FAMILY_BAND_MAX_SF01 = {
-    "headline": 2.61,
-    "core50": 6.19,
-    "full_exec": 41.5,
-    # skew micro-bench rows (r1–r9 calm history: unsalted 3.0–3.6,
-    # AQE split 0.38–0.84, salted 0.53–1.40)
-    "join_unsalted": 3.6,
-    "join_aqe_skew_split": 1.2,
-    "join_salted": 1.5,
-}
+def time_count(df, warm: bool = True) -> float:
+    """Seconds of one ``count`` over ``df``'s physical plan, run
+    JVM-side with no Python-side row transfer. ``toRdd()`` runs the
+    plan's shuffle and broadcast stages untimed; ``warm`` adds an
+    untimed count first, and the timed count reuses the same plan."""
+    rdd = df._jdf.queryExecution().toRdd()
+    if warm:
+        rdd.count()
+    t0 = time.time()
+    rdd.count()
+    return round(time.time() - t0, 3)
 
 
-def gauge_calm(calib: dict | None) -> bool | None:
-    """True iff both micro-gauges are at-or-below their calm maxima;
-    None when the gauge itself failed (no scan number). The scan term
-    uses the BEST of the cold and warmed batches (r10): the first
-    batch of a fresh session carries a JIT-warmup component that reads
-    as contention even on a calm host (r9 record: starts 0.38–0.56 vs
-    ends 0.12–0.21 on the same runs); genuine neighbor load inflates
-    both batches, so min() keys calmness on the contention term
-    alone."""
-    if not calib or calib.get("scan8_sec") is None:
-        return None
-    scans = [
-        s for s in (calib.get("scan8_sec"), calib.get("scan8_warm_sec"))
-        if s is not None
-    ]
-    return (
-        calib["cpu_spin_sec"] <= CALM_GAUGE_MAX["cpu_spin_sec"]
-        and min(scans) <= CALM_GAUGE_MAX["scan8_sec"]
-    )
+def run_with_watchdog(spark, work, timeout: float):
+    """Run ``work()`` in a worker thread; past ``timeout`` seconds cancel
+    every Spark job instead of hanging the whole bench (round 4: ONE
+    stuck query ⇒ rc=124 ⇒ no official numbers at all). Returns
+    ``(value, err)``: ``err`` is None, ``"timeout"``, or the class
+    name of the exception ``work`` raised."""
+    box: dict[str, object] = {}
+
+    def target() -> None:
+        try:
+            box["v"] = work()
+        except Exception as exc:  # noqa: BLE001 — recorded, not fatal
+            box["e"] = type(exc).__name__
+
+    th = threading.Thread(target=target, daemon=True)
+    th.start()
+    th.join(timeout)
+    if th.is_alive():
+        spark.sparkContext.cancelAllJobs()
+        th.join(30)
+        return None, "timeout"
+    return box.get("v"), box.get("e")
 
 
-def family_verdict(total: float | None, band_max: float, calm_flags) -> str:
-    """Mechanical gauge-aware read of one bench family (VERDICT r9 #4
-    — the arithmetic a reader previously had to do by hand): in_band
-    when the total sits inside the sealed calm-host band;
-    weather_suspect when it exceeds the band but ANY bracketing gauge
-    showed contention (re-run on a calm host before suspecting the
-    code); above_band when it exceeds the band with every gauge calm —
-    the only verdict that should be read as a code regression."""
-    if total is None:
-        return "no_data"
-    if total <= band_max:
-        return "in_band"
-    if any(flag is False for flag in calm_flags):
-        return "weather_suspect"
-    return "above_band"
+def work_totals(counters: dict[str, dict]) -> dict:
+    return {k: round(sum(c[k] for c in counters.values()), 3) for k in WORK_KEYS}
+
+
+def print_detail(metric: str, timings: dict, counters: dict) -> None:
+    """Per-query seconds and work counters, on a line of their own."""
+    print(json.dumps({"metric": metric, "queries": timings, "work": counters}), flush=True)
 
 
 def main() -> None:
@@ -287,7 +248,10 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     spark = get_spark("bench")
-    calib_start = calibrate(spark, sf_dir)
+    # SparkProbe fails on an empty SQL status store: record one execution
+    spark.range(1).collect()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    probe = SparkProbe(spark)
     qs = queries()
     names = [n for n in HEADLINE if n in qs]
     # Optional extras via BENCH_QUERIES=name1,name2 or "all"
@@ -297,45 +261,6 @@ def main() -> None:
     elif extra:
         names = [n for n in extra.split(",") if n in qs]
 
-    def run_df(df) -> float:
-        rdd = df._jdf.queryExecution().toRdd()
-        rdd.count()  # warm
-        t0 = time.time()
-        rdd.count()
-        return round(time.time() - t0, 3)
-
-    # Skew micro-bench (12 M-row fixture, the largest shuffle in the
-    # file) runs EARLY — right after the pinned codec slots — because
-    # it is measurably penalized by block-manager pressure from 70+
-    # warmed query plans (observed 0.56 s -> 3.4 s for the salted join
-    # when run last). It no longer runs FIRST: the r8-continuation
-    # diag showed its own fixture taxes the codec slots 2.3x when it
-    # precedes them (x22 cold 2.7 s on a fresh session vs 6.3 s after
-    # the skew shuffle) — both want the fresh session, and the codec
-    # family's 11 small plans pressure skew far less than skew's 12 M
-    # cached/shuffled rows pressure the Python-worker lanes.
-    def _run_skew():
-        box: dict[str, object] = {}
-
-        def _skew_work() -> None:
-            try:
-                box["v"] = skew_bench(spark, sf_dir, run_df)
-            except Exception as exc:  # noqa: BLE001 — recorded, not fatal
-                box["e"] = type(exc).__name__
-
-        th = threading.Thread(target=_skew_work, daemon=True)
-        th.start()
-        th.join(float(os.environ.get("BENCH_SKEW_TIMEOUT", "180")))
-        if th.is_alive():
-            spark.sparkContext.cancelAllJobs()
-            th.join(30)
-            print(json.dumps({"metric": "bench_skew_timeout"}), file=sys.stderr)
-        return box.get("v")
-
-    # Per-query watchdog: plan-build + execution run in a worker
-    # thread; if it exceeds the timeout, cancel every Spark job and
-    # record the sentinel instead of hanging the whole round (round 4:
-    # ONE stuck query ⇒ rc=124 ⇒ no official numbers at all).
     q_timeout = float(os.environ.get("BENCH_QUERY_TIMEOUT", "120"))
     #: failures are recorded HERE, never folded into summed metrics: a
     #: query that errors instantly must not inflate the official total
@@ -344,138 +269,50 @@ def main() -> None:
     errors: dict[str, str] = {}
     timeouts: list[str] = []
 
-    def run(name: str, warm: bool) -> float | None:
-        box: dict[str, object] = {}
+    def run(name: str, warm: bool, family: str, counters: dict[str, dict]) -> float | None:
+        # The pass is part of the group name: a query runs in up to
+        # three passes, and a group lists every job ever tagged with it.
+        group = f"bench:{family}:{name}"
 
-        def work() -> None:
-            try:
-                # label the jobs so the Spark UI / event log attributes
-                # every stage to its query (guide §1.3)
-                spark.sparkContext.setJobDescription(f"bench:{name}")
-                df = qs[name](spark, sf_dir)
-                # executes the full physical plan JVM-side (no
-                # Python-side row transfer) and reuses the cached plan
-                rdd = df._jdf.queryExecution().toRdd()
-                if warm:
-                    rdd.count()
-                t0 = time.time()
-                rdd.count()
-                box["t"] = round(time.time() - t0, 3)
-            except Exception as exc:  # noqa: BLE001 — recorded, not fatal
-                box["err"] = f"{type(exc).__name__}"
+        def timed() -> float:
+            # set in the worker thread: job groups are thread-local
+            spark.sparkContext.setJobGroup(group, group)
+            return time_count(qs[name](spark, sf_dir), warm)
 
-        th = threading.Thread(target=work, daemon=True)
-        th.start()
-        th.join(q_timeout)
-        if th.is_alive():
-            spark.sparkContext.cancelAllJobs()
-            th.join(30)
-            timeouts.append(name)
-            print(
-                json.dumps({"metric": "bench_query_timeout", "query": name}),
-                file=sys.stderr,
-            )
+        t, err = run_with_watchdog(spark, timed, q_timeout)
+        if err is not None:
+            if err == "timeout":
+                timeouts.append(name)
+                msg = {"metric": "bench_query_timeout", "query": name}
+            else:
+                errors[name] = err
+                msg = {"metric": "bench_query_error", "query": name, "err": err}
+            print(json.dumps(msg), file=sys.stderr)
             return None
-        if "err" in box:
-            errors[name] = str(box["err"])
-            print(
-                json.dumps(
-                    {"metric": "bench_query_error", "query": name, "err": box["err"]}
-                ),
-                file=sys.stderr,
-            )
-            return None
-        return box["t"]  # type: ignore[return-value]
+        probe.drain()
+        stats = probe.jobs_stats(group)
+        counters[name] = {k: round(stats[k], 3) for k in WORK_KEYS}
+        return t
 
-    # Pressure-sensitive entries run FIRST, on the fresh session
-    # (BEFORE the skew micro-bench — its 12 M-row fixture taxes the
-    # first codec slot 2.3× when it runs first — and before 200+ plans
-    # warm the block manager): the codec-bound mapInPandas family
-    # oscillated when
-    # executed late in the full pass — x22 2.1–8.8 s (VERDICT r6),
-    # p8/p9/x75 1.8–2× their fresh-session numbers (VERDICT r7 "What's
-    # wrong" #1: late-run block pressure read as regressions). The full
-    # pass reuses these pinned fresh-session measurements instead of
-    # re-running the entries under pressure; each entry still executes
-    # exactly once per bench, COLD (VERDICT r7 #4 dropped x22's
-    # warm-timing exception so full_total_sec is uniformly cold — the
-    # pool warmup below absorbs the ~10 s Python-worker spin-up that
-    # used to pollute the first cold codec number).
-    CODEC_PINNED = (
-        "x22_media_metadata",
-        "p8_real_pdf_roundtrip",
-        "p9_cid_pdf_roundtrip",
-        "p10_encrypted_pdf_roundtrip",
-        "x45_image_phash_dedup",
-        "x49_audio_segments",
-        "x52_png_roundtrip",
-        "x55_video_frame_sample",
-        "x75_audio_fingerprint_dedup",
-        "x78_rle_video_roundtrip",
-        "x79_adpcm_audio_roundtrip",
-    )
-    pinned_early: dict[str, float | None] = {}
-    if not extra and os.environ.get("BENCH_FULL", "1") != "0":
-        # (gated on BENCH_FULL: the full pass is the only consumer of
-        # the pinned measurements — without it the pool spin-up and the
-        # pinned runs would burn time and discard the numbers)
-        # Spin up the Python worker pool + Arrow lane once AND import
-        # the heavy pure-Python codec modules inside every worker: the
-        # pinned entries are the first Python-UDF plans in the file,
-        # and both the ~10 s pool startup and the per-worker module
-        # import (minipdf/minipng/multimodal are large modules,
-        # imported lazily on first batch) are infrastructure cost that
-        # must not land in their numbers — r8's three-run band showed
-        # p8/p9 swinging ±3 s on exactly this term.
-        def _warm_worker(batches):
-            import fintrack_etl_spark.multimodal  # noqa: F401
-            import fintrack_etl_spark.parse.minipdf  # noqa: F401
-            import fintrack_etl_spark.parse.minipng  # noqa: F401
-
-            yield from batches
-
-        try:
-            spark.range(1024).repartition(
-                spark.sparkContext.defaultParallelism  # one worker per slot
-            ).mapInPandas(_warm_worker, "id long").count()
-        except Exception:  # noqa: BLE001 — warmup is best-effort
-            pass
-        for name in CODEC_PINNED:
-            if name in qs:
-                pinned_early[name] = run(name, warm=False)
-
+    # Skew micro-bench (12 M-row fixture, the largest shuffle in the
+    # file) runs FIRST: it is measurably penalized by block-manager
+    # pressure from 70+ warmed query plans (observed 0.56 s -> 3.4 s
+    # for the salted join when run last).
     skew = None
-    skew_rerun = None
-    calib_skew_rerun = None
     if os.environ.get("BENCH_SKEW", "1") != "0" and not extra:
-        skew = _run_skew()
-        # The 12 M-row unsalted shuffle is the most bandwidth-sensitive
-        # op in the file — the designated weather victim (VERDICT r9
-        # #2: 51.2 s under load vs a 3.0–3.6 calm band). When the START
-        # gauge shows contention — or when any skew join row lands
-        # above its sealed band DESPITE a calm start (r11: a calm-start
-        # run carried join_unsalted 19.4 s from a mid-run storm and no
-        # rerun fired; same-session re-measurement read 3.1–3.7 s) —
-        # re-run it ONCE with its own fresh bracketing gauge so the
-        # artifact carries a second point instead of a single
-        # storm-distorted row. The band compare is gated on sf == 0.1
-        # (ADVICE r11): the sealed bands are sf0.1 maxima, so at any
-        # other scale factor every join row would read "above band"
-        # and the ONCE-rerun plus its calibration would fire on every
-        # run; other scales keep the calm-gauge-only trigger.
-        skew_above_band = sf == "0.1" and skew is not None and any(
-            skew.get(k) is not None and skew[k] > band
-            for k, band in FAMILY_BAND_MAX_SF01.items()
-            if k.startswith("join_")
+        skew, err = run_with_watchdog(
+            spark,
+            lambda: skew_bench(spark, sf_dir),
+            float(os.environ.get("BENCH_SKEW_TIMEOUT", "180")),
         )
-        if skew is not None and (
-            gauge_calm(calib_start) is False or skew_above_band
-        ):
-            calib_skew_rerun = calibrate(spark, sf_dir)
-            skew_rerun = _run_skew()
+        if err is not None:
+            kind = "timeout" if err == "timeout" else "error"
+            print(json.dumps({"metric": f"bench_skew_{kind}", "err": err}), file=sys.stderr)
 
-    timings = {name: run(name, warmup) for name in names}
+    work: dict[str, dict] = {}
+    timings = {name: run(name, warmup, "headline", work) for name in names}
     total = round(sum(t for t in timings.values() if t is not None), 3)
+    print_detail("headline_queries_sec", timings, work)
 
     out: dict[str, object] = {
         "metric": "headline_queries_total_sec",
@@ -483,7 +320,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "calib_start": calib_start,
+        "work": work_totals(work),
     }
     if errors:
         out["errors"] = dict(errors)
@@ -498,124 +335,69 @@ def main() -> None:
         # Fixed 50-query core set (frozen list, warm timings): the
         # round-over-round comparable number — registry growth adds
         # planning overhead to the FULL pass but cannot move this one.
-        core = {name: run(name, warm=warmup) for name in CORE50 if name in qs}
+        core_work: dict[str, dict] = {}
+        core = {name: run(name, warmup, "core50", core_work) for name in CORE50 if name in qs}
         out["core50_total_sec"] = round(
             sum(t for t in core.values() if t is not None), 3
         )
         out["core50_n_queries"] = len(core)
-        # Persist the per-query core-50 breakdown in the FINAL JSON too
-        # (r11): the r8→r10 core-50 drift investigation (VERDICT r10 #2)
-        # had totals but no per-query lines to diff because this dict
-        # only went to stdout, which the driver does not keep. With it
-        # in the artifact, any future drift names its queries for free.
-        out["core50_queries"] = core
-        print(json.dumps({"metric": "core50_queries_sec", "queries": core}), flush=True)
-
+        out["core50_work"] = work_totals(core_work)
+        print_detail("core50_queries_sec", core, core_work)
         if skew is not None:
             out["skew"] = skew
-        if skew_rerun is not None:
-            out["skew_rerun"] = skew_rerun
-            out["skew_rerun_calib"] = calib_skew_rerun
 
     # Full-registry pass (BENCH_FULL=0 to skip): every queries() entry,
-    # single timed execution each — the regression radar for the
+    # single cold execution each — the regression radar for the
     # non-headline families (parsers, reports, dedup/ANN, DDL). A total
     # budget stops the pass with partial results rather than running
     # the driver's window out.
     if os.environ.get("BENCH_FULL", "1") != "0" and not extra:
-        # 540 s (was 420, r9): calm-host full wall is ~250–320 s, but a
-        # weather-inflated run measured 420.5 s and skipped the tail —
-        # a skipped entry costs a correctness-visibility hole, while
-        # the extra headroom costs nothing on calm runs (the budget
-        # only exists to stop a PATHOLOGICAL run from eating the
-        # driver's whole window).
+        # Spin up the Python worker pool + Arrow lane once AND import
+        # the heavy pure-Python codec modules inside every worker: the
+        # ~10 s pool startup and the per-worker import of the large
+        # minipdf/minipng/multimodal modules are infrastructure cost
+        # that must not land in the first codec entry's number (r8's
+        # three-run band showed p8/p9 swinging ±3 s on exactly this).
+        def _warm_worker(batches):
+            import fintrack_etl_spark.multimodal  # noqa: F401
+            import fintrack_etl_spark.parse.minipdf  # noqa: F401
+            import fintrack_etl_spark.parse.minipng  # noqa: F401
+
+            yield from batches
+
+        try:
+            spark.range(1024).repartition(
+                spark.sparkContext.defaultParallelism  # one worker per slot
+            ).mapInPandas(_warm_worker, "id long").count()
+        except Exception:  # noqa: BLE001 — warmup is best-effort
+            pass
+
         budget = float(os.environ.get("BENCH_FULL_BUDGET_SEC", "540"))
         t0 = time.time()
-        full: dict[str, float] = {}
+        full: dict[str, float | None] = {}
+        full_work: dict[str, dict] = {}
         skipped: list[str] = []
         for name in qs:
-            if name in pinned_early:
-                full[name] = pinned_early[name]
-                continue
             if time.time() - t0 > budget:
                 skipped.append(name)
                 continue
-            full[name] = run(name, warm=False)
+            full[name] = run(name, False, "full", full_work)
         out["full_total_sec"] = round(
             sum(t for t in full.values() if t is not None), 3
         )
         out["full_wall_sec"] = round(time.time() - t0, 3)  # incl. planning
         out["full_n_queries"] = len(full)
+        out["full_work"] = work_totals(full_work)
         if skipped:
+            # every registry entry must have a row in the full pass, so
+            # a budget skip is loudly visible (VERDICT r5 #8)
             out["full_skipped_n"] = len(skipped)
             print(
                 json.dumps({"metric": "full_budget_exhausted", "skipped": skipped}),
                 flush=True,
             )
-        # bench honesty (VERDICT r5 #8): every registry entry must have
-        # a row in the full pass — a new entry landing after the final
-        # bench (r5's x82) or a budget skip is loudly visible, so
-        # "slowest entry never benched" cannot recur silently.
-        missing = [n for n in qs if n not in full]
-        if missing:
-            out["full_missing"] = missing
-            print(
-                json.dumps({"metric": "full_registry_incomplete", "missing": missing}),
-                file=sys.stderr,
-            )
-        # Per-query detail goes on its OWN line, before the headline line:
-        # the driver keeps only the last 2,000 bytes of output, and this
-        # dump is larger than that — it must never displace the headline.
-        print(
-            json.dumps({"metric": "full_registry_queries_sec", "queries": full}),
-            flush=True,
-        )
+        print_detail("full_registry_queries_sec", full, full_work)
 
-    # Closing weather gauge: same fixed micro-ops as calib_start, AFTER
-    # every phase ran — a calm start + stormy end (or vice versa) shows
-    # up as start/end divergence, pinning WHEN the weather moved.
-    out["calib_end"] = calibrate(spark, sf_dir)
-
-    # Mechanical gauge-aware verdicts (VERDICT r9 #4): one field per
-    # family so the artifact itself says in_band / weather_suspect /
-    # above_band — no reader gauge-arithmetic. Bands are sealed at
-    # sf0.1 only; other SFs just record the calm flags.
-    calm_flags = [
-        gauge_calm(calib_start),
-        gauge_calm(out["calib_end"]),
-        gauge_calm(calib_skew_rerun),
-    ]
-    verdicts: dict[str, object] = {
-        "calib_start_calm": gauge_calm(calib_start),
-        "calib_end_calm": gauge_calm(out["calib_end"]),
-    }
-    if out["sf"] == 0.1 and not extra:
-        verdicts["headline"] = family_verdict(
-            out["value"], FAMILY_BAND_MAX_SF01["headline"], calm_flags
-        )
-        if "core50_total_sec" in out:
-            verdicts["core50"] = family_verdict(
-                out["core50_total_sec"], FAMILY_BAND_MAX_SF01["core50"], calm_flags
-            )
-        if "full_total_sec" in out:
-            verdicts["full_exec"] = family_verdict(
-                out["full_total_sec"], FAMILY_BAND_MAX_SF01["full_exec"], calm_flags
-            )
-        if skew is not None:
-            # per-row verdict on the elementwise MIN across the run and
-            # the (gauge-gated) rerun — the standard noise-floor read
-            for key, band in FAMILY_BAND_MAX_SF01.items():
-                if not key.startswith("join_"):
-                    continue
-                vals = [
-                    s.get(key)
-                    for s in (skew, skew_rerun)
-                    if s is not None and s.get(key) is not None
-                ]
-                verdicts[f"skew_{key}"] = family_verdict(
-                    min(vals) if vals else None, band, calm_flags
-                )
-    out["gauge_verdicts"] = verdicts
     # Headline line LAST so it survives the driver's tail capture.
     print(json.dumps(out), flush=True)
     spark.stop()

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .aggregate import mode_per_group
+from .rowid import MID_LOCAL_BITS, MID_LOCAL_MASK, check_mid_layout
 
 #: sorted_neighborhood_pairs: widest partition layout whose rank
 #: offsets are attached as a literal-array lookup; wider layouts fall
@@ -342,13 +343,19 @@ def sorted_neighborhood_pairs(
         .withColumn("_mid", F.monotonically_increasing_id())
         .localCheckpoint(eager=False)
     )
-    pid = F.shiftright(F.col("_mid"), 33)
-    rn_local = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1)
+    pid = F.shiftright(F.col("_mid"), MID_LOCAL_BITS)
+    rn_local = F.col("_mid").bitwiseAND(F.lit(MID_LOCAL_MASK)) + F.lit(1)
     totals = (
-        local.groupBy(pid.alias("_pid")).agg(F.count(F.lit(1)).alias("_n"))
+        local.groupBy(pid.alias("_pid"))
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min("_mid").alias("_m0"),
+            F.max("_mid").alias("_m1"),
+        )
         .orderBy("_pid")
         .collect()
     )
+    check_mid_layout(totals)
     offsets, acc = {}, 0
     for r in totals:
         offsets[int(r["_pid"])] = acc

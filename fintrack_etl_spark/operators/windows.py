@@ -17,6 +17,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rowid import MID_LOCAL_BITS, check_mid_layout
+
+#: grouped_global_rank: most (group, partition) offset rows collected to
+#: the driver and shipped back as a broadcast relation (a few MiB);
+#: above it the caller's group key is too fine for this operator.
+_RANK_OFFSETS_MAX = 1 << 16
+
+
+class RankOffsetsTooLarge(ValueError):
+    """grouped_global_rank would collect too many offset rows."""
+
 
 def dedup_latest(
     df: DataFrame,
@@ -345,12 +356,23 @@ def grouped_global_rank(
         .withColumn("_mid", F.monotonically_increasing_id())
         .localCheckpoint(eager=False)
     )
-    pid = F.shiftright(F.col("_mid"), 33)
+    pid = F.shiftright(F.col("_mid"), MID_LOCAL_BITS)
     counts = (
         local.groupBy(pid.alias("_pid"), *group_cols)
-        .agg(F.count(F.lit(1)).alias("_n"), F.min("_mid").alias("_m0"))
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min("_mid").alias("_m0"),
+            F.max("_mid").alias("_m1"),
+        )
+        .limit(_RANK_OFFSETS_MAX + 1)
         .collect()
     )
+    if len(counts) > _RANK_OFFSETS_MAX:
+        raise RankOffsetsTooLarge(
+            f"grouped_global_rank: over {_RANK_OFFSETS_MAX} (group, partition) "
+            f"offset rows ({len(counts)} read) across {parts} partitions"
+        )
+    check_mid_layout(counts)
     if not counts:  # empty input: nothing to offset (and nothing to infer)
         return local.withColumn(rank_col, F.lit(1).cast("long")).drop(
             "_mid"

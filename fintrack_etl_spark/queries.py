@@ -1545,7 +1545,7 @@ def ext_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast counts) — every per-task sort capped at one range
     partition; x54/x77 run that form.
 
-    r12 10× probe (VERDICT r11 #9, `plans/r12/probe_core.jsonl`):
+    r12 10× probe (VERDICT r11 #9):
     0.61 → 1.04 s warm for 10× the orders — sub-linear at this scale,
     i.e. the 5-task cap is not yet the wall at 10×; it WILL become
     the wall once corpus/5 rows exceed one task's sort budget, which

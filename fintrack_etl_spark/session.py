@@ -41,6 +41,8 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256m",
     "spark.sql.session.timeZone": "UTC",
+    # pinned, not inherited: Spark 4 defaults ANSI on, the reference's 3.5 off
+    "spark.sql.ansi.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.files.maxPartitionBytes": "128m",

@@ -469,7 +469,8 @@ def scd2_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    events = events.select(key_col, ts_col, tracked_col, tie_col)
+    # dict.fromkeys: one column may fill two roles (tie_col == ts_col)
+    events = events.select(*dict.fromkeys([key_col, ts_col, tracked_col, tie_col]))
 
     def fold(key, pdfs, state: GroupState):
         pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(

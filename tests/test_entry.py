@@ -6,6 +6,7 @@ import __spark_entry__ as entrymod
 
 
 def test_entry_returns_rows(spark):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"  # pinned by get_spark
     df = entrymod.entry(spark)
     assert df.count() > 0
 

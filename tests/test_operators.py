@@ -955,6 +955,52 @@ def test_grouped_global_rank_null_group_keys(spark):
     assert sorted(r["pos"] for r in out) == list(range(1, 41))
 
 
+def test_mid_layout_tripwire_on_corrupted_totals():
+    """The rank operators' per-partition totals must show local record
+    numbers 0..n-1 under the assumed monotonically_increasing_id layout;
+    hand-built totals for a changed layout must raise, not rank."""
+    import pytest
+
+    from fintrack_etl_spark.operators.rowid import (
+        MID_LOCAL_BITS,
+        MidLayoutError,
+        check_mid_layout,
+    )
+
+    def row(pid, n, lo, hi):
+        base = pid << MID_LOCAL_BITS
+        return {"_pid": pid, "_n": n, "_m0": base + lo, "_m1": base + hi}
+
+    # partition 1 split over two groups, as grouped_global_rank collects it
+    good = [row(0, 5, 0, 4), row(1, 3, 0, 2), row(1, 4, 3, 6)]
+    check_mid_layout(good)
+    for bad in (
+        [row(0, 5, 0, 4), row(1, 7, 1, 7)],  # local ids start at 1
+        [row(0, 5, 0, 5)],  # a gap: max + 1 != count
+        [row(1, 3, 0, 2), row(1, 4, 4, 7)],  # a gap between group slices
+        # ids one bit narrower: partitions 0 and 1 both land on pid 0
+        [{"_pid": 0, "_n": 4, "_m0": 0, "_m1": (1 << (MID_LOCAL_BITS - 1)) + 1}],
+    ):
+        with pytest.raises(MidLayoutError):
+            check_mid_layout(bad)
+
+
+def test_grouped_global_rank_bounds_offsets_collect(spark, monkeypatch):
+    """The offsets collect is O(#groups x #partitions) driver rows; above
+    the module bound it raises a named error giving the counts."""
+    import pytest
+
+    from fintrack_etl_spark.operators import windows
+
+    df = spark.createDataFrame([(i, i % 5) for i in range(100)], ["id", "grp"])
+    monkeypatch.setattr(windows, "_RANK_OFFSETS_MAX", 4)
+    with pytest.raises(windows.RankOffsetsTooLarge, match=r"\(5 read\) across 2 partitions"):
+        windows.grouped_global_rank(df, ["grp"], ["id"], num_partitions=2)
+    monkeypatch.setattr(windows, "_RANK_OFFSETS_MAX", 10)
+    got = windows.grouped_global_rank(df, ["grp"], ["id"], num_partitions=2)
+    assert sorted(r["pos"] for r in got.where("grp = 0").collect()) == list(range(1, 21))
+
+
 def test_grouped_rank_ntile_decomposition(spark):
     """x77's tercile split = grouped_global_rank + the SQL-standard
     ntile formula. Pin the formula against Spark's own ntile() on

@@ -370,22 +370,20 @@ def test_stratified_sample_composes_with_streaming(spark, events_dir, tmp_path):
     assert got_ids == want_ids and len(got_ids) > 0
 
 
-def test_scd2_stream_matches_batch_closed_versions(spark, events_dir, tmp_path):
-    """transformWithStateInPandas SCD2: the closed versions emitted by
-    the stream must equal the batch scd2_from_changes rows whose
-    valid_to is set (the open versions live in stream state)."""
+def _check_scd2_stream(spark, events_dir, tmp_path, tie_col):
     from fintrack_etl_spark.operators.windows import scd2_from_changes
     from fintrack_etl_spark.streaming.pipelines import scd2_stream
 
     schema = _schema(spark, events_dir)
     stream = file_source_stream(spark, events_dir, schema)
-    out = scd2_stream(stream)
+    out = scd2_stream(stream, tie_col=tie_col)
     name = f"scd2_{uuid.uuid4().hex[:8]}"
     run_available_now(out, os.path.join(str(tmp_path), "ck"), name, output_mode="append")
     got = _rows(spark.table(name), "user_id", "valid_from")
 
+    order = list(dict.fromkeys(["ts", tie_col]))
     batch = scd2_from_changes(
-        spark.read.parquet(events_dir), ["user_id"], ["ts", "event_id"], ["event_type"]
+        spark.read.parquet(events_dir), ["user_id"], order, ["event_type"]
     )
     want = _rows(
         batch.where(F.col("valid_to").isNotNull()).select(
@@ -395,6 +393,20 @@ def test_scd2_stream_matches_batch_closed_versions(spark, events_dir, tmp_path):
         "valid_from",
     )
     assert len(got) == len(want) and got == want
+
+
+def test_scd2_stream_matches_batch_closed_versions(spark, events_dir, tmp_path):
+    """transformWithStateInPandas SCD2: the closed versions emitted by
+    the stream must equal the batch scd2_from_changes rows whose
+    valid_to is set (the open versions live in stream state)."""
+    _check_scd2_stream(spark, events_dir, tmp_path, "event_id")
+
+
+def test_scd2_stream_accepts_ts_as_tie_column(spark, events_dir, tmp_path):
+    """One column may fill two roles: with tie_col == ts_col the
+    pre-projection must not duplicate it into an ambiguous reference.
+    (user_id, ts) is unique in the fixture, so ts alone orders it."""
+    _check_scd2_stream(spark, events_dir, tmp_path, "ts")
 
 
 def test_stream_enrich_dimension_refreshes_between_drains(spark, events_dir, tmp_path):

@@ -3,6 +3,14 @@
 Each entry shows the operator tree (details stripped) plus exchange /
 codegen stats, so plan regressions are reviewable in diffs without
 re-running Spark. Regenerate with:  python tools/dump_plans.py
+
+Full plans for review of a plan change:
+
+    python tools/dump_plans.py --formatted OUTDIR NAME [NAME ...]
+
+writes ``explain("formatted")`` of each named query to
+``OUTDIR/NAME.txt``, at ``$SPARK_GRAFT_SF_DIR`` (default: the
+PLANS.md scale).
 """
 
 from __future__ import annotations
@@ -143,9 +151,29 @@ def skeleton(plan: str, max_lines: int = 40) -> str:
     return "\n".join(out)
 
 
+def dump_formatted(spark, qs, outdir: str, names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        df = qs[name](spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(outdir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange lines)")
+
+
 def main() -> None:
+    args = sys.argv[1:]
+    if args and (args[0] != "--formatted" or len(args) < 3):
+        sys.exit("usage: dump_plans.py [--formatted OUTDIR NAME [NAME ...]]")
     spark = get_spark("dump_plans")
     qs = queries()
+    if args:
+        dump_formatted(spark, qs, args[1], args[2:])
+        return
     lines = [
         "# PLANS — headline physical plans (sf0.01, auto-generated)",
         "",
