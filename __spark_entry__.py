@@ -5,14 +5,18 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-Query implementations live in ``fintrack_etl_spark.queries`` (relational
-core, SURVEY.md §2) and ``fintrack_etl_spark.queries_ext`` (text
-analysis / dedup / similarity-search extensions).
+Query implementations live in four modules: ``fintrack_etl_spark.queries``
+(relational core, SURVEY.md §2), ``queries_ext`` (text analysis / dedup /
+similarity-search extensions), ``queries_parse`` (bank-document parsers)
+and ``queries_reports`` (the reference's end-user reports).
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from functools import cache
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,249 +33,57 @@ def entry(spark: SparkSession) -> DataFrame:
     return a1_group_sum_flagship(spark, "/root/testdata/sf0.001")
 
 
-# Names with a green row in CORRECTNESS_r01 ∪ r02 ∪ r03 ∪ r04.
-# The driver's correctness gate caps at 50 entries sampled from the head of
-# this registry, so entries it has already verified sort LAST and everything
-# still lacking a driver-green row (including queries added this round, which
-# are never in this frozen set) sorts FIRST, in registry order.
-_DRIVER_CHECKED = frozenset({
-    # round 5 greens (CORRECTNESS_r05.json) — 49 of 50; the one red
-    # (x19_repetition_filter, float-average hash flake, rewritten on
-    # exact integer basis points this round) stays out and re-pins.
-    "p1_bb_statement_roundtrip", "p2_bb_bill_roundtrip",
-    "p3_bradesco_roundtrip", "p4_bb_bill_resumo_roundtrip",
-    "p5_bb_statement_header_roundtrip", "p6_bradesco_resumo_roundtrip",
-    "p7_binary_pdf_scan", "r1_monthly_by_category", "r2_by_category_parcelado",
-    "r3_recorrentes", "r4_top_gastos", "r5_top_parcelados",
-    "r6_compare_budget", "r7_forms_normalize", "r8_payments_report",
-    "ext_correlation", "x75_audio_fingerprint_dedup", "x1_dedup_exact",
-    "x2_fingerprint", "x3_ngram_jaccard", "x4_minhash_lsh",
-    "x6_embedding_near_dup", "x7_token_stats", "x8_quality_scores",
-    "x9_lang_id", "x10_bpe_estimate", "x11_knn_bruteforce", "x12_knn_lsh",
-    "x14_label_centroids", "x15_multimodal_features", "x16_dedup_clusters",
-    "x17_train_eval_split", "x18_knn_ivf_kmeans", "x20_knn_ivf_pq",
-    "x55_video_frame_sample", "x56_bfs_hops", "x57_skyline_parts",
-    "x58_temporal_reach", "x59_readability", "x60_conversion_pattern",
-    "x61_bm25_topk", "x62_winsorized_spend", "x63_ppjoin_pairs",
-    "x64_source_drift_tvd", "x65_bm25_search", "x66_sorted_neighborhood",
-    "x67_weighted_sssp", "x74_rrf_fusion", "p11_bank_pipeline_e2e",
-    # round 4 greens (CORRECTNESS_r04.json) — all 49; the one red row
-    # (ext_correlation, float-rounding flake, rewritten on exact
-    # integer sufficient statistics in r5) went green in r5.
-    "x29_quantize_embeddings", "ext_sql_entry_q3", "ext_order_priority_q4",
-    "ext_revenue_q6", "ext_volume_shipping_q7", "ext_market_share_q8",
-    "ext_profit_by_nation_q9", "ext_sql_entry_q10", "ext_important_stock_q11",
-    "ext_late_shipment_q12", "ext_left_join_count_q13", "ext_promo_share_q14",
-    "ext_top_supplier_q15", "ext_supplier_count_q16", "ext_avg_subquery_q17",
-    "ext_or_predicate_q19", "ext_excess_inventory_q20",
-    "ext_waiting_supplier_q21", "ext_not_exists_q22", "ext_min_cost_supplier_q2",
-    "ext_bloom_prune_join", "ext_incremental_join_view",
-    "ext_incremental_quantiles", "x38_triangle_count", "ext_profile_table",
-    "ext_histogram", "ext_string_agg", "ext_outlier_zscore", "ext_event_funnel",
-    "ext_cohort_retention", "ext_fuzzy_join", "ext_skew_profile",
-    "ext_referential_integrity", "ext_regression_slope", "ext_decile_stats",
-    "x22_media_metadata", "ext_rolling_wau", "ext_anomaly_mad",
-    "ext_event_transitions", "ext_exact_k_sample", "ext_attribution",
-    "ext_time_to_convert", "ext_session_paths", "x13_knn_ivf",
-    "x52_png_roundtrip", "x53_bpe_encode", "x54_training_shuffle",
-    "p9_cid_pdf_roundtrip", "p10_encrypted_pdf_roundtrip",
-    # round 3 greens (CORRECTNESS_r03.json)
-    "ext_interval_join", "ext_running_totals_state", "ext_versioned_merge",
-    "ext_table_changes", "ext_ewma", "ext_scd2_build", "ext_cdc_apply",
-    "ext_pit_join", "ext_entity_resolution", "ext_cusum_changepoint",
-    "ext_incremental_cusum", "ext_time_travel_read", "x51_countmin_sketch",
-    "x21_knn_ivfpq", "x5b_simhash_planted_dups", "x23_decontaminate",
-    "ext_token_budget_sample", "ext_pack_documents", "x24_tfidf_topk",
-    "x25_pii_redaction", "x26_unigram_lm_score", "x27_chunk_documents",
-    "x28_vocab_oov", "x30_quality_gate", "x31_semdedup", "ext_source_overlap",
-    "x32_feature_stats", "x33_incremental_corpus_dedup", "x34_bigram_pmi",
-    "x35_curation_pipeline", "x36_file_stats", "x37_contrastive_pairs",
-    "ext_audience_overlap", "x39_dup_rate_estimate", "x40_line_dedup",
-    "x41_copurchase_pairs", "x42_pagerank", "x43_canonical_pick",
-    "x44_span_coverage", "x45_image_phash_dedup", "x46_bpe_merges",
-    "x47_leakage_safe_split", "ext_pps_token_sample", "x48_corpus_datasheet",
-    "x49_audio_segments", "x50_feature_hash", "ext_corpus_diff",
-    "ext_mixture_waterfill", "p8_real_pdf_roundtrip",
-    # rounds 1-2
-    "a1_group_sum_flagship", "a2_group_sum_composite", "a3_filtered_agg",
-    "a4_watermark_max", "a6_global_sums", "a7_value_counts",
-    "a8_mode_per_group", "a9_describe_stats", "d2_replace_by_key",
-    "d4_incremental_watermark", "ext_alter_table_evolution",
-    "ext_approx_distinct", "ext_asof_join", "ext_count_distinct", "ext_cube",
-    "ext_exists_subquery", "ext_grouping_sets", "ext_having_join_q18",
-    "ext_json_extract", "ext_lag_lead", "ext_percentiles",
-    "ext_percentiles_approx", "ext_pivot", "ext_range_frame",
-    "ext_range_join", "ext_rank_family", "ext_rollup", "ext_running_sum",
-    "ext_salted_agg", "ext_salted_join", "ext_scalar_subquery",
-    "ext_schema_evolution", "ext_sessionize", "ext_setops",
-    "ext_sql_entry_q5", "ext_time_bucket_rollup", "ext_tumbling_window",
-    "ext_unpivot", "f11_normalize_cpf", "f12_categorize", "f18_brl_format",
-    "f1_brl_roundtrip", "f4_slugify", "f7_multi_format_dates",
-    "j1_budget_vs_actual", "j2_mode_backfill", "j3_merge_upsert",
-    "o1_top_abs", "o2_filtered_topn", "w1_dedup_latest", "w2_forward_fill",
-    "w3_per_group_head",
-    # round 6 greens (CORRECTNESS_r06.json — 45 of the 50-slot window;
-    # the 5 reds went green-eligible again via the r7 dtype fixes and
-    # re-greened in r7)
-    "x83_cc_largestar", "x84_temperature_mixture", "x85_ngram_novelty",
-    "x86_token_frequency_spectrum", "x68_fd_discovery",
-    "x69_bitemporal_revision", "x70_dsir_select", "x71_phrase_search",
-    "x72_association_rules", "x73_random_walks", "x76_substring_dedup",
-    "x77_ccnet_buckets", "x78_rle_video_roundtrip", "x79_adpcm_audio_roundtrip",
-    "x80_suffix_ranks", "x81_incremental_substring_dedup",
-    "x82_winnowing_fingerprints", "ext_gap_fill", "ext_min_max_by",
-    "ext_session_window", "ext_incremental_agg_merge", "ext_zorder_skipping",
-    "ext_heavy_hitters", "ext_incremental_distinct",
-    # round 7 greens (CORRECTNESS_r07.json — all 50 of the window: the
-    # five r6 dtype reds re-greened, the r6 value-sweep stragglers, the
-    # NULL-coercion boundary confirmations, the four new entries
-    # x87–x90, and the tier-2 auto-fill re-confirmations)
-    "x19_repetition_filter", "ext_array_agg", "ext_stratified_sample",
-    "ext_data_quality", "ext_merge_evolving", "x87_hopping_window",
-    "x88_poisson_bootstrap", "x89_tokenizer_fertility", "x90_char_collision",
-})
+#: Entries whose code changed since their last green gate row
+#: (``grouped_global_rank``, ``sorted_neighborhood_pairs``): they lead
+#: the gate window whatever the CORRECTNESS files say.
+_TOUCHED = ("x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood")
+
+#: Directory holding the per-round ``CORRECTNESS_r{N}.json`` gate results.
+_CORRECTNESS_DIR = Path(__file__).resolve().parent
 
 
-# Verified by the round-2 judge's gate replica (sf0.01) but never by the
-# driver itself — middle priority: below brand-new entries (no signal
-# from anyone), above driver-checked ones.
-_JUDGE_VERIFIED = frozenset({
-    "ext_gap_fill", "ext_min_max_by", "ext_array_agg", "ext_session_window",
-    "x1_dedup_exact", "x2_fingerprint", "x3_ngram_jaccard", "x4_minhash_lsh",
-    "x6_embedding_near_dup", "x7_token_stats",
-    "x8_quality_scores", "x9_lang_id", "x10_bpe_estimate",
-    # x13_knn_ivf left this set in round 4: its query gained a planted-
-    # dup value contract (was rows-only), so it needs a fresh gate slot
-    "x11_knn_bruteforce", "x12_knn_lsh", "x14_label_centroids",
-    "x15_multimodal_features", "x16_dedup_clusters", "x17_train_eval_split",
-    "x18_knn_ivf_kmeans", "ext_stratified_sample", "ext_incremental_agg_merge",
-    "ext_zorder_skipping", "ext_data_quality", "ext_heavy_hitters",
-    "ext_merge_evolving", "ext_incremental_distinct", "x19_repetition_filter",
-    "x20_knn_ivf_pq", "p1_bb_statement_roundtrip", "p2_bb_bill_roundtrip",
-    "p3_bradesco_roundtrip", "p4_bb_bill_resumo_roundtrip",
-    "p5_bb_statement_header_roundtrip", "p6_bradesco_resumo_roundtrip",
-    "p7_binary_pdf_scan", "r1_monthly_by_category", "r2_by_category_parcelado",
-    "r3_recorrentes", "r4_top_gastos", "r5_top_parcelados",
-    "r6_compare_budget", "r7_forms_normalize", "r8_payments_report",
-})
-
-
-# Entries needing a FRESH driver row this round even though they hold
-# green rows but do NOT fit in the exactly-50 rotation window below.
-# Round 12: EMPTY — every code-touched entry fits inside the window
-# (the whole point of this round's rotation, VERDICT r11 #1).
-_RECHECK = frozenset()
-
-
-# ROUND-12 ROTATION (VERDICT r11 "Next round" #1): code-touched
-# entries FIRST — the full r11 touch list (~30 query paths whose last
-# driver-green row predates their rewrite: the percentile family, j3,
-# the bb_statement consumers, p8–p10, the x22/x49/x52 codec fusions,
-# x63, x6, x29, x59, x90, ext_ewma, the 5 not-yet-reverified
-# local_rows consumers, the x3/x18/x20/x21 _RECHECK leftovers the r11
-# cap pushed out, and x80 whose suffix engine changed in 7b676f1)
-# plus this round's two rewrites (x41 pair expansion, x66
-# sorted-neighborhood ranking). Backfill to exactly 50 with the
-# STALEST remaining rows: 18 of the 28 remaining r7-stale entries, in
-# registry order. Values of every touched entry are expected
-# IDENTICAL — each was verified by the dtype-faithful replica
-# (232/232 at sf0.01 this round) and the r11 builder's parity
-# pytests; the fresh driver rows convert that secondary evidence into
-# ground truth.
-# Target: CORRECTNESS_r12 50/50 green; every r11/r12-touched path
-# carries a driver row on its CURRENT code; 232/232 cumulative holds.
-#
-# R13 PRE-STAGE: the stalest rows will then be the 10 leftover
-# r7-stale entries (ext_merge_evolving, x19, x28, x32, x33, x34, x39,
-# x74, x88, x89) + the oldest r8 rows — rotate those in, code-touched
-# entries first as always.
-_WINDOW_FIRST = (
-    # --- r12 code-touched ---
-    "x41_copurchase_pairs",
-    "x66_sorted_neighborhood",
-    # --- r11 code-touched, last driver-verified pre-rewrite ---
-    "ext_percentiles",
-    "ext_percentiles_approx",
-    "ext_anomaly_mad",
-    "ext_incremental_quantiles",
-    "j3_merge_upsert",
-    "p1_bb_statement_roundtrip",
-    "p11_bank_pipeline_e2e",
-    "r7_forms_normalize",
-    "r8_payments_report",
-    "p8_real_pdf_roundtrip",
-    "p9_cid_pdf_roundtrip",
-    "p10_encrypted_pdf_roundtrip",
-    "x22_media_metadata",
-    "x49_audio_segments",
-    "x52_png_roundtrip",
-    "x63_ppjoin_pairs",
-    "x6_embedding_near_dup",
-    "x29_quantize_embeddings",
-    "x59_readability",
-    "x90_char_collision",
-    "ext_ewma",
-    "x38_triangle_count",
-    "ext_profile_table",
-    "ext_audience_overlap",
-    "ext_pack_documents",
-    "x3_ngram_jaccard",
-    "x18_knn_ivf_kmeans",
-    "x20_knn_ivf_pq",
-    "x21_knn_ivfpq",
-    "x80_suffix_ranks",
-    # --- staleness backfill: oldest (r7) rows, registry order ---
-    "ext_salted_join",
-    "ext_pivot",
-    "j1_budget_vs_actual",
-    "j2_mode_backfill",
-    "ext_setops",
-    "w1_dedup_latest",
-    "w2_forward_fill",
-    "w3_per_group_head",
-    "ext_running_sum",
-    "ext_lag_lead",
-    "ext_array_agg",
-    "ext_cohort_retention",
-    "ext_referential_integrity",
-    "x83_cc_largestar",
-    "x4_minhash_lsh",
-    "x15_multimodal_features",
-    "ext_stratified_sample",
-    "ext_data_quality",
-)
-
-
-def _merge_registry(attr: str) -> dict:
+def _registry(attr: str) -> dict:
     from fintrack_etl_spark import queries as core
     from fintrack_etl_spark import queries_ext, queries_parse, queries_reports
 
     merged = dict(getattr(core, attr))
     for mod in (queries_ext, queries_parse, queries_reports):
         merged.update(getattr(mod, attr))
+    return merged
 
-    def tier(name: str) -> int:
-        if name in _RECHECK:
-            return 0  # values changed this round: old green row is stale
-        if name in _DRIVER_CHECKED:
-            return 2
-        if name in _JUDGE_VERIFIED:
-            return 1
-        return 0  # never driver-green: no slot to waste
 
-    ordered: dict = {}
-    # The pinned rotation outranks the tier sort UNCONDITIONALLY: with
-    # all 232 entries cumulatively driver-green (r7), the window's job
-    # is re-confirming the STALEST rows — tier-2 names are exactly the
-    # ones being rotated back in, so the old `tier(k) < 2` eligibility
-    # filter would empty the window.
-    ordered.update({k: merged[k] for k in _WINDOW_FIRST if k in merged})
-    ordered.update(
-        {k: v for k, v in merged.items() if tier(k) == 0 and k not in ordered}
-    )
-    for t in (1, 2):
-        ordered.update({k: v for k, v in merged.items() if tier(k) == t})
-    return ordered
+def _last_green() -> dict[str, int]:
+    """Newest round in which each entry's gate row was green: rows,
+    schema and hash all match and ``err`` is null."""
+    last: dict[str, int] = {}
+    for path in _CORRECTNESS_DIR.glob("CORRECTNESS_r*.json"):
+        rnd = path.stem.removeprefix("CORRECTNESS_r")
+        if not rnd.isdigit():
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("err") is None and all(
+                row.get(k) is True for k in ("rows_match", "schema_match", "hash_match")
+            ):
+                last[name] = max(int(rnd), last.get(name, 0))
+    return last
+
+
+@cache
+def _gate_order() -> tuple[str, ...]:
+    """Registry names in gate-window order, computed once per process.
+
+    The correctness gate checks only the first 50 entries, so
+    ``_TOUCHED`` leads, then entries by their last green round, stalest
+    first (no green row at all sorts first); ties keep registry order.
+    """
+    last = _last_green()
+    rest = [n for n in _registry("QUERIES") if n not in _TOUCHED]
+    return _TOUCHED + tuple(sorted(rest, key=lambda n: last.get(n, 0)))
+
+
+def _merge_registry(attr: str) -> dict:
+    merged = _registry(attr)
+    return {n: merged[n] for n in _gate_order() if n in merged}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

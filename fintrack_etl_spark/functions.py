@@ -42,12 +42,6 @@ def trailing_sign_money(c: Column | str) -> Column:
     return F.when(is_neg, -val).otherwise(val)
 
 
-def signed_by_flag(value: Column, sinal: Column, negative_flag: str = "D") -> Column:
-    """F3 — apply a +/- suffix column to a magnitude
-    (``bb_statement.py:173-178``)."""
-    return F.when(sinal == negative_flag, -value).otherwise(value)
-
-
 def brl_format(c: Column | str) -> Column:
     """F18 — ``1234.56 → 'R$ 1.234,56'`` (``compare_budget.py:108-111``).
 
@@ -55,18 +49,6 @@ def brl_format(c: Column | str) -> Column:
     """
     c = F.col(c) if isinstance(c, str) else c
     return F.concat(F.lit("R$ "), F.translate(F.format_number(c, 2), ",.", ".,"))
-
-
-def clamp_at_zero(c: Column | str) -> Column:
-    """F17 — ``max(x, 0)`` (``compare_budget.py:92``)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.greatest(c, F.lit(0.0))
-
-
-def pct_overrun(diff: Column, base: Column) -> Column:
-    """F15 — ``diff/base*100`` with NULL when base<=0
-    (``compare_budget.py:84-89``)."""
-    return F.when(base > 0, diff / base * 100.0)
 
 
 # ---------------------------------------------------------------------------
@@ -121,12 +103,6 @@ def normalize_cpf(c: Column | str) -> Column:
     return F.when(c.isNull() | (F.trim(c) == ""), None).otherwise(F.lpad(stripped, 11, "0"))
 
 
-def concat_pipe(*cols: Column | str) -> Column:
-    """F19 — ``historico | complemento`` concat (``bb_statement.py:143-148``)."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.concat_ws(" | ", *cols)
-
-
 def upper_squeeze(c: Column | str) -> Column:
     """F13 — upper + whitespace squeeze, the categorizer's input
     normalization (``categories_bb.py:219-220``)."""
@@ -138,31 +114,12 @@ def upper_squeeze(c: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 DATE_PATTERNS = ("yyyy-MM-dd", "dd/MM/yyyy", "yyyyMMdd", "ddMMyyyy")
-TS_PATTERNS = (
-    "yyyy-MM-dd HH:mm:ss",
-    "dd/MM/yyyy HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd",
-    "dd/MM/yyyy",
-)
 
 
 def to_date_multi(c: Column | str, patterns: tuple[str, ...] = DATE_PATTERNS) -> Column:
     """F7 — try date formats in order (``helpers.py:39-70``)."""
     c = F.col(c) if isinstance(c, str) else c
     return F.coalesce(*[F.try_to_timestamp(c, F.lit(p)).cast("date") for p in patterns])
-
-
-def to_timestamp_multi(c: Column | str, patterns: tuple[str, ...] = TS_PATTERNS) -> Column:
-    """F8 — try timestamp formats in order (``helpers.py:46-82``)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.coalesce(*[F.try_to_timestamp(c, F.lit(p)) for p in patterns])
-
-
-def normalize_date_column(c: Column | str) -> Column:
-    """F9 — trim + blank→NULL + multi-format parse (``helpers.py:100-117``)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return to_date_multi(null_if_blank(F.trim(c)))
 
 
 def assemble_partial_date(day_month: Column | str, competencia_year: Column) -> Column:
@@ -174,30 +131,9 @@ def assemble_partial_date(day_month: Column | str, competencia_year: Column) -> 
     return F.make_date(competencia_year, month, day)
 
 
-def ingestion_columns(df, date=None):
-    """F20 — constant ingestion lineage columns
-    (``etls_raw/main.py:300-315``)."""
-    d = F.lit(date).cast("date") if date is not None else F.current_date()
-    return (
-        df.withColumn("ingestao_date", d.cast("string"))
-        .withColumn("ingestao_year", F.year(d))
-        .withColumn("ingestao_month", F.month(d))
-        .withColumn("ingestao_day", F.dayofmonth(d))
-        .withColumn("ingestao_timestamp", F.current_timestamp())
-        .withColumn("dt_ingestao_dados", F.current_timestamp())
-    )
-
-
 # ---------------------------------------------------------------------------
 # Misc
 # ---------------------------------------------------------------------------
-
-
-def path_segments(path_col: Column | str) -> Column:
-    """F24 — split a landing path into segments
-    (``etls_raw/main.py:210-234``)."""
-    c = F.col(path_col) if isinstance(path_col, str) else path_col
-    return F.split(c, "/")
 
 
 def split_desc_city(desc: Column | str, max_tokens: int = 3) -> Column:

@@ -242,11 +242,6 @@ def ideal_partitions(df: DataFrame, target_mb: int = 256, cap: int = 4000) -> in
     return max(1, min(cap, int(size_mb // target_mb) + (1 if size_mb % target_mb else 0)))
 
 
-def repartition_for_write(df: DataFrame, target_mb: int = 256) -> DataFrame:
-    """I5 — stats-based repartition before a large write."""
-    return df.repartition(ideal_partitions(df, target_mb))
-
-
 def read_jsonl_quarantine(
     spark: SparkSession, path: str, schema: str
 ) -> tuple[DataFrame, DataFrame]:

@@ -14,20 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def group_sum(
-    df: DataFrame,
-    keys: list[str],
-    value: Column | str,
-    alias: str = "total",
-    desc: bool = True,
-) -> DataFrame:
-    """A1/A2 — totals per key(s), sorted (``monthly_summary.py:32-48``)."""
-    value = F.col(value) if isinstance(value, str) else value
-    out = df.groupBy(*keys).agg(F.sum(value).alias(alias))
-    order = F.desc(alias) if desc else F.asc(alias)
-    return out.orderBy(order, *[F.asc(k) for k in keys])
-
-
 def filtered_group_sum(
     df: DataFrame,
     predicate: Column,
@@ -52,16 +38,6 @@ def filtered_group_sum(
 def group_max(df: DataFrame, keys: list[str], value: str, alias: str | None = None) -> DataFrame:
     """A4 — watermark read: max per key (``datatrack_spark_utils.py:132-138``)."""
     return df.groupBy(*keys).agg(F.max(value).alias(alias or f"max_{value}"))
-
-
-def global_max(df: DataFrame, value: str):
-    """A5 — scalar max (``datatrack_spark_utils.py:185-186``)."""
-    return df.select(F.max(value)).first()[0]
-
-
-def global_sums(df: DataFrame, values: dict[str, str]) -> DataFrame:
-    """A6 — one-row global totals (``compare_budget.py:101-102``)."""
-    return df.agg(*[F.sum(c).alias(a) for c, a in values.items()])
 
 
 def value_counts(df: DataFrame, keys: list[str], alias: str = "n") -> DataFrame:
@@ -135,25 +111,7 @@ def describe_stats(df: DataFrame, value: str) -> DataFrame:
     )
 
 
-def is_empty(df: DataFrame) -> bool:
-    """A11 — empty-input detection (``datatrack_spark_utils.py:97-99``).
-
-    ``df.isEmpty()`` (limit-1 scan), not ``rdd.isEmpty()``.
-    """
-    return df.isEmpty()
-
-
 # --- engine extensions (SURVEY §2.4 note): Spark built-ins exposed ----------
-
-
-def rollup_sum(df: DataFrame, keys: list[str], value: str, alias: str = "total") -> DataFrame:
-    """Extension — hierarchical subtotals via ``rollup``."""
-    return df.rollup(*keys).agg(F.sum(value).alias(alias))
-
-
-def cube_sum(df: DataFrame, keys: list[str], value: str, alias: str = "total") -> DataFrame:
-    """Extension — all grouping-set combinations via ``cube``."""
-    return df.cube(*keys).agg(F.sum(value).alias(alias))
 
 
 def approx_distinct(df: DataFrame, keys: list[str], value: str, alias: str = "approx_nd", rsd: float = 0.05) -> DataFrame:

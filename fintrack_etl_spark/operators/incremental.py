@@ -1,52 +1,17 @@
-"""Incremental-load control (reference parity: D3/D4, SURVEY.md §2.9).
+"""Incremental loads and incremental aggregate maintenance
+(reference parity: D4, SURVEY.md §2.9).
 
 D4: the reference keeps a ``controle_carga`` Iceberg table keyed
 (entidade_trusted, input_table) holding the last ingestion timestamp
-consumed, reads the watermark, filters ``dt > last``, and records the
-new max after the run (``datatrack_spark_utils.py:102-217``).
-
-D3: per-file skip state — (path, mtime, size) triples in ``_state.json``
-(``extract_movimentacoes_folder.py:50-104``). Re-expressed as an
-anti-join of the current listing against the processed-file metadata
-frame.
-
-Both stay batch operators; the streaming analog (file-source checkpoint
-/ ``withWatermark``) lives in streaming/.
+consumed and filters ``dt > last`` (``datatrack_spark_utils.py:102-217``).
+The filter is a batch operator; the streaming analog (file-source
+checkpoint / ``withWatermark``) lives in streaming/.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-#: ``datatrack_spark_utils.py:108-116``
-CONTROL_SCHEMA = T.StructType(
-    [
-        T.StructField("entidade_trusted", T.StringType(), False),
-        T.StructField("input_table", T.StringType(), False),
-        T.StructField("last_dt_ingestao", T.TimestampType(), True),
-        T.StructField("last_run", T.TimestampType(), True),
-    ]
-)
-
-
-def empty_control_table(spark: SparkSession) -> DataFrame:
-    """D4 — bootstrap (``criar_tabela_controle``, ``:102-116``)."""
-    from ..io import local_rows
-
-    return local_rows(spark, [], CONTROL_SCHEMA)
-
-
-def read_watermarks(control: DataFrame, entity: str, inputs: list[str]) -> DataFrame:
-    """D4 — one watermark row per input (``:118-144``)."""
-    return (
-        control.filter(
-            (F.col("entidade_trusted") == entity) & F.col("input_table").isin(inputs)
-        )
-        .groupBy("input_table")
-        .agg(F.max("last_dt_ingestao").alias("last_dt_ingestao"))
-    )
 
 
 def incremental_filter(df: DataFrame, inc_col: str, last_value) -> DataFrame:
@@ -56,30 +21,6 @@ def incremental_filter(df: DataFrame, inc_col: str, last_value) -> DataFrame:
     if last_value is None:
         return df
     return df.filter(F.col(inc_col) > F.lit(last_value))
-
-
-def advance_watermark(
-    control: DataFrame,
-    consumed: DataFrame,
-    entity: str,
-    input_table: str,
-    inc_col: str,
-) -> DataFrame:
-    """D4 — record the new max after a successful load (``:192-217``).
-
-    Returns the new control-table state (latest-wins per key).
-    """
-    new_row = consumed.agg(
-        F.lit(entity).alias("entidade_trusted"),
-        F.lit(input_table).alias("input_table"),
-        F.max(inc_col).cast("timestamp").alias("last_dt_ingestao"),
-        F.current_timestamp().alias("last_run"),
-    )
-    from .upsert import merge_latest_wins
-
-    return merge_latest_wins(
-        control, new_row, keys=["entidade_trusted", "input_table"], order_col="last_dt_ingestao"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -176,17 +117,6 @@ def merge_distinct_state(state: DataFrame, delta_state: DataFrame, keys: list[st
 def finalize_distinct(state: DataFrame, keys: list[str], alias: str = "approx_nd") -> DataFrame:
     """Read-time estimate from the maintained sketch."""
     return state.select(*keys, F.hll_sketch_estimate("nd_sketch").cast("long").alias(alias))
-
-
-def unprocessed_files(listing: DataFrame, state: DataFrame) -> DataFrame:
-    """D3 — file-level change detection
-    (``extract_movimentacoes_folder.py:50-104``): a file is work iff its
-    (path, mtime, size) triple is not in the processed state."""
-    return listing.join(
-        F.broadcast(state.select("path", "mtime", "size")),
-        ["path", "mtime", "size"],
-        "left_anti",
-    )
 
 
 def merge_join_view(

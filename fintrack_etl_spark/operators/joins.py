@@ -1,4 +1,4 @@
-"""Joins (reference parity: J1-J5, SURVEY.md §2.3).
+"""Joins (reference parity: J1-J4, SURVEY.md §2.3).
 
 The reference's joins are pandas merges on the driver
 (``compare_budget.py:69-78``) and SQL MERGE (``datatrack_spark_utils.py:306-362``).
@@ -86,23 +86,9 @@ def mode_backfill(
     )
 
 
-def enrich_with_constants(df: DataFrame, constants: dict) -> DataFrame:
-    """J5 — attach document-level resumo fields to every row
-    (``bradesco_bill.py:332-335``) as literal columns."""
-    out = df
-    for name, value in constants.items():
-        out = out.withColumn(name, F.lit(value))
-    return out
-
-
 def semi_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
     """Extension — EXISTS (needed by MERGE matched-semantics, J3)."""
     return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
-    """Extension — NOT EXISTS (MERGE not-matched / idempotent replace D2)."""
-    return left.join(right, on, "left_anti")
 
 
 def asof_join(

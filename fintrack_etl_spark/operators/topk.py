@@ -9,20 +9,6 @@ carries a deterministic tie-break key (SURVEY §7 risk register).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def top_n_by_abs(
-    df: DataFrame,
-    value: str,
-    n: int = 15,
-    tie_breakers: list[str] | None = None,
-    alias: str = "valor_abs",
-) -> DataFrame:
-    """O1 — top N by absolute value (``monthly_summary.py:62-67``)."""
-    out = df.withColumn(alias, F.abs(F.col(value)))
-    order = [F.desc(alias)] + [F.asc(t) for t in (tie_breakers or [])]
-    return out.orderBy(*order).limit(n)
 
 
 def filtered_top_n(
@@ -33,12 +19,3 @@ def filtered_top_n(
 ) -> DataFrame:
     """O2/O5 — filter then top N (``monthly_summary.py:70-73``)."""
     return df.filter(predicate).orderBy(*order).limit(n)
-
-
-def sort_drop_helper(df: DataFrame, helper: Column, helper_name: str, also: list[Column] | None = None) -> DataFrame:
-    """O3 — sort by a computed key then drop it (``compare_budget.py:92-93``)."""
-    return (
-        df.withColumn(helper_name, helper)
-        .orderBy(F.desc(helper_name), *(also or []))
-        .drop(helper_name)
-    )

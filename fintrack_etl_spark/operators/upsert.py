@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .windows import dedup_latest
-
 
 def merge_latest_wins(
     target: DataFrame,
@@ -91,17 +89,6 @@ def replace_by_source_key(
     new_keys = source.select(lineage_key).distinct()
     kept = target.join(F.broadcast(new_keys), lineage_key, "left_anti")
     return kept.unionByName(source)
-
-
-def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — whole-row or keyed.
-
-    Keyed flavor delegates to the latest-wins window (D1); whole-row is
-    ``dropDuplicates`` (hash-aggregate, map-side combined).
-    """
-    if keys:
-        return dedup_latest(df, keys)
-    return df.dropDuplicates()
 
 
 def apply_changes(

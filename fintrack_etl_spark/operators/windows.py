@@ -92,31 +92,6 @@ def per_group_head(
 # --- extensions (SURVEY §2.5 note) -----------------------------------------
 
 
-def with_rank(df: DataFrame, keys: list[str], order: list[Column], dense: bool = False, alias: str = "rnk") -> DataFrame:
-    """Extension — rank / dense_rank per group."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    fn = F.dense_rank() if dense else F.rank()
-    return df.withColumn(alias, fn.over(w))
-
-
-def with_lag_lead(df: DataFrame, value: str, keys: list[str], order_col: str) -> DataFrame:
-    """Extension — previous/next value per group (gap & delta analysis)."""
-    w = Window.partitionBy(*keys).orderBy(order_col)
-    return df.withColumn(f"{value}_prev", F.lag(value).over(w)).withColumn(
-        f"{value}_next", F.lead(value).over(w)
-    )
-
-
-def running_sum(df: DataFrame, value: str, keys: list[str], order_col: str, alias: str = "running_total") -> DataFrame:
-    """Extension — cumulative sum per group (running balance)."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(alias, F.sum(value).over(w))
-
-
 def sessionize(
     df: DataFrame,
     ts_col: str,

@@ -100,21 +100,3 @@ def segment_id(is_boundary: Column, doc_id: str = "doc_id") -> Column:
     two boundaries share the id of the boundary that opened them."""
     w = doc_window(doc_id).rowsBetween(Window.unboundedPreceding, 0)
     return F.sum(is_boundary.cast("int")).over(w)
-
-
-def collect_joined(df: DataFrame, keys: list[str], line_col: str = "ln", order_col: str = "line_no") -> DataFrame:
-    """Order-stable concat of grouped lines: sort_array over
-    (order, line) structs then join — deterministic regardless of
-    partitioning."""
-    return (
-        df.groupBy(*keys)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col(order_col), F.col(line_col)))),
-                    lambda s: s[line_col],
-                ),
-                " ",
-            ).alias("joined")
-        )
-    )

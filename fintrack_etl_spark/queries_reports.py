@@ -185,15 +185,8 @@ ORACLES["r3_recorrentes"] = f"""
 
 @register("r4_top_gastos", None)
 def r4_top_gastos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Report 4 — top-15 by abs(valor), lanc_id tie-break
-    (TakeOrderedAndProject — no global sort)."""
-    lanc = reports.normalize_lancamentos(_lancamentos(spark, sf_dir))
-    return (
-        lanc.withColumn("valor_abs", F.abs("valor"))
-        .orderBy(F.desc("valor_abs"), "lanc_id")
-        .limit(15)
-        .select("lanc_id", "data", "descricao", "categoria", "subcategoria", "valor")
-    )
+    """Report 4 — top-15 by abs(valor), lanc_id tie-break."""
+    return reports.top_gastos(reports.normalize_lancamentos(_lancamentos(spark, sf_dir)))
 
 
 ORACLES["r4_top_gastos"] = f"""
@@ -206,14 +199,7 @@ ORACLES["r4_top_gastos"] = f"""
 @register("r5_top_parcelados", None)
 def r5_top_parcelados(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Report 5 — top-15 installment suspects by abs(valor)."""
-    lanc = reports.normalize_lancamentos(_lancamentos(spark, sf_dir))
-    return (
-        lanc.filter(F.col("parcelado_suspeito"))
-        .withColumn("valor_abs", F.abs("valor"))
-        .orderBy(F.desc("valor_abs"), "lanc_id")
-        .limit(15)
-        .select("lanc_id", "data", "descricao", "categoria", "subcategoria", "valor")
-    )
+    return reports.top_parcelados(reports.normalize_lancamentos(_lancamentos(spark, sf_dir)))
 
 
 ORACLES["r5_top_parcelados"] = f"""

@@ -64,39 +64,25 @@ def recorrentes_by_category(df: DataFrame) -> DataFrame:
     )
 
 
-_TOP_COLS = [
-    "data",
-    "descricao",
-    "categoria",
-    "subcategoria",
-    "valor",
-    "parcelado_suspeito",
-    "recorrente_suspeita",
-]
+_TOP_COLS = ["lanc_id", "data", "descricao", "categoria", "subcategoria", "valor"]
 
 
-def top_gastos(df: DataFrame, n: int = 15, tie_key: str = "descricao") -> DataFrame:
-    """Report 4 (``monthly_summary.py:62-67``) — top-N by ``abs(valor)``.
-    TakeOrderedAndProject: no global sort materialization, each
-    partition ships only its local top-N."""
+def top_gastos(df: DataFrame, n: int = 15) -> DataFrame:
+    """Report 4 (``monthly_summary.py:62-67``) — top-N by ``abs(valor)``,
+    ``lanc_id`` tie-break. TakeOrderedAndProject: no global sort
+    materialization, each partition ships only its local top-N."""
     return (
         df.withColumn("valor_abs", F.abs("valor"))
-        .orderBy(F.desc("valor_abs"), tie_key)
+        .orderBy(F.desc("valor_abs"), "lanc_id")
         .limit(n)
         .select(*_TOP_COLS)
     )
 
 
-def top_parcelados(df: DataFrame, n: int = 15, tie_key: str = "descricao") -> DataFrame:
+def top_parcelados(df: DataFrame, n: int = 15) -> DataFrame:
     """Report 5 (``monthly_summary.py:70-73``) — top-N installment
-    suspects."""
-    return (
-        df.filter(F.col("parcelado_suspeito"))
-        .withColumn("valor_abs", F.abs("valor"))
-        .orderBy(F.desc("valor_abs"), tie_key)
-        .limit(n)
-        .select("data", "descricao", "categoria", "subcategoria", "valor")
-    )
+    suspects, same order as :func:`top_gastos`."""
+    return top_gastos(df.filter(F.col("parcelado_suspeito")), n)
 
 
 def compare_budget(

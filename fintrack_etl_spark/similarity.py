@@ -730,18 +730,6 @@ def ivf_topk_kmeans(
 # ---------------------------------------------------------------------------
 
 
-def _normalized(v: Column, dims: int | None = None) -> Column:
-    """L2-normalize so subspace dot products SUM to the full cosine —
-    what lets ADC approximate cosine instead of raw L2.
-
-    The norm is ALWAYS the sequential fold, never the unrolled form:
-    this expression sits inside the per-element division lambda, where
-    an unrolled 2*dims-term norm would be re-evaluated per element
-    (the same duplication trap as the round-4 shingle regression)."""
-    n = l2_norm(v)
-    return F.transform(v, lambda x: x / n)
-
-
 def _subvectors(
     df: DataFrame,
     id_out: str,
