@@ -54,9 +54,9 @@ def explode_lines(
     the per-doc windows downstream cannot bound their task skew; use
     :func:`split_oversized` first to capture them as quarantine rows
     instead of just omitting them."""
-    guarded, _ = split_oversized(docs, doc_id, text_col, max_lines)
     return (
-        guarded.select(doc_id, F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "raw"))
+        docs.filter(F.size(F.split(F.col(text_col), "\n")) <= max_lines)
+        .select(doc_id, F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "raw"))
         .withColumn("ln", normalize_space(F.col("raw")))
         .filter(F.col("ln") != "")
         .drop("raw")

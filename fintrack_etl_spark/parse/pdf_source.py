@@ -16,14 +16,15 @@ Scale notes: binaryFile splits per FILE (a file never splits across
 tasks), so millions of small PDFs parallelize naturally;
 ``spark.sql.files.maxPartitionBytes`` packs small files per task. The
 decode emits (doc_path, text) and drops the payload immediately, so
-only text crosses the next shuffle.
+only text crosses the decode's own exchange.
 """
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,9 +114,33 @@ def binary_docs_to_text(
 ) -> DataFrame:
     """Arrow-batched binary→text: (doc_path, text, decode_error) — the
     adapter between the S1 scan and the line parsers
-    (``parse_bb_statement`` et al. take exactly (doc_id, text))."""
+    (``parse_bb_statement`` et al. take exactly (doc_id, text)).
+
+    Each document is decoded ONCE per query, however many branches
+    consume the result. The decode ends in an exchange on ``doc_path``
+    and then an ``observe`` of ``docs`` / ``decode_errors``; no consumer
+    filter can move below the observe node, so every branch plans the
+    same exchange subtree and Spark runs it once and reuses it
+    (``ReusedExchange``). Without it, a parser's union
+    branches each re-ran the Python decode, and each Python task costs
+    a fixed worker set-up, whatever its kernel does. The counts are read
+    after the first action through the returned frame's ``observation``
+    (a :class:`pyspark.sql.Observation`; its name is unique per call,
+    so decoded directories can be unioned)."""
 
     def _extract(batches: Iterator) -> Iterator:
         return extract_batches(batches, path_col, content_col)
 
-    return df.select(path_col, content_col).mapInPandas(_extract, EXTRACT_SCHEMA)
+    observation = Observation(f"pdf_source-{uuid.uuid4()}")
+    decoded = (
+        df.select(path_col, content_col)
+        .mapInPandas(_extract, EXTRACT_SCHEMA)
+        .repartition("doc_path")
+        .observe(
+            observation,
+            F.count(F.lit(1)).alias("docs"),
+            F.count("decode_error").alias("decode_errors"),
+        )
+    )
+    decoded.observation = observation
+    return decoded

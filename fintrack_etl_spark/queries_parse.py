@@ -715,9 +715,10 @@ def p11_bank_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule order, money parse) lands in a wrong count or cent sum.
 
     Scale: the two codec passes are Arrow-batched mapInPandas with a
-    repartition fan-out (no shuffle, payload dropped at decode); parse
-    and categorize are native column expressions; the only exchange is
-    the |categories|-row final groupBy."""
+    repartition fan-out (payload dropped at decode); the decoded text
+    crosses one exchange that the parser's branches share, so the codec
+    runs once per document; parse and categorize are native column
+    expressions; the report is a |categories|-row final groupBy."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -783,20 +784,14 @@ def p11_bank_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    # --- stage 3: distributed decrypt + extract. The extracted text is
-    # materialized ONCE (lazy checkpoint): the line parser fans into
-    # several filtered branches, and without the barrier each branch
-    # re-runs the whole encode→decrypt→extract Python codec pipeline
-    # (measured 39 s -> 7 s at the sf0.01 gate). This is also the
-    # reference's own lifecycle — extracted text lands in the raw zone
-    # before parsing (etls_raw/main.py:352-424).
+    # --- stage 3: distributed decrypt + extract
     decoded = binary_docs_to_text(binary).filter(F.col("decode_error").isNull())
     redocs = decoded.select(
         F.regexp_extract("doc_path", r"/bank/(\d+)\.pdf", 1)
         .cast("bigint")
         .alias("doc_id"),
         "text",
-    ).localCheckpoint(eager=False)
+    )
 
     # --- stages 4+5: parse, categorize (inside parse_bb_bill), report
     parsed = parse_bb_bill(redocs)

@@ -43,6 +43,16 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # pinned, not inherited: Spark 4 defaults ANSI on, the reference's 3.5 off
     "spark.sql.ansi.enabled": "true",
+    # PySpark 4 wraps every Column and functions call in a call-site
+    # capture (getActiveSession, conf.get, PySparkCurrentOrigin.set and
+    # clear over py4j, plus a Python stack walk). Building one
+    # doc_ingest batch's parse plan (24 PDFs, 4 cores) took ~7,000-8,000
+    # py4j round-trips with it on and ~2,800-3,800 with it off, and
+    # ~0.34 -> ~0.16 s of Python client CPU once warm. Runtime
+    # errors keep their SQL context but no longer name the Python line;
+    # pass extra_conf to get_spark to turn it back on while debugging
+    # (PySpark reads the flag once per process).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.files.maxPartitionBytes": "128m",

@@ -9,6 +9,7 @@ import __spark_entry__ as entrymod
 
 def test_entry_returns_rows(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"  # pinned by get_spark
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     df = entrymod.entry(spark)
     assert df.count() > 0
 

@@ -103,3 +103,40 @@ def test_encode_fake_pdf_is_inverse_of_decode(spark):
     out = binary_docs_to_text(binary).collect()
     assert out[0].text == "texto çãé\nmultilinha"
     assert out[0].decode_error is None
+
+
+def _fake_dir(tmp_path, n: int, corrupt: int = 0) -> str:
+    docs = {f"d{i}.pdf": FAKE_PDF_MARKER + f"linha {i}".encode("utf-8") for i in range(n)}
+    docs.update({f"bad{i}.pdf": b"\x00garbage" for i in range(corrupt)})
+    tmp_path.mkdir(exist_ok=True)
+    return _write_docs(tmp_path, docs)
+
+
+def test_branches_share_one_decode(spark, tmp_path):
+    """Two filtered branches of one decoded frame, unioned (the shape of
+    a parser's bill/statement split): the executed plan runs ONE
+    MapInPandas, and the other branch reads it through ReusedExchange."""
+    decoded = binary_docs_to_text(read_binary_docs(spark, _fake_dir(tmp_path, 4)))
+    first = F.col("doc_path").endswith("d0.pdf")
+    both = decoded.filter(first).unionByName(decoded.filter(~first))
+    assert len(both.collect()) == 4
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+    assert "ReusedExchange" in final, final
+
+
+def test_union_of_two_decoded_directories(spark, tmp_path):
+    """Each call observes under its own name: two decoded directories
+    union without DUPLICATED_METRICS_NAME and keep every row."""
+    a = binary_docs_to_text(read_binary_docs(spark, _fake_dir(tmp_path / "a", 3)))
+    b = binary_docs_to_text(read_binary_docs(spark, _fake_dir(tmp_path / "b", 2)))
+    rows = a.unionByName(b).collect()
+    assert len(rows) == 5
+    assert sorted(r.text for r in rows) == ["linha 0", "linha 0", "linha 1", "linha 1", "linha 2"]
+
+
+def test_observed_decode_counts(spark, tmp_path):
+    decoded = binary_docs_to_text(read_binary_docs(spark, _fake_dir(tmp_path, 2, corrupt=1)))
+    decoded.filter(F.col("decode_error").isNull()).count()
+    assert decoded.observation.get == {"docs": 3, "decode_errors": 1}
