@@ -34,9 +34,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 #: Entries whose code changed since their last green gate row
-#: (``grouped_global_rank``, ``sorted_neighborhood_pairs``): they lead
-#: the gate window whatever the CORRECTNESS files say.
-_TOUCHED = ("x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood")
+#: (``grouped_global_rank``, ``sorted_neighborhood_pairs``,
+#: ``binary_docs_to_text``, ``reports.top_gastos``): they lead the gate
+#: window whatever the CORRECTNESS files say.
+_TOUCHED = (
+    "x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood",
+    "p7_binary_pdf_scan", "p11_bank_pipeline_e2e", "r4_top_gastos", "r5_top_parcelados",
+)
 
 #: Directory holding the per-round ``CORRECTNESS_r{N}.json`` gate results.
 _CORRECTNESS_DIR = Path(__file__).resolve().parent

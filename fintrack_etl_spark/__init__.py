@@ -12,9 +12,16 @@ Design stance (SURVEY.md §7):
 * all row-wise logic is native Column expressions (JVM codegen) —
   Pandas UDFs only where built-ins genuinely can't express the
   semantics;
-* no driver-side ``collect()`` loops in any operator hot path;
+* driver-side ``collect()`` only at the bounded sites README's
+  "Driver collects carry metadata, not fact rows" lists, plus the
+  per-round convergence checks of the iterative operators
+  (``operators/graph.py``, ``operators/suffix.py``);
 * every SQL-expressible operator ships with a DuckDB oracle twin in
   ``__spark_entry__.py``.
+
+Imports nothing: ``python -m fintrack_etl_spark.worker_daemon`` runs
+this file in every Python worker before it prunes the path, and nothing
+may import pyspark before that.
 """
 
 __version__ = "0.1.0"

@@ -10,6 +10,7 @@ import __spark_entry__ as entrymod
 def test_entry_returns_rows(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"  # pinned by get_spark
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert spark.conf.get("spark.python.daemon.module") == "fintrack_etl_spark.worker_daemon"
     df = entrymod.entry(spark)
     assert df.count() > 0
 
@@ -29,12 +30,13 @@ def test_queries_run_at_smallest_sf(spark, sf_dir):
 def test_gate_order_head_is_derived():
     head = [
         "x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood",
+        "p7_binary_pdf_scan", "p11_bank_pipeline_e2e", "r4_top_gastos", "r5_top_parcelados",
         "ext_merge_evolving", "x19_repetition_filter", "x28_vocab_oov",
         "x32_feature_stats", "x33_incremental_corpus_dedup", "x34_bigram_pmi",
         "x39_dup_rate_estimate", "x74_rrf_fusion", "x88_poisson_bootstrap",
         "x89_tokenizer_fertility",
     ]
-    assert list(entrymod.queries())[:13] == head
+    assert list(entrymod.queries())[:17] == head
     assert list(entrymod.oracle_sql()) == list(entrymod.queries())
 
 
