@@ -15,7 +15,8 @@ Design stance (SURVEY.md §7):
 * driver-side ``collect()`` only at the bounded sites README's
   "Driver collects carry metadata, not fact rows" lists, plus the
   per-round convergence checks of the iterative operators
-  (``operators/graph.py``, ``operators/suffix.py``);
+  (``operators/graph.py`` with its driver ``operators/fixpoint.py``,
+  ``operators/suffix.py``);
 * every SQL-expressible operator ships with a DuckDB oracle twin in
   ``__spark_entry__.py``.
 

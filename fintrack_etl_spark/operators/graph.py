@@ -1,6 +1,17 @@
-"""Distributed connected components — cluster assignment for near-dup
-groups.
+"""Graph operators over edge DataFrames, each a distributed fixpoint
+rather than a driver-side loop over the graph:
 
+* ``connected_components`` and ``connected_components_star`` cluster
+  the near-dup pair graph (below); ``attach_clusters`` gives every
+  document its cluster id;
+* ``integer_pagerank`` is bounded power iteration in integer units;
+* ``bfs_hops``, ``temporal_reach``, ``weighted_sssp`` and
+  ``random_walks`` are frontier operators: each keeps only its
+  ``relax`` and ``merge`` rules, and the delta-iteration driver in
+  ``operators/fixpoint.py`` owns their round loop, checkpoints and
+  early exit.
+
+Connected components — cluster assignment for near-dup groups.
 The dedup family (exact hash, MinHash-LSH, SimHash, n-gram Jaccard —
 ``operators/dedup_text.py``) emits *pairs*; a training-data pipeline
 needs *clusters* ("keep one doc per duplicate group"). Transitive
@@ -30,8 +41,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .fixpoint import delta_iterate
 
 
 def connected_components(
@@ -296,64 +309,71 @@ def bfs_hops(
     one-column (node) frame. Returns (node, hop) with hop 0 for the
     sources themselves.
 
-    Scale shape — DELTA iteration (the Pregel/Flink incremental
-    form), not naive transitive closure:
-
-    * each round expands only the FRONTIER (nodes first reached last
-      round), never the whole reached set, so total join work is
-      O(edges within the explored ball), not O(rounds x edges);
-    * newly-seen nodes are found with a ``left_anti`` against the
-      reached set — the same hash exchange the union needs, no extra
-      shuffle shape;
-    * edge state is repartitioned by src ONCE and localCheckpointed;
-      every round's frontier join hashes on the same key, so the edge
-      side never re-exchanges;
-    * per-round ``localCheckpoint`` cuts the iterated lineage (same
-      discipline as connected_components above) and the early-exit
-      probe is an ``isEmpty`` on the already-materialized frontier —
-      free, no recomputation.
-
-    Rounds = min(max_hops, eccentricity of the source set); BFS over
-    short-diameter interaction graphs converges in single digits.
+    A delta iteration (scale shape in ``operators/fixpoint.py``): a
+    round's frontier is the nodes first reached in it, found with a
+    ``left_anti`` against the reached set — the same hash exchange the
+    union needs, no extra shuffle shape. Rounds = min(max_hops,
+    eccentricity of the source set); BFS over short-diameter
+    interaction graphs converges in single digits.
     """
-    edges = edges.select("src", "dst").distinct().repartition("src").localCheckpoint()
-    reached = (
-        sources.select("node")
-        .distinct()
-        .withColumn("hop", F.lit(0).cast("long"))
-        .repartition("node")
-        .localCheckpoint()
-    )
-    frontier = reached
-    for h in range(1, max_hops + 1):
-        expanded = (
-            edges.join(
-                frontier.select(F.col("node").alias("src")), "src"
-            )
+
+    def relax(e: DataFrame, frontier: DataFrame, reached: DataFrame, hop: int) -> DataFrame:
+        return (
+            e.join(frontier.select(F.col("node").alias("src")), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
+            .join(reached.select("node"), "node", "left_anti")
+            .withColumn("hop", F.lit(hop).cast("long"))
         )
-        new = (
-            expanded.join(reached.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h).cast("long"))
-            .repartition("node")
-            .localCheckpoint()
-        )
-        if new.isEmpty():
-            break
-        # reached stays a UNION of already-checkpointed frontiers —
-        # lineage depth is 1 regardless of round count, so there is
-        # nothing to cut, and skipping the union's own checkpoint
-        # saves one materialization job per round (the per-round jobs
-        # ARE the cost at gate scale: ~0.5 s fixed overhead each).
-        reached = reached.unionByName(new)
-        frontier = new
-    # the result is the union of the checkpointed frontiers and never
-    # references the repartitioned edge state — free it
-    from .memo import unpersist_checkpointed
 
-    unpersist_checkpointed(edges)
-    return reached
+    seed = sources.select("node").distinct().withColumn("hop", F.lit(0).cast("long"))
+    return delta_iterate(edges.select("src", "dst").distinct(), seed, relax, _union, max_hops)
+
+
+def _union(state: DataFrame, frontier: DataFrame) -> DataFrame:
+    """Merge rule of ``bfs_hops``' reached set and ``random_walks``'
+    corpus: a union of checkpointed frontiers, which needs no
+    checkpoint of its own (see ``operators/fixpoint.py``)."""
+    return state.unionByName(frontier)
+
+
+def _min_relax(
+    edges: DataFrame,
+    seed: DataFrame,
+    label: str,
+    max_hops: int,
+    cand: Column,
+    usable: Column | None = None,
+) -> DataFrame:
+    """Label-correcting delta iteration shared by ``temporal_reach``
+    and ``weighted_sssp``: each round, every edge leaving an improved
+    node (its label as ``_d``) and passing ``usable`` offers ``cand``
+    to its dst; a node's map-side-combined min offer that beats its
+    standing ``label`` (one left join) joins the improved set, which
+    replaces the node's state row (anti-join + union, lazily
+    checkpointed)."""
+
+    def relax(e: DataFrame, frontier: DataFrame, state: DataFrame, _rnd: int) -> DataFrame:
+        hop = e.join(frontier.select(F.col("node").alias("src"), F.col(label).alias("_d")), "src")
+        if usable is not None:
+            hop = hop.where(usable)
+        return (
+            hop.select(F.col("dst").alias("node"), cand.alias("_nd"))
+            .groupBy("node")
+            .agg(F.min("_nd").alias("_nd"))
+            .join(state, "node", "left")
+            .where(F.col(label).isNull() | (F.col("_nd") < F.col(label)))
+            .select("node", F.col("_nd").alias(label))
+        )
+
+    def merge(state: DataFrame, improved: DataFrame) -> DataFrame:
+        return (
+            state.join(improved.select("node"), "node", "left_anti")
+            .unionByName(improved)
+            .localCheckpoint(eager=False)
+        )
+
+    return delta_iterate(edges, seed, relax, merge, max_hops)
 
 
 def temporal_reach(
@@ -375,54 +395,13 @@ def temporal_reach(
     time) state enumeration — computes the exact answer; that
     monotonicity is what the recursive-CTE oracle of x58 checks.
 
-    Scale shape — delta iteration like ``bfs_hops``: edge state is
-    shuffled ONCE (repartition by src, checkpointed); each round
-    joins only the IMPROVED nodes (reach time newly set or lowered)
-    against it, takes a map-side-combined min per dst, and full-outer
-    merges into the |reached|-sized state. Convergence probe is an
-    isEmpty on the already-materialized improved set."""
-    edges = edges.select("src", "dst", "ts").distinct().repartition("src").localCheckpoint()
-    reach = (
-        sources.groupBy("node")
-        .agg(F.min("ts").alias("reach_ts"))
-        .repartition("node")
-        .localCheckpoint()
-    )
-    frontier = reach
-    for _ in range(max_hops):
-        cand = (
-            edges.join(
-                frontier.select(F.col("node").alias("src"), "reach_ts"), "src"
-            )
-            .filter(F.col("ts") >= F.col("reach_ts"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("ts").alias("cand_ts"))
-        )
-        merged = reach.join(cand, "node", "full_outer")
-        improved = (
-            merged.filter(
-                F.col("cand_ts").isNotNull()
-                & (F.col("reach_ts").isNull() | (F.col("cand_ts") < F.col("reach_ts")))
-            )
-            .select("node", F.col("cand_ts").alias("reach_ts"))
-            .repartition("node")
-            .localCheckpoint()
-        )
-        # LAZY checkpoint: the lineage cut still happens (next round's
-        # improved-job materializes it as a side effect), but no
-        # dedicated per-round job is scheduled for the reach state —
-        # at gate scale the per-round fixed job overhead IS the cost.
-        reach = (
-            merged.select(
-                "node", F.least("reach_ts", "cand_ts").alias("reach_ts")
-            )
-            .repartition("node")
-            .localCheckpoint(eager=False)
-        )
-        if improved.isEmpty():
-            break
-        frontier = improved
-    return reach
+    A delta iteration (scale shape in ``operators/fixpoint.py``): each
+    round joins only the IMPROVED nodes (reach time newly set or
+    lowered) against the edges, and ``_min_relax`` merges them into the
+    |reached|-sized state."""
+    edges = edges.select("src", "dst", "ts").distinct()
+    seed = sources.groupBy("node").agg(F.min("ts").alias("reach_ts"))
+    return _min_relax(edges, seed, "reach_ts", max_hops, F.col("ts"), F.col("ts") >= F.col("_d"))
 
 
 def weighted_sssp(
@@ -441,59 +420,12 @@ def weighted_sssp(
     ``edges`` is directed (src, dst, w) with non-negative integer
     weights (parallel edges collapse to their min); ``sources`` is a
     one-column (node) frame; returns (node, dist) for every node
-    reachable within ``max_hops`` edges.
-
-    Scale shape mirrors bfs_hops: the edge list shuffles ONCE
-    (repartition by src, localCheckpoint) and every round's frontier
-    join hashes the same key; the per-round candidate min is a
-    map-side-combined groupBy; the improved set is found with one
-    outer join against the standing distances; per-round
-    localCheckpoint cuts the iterated lineage and the early-exit
-    probe is a free isEmpty on the materialized frontier.
+    reachable within ``max_hops`` edges. Scale shape in
+    ``operators/fixpoint.py``; the relaxation is ``_min_relax``.
     """
-    edges = (
-        edges.select("src", "dst", "w")
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition("src")
-        .localCheckpoint()
-    )
-    dist = (
-        sources.select("node")
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .repartition("node")
-        .localCheckpoint()
-    )
-    frontier = dist
-    for _ in range(max_hops):
-        cand = (
-            edges.join(
-                frontier.select(F.col("node").alias("src"), F.col("dist").alias("_d")),
-                "src",
-            )
-            .select(F.col("dst").alias("node"), (F.col("_d") + F.col("w")).alias("_nd"))
-            .groupBy("node")
-            .agg(F.min("_nd").alias("_nd"))
-        )
-        improved = (
-            cand.join(dist, "node", "left")
-            .where(F.col("dist").isNull() | (F.col("_nd") < F.col("dist")))
-            .select("node", F.col("_nd").alias("dist"))
-            .repartition("node")
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
-            break
-        # Lazy checkpoint: lineage still cut (materialized by the next
-        # round's improved-job), no dedicated per-round job.
-        dist = (
-            dist.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=False)
-        )
-        frontier = improved
-    return dist
+    edges = edges.select("src", "dst", "w").groupBy("src", "dst").agg(F.min("w").alias("w"))
+    seed = sources.select("node").distinct().withColumn("dist", F.lit(0).cast("long"))
+    return _min_relax(edges, seed, "dist", max_hops, F.col("_d") + F.col("w"))
 
 
 def random_walks(
@@ -517,71 +449,34 @@ def random_walks(
     Walks terminate early at sink nodes (no out-edges). Returns one
     row per visited position: (walk_id, step, node), step 0 = start.
 
-    Scale shape: the ranked adjacency (rank + degree in ONE window
-    pass) is shuffled by src once and localCheckpointed — every
-    step's frontier join hashes on that same key with no
-    re-exchange; per-step state is |walks| rows (frontier-only, the
-    bfs_hops delta-iteration discipline), so total work is
-    O(walk_len x |walks|) probes regardless of graph size. At 100 TB
-    the adjacency is the big side (bucketed by src on disk) and the
-    walk frontier broadcasts."""
-    w = Window.partitionBy("src").orderBy("dst")
-    adj = (
-        edges.select("src", "dst")
-        .distinct()
-        .select(
-            "src",
-            "dst",
-            F.row_number().over(w).alias("rnk"),
-            F.count(F.lit(1)).over(Window.partitionBy("src")).alias("deg"),
-        )
-        .repartition("src")
-        .localCheckpoint()
+    A delta iteration (scale shape in ``operators/fixpoint.py``) over
+    the ranked adjacency (rank + degree in ONE window pass): each
+    step's frontier is |walks| rows, so total work is O(walk_len x
+    |walks|) probes regardless of graph size, and the corpus is the
+    union of the checkpointed frontiers. At 100 TB the adjacency is
+    the big side (bucketed by src on disk) and the walk frontier
+    broadcasts."""
+    by_src = Window.partitionBy("src")
+    adj = edges.select("src", "dst").distinct().select(
+        "src",
+        "dst",
+        F.row_number().over(by_src.orderBy("dst")).alias("rnk"),
+        F.count(F.lit(1)).over(by_src).alias("deg"),
     )
-    replicas = starts.sparkSession.range(1, n_walks_per_start + 1).select(
-        F.col("id").alias("i")
+    replicas = starts.sparkSession.range(1, n_walks_per_start + 1).select(F.col("id").alias("i"))
+    seed = starts.select("node").distinct().crossJoin(F.broadcast(replicas)).select(
+        F.concat_ws("#", "node", "i").alias("walk_id"), F.lit(0).alias("step"), "node"
     )
-    frontier = (
-        starts.select("node")
-        .distinct()
-        .crossJoin(F.broadcast(replicas))
-        .select(
-            F.concat_ws("#", "node", "i").alias("walk_id"),
-            F.lit(0).alias("step"),
-            "node",
-        )
-        .localCheckpoint()
-    )
-    out = frontier
-    for t in range(1, walk_len + 1):
-        pick = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", "walk_id", F.lit(str(t)), "src")), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.col("deg")
-            + 1
-        )
-        frontier = (
-            frontier.select("walk_id", F.col("node").alias("src"))
-            .join(adj, "src")
-            .filter(F.col("rnk") == pick)
-            .select(
-                "walk_id", F.lit(t).alias("step"), F.col("dst").alias("node")
-            )
-            .localCheckpoint()
-        )
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier)
-    # the walk corpus is the union of the checkpointed per-step
-    # frontiers; the ranked adjacency is not referenced by it — free it
-    from .memo import unpersist_checkpointed
 
-    unpersist_checkpointed(adj)
-    return out.select(
-        "walk_id", F.col("step").cast("long").alias("step"), "node"
-    )
+    def step(e: DataFrame, frontier: DataFrame, _corpus: DataFrame, t: int) -> DataFrame:
+        md5 = F.md5(F.concat_ws("|", "walk_id", F.lit(str(t)), "src"))
+        pick = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long") % F.col("deg") + 1
+        return (
+            frontier.select("walk_id", F.col("node").alias("src"))
+            .join(e, "src")
+            .filter(F.col("rnk") == pick)
+            .select("walk_id", F.lit(t).alias("step"), F.col("dst").alias("node"))
+        )
+
+    out = delta_iterate(adj, seed, step, _union, walk_len, key=())
+    return out.select("walk_id", F.col("step").cast("long").alias("step"), "node")

@@ -31,12 +31,13 @@ def test_gate_order_head_is_derived():
     head = [
         "x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood",
         "p7_binary_pdf_scan", "p11_bank_pipeline_e2e", "r4_top_gastos", "r5_top_parcelados",
+        "x56_bfs_hops", "x58_temporal_reach", "x67_weighted_sssp", "x73_random_walks",
         "ext_merge_evolving", "x19_repetition_filter", "x28_vocab_oov",
         "x32_feature_stats", "x33_incremental_corpus_dedup", "x34_bigram_pmi",
         "x39_dup_rate_estimate", "x74_rrf_fusion", "x88_poisson_bootstrap",
         "x89_tokenizer_fertility",
     ]
-    assert list(entrymod.queries())[:17] == head
+    assert list(entrymod.queries())[:21] == head
     assert list(entrymod.oracle_sql()) == list(entrymod.queries())
 
 

@@ -376,3 +376,78 @@ def test_cc_star_all_self_loops(spark):
         for r in connected_components_star(df).collect()
     }
     assert got == {3: 3, 5: 5}
+
+
+def _rdd_id(df):
+    """Id of the persisted RDD behind a localCheckpoint-ed DataFrame."""
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _persisted(spark, rdd_id):
+    return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+
+
+@pytest.mark.parametrize(
+    "max_rounds, relaxes, merges, nodes",
+    [(10, 3, 2, {1, 2, 3}), (1, 1, 1, {1, 2})],
+    ids=["empty_frontier", "round_cap"],
+)
+def test_delta_iterate_exits_and_frees_edge_state(spark, max_rounds, relaxes, merges, nodes):
+    """Chain 1 -> 2 -> 3: round 3's frontier is empty, so it stops
+    there without merging it; with max_rounds=1 the cap stops it.
+    Either way the pinned edge state is unpersisted on exit."""
+    from fintrack_etl_spark.operators.fixpoint import delta_iterate
+
+    calls = {"relax": [], "merge": 0}
+
+    def relax(edges, frontier, state, rnd):
+        calls["relax"].append((rnd, edges))
+        return edges.join(frontier.select(F.col("node").alias("src")), "src").select(
+            F.col("dst").alias("node")
+        )
+
+    def merge(state, frontier):
+        calls["merge"] += 1
+        return state.unionByName(frontier)
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
+    seed = spark.createDataFrame([(1,)], ["node"])
+    out = delta_iterate(edges, seed, relax, merge, max_rounds)
+    assert [r for r, _ in calls["relax"]] == list(range(1, relaxes + 1))
+    assert calls["merge"] == merges
+    pinned = {_rdd_id(e) for _, e in calls["relax"]}
+    assert len(pinned) == 1
+    assert not _persisted(spark, pinned.pop())
+    assert {r["node"] for r in out.collect()} == nodes
+
+
+@pytest.mark.parametrize(
+    "op, edges, sources",
+    [
+        ("weighted_sssp", [("a", "b", 1), ("b", "c", 2)], [("a",)]),
+        ("temporal_reach", [("a", "b", 1), ("b", "c", 2)], [("a", 0)]),
+    ],
+)
+def test_label_correcting_ops_free_edge_state(spark, monkeypatch, op, edges, sources):
+    """The (src, dst, weight-or-ts) edge state is the only checkpoint
+    with a src column; after the result is collected it must no
+    longer be persisted."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from fintrack_etl_spark.operators import graph
+
+    pinned = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *a, **kw):
+        out = checkpoint(self, *a, **kw)
+        if "src" in out.columns:
+            pinned.append(_rdd_id(out))
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    e_df = spark.createDataFrame(edges, ["src", "dst", "w" if op == "weighted_sssp" else "ts"])
+    s_df = spark.createDataFrame(sources, ["node"] if op == "weighted_sssp" else ["node", "ts"])
+    assert len(getattr(graph, op)(e_df, s_df).collect()) == 3
+    assert len(pinned) == 1
+    assert not _persisted(spark, pinned[0])

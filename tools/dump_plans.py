@@ -10,7 +10,15 @@ Full plans for review of a plan change:
 
 writes ``explain("formatted")`` of each named query to
 ``OUTDIR/NAME.txt``, at ``$SPARK_GRAFT_SF_DIR`` (default: the
-PLANS.md scale).
+PLANS.md scale). It also writes ``OUTDIR/NAME.initial.txt``: the
+pre-AQE initial plan of every SQL execution that building the query
+and one ``collect`` of it ran, in order, with expression, plan,
+operator and RDD ids and range-sampled rank offsets normalized.
+Iterative builders (the fixpoint operators) run most of their plans
+as eager checkpoint and probe jobs before the returned DataFrame
+exists, so only this file makes them diffable between two checkouts.
+Compare initial plans, not AQE's final ones: those change from run
+to run (broadcast build side, range-sample offsets).
 """
 
 from __future__ import annotations
@@ -116,13 +124,15 @@ SUPPLEMENT = [
     "ext_corpus_diff",
     "ext_mixture_waterfill",
     # round 4 additions (NOT x56_bfs_hops / x58_temporal_reach: their
-    # iterative builders return localCheckpoint scans — nothing to pin)
+    # iterative builders return localCheckpoint scans — no skeleton to
+    # pin; diff their per-execution plans with --formatted instead)
     "x55_video_frame_sample",
     "x57_skyline_parts",
     "x59_readability",
     "x60_conversion_pattern",
     # rounds 5-7 additions (NOT x83_cc_largestar: iterative builder
-    # returns a localCheckpoint scan — nothing to pin)
+    # returns a localCheckpoint scan — no skeleton to pin; diff its
+    # per-execution plans with --formatted instead)
     "x63_ppjoin_pairs",
     "x84_temperature_mixture",
     "x85_ngram_novelty",
@@ -151,18 +161,67 @@ def skeleton(plan: str, max_lines: int = 40) -> str:
     return "\n".join(out)
 
 
+def initial_plan(desc: str) -> str:
+    """The pre-AQE plan in one execution's formatted plan description:
+    the ``Initial Plan`` tree (the whole tree when AQE did not wrap the
+    plan) plus the detail blocks of its operators, with ids normalized
+    so that two runs of the same plan compare equal."""
+    tree, _, details = desc.removeprefix("== Physical Plan ==\n").partition("\n\n\n")
+    head, marker, initial = tree.partition("+- == Initial Plan ==\n")
+    lines = [ln[3:] for ln in initial.splitlines()] if marker else head.splitlines()
+    order: dict[str, str] = {}
+    for ln in lines:
+        if m := re.search(r" \((\d+)\)$", ln):
+            order.setdefault(m.group(1), str(len(order) + 1))
+    blocks = {
+        int(order[m.group(1)]): b
+        for b in details.split("\n\n")
+        if (m := re.match(r"\((\d+)\) ", b)) and m.group(1) in order
+    }
+    text = "\n".join(lines) + "\n\n" + "\n\n".join(b for _, b in sorted(blocks.items()))
+    text = re.sub(
+        r"(?m)(^| )\((\d+)\)(?= |$)", lambda m: f"{m.group(1)}({order.get(m.group(2), '?')})", text
+    )
+    text = re.sub(r" \[codegen id : \d+\]", "", text)
+    text = re.sub(r"#\d+", "#", text)
+    # per-partition offsets of a global rank are collected from a
+    # range-partitioned sample, so they change from run to run
+    text = re.sub(r"values: \[[\d,]+\]\)\[_pid#\]", "values: [..])[_pid#]", text)
+    text = re.sub(r"RDD\[\d+\] at [^,]*", "RDD[]", text)  # id and call site
+    return re.sub(r"plan_id=\d+", "plan_id=", text)
+
+
+def _executions(spark) -> dict:
+    """SQL execution id -> formatted plan description, from the status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
 def dump_formatted(spark, qs, outdir: str, names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
+        seen = _executions(spark)
         df = qs[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        df.collect()
+        ran = sorted((i, d) for i, d in _executions(spark).items() if i not in seen)
         path = os.path.join(outdir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange lines)")
+        with open(os.path.join(outdir, f"{name}.initial.txt"), "w") as f:
+            f.writelines(
+                f"== execution {k} ==\n{initial_plan(d)}\n\n"
+                for k, (_, d) in enumerate(ran, 1)
+            )
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange lines, {len(ran)} executions)")
 
 
 def main() -> None:
