@@ -13,6 +13,8 @@ and ``queries_reports`` (the reference's end-user reports).
 
 from __future__ import annotations
 
+import ast
+import hashlib
 import json
 from collections.abc import Callable
 from functools import cache
@@ -33,19 +35,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return a1_group_sum_flagship(spark, "/root/testdata/sf0.001")
 
 
-#: Entries whose code changed since their last green gate row
-#: (``grouped_global_rank``, ``sorted_neighborhood_pairs``,
-#: ``binary_docs_to_text``, ``reports.top_gastos``, the frontier graph
-#: operators on ``operators/fixpoint.py``): they lead the gate window
-#: whatever the CORRECTNESS files say.
-_TOUCHED = (
-    "x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood",
-    "p7_binary_pdf_scan", "p11_bank_pipeline_e2e", "r4_top_gastos", "r5_top_parcelados",
-    "x56_bfs_hops", "x58_temporal_reach", "x67_weighted_sssp", "x73_random_walks",
-)
+#: Directory holding the per-round ``CORRECTNESS_r{N}.json`` gate results
+#: and ``GATE_STAMP.json``, the fingerprints of the code the newest
+#: round graded (written by ``tools/gate_stamp.py``).
+_GATE_DIR = Path(__file__).resolve().parent
 
-#: Directory holding the per-round ``CORRECTNESS_r{N}.json`` gate results.
-_CORRECTNESS_DIR = Path(__file__).resolve().parent
+#: The package whose code the fingerprints cover, relative to this file.
+_PACKAGE = "fintrack_etl_spark"
 
 
 def _registry(attr: str) -> dict:
@@ -62,7 +58,7 @@ def _last_green() -> dict[str, int]:
     """Newest round in which each entry's gate row was green: rows,
     schema and hash all match and ``err`` is null."""
     last: dict[str, int] = {}
-    for path in _CORRECTNESS_DIR.glob("CORRECTNESS_r*.json"):
+    for path in _GATE_DIR.glob("CORRECTNESS_r*.json"):
         rnd = path.stem.removeprefix("CORRECTNESS_r")
         if not rnd.isdigit():
             continue
@@ -74,17 +70,123 @@ def _last_green() -> dict[str, int]:
     return last
 
 
+def _package_sources() -> dict[str, str]:
+    root = Path(__file__).resolve().parent
+    return {
+        p.relative_to(root).as_posix(): p.read_text(encoding="utf-8")
+        for p in sorted((root / _PACKAGE).rglob("*.py"))
+    }
+
+
+def _fingerprints(sources: dict[str, str]) -> dict[str, str]:
+    """Code fingerprint of each registry entry, from package sources
+    keyed by path.
+
+    An entry's roots are its ``@register("name", ...)`` builder,
+    decorator included (it may carry the oracle SQL), and any top-level
+    ``ORACLES["name"] = ...``. From the roots the walk follows every
+    ``Name`` it loads and every ``Attribute`` to each top-level ``def``,
+    ``class`` or assignment of that name, in any module of the package;
+    ``from x import y as z`` makes ``z`` mean ``y`` in its file. The
+    fingerprint hashes the path and source of everything reached.
+
+    Known limits of a name-level walk: a session-conf change reaches no
+    builder by name, and string-keyed dispatch is invisible (an entry
+    whose oracle is ``ORACLES["other"]`` does not see ``other``'s SQL
+    change). Both leave the fingerprint as it was. A name defined in
+    several modules reaches all of them, which can only over-flag.
+    """
+    segments: list[str] = []
+    refs: list[set[str]] = []
+    defs: dict[str, list[int]] = {}
+    roots: dict[str, list[int]] = {}
+    entries: set[str] = set()
+    for path, text in sources.items():
+        lines = text.splitlines(keepends=True)
+        alias: dict[str, str] = {}
+        first = len(segments)
+        for node in ast.parse(text).body:
+            walked = list(ast.walk(node))
+            alias.update(
+                (a.asname, a.name)
+                for n in walked
+                if isinstance(n, ast.ImportFrom)
+                for a in n.names
+                if a.asname
+            )
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                bound = [node.name]
+                keys = [
+                    d.args[0].value
+                    for d in node.decorator_list
+                    if isinstance(d, ast.Call)
+                    and getattr(d.func, "id", None) == "register"
+                    and d.args
+                    and isinstance(d.args[0], ast.Constant)
+                ]
+                entries.update(keys)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                bound = [t.id for t in targets if isinstance(t, ast.Name)]
+                keys = [
+                    t.slice.value
+                    for t in targets
+                    if isinstance(t, ast.Subscript) and isinstance(t.slice, ast.Constant)
+                ]
+            else:
+                continue
+            unit = len(segments)
+            start = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", ())])
+            segments.append(path + "\n" + "".join(lines[start - 1 : node.end_lineno]))
+            refs.append(
+                {n.id for n in walked if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+                | {n.attr for n in walked if isinstance(n, ast.Attribute)}
+            )
+            for name in bound:
+                defs.setdefault(name, []).append(unit)
+            for key in keys:
+                roots.setdefault(key, []).append(unit)
+        for unit in range(first, len(segments)):
+            refs[unit] = {alias.get(name, name) for name in refs[unit]}
+
+    succ = [{v for name in r for v in defs.get(name, ())} for r in refs]
+    out = {}
+    for entry in entries:
+        seen, todo = set(roots[entry]), list(roots[entry])
+        while todo:
+            for v in succ[todo.pop()] - seen:
+                seen.add(v)
+                todo.append(v)
+        digest = hashlib.sha256("\0".join(sorted(segments[u] for u in seen)).encode())
+        out[entry] = digest.hexdigest()[:16]
+    return out
+
+
+def _changed() -> frozenset[str]:
+    """Entries whose fingerprint differs from ``GATE_STAMP.json``'s or is
+    missing there: their code changed since the round the stamp records.
+    Empty when there is no stamp."""
+    stamp = _GATE_DIR / "GATE_STAMP.json"
+    if not stamp.exists():
+        return frozenset()
+    graded = json.loads(stamp.read_text())["fingerprints"]
+    now = _fingerprints(_package_sources())
+    return frozenset(n for n, fp in now.items() if graded.get(n) != fp)
+
+
 @cache
 def _gate_order() -> tuple[str, ...]:
     """Registry names in gate-window order, computed once per process.
 
-    The correctness gate checks only the first 50 entries, so
-    ``_TOUCHED`` leads, then entries by their last green round, stalest
-    first (no green row at all sorts first); ties keep registry order.
+    The correctness gate checks only the first 50 entries, so entries
+    whose code changed since the stamped round (:func:`_changed`) lead;
+    within that group and the rest, entries go by their last green
+    round, stalest first (no green row at all sorts first); ties keep
+    registry order.
     """
     last = _last_green()
-    rest = [n for n in _registry("QUERIES") if n not in _TOUCHED]
-    return _TOUCHED + tuple(sorted(rest, key=lambda n: last.get(n, 0)))
+    changed = _changed()
+    return tuple(sorted(_registry("QUERIES"), key=lambda n: (n not in changed, last.get(n, 0))))
 
 
 def _merge_registry(attr: str) -> dict:

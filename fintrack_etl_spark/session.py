@@ -37,13 +37,11 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # to shuffle.partitions; the floor binds ONLY when
     # totalBytes/parallelism < 256k — at production scale shuffle
     # partitions are 100s of MB and the target size term dominates, so
-    # this floor is inert there (override via
-    # SPARK_GRAFT_AQE_MIN_PARTITION_SIZE if a deployment wants the
-    # large-floor behavior back). Measured interleaved A/B at sf0.1:
-    # headline 1.99 -> 1.52 s, core50 ~5.5-6.2 -> ~3.6-4.4 s.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"
-    ),
+    # this floor is inert there (pass get_spark's extra_conf if a
+    # deployment wants the large-floor behavior back). Measured
+    # interleaved A/B at sf0.1: headline 1.99 -> 1.52 s, core50
+    # ~5.5-6.2 -> ~3.6-4.4 s.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256m",
     "spark.sql.session.timeZone": "UTC",

@@ -11,6 +11,7 @@ def test_entry_returns_rows(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"  # pinned by get_spark
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert spark.conf.get("spark.python.daemon.module") == "fintrack_etl_spark.worker_daemon"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "256k"
     df = entrymod.entry(spark)
     assert df.count() > 0
 
@@ -28,44 +29,50 @@ def test_queries_run_at_smallest_sf(spark, sf_dir):
 
 
 def test_gate_order_head_is_derived():
-    head = [
-        "x54_training_shuffle", "x77_ccnet_buckets", "x66_sorted_neighborhood",
-        "p7_binary_pdf_scan", "p11_bank_pipeline_e2e", "r4_top_gastos", "r5_top_parcelados",
-        "x56_bfs_hops", "x58_temporal_reach", "x67_weighted_sssp", "x73_random_walks",
-        "ext_merge_evolving", "x19_repetition_filter", "x28_vocab_oov",
-        "x32_feature_stats", "x33_incremental_corpus_dedup", "x34_bigram_pmi",
-        "x39_dup_rate_estimate", "x74_rrf_fusion", "x88_poisson_bootstrap",
-        "x89_tokenizer_fertility",
-    ]
-    assert list(entrymod.queries())[:21] == head
-    assert list(entrymod.oracle_sql()) == list(entrymod.queries())
+    changed, last = entrymod._changed(), entrymod._last_green()
+    order = list(entrymod.queries())
+    head, rest = order[: len(changed)], order[len(changed) :]
+    assert set(head) == changed
+    for group in (head, rest):
+        rounds = [last.get(n, 0) for n in group]
+        assert rounds == sorted(rounds)
+    assert list(entrymod.oracle_sql()) == order
 
 
 def test_gate_order_ranks_by_last_green_round(tmp_path, monkeypatch):
-    touched = list(entrymod._TOUCHED)
-    reg = [n for n in entrymod._registry("QUERIES") if n not in touched]
-    a, b, c, red_only = reg[:4]
+    reg = list(entrymod._registry("QUERIES"))
+    a, b, c, red_only, moved, added = reg[:6]
     green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
     red = {**green, "hash_match": False}
     rounds = {
-        "CORRECTNESS_r01.json": {a: green, b: green, c: green, red_only: red},
-        "CORRECTNESS_r02.json": {a: green, b: red, c: green},
+        "CORRECTNESS_r01.json": {a: green, b: green, c: green, red_only: red, moved: green},
+        "CORRECTNESS_r02.json": {a: green, b: red, c: green, added: green},
         "CORRECTNESS_r03.json": {b: {**green, "err": "boom"}, c: green},
         "CORRECTNESS_r04_c8.json": {b: green},  # not a round file: ignored
     }
     for fname, rows in rounds.items():
         (tmp_path / fname).write_text(json.dumps(rows))
-    monkeypatch.setattr(entrymod, "_CORRECTNESS_DIR", tmp_path)
+    # ``moved``'s code differs from the stamp and ``added`` has no stamp
+    # row: both lead, stalest first, whatever their green rows say.
+    stamp = entrymod._fingerprints(entrymod._package_sources())
+    stamp[moved] = "0" * 16
+    del stamp[added]
+    (tmp_path / "GATE_STAMP.json").write_text(json.dumps({"round": 4, "fingerprints": stamp}))
+    monkeypatch.setattr(entrymod, "_GATE_DIR", tmp_path)
     entrymod._gate_order.cache_clear()
     try:
         # b's newest row is red, so it ranks by its r01 green (before a's
         # r02); entries with no green row, red_only included, come first.
-        never_green = [n for n in reg if n not in (a, b, c)]
-        assert list(entrymod.queries()) == touched + never_green + [b, a, c]
+        never_green = [n for n in reg if n not in (a, b, c, moved, added)]
+        assert list(entrymod.queries()) == [moved, added] + never_green + [b, a, c]
+
+        (tmp_path / "GATE_STAMP.json").unlink()
+        entrymod._gate_order.cache_clear()
+        assert list(entrymod.queries()) == never_green + [b, moved, a, added, c]
 
         for f in tmp_path.iterdir():
             f.unlink()
         entrymod._gate_order.cache_clear()
-        assert list(entrymod.queries()) == touched + reg
+        assert list(entrymod.queries()) == reg
     finally:
         entrymod._gate_order.cache_clear()
