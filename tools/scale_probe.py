@@ -8,14 +8,19 @@ Each probe builds a DETERMINISTIC fixture at 1x and at --mult x
 every base row becomes a mult-member near-dup family / every component
 deepens), lands it as parquet (cold file scans; distinct paths so the
 session memos cannot cross-pollinate), runs the operator end-to-end
-COLD, and prints one JSON line per measurement:
+COLD through ``bench.measure`` (fresh build, then one ``noop`` write of
+the result, its row count observed on that write), and prints one JSON
+line per measurement:
 
-    {"probe": "...", "mult": N, "rows": ..., "sec": ..., ...}
+    {"probe": "...", "mult": N, "build_s": ..., "build_jobs": ...,
+     "exec_s": ..., "rows": ..., "task_cpu_s": ..., ...}
 
-The pass/fail lens: time growing ~mult is linear (the plan survives);
-growth >> mult is the superlinear defect VERDICT r7 #1 asks to fix or
-bound. Counters (CC rounds, suffix-doubling rounds) ride along so round
-growth is visible separately from per-round cost.
+The pass/fail lens: ``build_s + exec_s`` growing ~mult is linear (the
+plan survives); growth >> mult is the superlinear defect VERDICT r7 #1
+asks to fix or bound. Counters (CC rounds, suffix-doubling rounds)
+ride along so round growth is visible separately from per-round cost;
+``core`` and ``codec`` rows add ``warm_s``, a second run's build + exec.
+Streaming drains run no DataFrame action and keep a wall clock.
 
 Usage: python tools/scale_probe.py [suffix graph ann] [--mult 10]
 Results are recorded in BASELINE.md §C.
@@ -34,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import measure
 from fintrack_etl_spark.io import table
 from fintrack_etl_spark.session import get_spark
 
@@ -42,10 +48,12 @@ def _emit(rec: dict) -> None:
     print(json.dumps(rec), flush=True)
 
 
-def _timed(fn):
-    t0 = time.time()
-    out = fn()
-    return out, round(time.time() - t0, 2)
+def _cold_warm(spark, tag: str, build) -> dict:
+    """Cold ``measure`` record of ``build``, plus ``warm_s``: the
+    second run's ``build_s + exec_s``."""
+    rec = measure(spark, f"probe:{tag}:cold", build)
+    warm = measure(spark, f"probe:{tag}:warm", build)
+    return {**rec, "warm_s": round(warm["build_s"] + warm["exec_s"], 3)}
 
 
 def _land(df, path: str):
@@ -97,29 +105,25 @@ def probe_suffix(spark, sf_dir: str, mult: int, tmp: str) -> None:
         n_docs = corpus.count()
         n_chars = corpus.agg(F.sum(F.length("text"))).first()[0]
 
-        rows, sec = _timed(lambda: substring_dedup(corpus, "doc_id", "text", 30).count())
+        rec = measure(spark, f"probe:x76:{m}x",
+                      lambda: substring_dedup(corpus, "doc_id", "text", 30))
         _emit({"probe": "x76_substring_dedup", "mult": m, "docs": n_docs,
-               "chars": n_chars, "rows": rows, "sec": sec})
+               "chars": n_chars, **rec})
 
         sstats: dict = {}
-        rows, sec = _timed(
-            lambda: suffix_ranks(corpus, "doc_id", "text", bound=32, stats=sstats).count()
-        )
+        rec = measure(spark, f"probe:x80:{m}x",
+                      lambda: suffix_ranks(corpus, "doc_id", "text", bound=32, stats=sstats))
         _emit({"probe": "x80_suffix_ranks", "mult": m, "positions": n_chars,
-               "rows": rows, "rounds": sstats.get("rounds"),
-               "round_secs": sstats.get("round_secs"), "sec": sec})
+               "rounds": sstats.get("rounds"), "round_secs": sstats.get("round_secs"), **rec})
 
         # incremental shape: the standing store is the big replicated
         # corpus; the incoming batch is ONE replica family's worth
         batch = corpus.filter(F.col("doc_id") % 5 == 0).withColumn(
             "doc_id", F.col("doc_id") + 100_000_000
         )
-        def _incr():
-            store = gram_store(corpus, "doc_id", "text", 30)
-            return substring_dedup_against_store(batch, store, "doc_id", "text", 30).count()
-        rows, sec = _timed(_incr)
-        _emit({"probe": "x81_incremental_substring", "mult": m, "store_docs": n_docs,
-               "rows": rows, "sec": sec})
+        rec = measure(spark, f"probe:x81:{m}x", lambda: substring_dedup_against_store(
+            batch, gram_store(corpus, "doc_id", "text", 30), "doc_id", "text", 30))
+        _emit({"probe": "x81_incremental_substring", "mult": m, "store_docs": n_docs, **rec})
 
 
 def probe_jaccard(spark, sf_dir: str, mult: int, tmp: str) -> None:
@@ -151,19 +155,14 @@ def probe_jaccard(spark, sf_dir: str, mult: int, tmp: str) -> None:
     for m in (1, mult):
         corpus = _land(_replicated_docs(docs, m), os.path.join(tmp, f"jdocs_{m}x"))
         n_docs = corpus.count()
-        rows_x3, sec_x3 = _timed(
-            lambda: ngram_jaccard_pairs(
-                corpus, "doc_id", "text", 3, 0.6, max_df=100, max_df_frac=0.0
-            ).count()
-        )
-        _emit({"probe": "x3_abs_guard_optout", "mult": m, "docs": n_docs,
-               "pairs": rows_x3, "sec": sec_x3})
-        rows_x63, sec_x63 = _timed(
-            lambda: prefix_filter_pairs(corpus, "doc_id", "text", 3, 0.6).count()
-        )
+        x3 = measure(spark, f"probe:x3_abs:{m}x", lambda: ngram_jaccard_pairs(
+            corpus, "doc_id", "text", 3, 0.6, max_df=100, max_df_frac=0.0))
+        _emit({"probe": "x3_abs_guard_optout", "mult": m, "docs": n_docs, **x3})
+        x63 = measure(spark, f"probe:x63:{m}x",
+                      lambda: prefix_filter_pairs(corpus, "doc_id", "text", 3, 0.6))
+        rows_x3, rows_x63 = x3["rows"], x63["rows"]
         _emit({"probe": "x63_ppjoin_pairs", "mult": m, "docs": n_docs,
-               "pairs": rows_x63, "sec": sec_x63,
-               "abs_guard_missed": rows_x63 - rows_x3})
+               "abs_guard_missed": rows_x63 - rows_x3, **x63})
         assert rows_x63 >= rows_x3, (
             f"PPJoin lost pairs the guarded join found at {m}x: "
             f"{rows_x63} < {rows_x3} — that direction is a BUG "
@@ -172,14 +171,11 @@ def probe_jaccard(spark, sf_dir: str, mult: int, tmp: str) -> None:
         # the DEFAULT path since r9 (max_df alone -> implied frac cap):
         # at the mult=20 boundary where the absolute cap drops 15.6 %
         # of true pairs, this must emit the complete (PPJoin) multiset
-        rows_def, sec_def = _timed(
-            lambda: ngram_jaccard_pairs(
-                corpus, "doc_id", "text", 3, 0.6, max_df=100
-            ).count()
-        )
+        x3d = measure(spark, f"probe:x3:{m}x", lambda: ngram_jaccard_pairs(
+            corpus, "doc_id", "text", 3, 0.6, max_df=100))
+        rows_def = x3d["rows"]
         _emit({"probe": "x3_ngram_jaccard", "mult": m, "docs": n_docs,
-               "pairs": rows_def, "sec": sec_def,
-               "missed_vs_ppjoin": rows_x63 - rows_def})
+               "missed_vs_ppjoin": rows_x63 - rows_def, **x3d})
         assert rows_def == rows_x63, (
             f"default df-guard path missed pairs at {m}x: "
             f"{rows_def} != PPJoin {rows_x63} — the r9 dup-safe "
@@ -213,13 +209,10 @@ def probe_incremental(spark, sf_dir: str, mult: int, tmp: str) -> None:
             (F.col("doc_id") + 50_000_000).alias("doc_id"), "text"
         )
         corpus_bt = corpus.select("doc_id", "text")  # union-compatible with batch
-        rows, sec = _timed(
-            lambda: dedup_against_store(
-                batch, store, corpus_bt, "doc_id", "text", 3, 32, 8, 0.6
-            ).count()
-        )
+        rec = measure(spark, f"probe:x33:{m}x", lambda: dedup_against_store(
+            batch, store, corpus_bt, "doc_id", "text", 3, 32, 8, 0.6))
         _emit({"probe": "x33_incremental_lsh", "mult": m, "store_docs": n_docs,
-               "batch_docs": batch.count(), "rows": rows, "sec": sec})
+               "batch_docs": batch.count(), **rec})
 
 
 def _chain_edges(spark, n_chains: int, depth: int):
@@ -278,9 +271,10 @@ def probe_graph(spark, sf_dir: str, mult: int, tmp: str) -> None:
             ("cc_star", connected_components_star),
         ):
             stats: dict = {}
-            rows, sec = _timed(lambda: fn(chains, "src", "dst", stats=stats).count())
+            rec = measure(spark, f"probe:{name}_chain10:{m}x",
+                          lambda: fn(chains, "src", "dst", stats=stats))
             _emit({"probe": f"{name}_chain10", "mult": m, "edges": n_edges,
-                   "rows": rows, "rounds": stats.get("rounds"), "sec": sec})
+                   "rounds": stats.get("rounds"), **rec})
 
         # hub-heavy: mega-hub spokes scale with m
         hubs = _land(
@@ -292,9 +286,10 @@ def probe_graph(spark, sf_dir: str, mult: int, tmp: str) -> None:
             ("cc_star", connected_components_star),
         ):
             stats = {}
-            rows, sec = _timed(lambda: fn(hubs, "src", "dst", stats=stats).count())
+            rec = measure(spark, f"probe:{name}_hub:{m}x",
+                          lambda: fn(hubs, "src", "dst", stats=stats))
             _emit({"probe": f"{name}_hub", "mult": m, "edges": n_edges,
-                   "rows": rows, "rounds": stats.get("rounds"), "sec": sec})
+                   "rounds": stats.get("rounds"), **rec})
 
         # PageRank: zipf-ish directed graph — 100k*m edges over 10k*m
         # nodes, destination skewed to low ids (hub indegree)
@@ -312,9 +307,8 @@ def probe_graph(spark, sf_dir: str, mult: int, tmp: str) -> None:
             os.path.join(tmp, f"pr_{m}x"),
         )
         n_edges = pr_edges.count()
-        rows, sec = _timed(lambda: integer_pagerank(pr_edges, iterations=3).count())
-        _emit({"probe": "x42_pagerank", "mult": m, "edges": n_edges,
-               "rows": rows, "iterations": 3, "sec": sec})
+        rec = measure(spark, f"probe:x42:{m}x", lambda: integer_pagerank(pr_edges, iterations=3))
+        _emit({"probe": "x42_pagerank", "mult": m, "edges": n_edges, "iterations": 3, **rec})
 
 
 def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
@@ -362,15 +356,17 @@ def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
             # while the probed fraction shrinks as nprobe/sqrt(N)
             ("x18_ivf_auto_k", lambda: ivf_topk_kmeans(queries, corpus, k=10, nprobe=2)),
         ):
-            def _run(f=fn):
-                top1 = f().filter(F.col("rnk") == 1)
-                found = top1.filter(
-                    F.col("neighbor_id") == F.col("query_id") - 10_000_000
-                ).count()
-                return (top1.count(), found)
-            (total, found), sec = _timed(_run)
+            top1 = {}
+
+            def _top1():
+                top1["df"] = fn().filter(F.col("rnk") == 1)
+                return top1["df"]
+            rec = measure(spark, f"probe:{name}:{m}x", _top1)
+            found = top1["df"].filter(
+                F.col("neighbor_id") == F.col("query_id") - 10_000_000
+            ).count()
             _emit({"probe": name, "mult": m, "vectors": n_vecs, "queries": n_q,
-                   "self_recall": found, "rows": total, "sec": sec})
+                   "self_recall": found, **rec})
             assert found == n_q, f"{name}@{m}x: planted-dup self-recall broke ({found}/{n_q})"
 
         # COLD-BUILD rows (VERDICT r9 #3): isolate the coarse-quantizer
@@ -405,15 +401,12 @@ def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
                 _, stale = S._TRAIN_CACHE.popitem()
                 unpersist_checkpointed(stale)
 
-            def _build(kk=kk, cap=cap):
-                a, _c = S.kmeans_centroids(corpus, kk, 2, train_sample_cap=cap)
-                return a.count()
-            rows, sec = _timed(_build)
+            rec = measure(spark, f"probe:{name}:{m}x",
+                          lambda: S.kmeans_centroids(corpus, kk, 2, train_sample_cap=cap)[0])
             _emit({"probe": name, "mult": m, "vectors": n_vecs, "k": kk,
                    "sampled": cap is None and n_vecs > max(
-                       S.TRAIN_SAMPLE_FLOOR, S.TRAIN_SAMPLE_PER_CLUSTER * kk),
-                   "assigned": rows, "sec": sec})
-            assert rows == n_vecs, f"{name}@{m}x: assignment lost vectors"
+                       S.TRAIN_SAMPLE_FLOOR, S.TRAIN_SAMPLE_PER_CLUSTER * kk), **rec})
+            assert rec["rows"] == n_vecs, f"{name}@{m}x: assignment lost vectors"
 
         # PQ cold-build rows (r10 — the sampled-training sweep's second
         # Lloyd): codebook train + full encode, default vs opt-out
@@ -422,14 +415,11 @@ def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
                 _, stale = S._TRAIN_CACHE.popitem()
                 unpersist_checkpointed(stale)
 
-            def _pq_build(cap=cap):
-                codes, _b = S.pq_train(corpus, 8, 16, 2, train_sample_cap=cap)
-                return codes.count()
-            rows, sec = _timed(_pq_build)
+            rec = measure(spark, f"probe:{name}:{m}x",
+                          lambda: S.pq_train(corpus, 8, 16, 2, train_sample_cap=cap)[0])
             _emit({"probe": name, "mult": m, "vectors": n_vecs,
-                   "sampled": cap is None and n_vecs > S.TRAIN_SAMPLE_FLOOR,
-                   "code_rows": rows, "sec": sec})
-            assert rows == n_vecs * 8, f"{name}@{m}x: encode lost rows"
+                   "sampled": cap is None and n_vecs > S.TRAIN_SAMPLE_FLOOR, **rec})
+            assert rec["rows"] == n_vecs * 8, f"{name}@{m}x: encode lost rows"
 
 
 def probe_grouped_rank(spark, sf_dir: str, mult: int, tmp: str) -> None:
@@ -469,13 +459,16 @@ def probe_grouped_rank(spark, sf_dir: str, mult: int, tmp: str) -> None:
             )
             n_groups = df.select("g").distinct().count()
 
-            def _run(df=df, order=order):
-                out = grouped_global_rank(df, ["g"], list(order), rank_col="pos")
-                sig = out.agg(
-                    F.sum(F.xxhash64("doc_id", "pos").cast("decimal(38,0)")).alias("sig")
-                ).first()["sig"]
-                return out, sig
-            (out, sig), sec = _timed(_run)
+            ranked = {}
+
+            def _rank():
+                ranked["df"] = grouped_global_rank(df, ["g"], list(order), rank_col="pos")
+                return ranked["df"]
+            rec = measure(spark, f"probe:grouped_rank_{name}:{m}x", _rank)
+            out = ranked["df"]
+            sig = out.agg(
+                F.sum(F.xxhash64("doc_id", "pos").cast("decimal(38,0)")).alias("sig")
+            ).first()["sig"]
 
             plan = out._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" in plan, (name, m)
@@ -490,7 +483,7 @@ def probe_grouped_rank(spark, sf_dir: str, mult: int, tmp: str) -> None:
             assert sig == want_sig, (name, m, sig, want_sig)
             _emit({"probe": f"grouped_rank_{name}", "mult": m, "docs": n_docs,
                    "groups": n_groups, "parts": parts,
-                   "offsets_upper": n_groups * parts, "sec": sec})
+                   "offsets_upper": n_groups * parts, **rec})
 
 
 def probe_core(spark, sf_dir: str, mult: int, tmp: str) -> None:
@@ -498,8 +491,8 @@ def probe_core(spark, sf_dir: str, mult: int, tmp: str) -> None:
     still sf0.1-only. Builds a REPLICATED sf directory (fact tables
     lineitem/orders/events grow mult x with injective key shifts;
     dimensions stay dimension-sized — the realistic 100 TB posture)
-    and runs the exact gate entries end-to-end against it, cold,
-    timing the same ``toRdd().count()`` the bench times. Key shifts:
+    and runs the exact gate entries end-to-end against it, cold then
+    warm, through the bench's own ``measure``. Key shifts:
     orderkeys move together so orders⋈lineitem stays key-correct
     within a replica; o_custkey is NOT shifted, so each customer
     carries mult x orders (growth concentrates on existing keys, the
@@ -585,18 +578,13 @@ def probe_core(spark, sf_dir: str, mult: int, tmp: str) -> None:
             ).rdd.getNumPartitions(),
         })
         for name in names:
-            def _run(n=name):
-                rdd = qs[n](spark, rep_dir)._jdf.queryExecution().toRdd()
-                return rdd.count()
             # cold includes plan build + codegen compile (shared shapes
             # compile once per session, so the 1x pass pre-pays most of
             # it); the warm re-run isolates the DATA term — the number
             # the growth ratio is about
-            rows, sec = _timed(_run)
-            _, warm_sec = _timed(_run)
+            rec = _cold_warm(spark, f"{name}:{m}x", lambda: qs[name](spark, rep_dir))
             _emit({"probe": name, "family": "core", "mult": m,
-                   "lineitem_rows": fact_rows, "rows": rows, "sec": sec,
-                   "warm_sec": warm_sec})
+                   "lineitem_rows": fact_rows, **rec})
 
 
 def probe_codec(spark, sf_dir: str, mult: int, tmp: str) -> None:
@@ -636,14 +624,9 @@ def probe_codec(spark, sf_dir: str, mult: int, tmp: str) -> None:
             os.path.join(rep_dir, "documents.parquet")
         ).count()
         for name in names:
-            def _run(n=name):
-                return qs[n](spark, rep_dir)._jdf.queryExecution().toRdd().count()
-            rows, sec = _timed(_run)
-            _, warm_sec = _timed(_run)
-            _emit({"probe": name, "family": "codec", "mult": m,
-                   "docs": n_docs, "rows": rows, "sec": sec,
-                   "warm_sec": warm_sec,
-                   "docs_per_sec": int(n_docs / warm_sec) if warm_sec else None})
+            rec = _cold_warm(spark, f"{name}:{m}x", lambda: qs[name](spark, rep_dir))
+            _emit({"probe": name, "family": "codec", "mult": m, "docs": n_docs, **rec,
+                   "docs_per_sec": int(n_docs / rec["warm_s"]) if rec["warm_s"] else None})
 
 
 def probe_streaming(spark, sf_dir: str, mult: int, tmp: str) -> None:
@@ -693,18 +676,6 @@ def probe_streaming(spark, sf_dir: str, mult: int, tmp: str) -> None:
         n_rows = spark.read.parquet(src_dir).count()
         schema = spark.read.parquet(src_dir).schema
 
-        def _drain(make_stream, name: str, mode: str) -> float:
-            ckpt = os.path.join(tmp, f"ckpt_{name}_{m}x")
-            src = file_source_stream(
-                spark, src_dir, schema, max_files_per_trigger=8
-            )
-            _, sec = _timed(
-                lambda: run_available_now(
-                    make_stream(src), ckpt, f"probe_{name}_{m}x", output_mode=mode
-                )
-            )
-            return sec
-
         for name, make, mode in (
             ("windowed_agg", lambda s: windowed_agg_stream(s, window="1 day"),
              "complete"),
@@ -713,7 +684,12 @@ def probe_streaming(spark, sf_dir: str, mult: int, tmp: str) -> None:
             ("session_windows", lambda s: sessionized_stream(s, gap="30 minutes"),
              "append"),
         ):
-            sec = _drain(make, name, mode)
+            # a drain times no DataFrame action: a plain wall clock
+            src = file_source_stream(spark, src_dir, schema, max_files_per_trigger=8)
+            t0 = time.perf_counter()
+            run_available_now(make(src), os.path.join(tmp, f"ckpt_{name}_{m}x"),
+                              f"probe_{name}_{m}x", output_mode=mode)
+            sec = round(time.perf_counter() - t0, 2)
             out_rows = spark.sql(f"select count(*) from probe_{name}_{m}x").first()[0]
             _emit({"probe": f"stream_{name}", "family": "streaming", "mult": m,
                    "input_rows": n_rows, "out_rows": out_rows, "sec": sec,
