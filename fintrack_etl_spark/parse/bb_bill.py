@@ -8,7 +8,7 @@ Reference semantics (``extractors/bb_bill.py:169-229``):
 * every parsed row is enriched by the category rule engine (F12).
 
 Re-expression: one regex dispatch + two forward-fills + the compiled
-``categorize`` when-chain. No state, no UDFs.
+``with_categories`` rule chain. No state, no UDFs.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import brl_to_double, normalize_space
-from ..rules import DEFAULT_RULES, categorize
+from ..rules import DEFAULT_RULES, with_categories
 from .lines import explode_lines, extract_all_groups, group_template, running_last
 
 #: ``bb_bill.py:172`` (case-insensitive)
@@ -82,11 +82,4 @@ def parse_bb_bill(
         brl_to_double(g[3]).alias("valor"),
     )
 
-    cat = categorize(F.col("descricao"), rules)
-    return parsed.select(
-        "*",
-        cat["categoria"].alias("categoria"),
-        cat["subcategoria"].alias("subcategoria"),
-        cat["recorrente_suspeita"].alias("recorrente_suspeita"),
-        cat["parcelado_suspeito"].alias("parcelado_suspeito"),
-    )
+    return with_categories(parsed, "descricao", rules)

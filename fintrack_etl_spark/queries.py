@@ -1165,14 +1165,12 @@ def _categorize_oracle() -> str:
 @register("f12_categorize", None)  # oracle attached below (computed string)
 def f12_categorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 — category rule engine (``categories_bb.py:223-274``) compiled
-    to one native when-chain; synthetic merchant descriptions keyed off
-    ``p_partkey`` exercise rules + all three fallbacks."""
+    to one native when-chain, planned once by ``with_categories``;
+    synthetic merchant descriptions keyed off ``p_partkey`` exercise
+    rules + all three fallbacks."""
     part = T(spark, sf_dir, "part")
-    desc = F.expr(_CATEGORIZE_DESC_SQL)
-    cat = rules.categorize(desc)
     return (
-        part.select(cat.alias("c"))
-        .select("c.categoria", "c.subcategoria", "c.recorrente_suspeita", "c.parcelado_suspeito")
+        rules.with_categories(part, F.expr(_CATEGORIZE_DESC_SQL))
         .groupBy("categoria", "subcategoria", "recorrente_suspeita", "parcelado_suspeito")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -5,9 +5,21 @@ scan over an ordered rule table of regex patterns plus installment /
 recurrence detectors and three fallbacks
 (``rules/categories_bb.py:16-274``, entry ``categorize_bb`` at
 ``:223-274``). There it is a per-row Python function on the driver;
-here the same rule table **compiles to a single native
-``F.when``-chain Column expression** — codegen-friendly, zero Python in
-the hot path, and identical first-match semantics.
+here the same rule table **compiles to native Column expressions** —
+codegen-friendly, zero Python in the hot path, and identical
+first-match semantics — in two steps: an index step (one
+``F.when``-chain giving the winning rule's position, plus the
+recurrence and installment detectors) and a decode step (the four
+outputs, each one array lookup on that position).
+
+Two faces share those steps:
+
+* :func:`with_categories` (a DataFrame in, four columns appended) —
+  use it whenever a DataFrame is at hand. The index gets its own
+  projection, so the plan carries the when-chain once.
+* :func:`categorize` (a struct Column) — for expression contexts with
+  no frame to project into. Each output field it is read through
+  carries its own copy of the chain in the optimized plan.
 
 Patterns must stay in the regex subset shared by Java (Spark) and RE2
 (DuckDB oracles): no backrefs, no lookaround.
@@ -17,7 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions import upper_squeeze
@@ -134,6 +146,67 @@ def _union_regex(patterns: tuple[str, ...]) -> str:
     return "|".join(f"(?:{p})" for p in patterns)
 
 
+def _sql_array(values: list) -> Column:
+    """One decode table as a single SQL array literal: one parse on the
+    JVM instead of one py4j ``lit`` call per element."""
+
+    def lit(v) -> str:
+        if v is None:
+            return "NULL"
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    return F.expr(f"array({', '.join(map(lit, values))})")
+
+
+def _rule_index(desc: Column | str, rules: tuple[CategoryRule, ...]) -> dict[str, Column]:
+    """Index step: the normalized text → ``pos``, the 1-based position
+    of the winning rule (``n+1..n+4`` are the three fallbacks and
+    Outros), plus the recurrence-hint (``rec``) and installment
+    (``par``) detectors that the decode step falls back on.
+
+    ``pos`` is ONE when-chain: each rule is one combined regex, and the
+    chain short-circuits at the first hit."""
+    d = upper_squeeze(desc)
+    par = d.rlike(INSTALLMENT_PATTERN)
+    n = len(rules)
+    pos: Column | None = None
+    for i, rule in enumerate(rules, 1):
+        hit = _any_match(d, rule.patterns)
+        pos = F.when(hit, i) if pos is None else pos.when(hit, i)
+    fb3 = d.rlike(CITY_SUFFIX_PATTERN) & d.rlike(COMMERCE_WORD_PATTERN)
+    pos = pos.when(par, n + 1).when(fb3, n + 2).when(d.rlike(PAYMENT_PATTERN), n + 3).otherwise(n + 4)
+    return {"pos": pos, "rec": _any_match(d, RECURRENCE_HINTS), "par": par}
+
+
+def _decode(
+    pos: Column, rec: Column, par: Column, rules: tuple[CategoryRule, ...]
+) -> dict[str, Column]:
+    """Decode step: the four outputs, each reading ``pos`` exactly once.
+
+    The two flags are fixed true/false per position, or NULL where the
+    detector decides: recorrente is forced true by ``force_recorrente``,
+    false for the three fallbacks, else the hint; parcelado is true for
+    the installment fallback, false for the city fallback, else the
+    installment detector."""
+    cats = [r.categoria for r in rules] + ["Compras", "Compras", "Financeiro", "Outros"]
+    subs = [r.subcategoria for r in rules] + [
+        "Parcelado (loja física)",
+        "Loja física",
+        "Pagamentos/Créditos/Estornos",
+        None,
+    ]
+    recs = [True if r.force_recorrente else None for r in rules] + [False, False, False, None]
+    pars = [None] * len(rules) + [True, False, None, None]
+    return {
+        "categoria": F.element_at(_sql_array(cats), pos),
+        "subcategoria": F.element_at(_sql_array(subs), pos),
+        "recorrente_suspeita": F.coalesce(F.element_at(_sql_array(recs), pos), rec),
+        "parcelado_suspeito": F.coalesce(F.element_at(_sql_array(pars), pos), par),
+    }
+
+
 def categorize(
     desc: Column | str,
     rules: tuple[CategoryRule, ...] = DEFAULT_RULES,
@@ -150,57 +223,39 @@ def categorize(
     4. payment words → Financeiro,
     5. else Outros.
 
-    Compiled for the hot path: ONE when-chain resolves the winning
-    rule index (each rule = one combined regex, short-circuit at the
-    first hit), then the four outputs decode from array literals —
-    so every regex runs at most once per row instead of once per
-    output column.
+    This is the Column face, for an expression context with no frame
+    to project into (a ``select`` list built before the DataFrame is
+    known, a filter or join condition). Each of
+    the four fields reads the rule index once, but as one Column the
+    index cannot be shared: once Catalyst extracts the fields, a plan
+    that reads all four carries four copies of the when-chain, each
+    analysed, optimized and code-generated on the driver. When you
+    have the DataFrame, use :func:`with_categories`, whose plan holds
+    the chain once.
     """
-    d = upper_squeeze(desc)
-    parcelado = d.rlike(INSTALLMENT_PATTERN)
-    rec_hint = _any_match(d, RECURRENCE_HINTS)
+    fields = _decode(**_rule_index(desc, rules), rules=rules)
+    return F.struct(*[c.alias(f) for f, c in fields.items()])
 
-    n = len(rules)
-    idx: Column | None = None
-    for i, rule in enumerate(rules):
-        hit = d.rlike(_union_regex(rule.patterns))
-        idx = F.when(hit, i) if idx is None else idx.when(hit, i)
 
-    fb2 = parcelado
-    fb3 = d.rlike(CITY_SUFFIX_PATTERN) & d.rlike(COMMERCE_WORD_PATTERN)
-    fb4 = d.rlike(PAYMENT_PATTERN)
-    idx = idx.when(fb2, n).when(fb3, n + 1).when(fb4, n + 2).otherwise(n + 3)
+def with_categories(
+    df: DataFrame,
+    desc: Column | str,
+    rules: tuple[CategoryRule, ...] = DEFAULT_RULES,
+) -> DataFrame:
+    """``df`` plus the four :func:`categorize` columns (same values,
+    appended in the same order).
 
-    cats = [r.categoria for r in rules] + ["Compras", "Compras", "Financeiro", "Outros"]
-    subs = [r.subcategoria for r in rules] + [
-        "Parcelado (loja física)",
-        "Loja física",
-        "Pagamentos/Créditos/Estornos",
-        None,
-    ]
-    # recorrente: T=always, H=global recurrence hints, F=never
-    rec_codes = ["T" if r.force_recorrente else "H" for r in rules] + ["F", "F", "F", "H"]
-    # parcelado: T=always, F=never, P=installment regex
-    par_codes = ["P"] * n + ["T", "F", "P", "P"]
-
-    pos = idx + 1  # element_at is 1-based
-    cat_col = F.element_at(F.array(*[F.lit(c) for c in cats]), pos)
-    sub_col = F.element_at(F.array(*[F.lit(s).cast("string") for s in subs]), pos)
-    rec_code = F.element_at(F.array(*[F.lit(c) for c in rec_codes]), pos)
-    par_code = F.element_at(F.array(*[F.lit(c) for c in par_codes]), pos)
-
-    return F.struct(
-        cat_col.alias("categoria"),
-        sub_col.alias("subcategoria"),
-        F.when(rec_code == "T", F.lit(True))
-        .when(rec_code == "H", rec_hint)
-        .otherwise(F.lit(False))
-        .alias("recorrente_suspeita"),
-        F.when(par_code == "T", F.lit(True))
-        .when(par_code == "F", F.lit(False))
-        .otherwise(parcelado)
-        .alias("parcelado_suspeito"),
-    )
+    The rule index is evaluated in its own projection and decoded in
+    the next one. Catalyst's ``CollapseProject`` does not inline a
+    non-cheap alias that its consumer reads more than once, and the
+    decode reads the index four times, so the optimized plan holds ONE
+    when-chain: it is analysed, optimized and code-generated once, and
+    runs once per row. Use this face whenever a DataFrame is at hand.
+    """
+    tmp = {f: f"__cat_{f}" for f in ("pos", "rec", "par")}
+    indexed = df.withColumns({tmp[f]: c for f, c in _rule_index(desc, rules).items()})
+    decoded = _decode(**{f: F.col(t) for f, t in tmp.items()}, rules=rules)
+    return indexed.withColumns(decoded).drop(*tmp.values())
 
 
 def categorize_dictionary(
@@ -217,26 +272,21 @@ def categorize_dictionary(
     """Categorize by dictionary-encoding the regex work.
 
     Merchant descriptions repeat heavily (|distinct| ≪ |rows|), so
-    instead of evaluating the ~25-rule regex chain on every fact row —
-    where Catalyst inlines the chain into every consumer (4 output
-    fields + downstream filters + group keys) and the resulting
-    expression can exceed janino's method-size limit, dropping the
-    whole stage to interpreted eval — run :func:`categorize` on the
-    DISTINCT descriptions only and broadcast-join the 4 derived fields
-    back onto the facts.
+    instead of evaluating the ~25-rule regex chain on every fact row,
+    run :func:`with_categories` on the DISTINCT descriptions only and
+    broadcast-join the derived fields back onto the facts.
 
     At 100 TB this is the only shape that works: the distinct() is a
     map-side-partial shuffle of one string column, the dictionary is
     tiny (merchant cardinality), and the join is broadcast — zero
     shuffle on the fact table, and the regex chain runs once per
-    distinct merchant instead of once per row per consumer.
+    distinct merchant instead of once per row.
 
     NULL descriptions get the chain's fallback ('Outros') exactly like
     the row-at-a-time path (``categorize_bb``, reference
     ``rules/categories_bb.py:223-274``).
     """
     key = F.coalesce(F.col(desc_col), F.lit(""))
-    cat = categorize(F.col("__cat_key"), rules)
     # The lazy localCheckpoint pins the finished dictionary: while the
     # categorize expressions stay visible in the logical plan, a
     # downstream filter on a derived field (e.g. categoria <>
@@ -247,9 +297,8 @@ def categorize_dictionary(
     # fields are opaque attributes and the chain can only ever run on
     # |distinct keys| rows.
     dictionary = (
-        df.select(key.alias("__cat_key"))
-        .distinct()
-        .select("__cat_key", *[cat[f].alias(f) for f in fields])
+        with_categories(df.select(key.alias("__cat_key")).distinct(), "__cat_key", rules)
+        .select("__cat_key", *fields)
         .localCheckpoint(eager=False)
     )
     return (

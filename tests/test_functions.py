@@ -119,11 +119,55 @@ def test_categorize(spark):
         "PAGTO DEBITO": ("Financeiro", "Pagamentos/Créditos/Estornos", False, False),
         "NETFLIX.COM MENSAL": ("Outros", None, True, False),  # rec hint only
         "XYZ DESCONHECIDO": ("Outros", None, False, False),
+        # no text: Outros, and the detectors answer NULL / no match
+        None: ("Outros", None, None, None),
+        "": ("Outros", None, False, False),
     }
-    df = spark.createDataFrame([(s,) for s in cases], ["desc"])
+    df = spark.createDataFrame([(s,) for s in cases], "desc string")
     rows = df.select("desc", categorize("desc").alias("c")).collect()
+    assert len(rows) == len(cases)
     for r in rows:
         c = r["c"]
         want = cases[r["desc"]]
         got = (c["categoria"], c["subcategoria"], c["recorrente_suspeita"], c["parcelado_suspeito"])
         assert got == want, (r["desc"], got, want)
+
+
+def test_categorize_faces_agree(spark):
+    """The struct Column (read field by field, or expanded with
+    ``c.*``) and ``with_categories`` give the same four outputs row for
+    row, on a seeded corpus that reaches every rule position, all three
+    fallbacks and Outros, and both NULL detector states."""
+    import random
+
+    from fintrack_etl_spark import rules as R
+
+    fields = ("categoria", "subcategoria", "recorrente_suspeita", "parcelado_suspeito")
+    rng = random.Random(11)
+    words = [p.replace(r"\b", "").replace("\\", "") for r in R.DEFAULT_RULES for p in r.patterns]
+    words += ["PARC 02/04", "BOUTIQUE", "LOJA", "FORTALEZA", "PAGTO", "ESTORNO", "MENSAL",
+              "SUBSCR", "XYZ", "ltda", "  "]
+    descs = [None, "", "   ", "LOJA X PARC 02/04", "BOUTIQUE CHIC FORTALEZA", "PAGTO DEBITO"]
+    descs += [" ".join(rng.choice(words) for _ in range(rng.randint(1, 3))) for _ in range(400)]
+    df = spark.createDataFrame(list(enumerate(descs)), "i int, d string")
+
+    index = R._rule_index(F.col("d"), R.DEFAULT_RULES)
+    seen = df.select(index["pos"].alias("pos"), index["rec"].alias("rec"), index["par"].alias("par"))
+    seen = seen.agg(
+        F.collect_set("pos").alias("pos"),
+        F.max(F.col("rec").isNull()).alias("rec_null"),
+        F.max(F.col("par").isNull()).alias("par_null"),
+    ).first()
+    assert sorted(seen["pos"]) == list(range(1, len(R.DEFAULT_RULES) + 5))
+    assert seen["rec_null"] and seen["par_null"]
+
+    c = R.categorize("d")
+    faces = (
+        df.select("i", *[c[f].alias(f) for f in fields]),
+        df.select("i", c.alias("c")).select("i", "c.*"),
+        R.with_categories(df, "d").select("i", *fields),
+    )
+    got = [sorted(tuple(r) for r in face.collect()) for face in faces]
+    assert len(got[0]) == len(descs)
+    assert got[1] == got[0]
+    assert got[2] == got[0]

@@ -79,6 +79,23 @@ def test_categorize_dictionary_keeps_regex_off_fact_plan(spark, sf_dir):
     assert len(plan) < 20_000, len(plan)
 
 
+def test_rule_chain_is_planned_once(spark, sf_dir):
+    """``with_categories`` evaluates the rule index in its own
+    projection, so the optimized plan carries the when-chain once, here
+    and in f12 (which groups on all four outputs). The struct Column
+    face cannot share it: each field read keeps one copy."""
+    from fintrack_etl_spark.queries import f12_categorize
+    from fintrack_etl_spark.rules import DEFAULT_RULES, categorize, with_categories
+
+    first = DEFAULT_RULES[0].patterns[0]
+    fields = ("categoria", "subcategoria", "recorrente_suspeita", "parcelado_suspeito")
+    df = spark.createDataFrame([("UDEMY",), (None,)], "d string")
+    assert _opt(with_categories(df, "d")).count(first) == 1
+    assert _opt(f12_categorize(spark, sf_dir)).count(first) == 1
+    c = categorize("d")
+    assert _opt(df.select(*[c[f].alias(f) for f in fields])).count(first) <= 4
+
+
 def test_stop_shingle_guard_joins_are_broadcast(spark):
     """The skew guard must never itself become a skew source: the hot
     table (tiny by construction, ≤ occurrences/max_df rows) rides
