@@ -10,9 +10,13 @@ data for version N is fully written into its own immutable directory
 - a crash anywhere before the swap leaves the previous version intact
   (the orphaned directory is invisible and gets clobbered/vacuumed);
 - streaming replay is exactly-once: the manifest records the last
-  applied ``batch_id`` at the SAME commit point as the data, closing
-  the two-statement commit-gap the catalog-table sinks document
-  (``streaming/pipelines.py``);
+  applied ``batch_id`` at the SAME commit point as the data, so the
+  ``*_sink_stream_versioned`` sinks (the fold driver of
+  ``streaming/fold.py`` on a :class:`~.streaming.fold.VersionedRoot`)
+  have no commit gap, where the catalog-table kind documents one.
+  A commit that passes no ``batch_id`` (a batch-side MERGE, DELETE,
+  compaction) carries the previous one forward, so it never erases
+  the stream's watermark;
 - MERGE never reads the directory it writes (vN in, vN+1 out), so the
   self-overwrite ``localCheckpoint`` pin is unnecessary here.
 
@@ -153,6 +157,20 @@ def table_changes(
     return inserts.unionByName(changed).unionByName(deletes)
 
 
+def _write_manifest(root: str, version: int, batch_id: int | None, prev: dict | None) -> None:
+    """Atomically point the table at ``version`` — THE commit point.
+    ``batch_id=None`` keeps ``prev``'s (the manifest the caller read),
+    so a commit outside the stream keeps the stream's watermark."""
+    if batch_id is None and prev is not None:
+        batch_id = prev.get("batch_id")
+    tmp = os.path.join(root, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump({"version": version, "batch_id": batch_id}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, _manifest_path(root))
+
+
 def commit_table(df: DataFrame, root: str, batch_id: int | None = None) -> int:
     """Write ``df`` as the next version and atomically publish it.
 
@@ -161,16 +179,13 @@ def commit_table(df: DataFrame, root: str, batch_id: int | None = None) -> int:
     the commit point. A crashed earlier attempt may have left a
     partial directory for the same version — it was never visible, and
     ``mode("overwrite")`` clobbers it before this attempt publishes.
+    ``batch_id=None`` keeps the last recorded one.
     """
     os.makedirs(root, exist_ok=True)
-    n = current_version(root) + 1
+    m = read_manifest(root)
+    n = (m["version"] if m else 0) + 1
     df.write.mode("overwrite").parquet(_version_dir(root, n))
-    tmp = os.path.join(root, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"version": n, "batch_id": batch_id}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(root))  # THE commit point
+    _write_manifest(root, n, batch_id, m)
     return n
 
 
@@ -221,7 +236,7 @@ def compact_table(
         df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(*cluster_by)
     else:
         df = df.coalesce(n_out)
-    n = commit_table(df, root, batch_id if batch_id is not None else m.get("batch_id"))
+    n = commit_table(df, root, batch_id)
     n_after = sum(
         1
         for dp, _, fs in os.walk(_version_dir(root, n))
@@ -311,30 +326,17 @@ def upsert_sink_stream_versioned(
     order_col: str,
     tie_breakers: list[str] | None = None,
 ):
-    """Streaming latest-wins sink with exactly-once COMMITS: the
-    manifest's batch_id and the data publish at the same atomic
-    rename, so a batch replayed after any crash is either (a) fully
-    committed already — detected and skipped — or (b) never visible —
-    re-merged from the same deterministic inputs. No commit-point gap.
+    """``streaming.upsert_sink_stream`` on a commit-log root: the same
+    latest-wins step under the same fold driver (``streaming/fold.py``),
+    committed through the manifest swap with the ``batch_id``. A batch
+    replayed after any crash is either fully committed (skipped) or
+    never visible (folded again from the same inputs).
 
     Returns the started query; callers ``awaitTermination()``."""
-    from .operators.windows import dedup_latest
+    from .streaming.fold import VersionedRoot, fold_stream, upsert_step
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_batch_id(root):
-            return  # already committed — checkpoint replay
-        if batch_df.isEmpty():
-            return
-        incoming = dedup_latest(batch_df, keys, order_col, tie_breakers)
-        merge_latest_wins_versioned(
-            batch_df.sparkSession, root, incoming, keys, order_col, tie_breakers, batch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        stream, checkpoint_dir, VersionedRoot(root), upsert_step(keys, order_col, tie_breakers)
     )
 
 
@@ -345,41 +347,16 @@ def continuous_aggregate_stream_versioned(
     keys: list[str],
     value_col: str,
 ):
-    """Continuous aggregate with exactly-once COMMITS. The sum-merge is
-    not idempotent, so this is where the atomic (data, batch_id) commit
-    matters most: the catalog-table variant documents a double-count
-    window between its state and meta writes — here that window does
-    not exist. Checkpoint-reset detection mirrors
-    ``streaming.continuous_aggregate_stream``.
+    """``streaming.continuous_aggregate_stream`` on a commit-log root.
+    The sum-merge is not idempotent, so this is where the atomic
+    (data, batch_id) commit matters most: the catalog-table kind has a
+    double-count window between its state and meta writes, here that
+    window does not exist.
 
     Returns the started query; callers ``awaitTermination()``."""
-    from .operators.incremental import merge_aggregate_state, partial_aggregate
+    from .streaming.fold import VersionedRoot, aggregate_step, fold_stream
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        last = last_batch_id(root)
-        if batch_id == last:
-            return  # committed already — checkpoint replay
-        if batch_id < last:
-            raise RuntimeError(
-                f"continuous_aggregate_stream_versioned({root}): batch_id "
-                f"{batch_id} < committed {last} — checkpoint was reset while "
-                "the table survived; refusing to skip or double-count."
-            )
-        spark = batch_df.sparkSession
-        delta = partial_aggregate(batch_df, keys, value_col)
-        state = (
-            merge_aggregate_state(read_table(spark, root), delta, keys)
-            if table_exists(root)
-            else delta
-        )
-        commit_table(state, root, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(stream, checkpoint_dir, VersionedRoot(root), aggregate_step(keys, value_col))
 
 
 class CommitConflictError(RuntimeError):
@@ -464,7 +441,8 @@ def _publish_staged(
                 raise TimeoutError(f"commit lock busy at {root}")
             time.sleep(0.05)
     try:
-        if current_version(root) != expected_version:
+        m = read_manifest(root)
+        if (m["version"] if m else 0) != expected_version:
             raise CommitConflictError(
                 f"{root}: version advanced past {expected_version} during commit"
             )
@@ -474,12 +452,7 @@ def _publish_staged(
         # never-published version; it was never visible
         shutil.rmtree(vdir, ignore_errors=True)
         os.replace(staging, vdir)
-        tmp = os.path.join(root, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"version": n, "batch_id": batch_id}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, _manifest_path(root))  # THE commit point
+        _write_manifest(root, n, batch_id, m)
     finally:
         os.close(fd)
         try:
@@ -528,48 +501,18 @@ def cdc_sink_stream_versioned(
     op_col: str,
     delete_op: str = "D",
 ):
-    """Streaming CDC sink with exactly-once COMMITS — the atomic
-    variant of ``streaming.cdc_sink_stream``: the same seq-aware
-    tombstone fold, but each micro-batch publishes through the commit
-    log's manifest swap with the batch_id recorded AT the commit
-    point. A batch replayed after any crash is either fully committed
-    (batch_id watermark detects and skips it) or never visible
-    (re-folded from identical inputs) — no two-statement window at
-    all. State rows carry ``__seq``/``__deleted`` exactly like the
-    managed-table sink; read current rows by filtering ``__deleted``
-    on ``read_table``.
+    """``streaming.cdc_sink_stream`` on a commit-log root: the same
+    seq-aware tombstone step under the same fold driver, each
+    micro-batch published by the manifest swap with its ``batch_id``.
+    State rows carry ``__seq``/``__deleted`` exactly like the catalog
+    sink's; read current rows by filtering ``__deleted`` on
+    ``read_table``.
 
     Returns the started query; callers ``awaitTermination()``."""
-    from pyspark.sql import Window
+    from .streaming.fold import VersionedRoot, cdc_step, fold_stream
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_batch_id(root):
-            return  # already committed — checkpoint replay
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tagged = (
-            batch_df.withColumn("__deleted", F.col(op_col) == F.lit(delete_op))
-            .withColumn("__seq", F.col(seq_col))
-            .drop(op_col, seq_col)
-        )
-        if table_exists(root):
-            unioned = read_table(spark, root).unionByName(tagged)
-        else:
-            unioned = tagged
-        w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
-        folded = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        commit_table(folded, root, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        stream, checkpoint_dir, VersionedRoot(root), cdc_step(keys, seq_col, op_col, delete_op)
     )
 
 

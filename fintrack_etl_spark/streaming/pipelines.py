@@ -9,13 +9,28 @@ Scale notes (1000-executor target):
   set once at session level (changing it breaks checkpoint resume);
 * ``availableNow`` triggers process a backlog in bounded batches and
   then stop — the batch-parity escape hatch used by the tests.
+
+The four stateful sinks here (``upsert_sink_stream``,
+``continuous_aggregate_stream``, ``cdc_sink_stream``,
+``cusum_drift_stream``) are each one step on the fold driver in
+``streaming/fold.py``, committed to a catalog table; their
+``lake_tx`` twins run the same steps on a commit-log root.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .fold import (
+    CatalogTable,
+    aggregate_step,
+    cdc_step,
+    drawup_step,
+    fold_stream,
+    upsert_step,
+)
 
 
 def _with_event_time(df: DataFrame, ts_col: str) -> DataFrame:
@@ -192,45 +207,18 @@ def upsert_sink_stream(
     ``merge_latest_wins`` the batch path uses (J3 fallback,
     ``datatrack_spark_utils.py:306-362`` semantics).
 
-    Each micro-batch is first deduped within itself, then merged into
-    the managed table. End-to-end exactly-once comes from the pair
-    (checkpointed source offsets, deterministic idempotent merge): a
-    replayed batch re-merges to the identical table state, so crash
-    recovery cannot double-apply. The merged result is pinned with
-    ``localCheckpoint`` before the overwrite because the plan reads
-    the same table it replaces. For an ATOMIC commit point (no
-    overwrite window at all) use
-    ``lake_tx.upsert_sink_stream_versioned``.
+    The first micro-batch seeds the managed table deduped; each later
+    one is merged into it. The merge is deterministic and idempotent,
+    and the fold driver (``streaming/fold.py``) skips a replayed
+    ``batch_id`` and fails fast on a checkpoint reset, like every
+    sink. ``lake_tx.upsert_sink_stream_versioned`` runs the same step
+    on a commit-log root, where data and ``batch_id`` publish in one
+    atomic commit.
 
     Returns the started query; callers ``awaitTermination()``.
     """
-    from ..operators.upsert import merge_latest_wins
-    from ..operators.windows import dedup_latest
-
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        incoming = dedup_latest(batch_df, keys, order_col, tie_breakers)
-        if spark.catalog.tableExists(table):
-            merged = merge_latest_wins(
-                spark.table(table), incoming, keys, order_col, tie_breakers
-            ).localCheckpoint()
-            merged.write.mode("overwrite").saveAsTable(table)
-            # the table IS the persistence now; without this, a
-            # long-running query strands one table-size block set per
-            # micro-batch (unbounded block-manager growth)
-            from ..operators.memo import unpersist_checkpointed
-
-            unpersist_checkpointed(merged)
-        else:
-            incoming.write.saveAsTable(table)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        stream, checkpoint_dir, CatalogTable(table), upsert_step(keys, order_col, tie_breakers)
     )
 
 
@@ -247,83 +235,19 @@ def continuous_aggregate_stream(
     one |batch| partial agg + one |keys|-row merge; history is never
     rescanned.
 
-    Unlike latest-wins MERGE, a sum-merge is NOT idempotent — replaying
-    a batch after a crash would double-count. Exactly-once therefore
-    needs the transactional-foreachBatch pattern: the state table's
-    companion ``<table>__meta`` records the last folded ``batch_id``;
-    a replayed batch (same id from the checkpoint) is skipped, and a
-    batch id BELOW the recorded watermark — only possible when the
-    checkpoint dir was deleted/relocated while the state tables
-    survived — fails fast instead of silently skipping every batch.
-    The state/meta writes are two statements here (a real lakehouse
-    does both in one MERGE transaction — without the Iceberg jar the
-    commit-point gap is documented rather than hidden);
-    ``lake_tx.continuous_aggregate_stream_versioned`` closes the gap
-    with an atomic manifest-swap commit.
+    Unlike latest-wins MERGE, a sum-merge is NOT idempotent: replaying
+    a batch would double-count. The fold driver's replay rule
+    (``streaming/fold.py``) makes it exactly-once: ``<table>__meta``
+    records the last folded ``batch_id``, a replayed id is skipped,
+    and an id below it fails fast. The catalog table's state and meta
+    writes are two statements (the gap is documented in
+    ``streaming/fold.py``);
+    ``lake_tx.continuous_aggregate_stream_versioned`` runs the same
+    step on a commit-log root, which closes the gap.
 
     Returns the started query; callers ``awaitTermination()``.
     """
-    from ..operators.incremental import merge_aggregate_state, partial_aggregate
-
-    fold = transactional_fold(
-        table,
-        "continuous_aggregate_stream",
-        lambda batch_df: partial_aggregate(batch_df, keys, value_col),
-        lambda state, delta: merge_aggregate_state(state, delta, keys),
-    )
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def transactional_fold(table: str, name: str, make_delta, merge_state):
-    """The ONE copy of the transactional-foreachBatch scaffolding every
-    mergeable-state sink shares: the ``<table>__meta`` batch-id replay
-    guard (non-idempotent merges must skip a replayed id and fail fast
-    on an id BELOW the watermark — only possible when the checkpoint
-    dir was deleted/relocated while the state tables survived), the
-    merge-or-create state write, and the batch-id record. The
-    state/meta writes are two statements (the commit-point gap is
-    documented; ``lake_tx``'s versioned sinks close it with an atomic
-    manifest swap). Returns the fold callable — directly invokable in
-    tests to exercise the guard paths without a stream."""
-    meta_table = f"{table}__meta"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if spark.catalog.tableExists(meta_table):
-            row = spark.table(meta_table).first()
-            # row is None if a crash landed between table truncate and
-            # write — treat as "no batch recorded" and re-fold
-            if row is not None:
-                last = row["last_batch_id"]
-                if batch_id == last:
-                    return  # legitimate checkpoint replay of the last batch
-                if batch_id < last:
-                    raise RuntimeError(
-                        f"{name}({table}): batch_id {batch_id} < recorded "
-                        f"last_batch_id {last} — the checkpoint was reset "
-                        f"while state survived. Drop {table}/{meta_table} "
-                        "or restore the original checkpoint dir."
-                    )
-        delta = make_delta(batch_df)
-        if spark.catalog.tableExists(table):
-            merged = merge_state(spark.table(table), delta).localCheckpoint()
-            merged.write.mode("overwrite").saveAsTable(table)
-            # free the per-batch merge pin (see upsert_sink_stream)
-            from ..operators.memo import unpersist_checkpointed
-
-            unpersist_checkpointed(merged)
-        else:
-            delta.write.saveAsTable(table)
-        spark.createDataFrame([(batch_id,)], "last_batch_id long").write.mode(
-            "overwrite"
-        ).saveAsTable(meta_table)
-
-    return fold
+    return fold_stream(stream, checkpoint_dir, CatalogTable(table), aggregate_step(keys, value_col))
 
 
 def stream_interval_join(
@@ -537,44 +461,14 @@ def cdc_sink_stream(
     are vacuumable once the source's replay horizon has passed them
     (same retention reasoning as lake_tx snapshot expiry).
 
-    Same two-statement commit window as ``upsert_sink_stream``
-    (overwrite after localCheckpoint); the atomic variant composes the
-    identical fold with ``lake_tx``'s manifest-swap commit.
+    Commits and replays like every sink (``streaming/fold.py``);
+    ``lake_tx.cdc_sink_stream_versioned`` runs the same step on a
+    commit-log root.
 
     Returns the started query; callers ``awaitTermination()``.
     """
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tagged = (
-            batch_df.withColumn("__deleted", F.col(op_col) == F.lit(delete_op))
-            .withColumn("__seq", F.col(seq_col))
-            .drop(op_col, seq_col)
-        )
-        if spark.catalog.tableExists(table):
-            unioned = spark.table(table).unionByName(tagged)
-        else:
-            unioned = tagged
-        w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
-        folded = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint()
-        )
-        folded.write.mode("overwrite").saveAsTable(table)
-        # free the per-batch fold pin (see upsert_sink_stream)
-        from ..operators.memo import unpersist_checkpointed
-
-        unpersist_checkpointed(folded)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        stream, checkpoint_dir, CatalogTable(table), cdc_step(keys, seq_col, op_col, delete_op)
     )
 
 
@@ -599,13 +493,9 @@ def cdc_vacuum_tombstones(spark: SparkSession, table: str, below_seq: int) -> in
     doomed = cur.filter(F.col("__deleted") & (F.col("__seq") < below_seq))
     n = doomed.count()
     if n:
-        kept = cur.filter(
-            ~(F.col("__deleted") & (F.col("__seq") < below_seq))
-        ).localCheckpoint()
-        kept.write.mode("overwrite").saveAsTable(table)
-        from ..operators.memo import unpersist_checkpointed
-
-        unpersist_checkpointed(kept)
+        CatalogTable(table).overwrite(
+            cur.filter(~(F.col("__deleted") & (F.col("__seq") < below_seq)))
+        )
     return n
 
 
@@ -625,26 +515,15 @@ def cusum_drift_stream(
     key's rows in non-decreasing ``order_col`` across batches (true
     for append-only event logs / file drops named in time order; an
     out-of-order source needs the watermark+sort front end of
-    ``windowed_agg_stream`` first). Same transactional-foreachBatch
-    replay guard as ``continuous_aggregate_stream``: drawup merges are
-    not idempotent, so a replayed batch id is skipped and a batch id
-    below the recorded watermark fails fast.
+    ``windowed_agg_stream`` first). Drawup merges are not idempotent;
+    the fold driver's replay rule (``streaming/fold.py``) skips a
+    replayed batch id and fails fast on one below the recorded
+    watermark.
 
     Each batch costs one |batch| window pass + one |keys|-row state
     merge; history is never rescanned. Returns the started query."""
-    from ..operators.incremental import merge_drawup_state, partial_drawup_state
-
-    fold = transactional_fold(
-        table,
-        "cusum_drift_stream",
-        lambda batch_df: partial_drawup_state(batch_df, keys, order_col, value_col),
-        lambda state, delta: merge_drawup_state(state, delta, keys),
-    )
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        stream, checkpoint_dir, CatalogTable(table), drawup_step(keys, order_col, value_col)
     )
 
 

@@ -196,6 +196,33 @@ def test_streaming_continuous_aggregate_versioned_matches_batch(spark, events_di
     assert sorted(map(tuple, lake_tx.read_table(spark, root).collect())) == before
 
 
+def test_batch_side_commits_keep_stream_watermark(spark, tmp_path):
+    """A commit that passes no batch_id (delete_rows, a CAS commit)
+    keeps the stream's last batch_id: a replay of the last streamed
+    batch still skips instead of double-counting the sum-merge."""
+    from fintrack_etl_spark.streaming.fold import VersionedRoot, aggregate_step, fold_batch
+
+    root = str(tmp_path / "agg")
+    fold = fold_batch(VersionedRoot(root), aggregate_step(["k"], "x"))
+    batches = [
+        spark.createDataFrame([(k, 10 * b + k) for k in (1, 2, 3)], "k long, x long")
+        for b in range(3)
+    ]
+    for b, batch in enumerate(batches):
+        fold(batch, b)
+    lake_tx.delete_rows(spark, root, F.col("k") == 3)
+    assert lake_tx.last_batch_id(root) == 2
+    v = lake_tx.commit_table_cas(
+        lake_tx.read_table(spark, root), root, expected_version=lake_tx.current_version(root)
+    )
+    assert lake_tx.last_batch_id(root) == 2
+    before = sorted(map(tuple, lake_tx.read_table(spark, root).collect()))
+
+    fold(batches[2], 2)  # replay of the last streamed batch
+    assert lake_tx.current_version(root) == v
+    assert sorted(map(tuple, lake_tx.read_table(spark, root).collect())) == before
+
+
 def test_time_travel_and_vacuum_interaction(spark, tmp_path):
     """Any retained snapshot is readable by version (immutable dirs);
     a vacuumed one fails with a named error, never a wrong answer."""

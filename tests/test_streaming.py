@@ -152,6 +152,17 @@ def test_running_totals_stateful_stream(spark, events_dir, tmp_path):
         assert abs(f[k][1] - b[k][1]) < 1e-6
 
 
+def _drop_sink_table(spark, tbl):
+    """Drop a catalog sink's table and its ``__meta`` watermark. A
+    crashed earlier run can leave a managed location behind after the
+    catalog entry is gone; saveAsTable then refuses the name."""
+    import shutil
+
+    for name in (tbl, f"{tbl}__meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
+
+
 def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
     """foreachBatch upsert sink: after draining the backlog file-by-file,
     the managed table must equal a single batch latest-wins dedup over
@@ -167,7 +178,7 @@ def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
     ev = spark.read.parquet(events_dir)
     schema = ev.schema
     tbl = "upsert_sink_t"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    _drop_sink_table(spark, tbl)
     stream = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
     q = upsert_sink_stream(
         stream, os.path.join(str(tmp_path), "ck"), tbl,
@@ -183,7 +194,7 @@ def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
         .collect()
     }
     assert got == want and len(got) > 0
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    _drop_sink_table(spark, tbl)
 
 
 def test_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
@@ -309,40 +320,71 @@ def test_quality_gate_composes_with_streaming(spark, events_dir, tmp_path):
     assert got.count() + bad_batch.count() == spark.read.parquet(events_dir).count()
 
 
-def test_continuous_aggregate_detects_checkpoint_reset(spark, events_dir, tmp_path):
-    """Deleting/relocating the checkpoint while the state tables survive
-    restarts batch ids at 0; the guard must FAIL FAST (stale-state
-    silent skip and double-count are both wrong answers)."""
-    import pytest
+@pytest.fixture(scope="module")
+def reset_land(spark, tmp_path_factory):
+    """Two landing dirs of single-row files over one schema every sink
+    can fold (key ``k``, order/seq ``i``, value ``x``, CDC op ``op``):
+    3 files of keys 1-3, then 2 files of NEW keys 4-5."""
+    out = tmp_path_factory.mktemp("reset_land")
+    dirs = []
+    for name, keys in (("old", (1, 2, 3)), ("new", (4, 5))):
+        d = str(out / name)
+        for k in keys:
+            spark.createDataFrame(
+                [(k, 10 * k, k * k, "D" if k == 2 else "U")], "k long, i long, x long, op string"
+            ).coalesce(1).write.mode("append").parquet(d)
+        dirs.append(d)
+    return dirs
+
+
+# every stateful sink: the arguments after (stream, checkpoint, table)
+_RESET_SINKS = {
+    "upsert_sink_stream": (["k"], "i"),
+    "continuous_aggregate_stream": (["k"], "x"),
+    "cdc_sink_stream": (["k"], "i", "op"),
+    "cusum_drift_stream": (["k"], "i", "x"),
+    "upsert_sink_stream_versioned": (["k"], "i"),
+    "continuous_aggregate_stream_versioned": (["k"], "x"),
+    "cdc_sink_stream_versioned": (["k"], "i", "op"),
+}
+
+
+@pytest.mark.parametrize("sink", list(_RESET_SINKS))
+def test_sink_detects_checkpoint_reset(spark, reset_land, tmp_path, sink):
+    """Deleting/relocating the checkpoint while the state survives
+    restarts batch ids at 0; every sink, on its own table kind, must
+    FAIL FAST (silently skipping the new data and re-folding are both
+    wrong answers) and leave the state untouched."""
     from pyspark.sql.streaming import StreamingQueryException
 
-    from fintrack_etl_spark.streaming import continuous_aggregate_stream
+    from fintrack_etl_spark import lake_tx
+    from fintrack_etl_spark.streaming import pipelines
 
-    schema = _schema(spark, events_dir)
-    tbl = f"cagg_{uuid.uuid4().hex[:8]}"
+    old, new = reset_land
+    versioned = sink.endswith("_versioned")
+    run = getattr(lake_tx if versioned else pipelines, sink)
+    target = str(tmp_path / "root") if versioned else f"reset_{uuid.uuid4().hex[:8]}"
 
-    q = continuous_aggregate_stream(
-        file_source_stream(spark, events_dir, schema, max_files_per_trigger=1),
-        os.path.join(str(tmp_path), "ck1"),
-        tbl,
-        ["event_type"],
-        "value",
-    )
-    q.awaitTermination()
-    before = _rows(spark.table(tbl), "event_type")
+    def drain(src, ck):
+        stream = file_source_stream(spark, src, _schema(spark, src), max_files_per_trigger=1)
+        return run(stream, os.path.join(str(tmp_path), ck), target, *_RESET_SINKS[sink])
+
+    def state():
+        df = lake_tx.read_table(spark, target) if versioned else spark.table(target)
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    drain(old, "ck1").awaitTermination()
+    before = state()
+    assert len(before) == 3
 
     # fresh checkpoint, surviving state: batch 0 arrives below watermark
-    q2 = continuous_aggregate_stream(
-        file_source_stream(spark, events_dir, schema, max_files_per_trigger=1),
-        os.path.join(str(tmp_path), "ck2"),
-        tbl,
-        ["event_type"],
-        "value",
-    )
+    q2 = drain(new, "ck2")
     with pytest.raises(StreamingQueryException, match="checkpoint was reset"):
         q2.awaitTermination()
     # and the state was left untouched by the failed run
-    assert _rows(spark.table(tbl), "event_type") == before
+    assert state() == before
+    if not versioned:
+        _drop_sink_table(spark, target)
 
 
 def test_stratified_sample_composes_with_streaming(spark, events_dir, tmp_path):
@@ -645,12 +687,7 @@ def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path):
     log.repartition(4).write.parquet(logdir)
 
     tbl = "cdc_sink_t"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # a crashed earlier run can leave the managed location behind after
-    # the catalog entry is gone; saveAsTable then refuses the name
-    import shutil
-
-    shutil.rmtree(f"spark-warehouse/{tbl}", ignore_errors=True)
+    _drop_sink_table(spark, tbl)
     stream = file_source_stream(
         spark, logdir, spark.read.parquet(logdir).schema, max_files_per_trigger=1
     )
@@ -671,7 +708,7 @@ def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path):
     assert got == want and len(got) > 0
     # tombstoned keys really are gone
     assert not any(k % 3 == 0 for k, _ in got)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    _drop_sink_table(spark, tbl)
 
 
 def test_cdc_vacuum_drops_only_expired_tombstones(spark):
@@ -826,28 +863,44 @@ def test_cusum_drift_stream_matches_batch(spark, tmp_path):
     got2 = {r["k"]: (r["du_s"], r["du_d"]) for r in spark.table(tbl).collect()}
     assert got2 == want
 
-    # exercise the batch-id guard DIRECTLY (the drained checkpoint
-    # delivers no batches, so the paths above never run it): a
-    # replayed last id must skip, an id below the watermark must raise
-    from fintrack_etl_spark.operators.incremental import (
-        merge_drawup_state,
-        partial_drawup_state,
+    # exercise the fold driver's replay rule DIRECTLY (the drained
+    # checkpoint delivers no batches, so the paths above never run it),
+    # on both table kinds — the versioned root seeded with the same
+    # state and watermark: a replayed last id must skip, an id below
+    # the watermark must raise
+    from fintrack_etl_spark import lake_tx
+    from fintrack_etl_spark.streaming.fold import (
+        CatalogTable,
+        VersionedRoot,
+        drawup_step,
+        fold_batch,
     )
-    from fintrack_etl_spark.streaming.pipelines import transactional_fold
 
-    fold = transactional_fold(
-        tbl,
-        "cusum_drift_stream",
-        lambda b: partial_drawup_state(b, ["k"], "i", "x"),
-        lambda s, d: merge_drawup_state(s, d, ["k"]),
-    )
     last = spark.table(f"{tbl}__meta").first()["last_batch_id"]
+    root = os.path.join(str(tmp_path), "root")
+    lake_tx.commit_table(spark.table(tbl), root, batch_id=last)
     poison = spark.createDataFrame([("a", 999, 10**6)], "k string, i int, x long")
-    fold(poison, last)  # replay of the recorded id: skipped, state intact
-    got3 = {r["k"]: (r["du_s"], r["du_d"]) for r in spark.table(tbl).collect()}
-    assert got3 == want
-    with pytest.raises(RuntimeError, match="checkpoint was reset"):
-        fold(poison, last - 1)
+    for kind in (CatalogTable(tbl), VersionedRoot(root)):
+        fold = fold_batch(kind, drawup_step(["k"], "i", "x"))
+        fold(poison, last)  # replay of the recorded id: skipped, state intact
+        got3 = {r["k"]: (r["du_s"], r["du_d"]) for r in kind.read(spark).collect()}
+        assert got3 == want
+        with pytest.raises(RuntimeError, match="checkpoint was reset"):
+            fold(poison, last - 1)
+
+
+def test_one_foreach_batch_site():
+    """One fold driver: exactly one package file starts a
+    ``foreachBatch`` sink, so no sink grows its own replay rule back."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "fintrack_etl_spark"
+    hits = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if "foreachBatch(" in p.read_text(errors="replace")
+    ]
+    assert hits == ["streaming/fold.py"]
 
 
 def test_first_seen_typed_state_matches_batch_distinct(spark, events_dir, tmp_path):
