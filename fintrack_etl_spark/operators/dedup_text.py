@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..textops import fingerprint, shingles, tokens
+from .memo import df_memo_key, memoized
 
 
 def exact_dup_groups(df: DataFrame, id_col: str, text_col: str, normalized: bool = False) -> DataFrame:
@@ -28,38 +29,20 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str, normalized: bool
     )
 
 
-#: Session memo for the shingled corpus: x3/x4/x63/x16/x33 each shingle
-#: the same recrawl corpus per run (tokenize + n-gram transform is the
-#: shared front of every dedup pipeline, ~2-3 s at sf0.1). Keyed on the
-#: corpus's canonicalized analyzed plan — exact plan equality — and
-#: bounded FIFO (same discipline as similarity._TRAIN_CACHE).
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-_SHINGLE_CACHE_MAX = 16
-
-
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    # Identity = canonicalized plan (expr-ids normalized, literals kept)
-    # PLUS the scan's file signature (path + mtime + size, ADVICE r6):
-    # canonicalization alone omits BOTH the parquet path and
-    # LocalRelation data, so sf0.01/sf0.1 — or two different
-    # createDataFrame corpora — would collide, and a fixture path
-    # overwritten in-session must not hit the stale entry. Plans with
-    # no input files (test-local relations) are never memoized, and
-    # FIFO eviction unpersists the evicted checkpoint blocks.
-    from .memo import df_memo_key, evicting_put
+    # x3/x4/x63/x16/x33 each shingle the same recrawl corpus per run
+    # (tokenize + n-gram transform is the shared front of every dedup
+    # pipeline, ~2-3 s at sf0.1): one build per corpus plan + file
+    # signature in the "shingle" memo site.
+    def build() -> DataFrame:
+        return (
+            df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+            .filter(F.size("toks") >= n)
+            .select("id", shingles(F.col("toks"), n).alias("sh"))
+            .localCheckpoint(eager=False)
+        )
 
-    key = df_memo_key(df, (id_col, text_col, n))
-    if key is not None and key in _SHINGLE_CACHE:
-        return _SHINGLE_CACHE[key]
-    toks = tokens(F.col(text_col))
-    out = (
-        df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-        .filter(F.size("toks") >= n)
-        .select("id", shingles(F.col("toks"), n).alias("sh"))
-        .localCheckpoint(eager=False)
-    )
-    evicting_put(_SHINGLE_CACHE, _SHINGLE_CACHE_MAX, key, out)
-    return out
+    return memoized("shingle", df_memo_key(df, (id_col, text_col, n)), build)
 
 
 def stop_shingles(
@@ -351,15 +334,13 @@ def ngram_jaccard_pairs(
         # blocks instead of re-exploding and re-aggregating the
         # corpus. Non-memoizable corpora (no file signature) keep the
         # plain lazy plan — one recompute, no unowned pinned blocks.
-        from .memo import df_memo_key, evicting_put
-
         dkey = df_memo_key(df, (id_col, text_col, n, "dftab"))
-        df_tab = _SHINGLE_CACHE.get(dkey) if dkey is not None else None
-        if df_tab is None:
-            df_tab = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-            if dkey is not None:
-                df_tab = df_tab.localCheckpoint(eager=False)
-                evicting_put(_SHINGLE_CACHE, _SHINGLE_CACHE_MAX, dkey, df_tab)
+
+        def df_table() -> DataFrame:
+            tab = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+            return tab if dkey is None else tab.localCheckpoint(eager=False)
+
+        df_tab = memoized("shingle", dkey, df_table)
         band_occupied, any_hot = _guard_profile(df_tab, sh, max_df, max_df_frac)
         if band_occupied:
             return _mark_route(
@@ -902,14 +883,6 @@ def dedup_against_store(
     )
 
 
-#: Session memo for the exact-set collapse (threshold-independent, so
-#: every prefix_filter_pairs threshold over the same corpus shares one
-#: build). Bounded + eviction-unpersisting — the per-call cache()/
-#: checkpoint alternative leaks one block set per invocation.
-_COLLAPSE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_COLLAPSE_CACHE_MAX = 8
-
-
 def _collapsed_rep_sets(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -928,15 +901,20 @@ def _collapsed_rep_sets(
     path dropped them implicitly — filtered out BEFORE the collapse or
     every pair of short docs would surface as a bogus intra J=1 row.
 
-    Returns ``(groups (sh, members), reps (id, sh))``. File-backed
-    corpora are memoized (checkpointed, bounded, eviction-unpersisted);
+    Returns ``(groups (sh, members), reps (id, sh))``. The collapse is
+    threshold-independent, so every prefix_filter_pairs threshold over
+    one corpus shares one build: file-backed corpora are memoized in
+    the "collapse" site (checkpointed, bounded, eviction-unpersisted);
     file-less plans (test-local corpora) are returned UNcached so a
     looped caller cannot strand blocks."""
-    from .memo import df_memo_key, evicting_put
-
     key = df_memo_key(df, ("ppjoin-collapse", id_col, text_col, n))
-    if key is not None and key in _COLLAPSE_CACHE:
-        return _COLLAPSE_CACHE[key]
+    pin = key is not None
+    return memoized("collapse", key, lambda: _collapse(df, id_col, text_col, n, pin))
+
+
+def _collapse(
+    df: DataFrame, id_col: str, text_col: str, n: int, pin: bool
+) -> tuple[DataFrame, DataFrame]:
     sh_all = _shingled(df, id_col, text_col, n).select(
         "id", F.transform("sh", lambda x: F.xxhash64(x)).alias("sh")
     )
@@ -945,10 +923,10 @@ def _collapsed_rep_sets(
         .groupBy(F.sort_array("sh").alias("sh"))
         .agg(F.sort_array(F.collect_list("id")).alias("members"))
     )
-    if key is not None:
+    if pin:
         # EAGER (ADVICE r7): a lazily-checkpointed collapse entry's
-        # recompute depends on a _SHINGLE_CACHE entry's checkpoint
-        # blocks, and the two caches evict independently — evicting the
+        # recompute depends on a "shingle" memo entry's checkpoint
+        # blocks, and the two sites evict independently — evicting the
         # shingle entry would turn a later, never-materialized collapse
         # hit into a "checkpoint block not found" job failure. Eager
         # materialization truncates the lineage NOW (the blocks are
@@ -962,8 +940,6 @@ def _collapsed_rep_sets(
     # element_at map, so the cross-cache lineage-safety argument for
     # eager materialization (above) is inherited, not weakened.
     sh = groups.select(F.element_at("members", 1).alias("id"), "sh")
-    if key is not None:
-        evicting_put(_COLLAPSE_CACHE, _COLLAPSE_CACHE_MAX, key, (groups, sh))
     return groups, sh
 
 

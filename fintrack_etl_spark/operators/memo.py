@@ -1,6 +1,30 @@
-"""Session-scoped memo plumbing shared by the engine's artifact caches
-(`similarity._TRAIN_CACHE`, `dedup_text._SHINGLE_CACHE`,
-`queries._FUZZY_PAIRS_CACHE`, `queries_reports._LANC_CACHE`).
+"""The engine's one session memo: costly per-session artifacts that
+several registry queries share are built once per session, not once
+per query.
+
+``memoized(site, key, build)`` is the only store. A site names its key
+and its build; this module owns the dicts, the bound (``MEMO_MAX``
+entries per site, FIFO) and the eviction. The seven sites:
+
+* ``"train"`` — ``similarity.kmeans_centroids`` / ``pq_train``: the
+  IVF coarse quantizer and the PQ codebooks, model artifacts that
+  x18/x20/x21 would otherwise each retrain per query;
+* ``"count"`` — ``similarity._corpus_count``: corpus vector counts;
+* ``"shingle"`` — ``dedup_text._shingled`` and the document-frequency
+  table ``stop_shingles`` profiles (``"dftab"`` in its key);
+* ``"collapse"`` — ``dedup_text._collapsed_rep_sets``: the exact-set
+  collapse;
+* ``"fuzzy"`` — ``queries._fuzzy_part_pairs``: the fuzzy part-name
+  pair graph;
+* ``"bpe"`` — ``queries_ext._bpe_words_enc``: the trained BPE
+  dictionary;
+* ``"lanc"`` — ``queries_reports._lancamentos``: the categorized
+  lançamentos.
+
+Each site has its own dict, so filling one evicts nothing from another
+(a cheap count can never push out a trained model, ADVICE r9). The
+first four key on :func:`df_memo_key`, the fixture sites on
+:func:`fixture_key`; a ``None`` key builds and stores nothing.
 
 Two hazards these helpers close (ADVICE r6):
 
@@ -23,7 +47,13 @@ from __future__ import annotations
 import os
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+#: Entries kept per site; the oldest insert is evicted first.
+MEMO_MAX = 16
+
+#: site -> {key: value}, insertion-ordered (FIFO eviction)
+_STORE: dict[str, dict] = {}
 
 
 def file_signature(files) -> tuple:
@@ -56,6 +86,17 @@ def df_memo_key(df: DataFrame, extra: tuple) -> tuple | None:
     except Exception:  # noqa: BLE001 — memo is best-effort
         return None
     return (app, plan, file_signature(files), extra)
+
+
+def fixture_key(spark: SparkSession, sf_dir: str, table: str) -> tuple:
+    """Identity of a registry fixture table = applicationId + sf_dir +
+    the signature of ``<sf_dir>/<table>.parquet``, so an in-session
+    overwrite of the fixture misses instead of serving stale rows."""
+    return (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        file_signature([os.path.join(sf_dir, f"{table}.parquet")]),
+    )
 
 
 def unpersist_checkpointed(value) -> None:
@@ -98,3 +139,23 @@ def evicting_put(cache: dict, max_size: int, key, value) -> None:
         old = cache.pop(next(iter(cache)))  # oldest insert (dicts are ordered)
         unpersist_checkpointed(old)
     cache[key] = value
+
+
+def memoized(site: str, key, build):
+    """``site``'s value for ``key``, built by ``build()`` on a miss and
+    kept under the ``evicting_put`` contract. A ``None`` key builds
+    every time and stores nothing."""
+    if key is None:
+        return build()
+    entries = _STORE.setdefault(site, {})
+    if key in entries:
+        return entries[key]
+    value = build()
+    evicting_put(entries, MEMO_MAX, key, value)
+    return value
+
+
+def clear(site: str) -> None:
+    """Empty ``site`` and free its entries' checkpoint blocks."""
+    for value in _STORE.pop(site, {}).values():
+        unpersist_checkpointed(value)

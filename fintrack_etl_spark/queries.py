@@ -33,6 +33,7 @@ from .operators import upsert as upsert_ops
 from .operators import skew as skew_ops
 from .operators import windows as win_ops
 from .operators.evolve import evolve_union
+from .operators.memo import fixture_key, memoized
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2293,50 +2294,33 @@ def ext_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session memo for the fuzzy part-name similarity graph: the blocked
-#: Levenshtein pair build is the shared (and dominant) cost of
-#: ext_fuzzy_join / ext_entity_resolution / x38_triangle_count — one
-#: build per (session, sf_dir) instead of three (same discipline as
-#: _LANC_CACHE and similarity._TRAIN_CACHE).
-_FUZZY_PAIRS_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _fuzzy_part_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(parts-with-block-keys, fuzzy pair graph) — 3-key blocking
     (last token, first token, type), Levenshtein <= 3, hard
     max_block_size=1000 quarantine (~13x the fixture max block; every
-    consumer's oracle applies the identical window-count filter)."""
+    consumer's oracle applies the identical window-count filter).
+
+    The blocked Levenshtein pair build is the shared (and dominant)
+    cost of ext_fuzzy_join / ext_entity_resolution /
+    x38_triangle_count: one build per (session, part fixture) in the
+    "fuzzy" memo site."""
     from .operators.joins import fuzzy_self_pairs
-    from .operators.memo import file_signature
 
-    # key carries the fixture file signature (mtime+size) so an
-    # in-session overwrite of sf_dir misses instead of reading stale
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        file_signature([os.path.join(sf_dir, "part.parquet")]),
-    )
-    got = _FUZZY_PAIRS_CACHE.get(key)
-    if got is not None:
-        return got
-    p = T(spark, sf_dir, "part").select(
-        "p_partkey",
-        "p_name",
-        "p_type",
-        F.regexp_extract(F.lower(F.col("p_name")), "^[a-z0-9]+", 0).alias("fst"),
-        F.regexp_extract(F.lower(F.col("p_name")), "[a-z0-9]+$", 0).alias("blk"),
-    )
-    pairs = fuzzy_self_pairs(
-        p, "p_partkey", "p_name", ["blk", "fst", "p_type"], max_dist=3,
-        max_block_size=1000,
-    ).localCheckpoint(eager=False)
-    # bounded + eviction-unpersisting insert: with the file signature
-    # in the key, an overwrite-in-a-loop workload would otherwise
-    # strand one checkpointed pair graph per rewrite
-    from .operators.memo import evicting_put
+    def build() -> tuple[DataFrame, DataFrame]:
+        p = T(spark, sf_dir, "part").select(
+            "p_partkey",
+            "p_name",
+            "p_type",
+            F.regexp_extract(F.lower(F.col("p_name")), "^[a-z0-9]+", 0).alias("fst"),
+            F.regexp_extract(F.lower(F.col("p_name")), "[a-z0-9]+$", 0).alias("blk"),
+        )
+        pairs = fuzzy_self_pairs(
+            p, "p_partkey", "p_name", ["blk", "fst", "p_type"], max_dist=3,
+            max_block_size=1000,
+        ).localCheckpoint(eager=False)
+        return p, pairs
 
-    evicting_put(_FUZZY_PAIRS_CACHE, 4, key, (p, pairs))
-    return (p, pairs)
+    return memoized("fuzzy", fixture_key(spark, sf_dir, "part"), build)
 
 
 @register(

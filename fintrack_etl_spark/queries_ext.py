@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from . import textops as TX
 from .operators import dedup_text as DD
 from .operators import graph as GR
+from .operators.memo import fixture_key, memoized
 from .queries import T
 from .similarity import cosine_topk_bruteforce, cosine_topk_lsh, ivf_topk, label_centroids
 
@@ -3998,96 +3999,83 @@ def _x53_final() -> str:
     """
 
 
-#: Session memo for the trained BPE dictionary (x53 + x89 share one
-#: build per (session, fixture) — the trainer is a model artifact,
-#: same discipline as similarity._TRAIN_CACHE).
-_BPE_ENC_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _bpe_words_enc(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared x53/x89 build: train 3 BPE merges on the word-frequency
     dictionary (x46's trainer, boundary-anchored symbols) and return
     ``(words (doc_id, w), enc (w, n_tok))`` — the encoded dictionary a
-    tokenization pipeline joins against."""
-    import os as _os
+    tokenization pipeline joins against. The trainer is a model
+    artifact: x53 and x89 share one build per (session, documents
+    fixture) in the "bpe" memo site."""
 
-    from .operators.memo import evicting_put, file_signature
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        file_signature([_os.path.join(sf_dir, "documents.parquet")]),
-    )
-    got = _BPE_ENC_CACHE.get(key)
-    if got is not None:
-        return got
-    docs = T(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
-    ).filter(F.length("w") >= 2)
-    dic = (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            "w",
-            F.array_join(
-                F.expr(
-                    "transform(sequence(1, length(w)), "
-                    "i -> concat(chr(2), substring(w, i, 1), chr(3)))"
-                ),
-                "",
-            ).alias("sym"),
-            "freq",
-        )
-    ).localCheckpoint()
-    for _ in range(3):
-        pairs = (
-            dic.select(
-                F.split(
-                    F.expr("substring(sym, 2, length(sym) - 2)"), "\x03\x02"
-                ).alias("s"),
-                "freq",
-            )
+    def build() -> tuple[DataFrame, DataFrame]:
+        docs = T(spark, sf_dir, "documents")
+        words = docs.select(
+            "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
+        ).filter(F.length("w") >= 2)
+        dic = (
+            words.groupBy("w")
+            .agg(F.count(F.lit(1)).alias("freq"))
             .select(
-                F.explode(
+                "w",
+                F.array_join(
                     F.expr(
-                        "CASE WHEN size(s) >= 2 THEN "
-                        "transform(sequence(1, size(s) - 1), "
-                        "i -> struct(s[i - 1] AS a, s[i] AS b)) "
-                        "ELSE array() END"
-                    )
-                ).alias("p"),
+                        "transform(sequence(1, length(w)), "
+                        "i -> concat(chr(2), substring(w, i, 1), chr(3)))"
+                    ),
+                    "",
+                ).alias("sym"),
                 "freq",
             )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        top = pairs.orderBy(F.col("cnt").desc(), "a", "b").limit(1).localCheckpoint()
-        dic = dic.crossJoin(F.broadcast(top)).select(
+        ).localCheckpoint()
+        for _ in range(3):
+            pairs = (
+                dic.select(
+                    F.split(
+                        F.expr("substring(sym, 2, length(sym) - 2)"), "\x03\x02"
+                    ).alias("s"),
+                    "freq",
+                )
+                .select(
+                    F.explode(
+                        F.expr(
+                            "CASE WHEN size(s) >= 2 THEN "
+                            "transform(sequence(1, size(s) - 1), "
+                            "i -> struct(s[i - 1] AS a, s[i] AS b)) "
+                            "ELSE array() END"
+                        )
+                    ).alias("p"),
+                    "freq",
+                )
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("freq").alias("cnt"))
+            )
+            top = pairs.orderBy(F.col("cnt").desc(), "a", "b").limit(1).localCheckpoint()
+            dic = dic.crossJoin(F.broadcast(top)).select(
+                "w",
+                F.replace(
+                    F.col("sym"),
+                    F.concat(
+                        F.lit("\x02"), F.col("a"), F.lit("\x03"),
+                        F.lit("\x02"), F.col("b"), F.lit("\x03"),
+                    ),
+                    F.concat(
+                        F.lit("\x02"), F.col("a"), F.lit("~"), F.col("b"),
+                        F.lit("\x03"),
+                    ),
+                ).alias("sym"),
+                "freq",
+            )
+        enc = dic.select(
             "w",
-            F.replace(
-                F.col("sym"),
-                F.concat(
-                    F.lit("\x02"), F.col("a"), F.lit("\x03"),
-                    F.lit("\x02"), F.col("b"), F.lit("\x03"),
-                ),
-                F.concat(
-                    F.lit("\x02"), F.col("a"), F.lit("~"), F.col("b"),
-                    F.lit("\x03"),
-                ),
-            ).alias("sym"),
-            "freq",
-        )
-    enc = dic.select(
-        "w",
-        F.size(
-            F.split(F.expr("substring(sym, 2, length(sym) - 2)"), "\x03\x02")
-        ).alias("n_tok"),
-    ).localCheckpoint(eager=False)
-    evicting_put(_BPE_ENC_CACHE, 4, key, (words, enc))
-    return words, enc
+            F.size(
+                F.split(F.expr("substring(sym, 2, length(sym) - 2)"), "\x03\x02")
+            ).alias("n_tok"),
+        ).localCheckpoint(eager=False)
+        return words, enc
+
+    return memoized("bpe", fixture_key(spark, sf_dir, "documents"), build)
 
 
 @register("x53_bpe_encode", _x53_oracle() + _x53_final())

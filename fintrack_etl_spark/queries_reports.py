@@ -8,7 +8,6 @@ compute every expected report from the same fixture rows.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -16,6 +15,7 @@ from pyspark.sql import functions as F
 
 from . import reports, rules
 from .forms import normalize_forms
+from .operators.memo import fixture_key, memoized
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -55,16 +55,6 @@ _DESC_SQL = """
 """
 
 
-#: Session-scoped cache of the categorized lançamentos frame, keyed by
-#: (applicationId, sf_dir, orders file signature). Every report query
-#: shares one dictionary: its plan is built and its
-#: lazy-localCheckpoint'ed RDD materializes once per session, not once
-#: per report. At sf0.1 (4 vCPUs, warm session) a miss costs
-#: r1_monthly_by_category 1.2-1.7 s of build + noop write against
-#: 0.7-1.0 s on a hit.
-_LANC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _lancamentos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → lançamentos shape: data/descricao/valor + F12 fields +
     a unique ``lanc_id`` tie-break key.
@@ -74,46 +64,39 @@ def _lancamentos(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcast-joins back, so no report's fact path carries a
     regex. The same dictionary shape is what a 100 TB pipeline needs
     anyway — regex once per merchant, zero shuffle on the fact side.
+
+    Every report query shares one build per (session, orders fixture)
+    in the "lanc" memo site: its plan is built and its
+    lazy-localCheckpoint'ed RDD materializes once per session, not once
+    per report. At sf0.1 (4 vCPUs, warm session) a miss costs
+    r1_monthly_by_category 1.2-1.7 s of build + noop write against
+    0.7-1.0 s on a hit.
     """
-    from .operators.memo import file_signature
 
-    # fixture file signature in the key (ADVICE r6): an in-session
-    # overwrite of orders.parquet must miss, not serve stale rows
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        file_signature([os.path.join(sf_dir, "orders.parquet")]),
-    )
-    cached = _LANC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    o = T(spark, sf_dir, "orders").repartition(spark.sparkContext.defaultParallelism)
-    desc = F.expr(_DESC_SQL)
-    signed = F.when(F.col("o_orderkey") % 2 == 0, F.col("o_totalprice")).otherwise(
-        -F.col("o_totalprice")
-    )
-    base = o.select(
-        F.col("o_orderkey").alias("lanc_id"),
-        F.date_format("o_orderdate", "dd/MM/yyyy").alias("data"),
-        desc.alias("descricao"),
-        F.round(signed, 2).alias("valor"),
-    )
-    out = rules.categorize_dictionary(base, "descricao").select(
-        "lanc_id",
-        "data",
-        "descricao",
-        "valor",
-        "categoria",
-        "subcategoria",
-        "recorrente_suspeita",
-        "parcelado_suspeito",
-    )
-    from .operators.memo import evicting_put
+    def build() -> DataFrame:
+        o = T(spark, sf_dir, "orders").repartition(spark.sparkContext.defaultParallelism)
+        desc = F.expr(_DESC_SQL)
+        signed = F.when(F.col("o_orderkey") % 2 == 0, F.col("o_totalprice")).otherwise(
+            -F.col("o_totalprice")
+        )
+        base = o.select(
+            F.col("o_orderkey").alias("lanc_id"),
+            F.date_format("o_orderdate", "dd/MM/yyyy").alias("data"),
+            desc.alias("descricao"),
+            F.round(signed, 2).alias("valor"),
+        )
+        return rules.categorize_dictionary(base, "descricao").select(
+            "lanc_id",
+            "data",
+            "descricao",
+            "valor",
+            "categoria",
+            "subcategoria",
+            "recorrente_suspeita",
+            "parcelado_suspeito",
+        )
 
-    # bounded + eviction-unpersisting insert (file-signature keys mean
-    # fixture overwrites mint new keys — cap the stale tail)
-    evicting_put(_LANC_CACHE, 4, key, out)
-    return out
+    return memoized("lanc", fixture_key(spark, sf_dir, "orders"), build)
 
 
 def _lanc_cte() -> str:

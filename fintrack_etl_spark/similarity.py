@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .operators.memo import df_memo_key, memoized, unpersist_checkpointed
+
 
 def _as_double(c: Column) -> Column:
     return c.cast("array<double>")
@@ -256,34 +258,6 @@ def ivf_topk(
     )
 
 
-#: Session-scoped training memo (VERDICT r5 #4): x18/x20/x21 each
-#: retrained identical Lloyd models from scratch in one bench run —
-#: the coarse quantizer and the PQ codebooks are MODEL ARTIFACTS, and
-#: a production pipeline trains them once per corpus version, not once
-#: per query. Keyed on (applicationId, canonicalized analyzed plan of
-#: the corpus, params) — exact plan equality, no hash collisions —
-#: and bounded FIFO so a long-lived session cannot leak checkpoints.
-_TRAIN_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_TRAIN_CACHE_MAX = 16
-
-
-def _train_cache_key(corpus: DataFrame, params: tuple) -> tuple | None:
-    # canonicalization normalizes expr-ids and KEEPS literals, but
-    # omits both parquet paths and LocalRelation data — the file
-    # signature (path + mtime + size, ADVICE r6) disambiguates scale
-    # factors AND in-session fixture overwrites; plans with no input
-    # files (test-local corpora) are never memoized at all.
-    from .operators.memo import df_memo_key
-
-    return df_memo_key(corpus, params)
-
-
-def _train_cache_put(key: tuple | None, value: tuple) -> None:
-    from .operators.memo import evicting_put
-
-    evicting_put(_TRAIN_CACHE, _TRAIN_CACHE_MAX, key, value)
-
-
 #: Floor for the auto-selected coarse-quantizer size (the pre-r9 fixed
 #: default). ``kclusters=None`` in the IVF / IVF-PQ builders resolves to
 #: ``max(floor, ceil(sqrt(n_vectors)))`` — the classical IVF balance
@@ -298,23 +272,10 @@ DEFAULT_IVF_FLOOR = 8
 def _corpus_count(corpus: DataFrame) -> int | None:
     """Memoized ``count(corpus)`` (a columnar-metadata job, no row
     scan), or None when the corpus has no memoizable file signature.
-    Counts live in their OWN small dict, not ``_TRAIN_CACHE``
-    (ADVICE r9): ints sharing the 16-slot FIFO with trained
-    centroid/codebook pairs could evict an expensive model to keep a
-    cheap count, and muddied the cache's DataFrame-pair type contract.
-    No unpersist semantics needed for ints, so a plain bounded FIFO."""
-    key = _train_cache_key(corpus, ("nvec",))
-    if key is None:
-        return None
-    if key not in _COUNT_CACHE:
-        if len(_COUNT_CACHE) >= _COUNT_CACHE_MAX:
-            _COUNT_CACHE.pop(next(iter(_COUNT_CACHE)))
-        _COUNT_CACHE[key] = corpus.count()
-    return _COUNT_CACHE[key]
-
-
-_COUNT_CACHE: dict[tuple, int] = {}
-_COUNT_CACHE_MAX = 64
+    Counts live in their own memo site, so a count never evicts a
+    trained model (ADVICE r9)."""
+    key = df_memo_key(corpus, ("nvec",))
+    return None if key is None else memoized("count", key, corpus.count)
 
 
 #: Minimum candidate rows per task before a pre-scoring spread is worth
@@ -449,10 +410,18 @@ def kmeans_centroids(
         cap = None
     else:
         cap = train_sample_cap
-    ckey = _train_cache_key(corpus, ("kmeans", k, iters, id_col, vec_col, dims, cap))
-    cached = _TRAIN_CACHE.get(ckey) if ckey is not None else None
-    if cached is not None:
-        return cached
+    return memoized(
+        "train",
+        df_memo_key(corpus, ("kmeans", k, iters, id_col, vec_col, dims, cap)),
+        lambda: _kmeans_build(corpus, k, iters, id_col, vec_col, dims, cap),
+    )
+
+
+def _kmeans_build(
+    corpus: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
+    dims: int | None, cap: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """kmeans_centroids' build, unmemoized."""
     # Pin the vector table: every Lloyd round joins it, and re-deriving
     # the scan+cast lineage per round is plan-compile overhead (same
     # rationale as pq_train's sv checkpoint). Spread a compact scan to
@@ -496,11 +465,8 @@ def kmeans_centroids(
                 # Empty training would yield empty centroids → empty
                 # (or crashing) final assignment: fall back to the
                 # full-corpus loop instead.
-                unpersist_blocks = train
+                unpersist_checkpointed(train)
                 train = v
-                from .operators.memo import unpersist_checkpointed
-
-                unpersist_checkpointed(unpersist_blocks)
     # Fixed-width detection — the gate for the Arrow/BLAS assignment
     # below (np.stack needs a rectangular matrix). NOT used to unroll
     # the dot: the r10 probe MEASURED the 64-term unrolled chain in
@@ -657,8 +623,6 @@ def kmeans_centroids(
     # keep depending on the training-only vector pin below (the
     # collapse-cache hazard class), whereas once it is materialized the
     # pin is dead weight and can be freed.
-    from .operators.memo import unpersist_checkpointed
-
     result = (
         assigned.select(F.col("_id").alias(id_col), "cid").localCheckpoint(eager=True),
         cents,
@@ -666,7 +630,6 @@ def kmeans_centroids(
     unpersist_checkpointed(v)
     if train is not v:  # free the training-sample pin too (block hygiene)
         unpersist_checkpointed(train)
-    _train_cache_put(ckey, result)
     return result
 
 
@@ -812,10 +775,18 @@ def pq_train(
         cap = None
     else:
         cap = train_sample_cap
-    ckey = _train_cache_key(corpus, ("pq", m, ksub, iters, id_col, vec_col, dims, cap))
-    cached = _TRAIN_CACHE.get(ckey) if ckey is not None else None
-    if cached is not None:
-        return cached
+    return memoized(
+        "train",
+        df_memo_key(corpus, ("pq", m, ksub, iters, id_col, vec_col, dims, cap)),
+        lambda: _pq_build(corpus, m, ksub, iters, id_col, vec_col, dims, cap),
+    )
+
+
+def _pq_build(
+    corpus: DataFrame, m: int, ksub: int, iters: int, id_col: str, vec_col: str,
+    dims: int | None, cap: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """pq_train's build, unmemoized."""
     # Pin the subvector table once: every Lloyd round (and the final
     # encode) joins against it, and without the cut each round's plan
     # re-derives the scan + normalize + slice lineage — at gate scale
@@ -850,8 +821,6 @@ def pq_train(
                 F.substring(F.md5(F.col("_id").cast("string")), 1, 8) < thresh
             ).localCheckpoint(eager=True)
             if train_sv.count() == 0:
-                from .operators.memo import unpersist_checkpointed
-
                 unpersist_checkpointed(train_sv)
                 train_sv = sv
             wrow = sv.agg(F.min(F.size("sv")), F.max(F.size("sv"))).first()
@@ -977,17 +946,13 @@ def pq_train(
     # EAGER for the same reason as kmeans_centroids' assignment: a lazy
     # codes artifact would depend on the training-only subvector pin
     # (collapse-cache hazard class); materialized, the pin can be freed.
-    from .operators.memo import unpersist_checkpointed
-
     codes = assigned.select(F.col("_id").alias(id_col), "j", "code").localCheckpoint(
         eager=True
     )
     unpersist_checkpointed(sv)
     if train_sv is not sv:  # free the training-sample pin (block hygiene)
         unpersist_checkpointed(train_sv)
-    result = (codes, books)
-    _train_cache_put(ckey, result)
-    return result
+    return codes, books
 
 
 def pq_topk(

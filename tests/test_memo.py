@@ -1,9 +1,10 @@
-"""operators/memo — the shared session-memo plumbing (ADVICE r6):
+"""operators/memo — the engine's one session memo (ADVICE r6):
 file-signature keys must miss after an in-session fixture overwrite,
 and FIFO eviction must actually free the evicted entry's
 localCheckpoint blocks (``df.rdd.unpersist()`` famously does NOT —
 it detaches a derived python RDD; the real handle is the LogicalRDD's
-rdd)."""
+rdd). ``memoized`` builds once per key, stores nothing for a ``None``
+key, and bounds each site on its own."""
 
 from __future__ import annotations
 
@@ -12,10 +13,14 @@ import time
 
 from pyspark.sql import functions as F
 
+from fintrack_etl_spark.operators import memo
 from fintrack_etl_spark.operators.memo import (
+    MEMO_MAX,
+    clear,
     df_memo_key,
     evicting_put,
     file_signature,
+    memoized,
     unpersist_checkpointed,
 )
 
@@ -86,3 +91,81 @@ def test_unpersist_checkpointed_frees_blocks(spark):
     unpersist_checkpointed((df, "not-a-df", None))
     time.sleep(0.5)
     assert len(_cached_rdd_ids(spark)) < n_before
+
+
+def _pinned(spark):
+    """A materialized localCheckpoint and the id of the RDD holding its
+    blocks."""
+    df = spark.range(0, 20000).selectExpr("id", "id * 2 AS v").localCheckpoint()
+    df.count()
+    return df, df._jdf.queryExecution().analyzed().rdd().id()  # noqa: SLF001
+
+
+def _freed(spark, rdd_id) -> bool:
+    """Unpersist is non-blocking: poll the block manager briefly."""
+    for _ in range(50):
+        if rdd_id not in _cached_rdd_ids(spark):
+            return True
+        time.sleep(0.1)
+    return False
+
+
+def test_memoized_hit_builds_once():
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    try:
+        first = memoized("t_hit", "k", build)
+        assert memoized("t_hit", "k", build) is first
+        assert len(calls) == 1
+    finally:
+        clear("t_hit")
+
+
+def test_memoized_none_key_builds_every_time():
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    assert memoized("t_none", None, build) is not memoized("t_none", None, build)
+    assert len(calls) == 2
+    assert not memo._STORE.get("t_none")  # noqa: SLF001
+
+
+def test_memoized_evicts_oldest_and_frees_its_blocks(spark):
+    oldest, rdd_id = _pinned(spark)
+    try:
+        memoized("t_evict", "oldest", lambda: oldest)
+        assert rdd_id in _cached_rdd_ids(spark)
+        for i in range(MEMO_MAX):
+            memoized("t_evict", i, lambda i=i: i)
+        assert list(memo._STORE["t_evict"]) == list(range(MEMO_MAX))  # noqa: SLF001
+        assert _freed(spark, rdd_id), "evicting the oldest entry must free its blocks"
+    finally:
+        clear("t_evict")
+
+
+def test_memoized_sites_evict_independently():
+    kept = object()
+    try:
+        memoized("t_model", "m", lambda: kept)
+        for i in range(MEMO_MAX + 1):
+            memoized("t_counts", i, lambda i=i: i)
+        assert len(memo._STORE["t_counts"]) == MEMO_MAX  # noqa: SLF001
+        assert memoized("t_model", "m", object) is kept
+    finally:
+        clear("t_model")
+        clear("t_counts")
+
+
+def test_clear_frees_the_sites_blocks(spark):
+    df, rdd_id = _pinned(spark)
+    memoized("t_clear", "k", lambda: df)
+    clear("t_clear")
+    assert not memo._STORE.get("t_clear")  # noqa: SLF001
+    assert _freed(spark, rdd_id), "clear must free the site's checkpoint blocks"

@@ -8,8 +8,10 @@ the identical batch DataFrame computation on the same files.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -152,18 +154,22 @@ def test_running_totals_stateful_stream(spark, events_dir, tmp_path):
         assert abs(f[k][1] - b[k][1]) < 1e-6
 
 
-def _drop_sink_table(spark, tbl):
-    """Drop a catalog sink's table and its ``__meta`` watermark. A
-    crashed earlier run can leave a managed location behind after the
-    catalog entry is gone; saveAsTable then refuses the name."""
-    import shutil
+@pytest.fixture
+def sink_table(spark):
+    """A fresh catalog sink table name. Teardown drops the table and its
+    ``__meta`` watermark and removes both managed locations under the
+    session's warehouse dir, whether or not the test passed: a location
+    left behind after the catalog entry is gone makes ``saveAsTable``
+    refuse the name."""
+    name = f"sink_{uuid.uuid4().hex[:8]}"
+    yield name
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for t in (name, f"{name}__meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
 
-    for name in (tbl, f"{tbl}__meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
 
-
-def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
+def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path, sink_table):
     """foreachBatch upsert sink: after draining the backlog file-by-file,
     the managed table must equal a single batch latest-wins dedup over
     the same input — regardless of how the batches were cut."""
@@ -177,8 +183,7 @@ def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
 
     ev = spark.read.parquet(events_dir)
     schema = ev.schema
-    tbl = "upsert_sink_t"
-    _drop_sink_table(spark, tbl)
+    tbl = sink_table
     stream = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
     q = upsert_sink_stream(
         stream, os.path.join(str(tmp_path), "ck"), tbl,
@@ -194,7 +199,6 @@ def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
         .collect()
     }
     assert got == want and len(got) > 0
-    _drop_sink_table(spark, tbl)
 
 
 def test_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
@@ -264,7 +268,7 @@ def test_stream_content_dedup_matches_batch_x1(spark, sf_dir, tmp_path):
     )
 
 
-def test_continuous_aggregate_stream_matches_batch(spark, events_dir, tmp_path):
+def test_continuous_aggregate_stream_matches_batch(spark, events_dir, tmp_path, sink_table):
     """The streamed fold over micro-batches must equal the from-scratch
     batch aggregate, and a checkpoint-replayed drain must NOT
     double-count (sum-merge is not idempotent; the batch-id guard is)."""
@@ -272,7 +276,7 @@ def test_continuous_aggregate_stream_matches_batch(spark, events_dir, tmp_path):
     from fintrack_etl_spark.streaming import continuous_aggregate_stream
 
     schema = _schema(spark, events_dir)
-    tbl = f"cagg_{uuid.uuid4().hex[:8]}"
+    tbl = sink_table
     ck = os.path.join(str(tmp_path), "ck")
 
     stream = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
@@ -350,7 +354,7 @@ _RESET_SINKS = {
 
 
 @pytest.mark.parametrize("sink", list(_RESET_SINKS))
-def test_sink_detects_checkpoint_reset(spark, reset_land, tmp_path, sink):
+def test_sink_detects_checkpoint_reset(spark, reset_land, tmp_path, sink, sink_table):
     """Deleting/relocating the checkpoint while the state survives
     restarts batch ids at 0; every sink, on its own table kind, must
     FAIL FAST (silently skipping the new data and re-folding are both
@@ -363,7 +367,7 @@ def test_sink_detects_checkpoint_reset(spark, reset_land, tmp_path, sink):
     old, new = reset_land
     versioned = sink.endswith("_versioned")
     run = getattr(lake_tx if versioned else pipelines, sink)
-    target = str(tmp_path / "root") if versioned else f"reset_{uuid.uuid4().hex[:8]}"
+    target = str(tmp_path / "root") if versioned else sink_table
 
     def drain(src, ck):
         stream = file_source_stream(spark, src, _schema(spark, src), max_files_per_trigger=1)
@@ -383,8 +387,6 @@ def test_sink_detects_checkpoint_reset(spark, reset_land, tmp_path, sink):
         q2.awaitTermination()
     # and the state was left untouched by the failed run
     assert state() == before
-    if not versioned:
-        _drop_sink_table(spark, target)
 
 
 def test_stratified_sample_composes_with_streaming(spark, events_dir, tmp_path):
@@ -656,7 +658,7 @@ def test_stream_interval_join_left_outer_late_match_cannot_retract_null(
     assert (30, 31) in rows
 
 
-def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path):
+def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path, sink_table):
     """foreachBatch CDC sink: drain a change log cut into per-file
     micro-batches; the managed table must equal one batch
     apply_changes over the whole log — updates applied, tombstoned
@@ -686,8 +688,7 @@ def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path):
     logdir = os.path.join(str(tmp_path), "cdclog")
     log.repartition(4).write.parquet(logdir)
 
-    tbl = "cdc_sink_t"
-    _drop_sink_table(spark, tbl)
+    tbl = sink_table
     stream = file_source_stream(
         spark, logdir, spark.read.parquet(logdir).schema, max_files_per_trigger=1
     )
@@ -708,10 +709,9 @@ def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path):
     assert got == want and len(got) > 0
     # tombstoned keys really are gone
     assert not any(k % 3 == 0 for k, _ in got)
-    _drop_sink_table(spark, tbl)
 
 
-def test_cdc_vacuum_drops_only_expired_tombstones(spark):
+def test_cdc_vacuum_drops_only_expired_tombstones(spark, sink_table):
     """Vacuum removes tombstones strictly below the replay horizon and
     nothing else; the current-state view is unchanged."""
     from fintrack_etl_spark.streaming.pipelines import (
@@ -719,11 +719,7 @@ def test_cdc_vacuum_drops_only_expired_tombstones(spark):
         cdc_vacuum_tombstones,
     )
 
-    tbl = "cdc_vac_t"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    import shutil
-
-    shutil.rmtree(f"spark-warehouse/{tbl}", ignore_errors=True)
+    tbl = sink_table
     rows = [
         (1, "a", 10, False),   # live
         (2, "b", 5, True),     # expired tombstone
@@ -742,7 +738,6 @@ def test_cdc_vacuum_drops_only_expired_tombstones(spark):
     assert after == before
     # idempotent: nothing left below the horizon
     assert cdc_vacuum_tombstones(spark, tbl, below_seq=15) == 0
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def test_watermark_drops_late_rows_and_bounds_state(spark, tmp_path):
@@ -818,7 +813,7 @@ def test_watermark_drops_late_rows_and_bounds_state(spark, tmp_path):
     assert b_day_d == [2]
 
 
-def test_cusum_drift_stream_matches_batch(spark, tmp_path):
+def test_cusum_drift_stream_matches_batch(spark, tmp_path, sink_table):
     """Drain time-ordered file drops through the drawup sink; the
     converged state must equal the from-scratch batch statistic, and a
     checkpoint-replayed drain must not re-fold (order-sensitive merge,
@@ -843,7 +838,7 @@ def test_cusum_drift_stream_matches_batch(spark, tmp_path):
         time.sleep(1.1)  # distinct mtimes keep drain order deterministic
 
     schema = spark.read.parquet(land).schema
-    tbl = f"cusum_{uuid.uuid4().hex[:8]}"
+    tbl = sink_table
     ck = os.path.join(str(tmp_path), "ck")
     stream = file_source_stream(spark, land, schema, max_files_per_trigger=1)
     q = cusum_drift_stream(stream, ck, tbl, ["k"], "i", "x")
@@ -889,18 +884,42 @@ def test_cusum_drift_stream_matches_batch(spark, tmp_path):
             fold(poison, last - 1)
 
 
-def test_one_foreach_batch_site():
-    """One fold driver: exactly one package file starts a
-    ``foreachBatch`` sink, so no sink grows its own replay rule back."""
+def _package_files():
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parent.parent / "fintrack_etl_spark"
-    hits = [
-        str(p.relative_to(pkg))
+    return [
+        (str(p.relative_to(pkg)), p.read_text(errors="replace"))
         for p in sorted(pkg.rglob("*.py"))
-        if "foreachBatch(" in p.read_text(errors="replace")
     ]
+
+
+def test_one_foreach_batch_site():
+    """One fold driver: exactly one package file starts a
+    ``foreachBatch`` sink, so no sink grows its own replay rule back."""
+    hits = [rel for rel, text in _package_files() if "foreachBatch(" in text]
     assert hits == ["streaming/fold.py"]
+
+
+def test_one_session_memo():
+    """One session memo: only ``operators/memo.py`` inserts with
+    ``evicting_put``, and no package module binds a top-level
+    ``*_CACHE`` store of its own."""
+    import ast
+
+    puts, stores = [], []
+    for rel, text in _package_files():
+        if "evicting_put(" in text:
+            puts.append(rel)
+        for node in ast.parse(text).body:
+            targets = getattr(node, "targets", [getattr(node, "target", None)])
+            stores += [
+                f"{rel}:{t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+            ]
+    assert puts == ["operators/memo.py"]
+    assert stores == []
 
 
 def test_first_seen_typed_state_matches_batch_distinct(spark, events_dir, tmp_path):

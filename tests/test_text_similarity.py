@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from fintrack_etl_spark import textops as TX
 from fintrack_etl_spark.operators import dedup_text as DD
+from fintrack_etl_spark.operators import memo
 from fintrack_etl_spark.similarity import cosine_topk_bruteforce, cosine_topk_lsh, ivf_topk
 
 
@@ -739,11 +740,8 @@ def test_kmeans_below_cap_never_runs_python(spark, sf_dir, monkeypatch):
 
     from fintrack_etl_spark import similarity as S
     from fintrack_etl_spark.io import table
-    from fintrack_etl_spark.operators.memo import unpersist_checkpointed
 
-    while S._TRAIN_CACHE:  # drain the memo so the build really runs
-        _, stale = S._TRAIN_CACHE.popitem()
-        unpersist_checkpointed(stale)
+    memo.clear("train")  # so the build really runs
 
     def boom(self, *a, **k):
         raise AssertionError("mapInPandas reached on a below-cap kmeans build")
@@ -798,15 +796,6 @@ def test_pq_sampled_training_contract(spark, sf_dir):
         assert {(r["vec_id"], r["j"]): r["code"] for r in a_p.collect()} == got
 
 
-def _drain_train_cache():
-    from fintrack_etl_spark import similarity as S
-    from fintrack_etl_spark.operators.memo import unpersist_checkpointed
-
-    while S._TRAIN_CACHE:
-        _, stale = S._TRAIN_CACHE.popitem()
-        unpersist_checkpointed(stale)
-
-
 def test_sampled_train_empty_falls_back_to_full_corpus(spark, sf_dir, monkeypatch):
     """ADVICE r10 (medium): an EMPTY md5-threshold training sample
     (forced here with a keep-nothing threshold) must fall back to
@@ -818,7 +807,7 @@ def test_sampled_train_empty_falls_back_to_full_corpus(spark, sf_dir, monkeypatc
     from fintrack_etl_spark.io import table
     from fintrack_etl_spark.operators import sampling
 
-    _drain_train_cache()
+    memo.clear("train")
     emb = table(spark, "embeddings", sf_dir)
     n = emb.count()
     cap = max(16, n // 4)
@@ -835,7 +824,7 @@ def test_sampled_train_empty_falls_back_to_full_corpus(spark, sf_dir, monkeypatc
     assert sorted((r["vec_id"], r["cid"]) for r in a.collect()) == want_kr
     codes, _ = S.pq_train(emb, m=8, ksub=16, iters=2, train_sample_cap=cap)
     assert sorted((r["vec_id"], r["j"], r["code"]) for r in codes.collect()) == want_pr
-    _drain_train_cache()  # the forced-fallback rows must not outlive the patch
+    memo.clear("train")  # the forced-fallback rows must not outlive the patch
 
 
 def test_blas_closure_cap_falls_back_to_jvm_join(spark, sf_dir, monkeypatch):
@@ -957,19 +946,19 @@ def test_spread_value_parity_bruteforce_and_builders(spark, sf_dir, tmp_path, mo
     assert got == want and len(got) >= 5  # ≥1 query × top-5
 
     # builders: force the spread at gate scale, assignments must not move
-    _drain_train_cache()
+    memo.clear("train")
     monkeypatch.setattr(S, "_SPREAD_ROWS_PER_TASK", 100)
     a_s, _ = S.kmeans_centroids(emb, k=8, iters=2)
     got_k = sorted((r["vec_id"], r["cid"]) for r in a_s.collect())
     c_s, _ = S.pq_train(emb, m=8, ksub=16, iters=1)
     got_p = sorted((r["vec_id"], r["j"], r["code"]) for r in c_s.collect())
-    _drain_train_cache()
+    memo.clear("train")
     monkeypatch.setattr(S, "_SPREAD_ROWS_PER_TASK", 10**9)
     a_u, _ = S.kmeans_centroids(emb, k=8, iters=2)
     assert sorted((r["vec_id"], r["cid"]) for r in a_u.collect()) == got_k
     c_u, _ = S.pq_train(emb, m=8, ksub=16, iters=1)
     assert sorted((r["vec_id"], r["j"], r["code"]) for r in c_u.collect()) == got_p
-    _drain_train_cache()  # patched-plan artifacts must not outlive the patch
+    memo.clear("train")  # patched-plan artifacts must not outlive the patch
 
 
 def test_pq_shortlist_includes_adc_ties(spark, sf_dir):

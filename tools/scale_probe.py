@@ -377,7 +377,7 @@ def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
         # cold build; `_full` rows opt out of sampling
         # (train_sample_cap=0) to keep the r9 comparison measurable.
         from fintrack_etl_spark import similarity as S
-        from fintrack_etl_spark.operators.memo import unpersist_checkpointed
+        from fintrack_etl_spark.operators import memo
 
         ak = S.auto_kclusters(corpus)
         for name, kk, cap in (
@@ -397,9 +397,7 @@ def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
                        "skipped": "full-corpus auto-k Lloyd is the measured "
                                   "O(N^1.5) baseline; not re-run past 20x"})
                 continue
-            while S._TRAIN_CACHE:
-                _, stale = S._TRAIN_CACHE.popitem()
-                unpersist_checkpointed(stale)
+            memo.clear("train")
 
             rec = measure(spark, f"probe:{name}:{m}x",
                           lambda: S.kmeans_centroids(corpus, kk, 2, train_sample_cap=cap)[0])
@@ -411,9 +409,7 @@ def probe_ann(spark, sf_dir: str, mult: int, tmp: str) -> None:
         # PQ cold-build rows (r10 — the sampled-training sweep's second
         # Lloyd): codebook train + full encode, default vs opt-out
         for name, cap in (("build_pq_default", None), ("build_pq_full", 0)):
-            while S._TRAIN_CACHE:
-                _, stale = S._TRAIN_CACHE.popitem()
-                unpersist_checkpointed(stale)
+            memo.clear("train")
 
             rec = measure(spark, f"probe:{name}:{m}x",
                           lambda: S.pq_train(corpus, 8, 16, 2, train_sample_cap=cap)[0])
