@@ -78,6 +78,82 @@ def _package_sources() -> dict[str, str]:
     }
 
 
+#: AST nodes that open a function or comprehension scope.
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+_COMPS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _refs(node: ast.AST, alias: dict[str, str]) -> set[str]:
+    """The names a top-level statement refers to: every attribute name,
+    and every name it loads that none of its own scopes binds.
+
+    A name bound inside ``node``'s functions, lambdas, class bodies or
+    comprehensions (an argument, an assignment, loop or ``with``
+    target, a comprehension variable, an ``except`` name, a nested
+    def) is local to that scope and means no top-level def, unless the
+    scope declares it ``global`` or ``nonlocal``. Names bound by an
+    ``import`` stay references: builders import operators in their
+    bodies. One walk over ``node``; each ``from x import y as z`` it
+    meets is recorded in ``alias``.
+    """
+    attrs: set[str] = set()
+
+    def scope(parts, args, is_class=False) -> set[str]:
+        # the free names of one scope; a class body's names are not
+        # visible in the scopes nested in it
+        loads, bound, decl, inner = set(), set(args), set(), set()
+        for part in parts:
+            visit(part, loads, bound, decl, inner)
+        local = bound - decl
+        return (loads - local) | inner if is_class else (loads | inner) - local
+
+    def visit(n, loads, bound, decl, inner) -> None:
+        t = type(n)
+        if t is ast.Name:
+            (loads if type(n.ctx) is ast.Load else bound).add(n.id)
+            return
+        if t is ast.Attribute:
+            attrs.add(n.attr)
+            visit(n.value, loads, bound, decl, inner)
+            return
+        if t in _FUNCS:
+            a = n.args
+            args = [*a.posonlyargs, *a.args, *a.kwonlyargs, *filter(None, (a.vararg, a.kwarg))]
+            here = [*a.defaults, *filter(None, a.kw_defaults)]
+            if t is not ast.Lambda:
+                bound.add(n.name)
+                here += [*n.decorator_list, *filter(None, (n.returns, *(x.annotation for x in args)))]
+            inner |= scope(n.body if t is not ast.Lambda else [n.body], (x.arg for x in args))
+        elif t is ast.ClassDef:
+            bound.add(n.name)
+            here = [*n.decorator_list, *n.bases, *n.keywords]
+            inner |= scope(n.body, (), is_class=True)
+        elif t in _COMPS:
+            gens = n.generators
+            here = [gens[0].iter]  # evaluated in the enclosing scope
+            body = [n.key, n.value] if t is ast.DictComp else [n.elt]
+            inner |= scope(
+                [*(g.target for g in gens), *(c for g in gens for c in g.ifs), *(g.iter for g in gens[1:]), *body],
+                (),
+            )
+        else:
+            if t is ast.Global or t is ast.Nonlocal:
+                decl.update(n.names)
+            elif t is ast.ImportFrom:
+                alias.update((a.asname, a.name) for a in n.names if a.asname)
+            elif t is ast.ExceptHandler and n.name:
+                bound.add(n.name)
+            here = ast.iter_child_nodes(n)
+        for child in here:
+            visit(child, loads, bound, decl, inner)
+
+    # module scope: nothing bound there is local to a definition
+    loads: set[str] = set()
+    inner: set[str] = set()
+    visit(node, loads, set(), set(), inner)
+    return loads | inner | attrs
+
+
 def _fingerprints(sources: dict[str, str]) -> dict[str, str]:
     """Code fingerprint of each registry entry, from package sources
     keyed by path.
@@ -85,10 +161,11 @@ def _fingerprints(sources: dict[str, str]) -> dict[str, str]:
     An entry's roots are its ``@register("name", ...)`` builder,
     decorator included (it may carry the oracle SQL), and any top-level
     ``ORACLES["name"] = ...``. From the roots the walk follows every
-    ``Name`` it loads and every ``Attribute`` to each top-level ``def``,
-    ``class`` or assignment of that name, in any module of the package;
-    ``from x import y as z`` makes ``z`` mean ``y`` in its file. The
-    fingerprint hashes the path and source of everything reached.
+    name a definition refers to (:func:`_refs`) to each top-level
+    ``def``, ``class`` or assignment of that name, in any module of the
+    package; ``from x import y as z`` makes ``z`` mean ``y`` in its
+    file. The fingerprint hashes the path and source of everything
+    reached.
 
     Known limits of a name-level walk: a session-conf change reaches no
     builder by name, and string-keyed dispatch is invisible (an entry
@@ -106,14 +183,7 @@ def _fingerprints(sources: dict[str, str]) -> dict[str, str]:
         alias: dict[str, str] = {}
         first = len(segments)
         for node in ast.parse(text).body:
-            walked = list(ast.walk(node))
-            alias.update(
-                (a.asname, a.name)
-                for n in walked
-                if isinstance(n, ast.ImportFrom)
-                for a in n.names
-                if a.asname
-            )
+            names = _refs(node, alias)
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 bound = [node.name]
                 keys = [
@@ -138,10 +208,7 @@ def _fingerprints(sources: dict[str, str]) -> dict[str, str]:
             unit = len(segments)
             start = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", ())])
             segments.append(path + "\n" + "".join(lines[start - 1 : node.end_lineno]))
-            refs.append(
-                {n.id for n in walked if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
-                | {n.attr for n in walked if isinstance(n, ast.Attribute)}
-            )
+            refs.append(names)
             for name in bound:
                 defs.setdefault(name, []).append(unit)
             for key in keys:

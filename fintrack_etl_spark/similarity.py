@@ -9,14 +9,25 @@ route each query to its ``nprobe`` nearest centroids, and search only
 those partitions — at 100 TB the centroid assignment is the partition
 key, so a probe touches ~nprobe/k of the data.
 
+The seven cosine top-k operators share one partition → prune → refine
+tail and keep only how they generate candidates: :func:`_vectors`
+projects ``(id, array<double>)`` rows, :func:`_route` sends each query
+to its ``nprobe`` nearest centroids, :func:`_probe` scores the routed
+cells exactly, :func:`_adc_rerank` is the PQ shortlist plus its exact
+re-rank, and :func:`_topk` is the per-query top-k cut (the router, the
+shortlist and the top-k all cut through :func:`_ranked`). Both
+quantizers train through one sampled-Lloyd driver, :func:`_lloyd`:
+``kmeans_centroids`` is the driver with no group key, ``pq_train`` the
+driver grouped by subspace ``j``.
+
 All vector math is sequential-fold array expressions (deterministic,
 JVM codegen) — no Python in the hot path, with ONE deliberate
 exception: above the Lloyd train-sample cap (the sampled/scale
-regime, never reached by gate or bench fixtures) the k-means
-assignment runs as an Arrow-batched numpy matmul
-(``kmeans_centroids._assign_blas``) — the r10 probe measured the
-per-pair JVM expression loop as the whole cold-build bottleneck at
-k=√N, and a BLAS matmul is the exact same flops at memory bandwidth.
+regime, never reached by gate or bench fixtures) the Lloyd
+assignment runs as an Arrow-batched numpy matmul (``_lloyd``'s BLAS
+pass) — the r10 probe measured the per-pair JVM expression loop as
+the whole cold-build bottleneck at k=√N, and a BLAS matmul is the
+exact same flops at memory bandwidth.
 """
 
 from __future__ import annotations
@@ -78,6 +89,63 @@ def cosine(a: Column, b: Column, dims: int | None = None) -> Column:
     return dot(a, b, dims) / (l2_norm(a, dims) * l2_norm(b, dims))
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_out: str, vec_out: str, *mid
+) -> DataFrame:
+    """``(id_out, *mid, vec_out)`` rows: the id and the vector cast to
+    ``array<double>``, under the names a search or training step uses."""
+    return df.select(F.col(id_col).alias(id_out), *mid, _as_double(F.col(vec_col)).alias(vec_out))
+
+
+def _ranked(df: DataFrame, n: int, col: str, *order: Column, rank=F.row_number) -> DataFrame:
+    """The rows ranked ``<= n`` (as ``col``) within their query by
+    ``order`` — the one per-query cut behind the router, the ADC
+    shortlist and the top-k."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(col, rank().over(w)).filter(F.col(col) <= n)
+
+
+def _topk(sim: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best neighbors by ``sim``, ties to the lower
+    ``neighbor_id``, with the cosine rounded to 6 dp."""
+    return _ranked(sim, k, "rnk", F.desc("sim"), F.asc("neighbor_id")).select(
+        "query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk"
+    )
+
+
+def _route(
+    queries: DataFrame,
+    cents: DataFrame,
+    cell: str,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    dims: int | None = None,
+) -> DataFrame:
+    """The coarse router: ``(query_id, qv, cell)`` for each query's
+    ``nprobe`` nearest centroids ``(cell, ccv)`` by cosine, ties to the
+    lower cell."""
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    sims = q.crossJoin(F.broadcast(cents)).withColumn(
+        "sim_c", cosine(F.col("qv"), F.col("ccv"), dims)
+    )
+    return _ranked(sims, nprobe, "rc", F.desc("sim_c"), F.asc(cell)).select("query_id", "qv", cell)
+
+
+def _probe(
+    routed: DataFrame, cands: DataFrame, cell: str, k: int, dims: int | None = None
+) -> DataFrame:
+    """The fine probe: candidates ``(neighbor_id, cell, cv)`` of the
+    routed cells, scored by exact cosine, self-pairs dropped, cut to
+    each query's top ``k``."""
+    return _topk(
+        cands.join(F.broadcast(routed), cell)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("sim", cosine(F.col("qv"), F.col("cv"), dims)),
+        k,
+    )
+
+
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -95,22 +163,18 @@ def cosine_topk_bruteforce(
     per-query top-k window shuffles only
     |queries|×|corpus-partition-topk| rows after AQE.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv"), dims))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv"), dims))
-    c = _spread_candidates(c, "neighbor_id", _corpus_count(corpus))
-    sim = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", dot(F.col("qv"), F.col("cv"), dims) / (F.col("qn") * F.col("cn")))
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
+        "qn", l2_norm(F.col("qv"), dims)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv").withColumn(
+        "cn", l2_norm(F.col("cv"), dims)
+    )
+    c = _spread_candidates(c, "neighbor_id", _corpus_count(corpus))
+    return _topk(
+        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).withColumn(
+            "sim", dot(F.col("qv"), F.col("cv"), dims) / (F.col("qn") * F.col("cn"))
+        ),
+        k,
     )
 
 
@@ -172,12 +236,7 @@ def cosine_topk_lsh(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("sim").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
-    )
+    return _topk(cand, k)
 
 
 def label_centroids(corpus: DataFrame, label_col: str = "label", vec_col: str = "embedding") -> DataFrame:
@@ -226,36 +285,11 @@ def ivf_topk(
         label_centroids(corpus, label_col, vec_col)
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("dim", "centroid"))).alias("pairs"))
-        .select("label", F.transform("pairs", lambda p: p["centroid"]).alias("cv"))
+        .select("label", F.transform("pairs", lambda p: p["centroid"]).alias("ccv"))
     )
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    routed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("sim_c", cosine(F.col("qv"), F.col("cv")))
-        .withColumn(
-            "rc",
-            F.row_number().over(Window.partitionBy("query_id").orderBy(F.desc("sim_c"), F.asc("label"))),
-        )
-        .filter(F.col("rc") <= nprobe)
-        .select("query_id", "qv", "label")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("label"),
-        _as_double(F.col(vec_col)).alias("cv"),
-    )
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv", F.col(label_col).alias("label"))
     c = _spread_candidates(c, "neighbor_id", _corpus_count(corpus))
-    sim = (
-        c.join(F.broadcast(routed), "label")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
-    )
+    return _probe(_route(queries, cents, "label", nprobe, id_col, vec_col), c, "label", k)
 
 
 #: Floor for the auto-selected coarse-quantizer size (the pre-r9 fixed
@@ -352,12 +386,165 @@ TRAIN_SAMPLE_FLOOR = 4096
 TRAIN_SAMPLE_PER_CLUSTER = 32
 
 #: Ceiling on the centroid/codebook matrix the Arrow/BLAS assignment
-#: serializes into each task closure (ADVICE r10): k·D float64 bytes.
-#: 64 MiB ≈ k=128k clusters at D=64 — far past any auto-√N gate/bench
-#: configuration. Above it the exact pass falls back to the JVM
-#: broadcast-join argmax, whose small side is torrent-broadcast and
+#: serializes into each task closure (ADVICE r10): groups·k·D float64
+#: bytes. 64 MiB ≈ k=128k clusters at D=64 — far past any auto-√N
+#: gate/bench configuration. Above it the exact pass falls back to the
+#: JVM broadcast-join argmax, whose small side is torrent-broadcast and
 #: memory-managed by the executor rather than pickled per task.
 _BLAS_CLOSURE_CAP_BYTES = 64 << 20
+
+
+def _lloyd(
+    corpus: DataFrame,
+    key: tuple,
+    rows,
+    init: Column,
+    pairs,
+    pick,
+    *,
+    k: int,
+    iters: int,
+    id_col: str,
+    train_sample_cap: int | None,
+    keys: tuple[str, ...] = (),
+    code: str = "cid",
+    per_vec: int = 1,
+) -> tuple[DataFrame, DataFrame]:
+    """The one deterministic sampled-Lloyd trainer, grouped by
+    ``keys``: ``kmeans_centroids`` calls it with no key, ``pq_train``
+    with the subspace ``j``.
+
+    The caller gives its training rows ``rows() → (_id, *keys, cv)``
+    (``per_vec`` rows per corpus vector, built only on a memo miss),
+    its ``init`` code expression, ``k`` codes per group, and its two
+    assignment steps: ``pairs(frame, cents)`` — frame × centroids with
+    a ``sim`` score, whose argmax the driver takes as a hash-agg struct
+    max (highest sim, then LOWEST code: ``(sim, -code)`` lexicographic
+    max ≡ a row_number over (desc sim, asc code), minus the per-round
+    sort exchange) — and ``pick(centroid_rows)``, its Arrow/BLAS twin:
+    a numpy ``pdf → codes`` function over the code-sorted centroid rows.
+
+    The driver owns the rest. The rows are spread to core parallelism
+    (r11, :func:`_spread_candidates`: the pinned partitioning is the
+    task count of every round AND of the map-only Arrow pass) and
+    pinned once, so no round re-derives the scan lineage. When the
+    corpus exceeds the train cap (default ``max(TRAIN_SAMPLE_FLOOR,
+    TRAIN_SAMPLE_PER_CLUSTER · k)``; ``train_sample_cap=0``/negative
+    opts out), the rounds run on a deterministic md5-threshold sample
+    of whole vectors (``sampling.rate_threshold_hex`` — membership is
+    a pure function of the id, so every group sees the same sampled
+    ids on any engine at any partitioning), and ONE exact assignment
+    pass over the full corpus follows: a vector identical to a trained
+    one lands in the same cell, sampled or not. Only that regime probes
+    for fixed-width vectors and, under ``_BLAS_CLOSURE_CAP_BYTES``,
+    assigns with ``pick`` — preserving the lowest-code tie-break,
+    identical-vector⇒identical-code and partition invariance, while
+    allowing ulp-level summation-order drift vs the JVM fold. Below
+    the cap (every gate/bench fixture) the path is the bit-identical
+    full-corpus JVM loop. Init is the caller's ``init``; each round's
+    centroids are exact integer micro-unit means (see
+    :func:`label_centroids`), ``localCheckpoint``-pinned to cut the
+    iterated lineage. The final assignment is pinned eagerly; then the
+    row pin, the sample pin and every superseded round's centroids are
+    freed.
+
+    Returns ``(assignments (id_col, *keys, code), centroids (*keys,
+    code, ccv))`` — centroids ``None`` at ``iters=0`` — memoized at the
+    ``"train"`` site under ``key + (cap,)``.
+    """
+    if train_sample_cap is None:
+        cap = max(TRAIN_SAMPLE_FLOOR, TRAIN_SAMPLE_PER_CLUSTER * k)
+    else:
+        cap = train_sample_cap if train_sample_cap > 0 else None
+
+    def argmax(frame: DataFrame, cents: DataFrame) -> DataFrame:
+        return (
+            pairs(frame, cents)
+            .groupBy("_id", *keys)
+            .agg(F.max(F.struct("sim", (-F.col(code)).alias("_nc"), code, "cv")).alias("b"))
+            .select("_id", *keys, F.col("b.cv").alias("cv"), F.col(f"b.{code}").alias(code))
+        )
+
+    def blas(frame: DataFrame, cents: DataFrame) -> DataFrame:
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        codes = pick(sorted(cents.collect(), key=lambda r: tuple(r[c] for c in (*keys, code))))
+        schema = StructType([*frame.schema.fields, StructField(code, IntegerType(), False)])
+
+        def gen(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield pdf.assign(**{code: codes(pdf)})
+
+        return frame.mapInPandas(gen, schema)
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        n_corpus = _corpus_count(corpus)
+        v = _spread_candidates(
+            rows(), "_id", n_corpus * per_vec if n_corpus is not None else None
+        ).localCheckpoint()
+        train, step = v, argmax
+        if cap is not None:
+            n = n_corpus if n_corpus is not None else v.count() // per_vec  # no rescan
+            if n > cap:
+                from .operators.sampling import rate_threshold_hex
+
+                # 8 hex digits (ADVICE r10 medium): at 4 digits cap/n
+                # underflows to the keep-NOTHING threshold once
+                # n > cap·2¹⁶/0.5. Eager pin: each round re-reads the
+                # sample instead of re-running the md5 filter over all
+                # pinned rows, and the emptiness guard is a free count.
+                thresh = rate_threshold_hex(cap / n, digits=8)
+                train = v.filter(
+                    F.substring(F.md5(F.col("_id").cast("string")), 1, 8) < thresh
+                ).localCheckpoint(eager=True)
+                if train.count() == 0:
+                    # an empty sample (a pathological id set) would train
+                    # nothing: fall back to the full-corpus loop
+                    unpersist_checkpointed(train)
+                    train = v
+        if train is not v:
+            # Fixed-width detection gates the BLAS pass (np.stack needs a
+            # rectangular matrix). NOT used to unroll the dot: the r10
+            # probe measured the 64-term unrolled chain in this
+            # crossJoin+agg context at 93.8 s vs the HOF fold's 60.6 s.
+            lo, hi = v.agg(F.min(F.size("cv")), F.max(F.size("cv"))).first()
+            if lo is not None and lo == hi and 0 < per_vec * k * lo * 8 <= _BLAS_CLOSURE_CAP_BYTES:
+                step = blas
+        assigned = train.withColumn(code, init)
+        rounds = []
+        for _ in range(iters):
+            cents = (
+                assigned.select(*keys, code, F.posexplode("cv").alias("dim0", "x"))
+                .groupBy(*keys, code, "dim0")
+                .agg(
+                    F.sum(F.expr("CAST(round(x * 1000000) AS BIGINT)")).alias("sm"),
+                    F.count(F.lit(1)).alias("cn"),
+                )
+                .select(
+                    *keys,
+                    code,
+                    "dim0",
+                    (F.floor(F.col("sm").cast("double") / F.col("cn")) / 1000000.0 + F.lit(0.0)).alias("m"),
+                )
+                .groupBy(*keys, code)
+                .agg(F.array_sort(F.collect_list(F.struct("dim0", "m"))).alias("p"))
+                .select(*keys, code, F.transform("p", lambda s: s["m"]).alias("ccv"))
+                .localCheckpoint()
+            )
+            rounds.append(cents)
+            assigned = step(train, cents)
+        if train is not v:  # the one exact pass over the full corpus
+            assigned = step(v, rounds[-1]) if rounds else v.withColumn(code, init)
+        # EAGER: cached consumers re-join the assignment, and a lazy one
+        # would replay the iterated lineage and keep depending on the
+        # training pins (the collapse-cache hazard class); materialized,
+        # those pins are dead weight and are freed.
+        out = assigned.select(F.col("_id").alias(id_col), *keys, code).localCheckpoint(eager=True)
+        unpersist_checkpointed([v, *rounds[:-1], *([train] if train is not v else [])])
+        return out, rounds[-1] if rounds else None
+
+    return memoized("train", df_memo_key(corpus, (*key, cap)), build)
 
 
 def kmeans_centroids(
@@ -370,267 +557,86 @@ def kmeans_centroids(
     train_sample_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic distributed Lloyd k-means — the real IVF coarse
-    quantizer (``ivf_topk``'s label column is the fixture stand-in).
+    quantizer (``ivf_topk``'s label column is the fixture stand-in):
+    :func:`_lloyd` with no group key.
 
     Init is the deterministic partition ``vec_id % k``; each round is
-    (a) centroid update — posexplode dims, per-(cid, dim) mean rounded
-    to 6 dp so results are partition-order independent — and (b)
-    assignment — corpus × broadcast(centroids), argmax cosine with a
+    (a) centroid update — posexplode dims, per-(cid, dim) exact integer
+    micro-unit mean, so results are partition-order independent — and
+    (b) assignment — corpus × broadcast(centroids), argmax cosine with a
     cid tie-break. 2 shuffles/round over (corpus × dims) and
-    (corpus × k) rows; centroids are ``localCheckpoint``-pinned per
-    round to cut the iterated lineage (same discipline as
-    ``operators/graph.py``).
+    (corpus × k) rows.
 
-    When the corpus exceeds ``train_sample_cap`` (default
-    ``max(TRAIN_SAMPLE_FLOOR, TRAIN_SAMPLE_PER_CLUSTER · k)``), the
-    Lloyd ROUNDS run on a deterministic md5-threshold sample of ≈cap
-    vectors (``sampling.rate_threshold_hex`` — the x17 discipline:
-    membership is a pure function of the id, reproducible on any
-    engine at any partitioning) and one exact full-corpus assignment
-    pass follows. That bounds the cold build at O(N·k + cap·k·iters)
-    instead of O(N·k·iters) with every per-round shuffle
-    corpus-independent; at or below the cap the code path is the
-    bit-identical full-corpus loop (every gate/bench fixture).
-    ``train_sample_cap=0``/negative opts out (always full-corpus).
-    In the sampled regime, fixed-width corpora additionally run every
-    assignment pass as an Arrow-batched numpy matmul
-    (``_assign_blas`` — the r10 probe measured the per-pair JVM
-    expression loop as ~90 % of the 10×/auto-k cold build; BLAS does
-    the same flops at memory bandwidth), preserving the lowest-cid
-    tie-break, identical-vector⇒identical-cell, and
-    partition-invariance contracts while allowing ulp-level
-    summation-order drift vs the JVM fold — below the cap nothing
-    changes, bit for bit.
+    Above ``train_sample_cap`` (default ``max(TRAIN_SAMPLE_FLOOR,
+    TRAIN_SAMPLE_PER_CLUSTER · k)``) the rounds train on a
+    deterministic md5-threshold sample and one exact full-corpus
+    assignment pass follows, so the cold build is O(N·k + cap·k·iters)
+    instead of O(N·k·iters); fixed-width corpora run those passes as an
+    Arrow-batched numpy matmul (the r10 probe measured the per-pair JVM
+    expression loop as ~90 % of the 10×/auto-k cold build). At or below
+    the cap (every gate/bench fixture) the path is the bit-identical
+    full-corpus loop; ``train_sample_cap=0``/negative opts out.
 
     Returns ``(assignments (id, cid), centroids (cid, ccv))``.
     """
-    if train_sample_cap is None:
-        cap = max(TRAIN_SAMPLE_FLOOR, TRAIN_SAMPLE_PER_CLUSTER * k)
-    elif train_sample_cap <= 0:
-        cap = None
-    else:
-        cap = train_sample_cap
-    return memoized(
-        "train",
-        df_memo_key(corpus, ("kmeans", k, iters, id_col, vec_col, dims, cap)),
-        lambda: _kmeans_build(corpus, k, iters, id_col, vec_col, dims, cap),
-    )
 
-
-def _kmeans_build(
-    corpus: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
-    dims: int | None, cap: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """kmeans_centroids' build, unmemoized."""
-    # Pin the vector table: every Lloyd round joins it, and re-deriving
-    # the scan+cast lineage per round is plan-compile overhead (same
-    # rationale as pq_train's sv checkpoint). Spread a compact scan to
-    # core parallelism FIRST (r11, _spread_candidates): the pinned
-    # blocks feed every per-round assignment join and the final exact
-    # pass — including the map-only Arrow/BLAS pass, whose task count
-    # IS this partitioning — and a 1-split corpus file would otherwise
-    # single-thread all of it.
-    n_corpus = _corpus_count(corpus)
-    v = _spread_candidates(
-        corpus.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("cv")),
-        "_id",
-        n_corpus,
-    ).localCheckpoint()
-    train = v
-    if cap is not None:
-        n = n_corpus
-        if n is None:
-            n = v.count()  # over the pinned blocks — no corpus rescan
-        if n > cap:
-            from .operators.sampling import rate_threshold_hex
-
-            # 8 hex digits (ADVICE r10 medium): at 4 digits cap/n
-            # underflows to the keep-NOTHING threshold once
-            # n > cap·2¹⁶/0.5 — training would run on an empty set and
-            # the final pass would crash (BLAS) or silently assign
-            # nothing (JVM). 8 digits + the ≥1-bucket clamp keep the
-            # sample non-empty in expectation out to n ≈ cap·2³².
-            thresh = rate_threshold_hex(cap / n, digits=8)
-            train = v.filter(
-                F.substring(F.md5(F.col("_id").cast("string")), 1, 8) < thresh
-            ).localCheckpoint(eager=True)
-            # Eager pin: each Lloyd round re-reads the sample; without
-            # the cut every round re-runs the md5 filter over ALL N
-            # pinned rows — O(N·iters) scans for a cap-sized input.
-            # Materialized, the emptiness guard below is a free count
-            # over ~cap local rows.
-            if train.count() == 0:
-                # Belt-and-braces (ADVICE r10): resolution loss can no
-                # longer produce this, but a pathological id set could.
-                # Empty training would yield empty centroids → empty
-                # (or crashing) final assignment: fall back to the
-                # full-corpus loop instead.
-                unpersist_checkpointed(train)
-                train = v
-    # Fixed-width detection — the gate for the Arrow/BLAS assignment
-    # below (np.stack needs a rectangular matrix). NOT used to unroll
-    # the dot: the r10 probe MEASURED the 64-term unrolled chain in
-    # this crossJoin+agg context at 93.8 s vs the HOF fold's 60.6 s
-    # (and 166 s vs 94 s unsampled) — the giant generated method falls
-    # off the JIT path, so "codegen" loses to the interpreted fold.
-    width = None
-    if train is not v:  # only the sampled/scale regime consults it
-        wrow = v.agg(F.min(F.size("cv")), F.max(F.size("cv"))).first()
-        if wrow[0] is not None and wrow[0] == wrow[1] and wrow[0] > 0:
-            width = int(wrow[0])
-
-    def _assign(frame: DataFrame, cents: DataFrame) -> DataFrame:
-        # argmax as a hash-agg struct max (highest sim, then LOWEST cid
-        # on exact ties — (sim, -cid) lexicographic max ≡ the old
-        # row_number ordering) instead of a row_number window: map-side
-        # partial aggregation, no per-round sort exchange. Norms are
-        # precomputed ONCE per side (r10): the same deterministic
-        # doubles cosine() recomputed per PAIR — value-identical, but
-        # pair work drops to the dot alone. _vn sits in a Project
-        # BELOW the broadcast join (Projects never collapse across a
-        # Join), so it is evaluated once per corpus row, not per pair.
+    def pairs(frame: DataFrame, cents: DataFrame) -> DataFrame:
+        # Norms precomputed ONCE per side (r10): the same deterministic
+        # doubles cosine() recomputed per PAIR, so pair work drops to the
+        # dot. _vn sits in a Project BELOW the broadcast join (Projects
+        # never collapse across a Join): once per corpus row.
         cc = F.broadcast(cents.withColumn("_ccn", l2_norm(F.col("ccv"), dims)))
         return (
             frame.withColumn("_vn", l2_norm(F.col("cv"), dims))
             .crossJoin(cc)
-            .withColumn(
-                "sim",
-                dot(F.col("cv"), F.col("ccv"), dims) / (F.col("_vn") * F.col("_ccn")),
-            )
-            .groupBy("_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("sim"),
-                        (-F.col("cid")).alias("_nc"),
-                        F.col("cid"),
-                        F.col("cv"),
-                    )
-                ).alias("b")
-            )
-            .select("_id", F.col("b.cv").alias("cv"), F.col("b.cid").alias("cid"))
+            .withColumn("sim", dot(F.col("cv"), F.col("ccv"), dims) / (F.col("_vn") * F.col("_ccn")))
         )
 
-    def _assign_blas(frame: DataFrame, cents: DataFrame) -> DataFrame:
-        """Arrow-batched exact argmax-cosine assignment — the SCALE
-        path, used only in the sampled regime (corpus above the train
-        cap) on fixed-width vectors. The per-pair JVM expression loop
-        is the measured bottleneck there (r10 probe: the one exact
-        N×k pass was ~55 s of the 60.6 s 10×/k=142 build); one numpy
-        matmul per Arrow batch against the broadcast k×D centroid
-        matrix does the same flops in BLAS. Contracts preserved: ties
-        break to the LOWEST cid (centroid rows sorted by cid;
-        np.argmax returns the first maximum), identical vectors get
-        identical cells (pure function of the pair), and the result is
-        partition-invariant (no cross-row accumulation). Summation
-        ORDER inside one dot differs from the JVM fold at ulp level —
-        acceptable above the cap, where training is already sampled;
-        below the cap every path stays the bit-exact JVM loop.
-
-        The centroid matrix ships in the task closure as a COMPACT
-        numpy array (ADVICE r10: list-of-lists Python floats are ~6×
-        the bytes and pickle row-at-a-time), and the path is gated on
-        ``k·D·8 ≤ _BLAS_CLOSURE_CAP_BYTES`` — above that ceiling the
-        caller falls back to the JVM broadcast-join assignment, whose
-        broadcast is torrent-distributed and memory-managed instead of
-        being serialized into every task.
-
-        Zero-norm rows (ADVICE r10): the division is run under
-        ``np.errstate`` with divide/invalid ignored — a zero-norm
-        vector or centroid yields NaN sims BY DESIGN, matching the JVM
-        path's 0/0 → NaN. Tie-break parity holds in both directions:
-        a zero-norm VECTOR has all-NaN sims — np.argmax returns the
-        FIRST index (rows are cid-sorted → lowest cid), and Spark's
-        struct-max sees k equal NaN sims and takes max(-cid) → lowest
-        cid; a zero-norm CENTROID poisons one cid-sorted column —
-        np.argmax returns the first NaN it scans (lowest zero-norm
-        cid), and Spark orders NaN above every double with the same
-        -cid tie-break. Documented, not coincidental."""
+    def pick(crows):
+        """Exact argmax-cosine per Arrow batch against the compact k×D
+        centroid matrix (ADVICE r10: numpy, not list-of-lists floats).
+        Ties break to the LOWEST cid: rows are cid-sorted and np.argmax
+        returns the first maximum. Zero-norm rows yield NaN sims BY
+        DESIGN, matching the JVM path's 0/0 → NaN: a zero-norm VECTOR
+        has all-NaN sims, np.argmax takes the first index (lowest cid)
+        and Spark's struct max sees k equal NaNs and takes max(-cid);
+        a zero-norm CENTROID poisons one column, np.argmax returns the
+        first NaN it scans and Spark orders NaN above every double with
+        the same -cid tie-break."""
         import numpy as np
-        from pyspark.sql.types import IntegerType, StructField, StructType
 
-        crows = sorted(cents.select("cid", "ccv").collect(), key=lambda r: r["cid"])
-        cid_arr = np.asarray([int(r["cid"]) for r in crows], dtype="int32")
+        cids = np.asarray([int(r["cid"]) for r in crows], dtype="int32")
         cmat = np.asarray([r["ccv"] for r in crows], dtype="float64")
-        schema = StructType(
-            [frame.schema["_id"], frame.schema["cv"], StructField("cid", IntegerType(), False)]
-        )
+        cn = np.sqrt((cmat * cmat).sum(axis=1))
 
-        def gen(batches):
-            import numpy as np  # re-import: runs inside the worker
-            import pandas as pd
+        def codes(pdf):
+            V = np.asarray(pdf["cv"].tolist(), dtype="float64")
+            vn = np.sqrt((V * V).sum(axis=1))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                return cids[((V @ cmat.T) / (vn[:, None] * cn[None, :])).argmax(axis=1)]
 
-            cn = np.sqrt((cmat * cmat).sum(axis=1))
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.asarray(pdf["cv"].tolist(), dtype="float64")
-                vn = np.sqrt((V * V).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = (V @ cmat.T) / (vn[:, None] * cn[None, :])
-                best = sims.argmax(axis=1)
-                yield pd.DataFrame(
-                    {"_id": pdf["_id"], "cv": pdf["cv"], "cid": cid_arr[best]}
-                )
+        return codes
 
-        return frame.mapInPandas(gen, schema)
-
-    if (
-        train is not v
-        and width is not None
-        and k * width * 8 <= _BLAS_CLOSURE_CAP_BYTES
-    ):
-        _assign = _assign_blas  # noqa: F811 — the sampled/scale regime
-
-    assigned = train.withColumn("cid", (F.col("_id") % k).cast("int"))
-    cents = None
-    for _ in range(iters):
-        # exact integer micro-unit mean (see label_centroids): Lloyd
-        # stays bit-deterministic under ANY partitioning — avg-of-doubles
-        # partials could flip an assignment ulp run-to-run
-        cents = (
-            assigned.select("cid", F.posexplode("cv").alias("dim0", "x"))
-            .groupBy("cid", "dim0")
-            .agg(
-                F.sum(F.expr("CAST(round(x * 1000000) AS BIGINT)")).alias("sm"),
-                F.count(F.lit(1)).alias("cn"),
-            )
-            .select(
-                "cid",
-                "dim0",
-                (F.floor(F.col("sm").cast("double") / F.col("cn")) / 1000000.0 + F.lit(0.0)).alias("m"),
-            )
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim0", "m"))).alias("p"))
-            .select("cid", F.transform("p", lambda s: s["m"]).alias("ccv"))
-            .localCheckpoint()
-        )
-        # per-round input is `train` (== v on the full-corpus path;
-        # the md5 sample when the cap bites)
-        assigned = _assign(train, cents)
-    if train is not v and cents is None:  # iters=0: modulo init, full corpus
-        assigned = v.withColumn("cid", (F.col("_id") % k).cast("int"))
-    elif train is not v:
-        # sampled training: ONE exact assignment pass over the full
-        # corpus against the final centroids — same argmax expression,
-        # so a vector identical to a trained one lands in the same
-        # cell (the planted-dup contract is assignment-side, not
-        # training-side)
-        assigned = _assign(v, cents)
-    # pin the final assignment EAGERLY: cached consumers re-join it
-    # repeatedly, recomputation would replay the full iterated lineage,
-    # and — the r8 block-hygiene point — a LAZY artifact here would
-    # keep depending on the training-only vector pin below (the
-    # collapse-cache hazard class), whereas once it is materialized the
-    # pin is dead weight and can be freed.
-    result = (
-        assigned.select(F.col("_id").alias(id_col), "cid").localCheckpoint(eager=True),
-        cents,
+    return _lloyd(
+        corpus,
+        ("kmeans", k, iters, id_col, vec_col, dims),
+        lambda: _vectors(corpus, id_col, vec_col, "_id", "cv"),
+        (F.col("_id") % k).cast("int"),
+        pairs,
+        pick,
+        k=k,
+        iters=iters,
+        id_col=id_col,
+        train_sample_cap=train_sample_cap,
     )
-    unpersist_checkpointed(v)
-    if train is not v:  # free the training-sample pin too (block hygiene)
-        unpersist_checkpointed(train)
-    return result
+
+
+def _coarse(corpus: DataFrame, kclusters: int | None, *args) -> tuple[DataFrame, DataFrame]:
+    """:func:`kmeans_centroids` (``args`` after its ``k``) at
+    ``kclusters``, or at :func:`auto_kclusters` when it is None."""
+    if kclusters is None:
+        kclusters = auto_kclusters(corpus)
+    return kmeans_centroids(corpus, kclusters, *args)
 
 
 def ivf_topk_kmeans(
@@ -653,39 +659,10 @@ def ivf_topk_kmeans(
     ``kclusters=None`` (default since r9, VERDICT r8 #5) auto-selects
     ``max(8, ceil(√N))`` — see :func:`auto_kclusters`.
     """
-    if kclusters is None:
-        kclusters = auto_kclusters(corpus)
-    assigns, cents = kmeans_centroids(
-        corpus, kclusters, iters, id_col, vec_col, dims, train_sample_cap
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    routed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("sim_c", cosine(F.col("qv"), F.col("ccv"), dims))
-        .withColumn(
-            "rc",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("sim_c"), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rc") <= nprobe)
-        .select("query_id", "qv", "cid")
-    )
-    c = corpus.join(assigns, id_col).select(
-        F.col(id_col).alias("neighbor_id"), "cid", _as_double(F.col(vec_col)).alias("cv")
-    )
+    assigns, cents = _coarse(corpus, kclusters, iters, id_col, vec_col, dims, train_sample_cap)
+    c = _vectors(corpus.join(assigns, id_col), id_col, vec_col, "neighbor_id", "cv", "cid")
     c = _spread_candidates(c, "neighbor_id", _corpus_count(corpus))
-    sim = (
-        c.join(F.broadcast(routed), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv"), dims))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
-    )
+    return _probe(_route(queries, cents, "cid", nprobe, id_col, vec_col, dims), c, "cid", k, dims)
 
 
 # ---------------------------------------------------------------------------
@@ -701,8 +678,8 @@ def _subvectors(
     vec_col: str,
     dims: int | None = None,
 ) -> DataFrame:
-    """(id, j, subvec) rows — one per subspace. Dimension D must be
-    divisible by m; slicing is a pure array expression.
+    """(id, j, cv) rows — one normalized subvector per subspace. Dimension
+    D must be divisible by m; slicing is a pure array expression.
 
     Both the (vector, norm) pair and the normalized array are
     let-bound (``_let``): the old form referenced the normalize
@@ -728,7 +705,7 @@ def _subvectors(
         ),
     )
     return df.select(
-        F.col(id_col).alias(id_out), F.posexplode(subs).alias("j", "sv")
+        F.col(id_col).alias(id_out), F.posexplode(subs).alias("j", "cv")
     )
 
 
@@ -743,130 +720,47 @@ def pq_train(
     train_sample_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Train per-subspace codebooks and encode the corpus — the
-    vector-compression half of IVF-PQ (Jégou et al., TPAMI 2011),
-    re-expressed as one grouped Lloyd over ALL subspaces at once:
-    rows are (vec, subspace) subvectors, centroids group by
-    (subspace, code), assignment is an argmax restricted to the same
-    subspace — so adding subspaces adds rows, not jobs (m sequential
-    k-means runs would be m× the shuffles for identical results).
+    vector-compression half of IVF-PQ (Jégou et al., TPAMI 2011):
+    :func:`_lloyd` grouped by subspace. Rows are (vec, subspace)
+    subvectors, centroids group by (subspace, code), assignment is an
+    argmax dot restricted to the same subspace — so adding subspaces
+    adds rows, not jobs (m sequential k-means runs would be m× the
+    shuffles for identical results).
 
-    Deterministic like ``kmeans_centroids``: modulo init, rounded
-    centroid means, code tie-breaks. Returns
-    ``(codes (vec_id, j, code), codebooks (j, code, ccv))``; the codes
-    table is the compressed corpus — m small ints instead of D floats
-    (64-D float32 → 8 codes ≈ 32× smaller), which at 100 TB is the
-    difference between scanning embeddings and scanning bytes.
+    Deterministic like ``kmeans_centroids``: modulo init
+    ``(vec_id + j) % ksub``, exact integer centroid means, code
+    tie-breaks. Returns ``(codes (vec_id, j, code), codebooks (j, code,
+    ccv))``; the codes table is the compressed corpus — m small ints
+    instead of D floats (64-D float32 → 8 codes ≈ 32× smaller), which
+    at 100 TB is the difference between scanning embeddings and
+    scanning bytes.
 
-    Sampled training (r10 — the kmeans_centroids discipline swept to
-    the repo's OTHER Lloyd): above ``train_sample_cap`` vectors
-    (default ``max(TRAIN_SAMPLE_FLOOR, TRAIN_SAMPLE_PER_CLUSTER ·
-    ksub)``) the codebook ROUNDS train on a deterministic
-    md5-threshold sample of whole vectors (every subspace sees the
-    same sampled ids) and ONE exact encode pass over the full corpus
-    follows; fixed-width subvectors run that encode as an
-    Arrow-batched numpy matmul per subspace (``_pq_assign_blas``).
-    Below the cap — every gate/bench fixture — the path is the
-    bit-identical full-corpus JVM loop; ``train_sample_cap=0`` opts
-    out entirely.
+    Sampled training as in ``kmeans_centroids``: above
+    ``train_sample_cap`` vectors (default ``max(TRAIN_SAMPLE_FLOOR,
+    TRAIN_SAMPLE_PER_CLUSTER · ksub)``) the codebook rounds train on an
+    md5-threshold sample of whole vectors (every subspace sees the same
+    sampled ids) and ONE exact encode pass over the full corpus
+    follows, as an Arrow-batched numpy matmul per subspace for
+    fixed-width subvectors. Below the cap — every gate/bench fixture —
+    the path is the bit-identical full-corpus JVM loop;
+    ``train_sample_cap=0`` opts out entirely.
     """
-    if train_sample_cap is None:
-        cap = max(TRAIN_SAMPLE_FLOOR, TRAIN_SAMPLE_PER_CLUSTER * ksub)
-    elif train_sample_cap <= 0:
-        cap = None
-    else:
-        cap = train_sample_cap
-    return memoized(
-        "train",
-        df_memo_key(corpus, ("pq", m, ksub, iters, id_col, vec_col, dims, cap)),
-        lambda: _pq_build(corpus, m, ksub, iters, id_col, vec_col, dims, cap),
-    )
-
-
-def _pq_build(
-    corpus: DataFrame, m: int, ksub: int, iters: int, id_col: str, vec_col: str,
-    dims: int | None, cap: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """pq_train's build, unmemoized."""
-    # Pin the subvector table once: every Lloyd round (and the final
-    # encode) joins against it, and without the cut each round's plan
-    # re-derives the scan + normalize + slice lineage — at gate scale
-    # that's pure plan-compile overhead dominating wall time. Spread a
-    # compact scan to core parallelism first (r11, _spread_candidates —
-    # the same 1-split-file hazard as kmeans_centroids' v: the pinned
-    # partitioning is the task count of every round AND of the map-only
-    # Arrow encode pass).
-    n_corpus = _corpus_count(corpus)
-    sv = _spread_candidates(
-        _subvectors(corpus, "_id", m, id_col, vec_col, dims),
-        "_id",
-        n_corpus * m if n_corpus is not None else None,
-    ).localCheckpoint()
     sublen = dims // m if dims else None
-    train_sv = sv
-    width = None
-    if cap is not None:
-        n = n_corpus
-        if n is None:
-            n = sv.count() // m  # over the pinned blocks, no corpus rescan
-        if n > cap:
-            from .operators.sampling import rate_threshold_hex
 
-            # 8 hex digits + eager sample pin + emptiness fallback —
-            # the same ADVICE r10 fixes as kmeans_centroids (see the
-            # comments there): no keep-nothing underflow at extreme N,
-            # no per-round md5 re-filter over all N·m pinned rows, no
-            # empty-codebook crash on a pathological id set.
-            thresh = rate_threshold_hex(cap / n, digits=8)
-            train_sv = sv.filter(
-                F.substring(F.md5(F.col("_id").cast("string")), 1, 8) < thresh
-            ).localCheckpoint(eager=True)
-            if train_sv.count() == 0:
-                unpersist_checkpointed(train_sv)
-                train_sv = sv
-            wrow = sv.agg(F.min(F.size("sv")), F.max(F.size("sv"))).first()
-            if wrow[0] is not None and wrow[0] == wrow[1] and wrow[0] > 0:
-                width = int(wrow[0])
-
-    def _pq_assign(frame: DataFrame, books: DataFrame) -> DataFrame:
-        # Same hash-agg argmax as kmeans_centroids: struct max on
-        # (s, -code, ...) ≡ row_number over (desc s, asc code), minus
-        # the per-round sort exchange.
-        return (
-            frame.join(F.broadcast(books), "j")
-            .withColumn("s", dot(F.col("sv"), F.col("ccv"), sublen))
-            .groupBy("_id", "j")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("s"),
-                        (-F.col("code")).alias("_nc"),
-                        F.col("code"),
-                        F.col("sv"),
-                    )
-                ).alias("b")
-            )
-            .select("_id", "j", F.col("b.sv").alias("sv"), F.col("b.code").alias("code"))
+    def pairs(frame: DataFrame, books: DataFrame) -> DataFrame:
+        return frame.join(F.broadcast(books), "j").withColumn(
+            "sim", dot(F.col("cv"), F.col("ccv"), sublen)
         )
 
-    def _pq_assign_blas(frame: DataFrame, books: DataFrame) -> DataFrame:
-        """Arrow-batched exact per-subspace argmax-dot encode — the
-        scale regime's pass (see kmeans_centroids._assign_blas for the
-        contract discussion: first-max argmax over code-sorted rows
-        keeps the lowest-code tie-break, identical subvectors encode
-        identically, no cross-row accumulation so the result is
-        partition-invariant; ulp-level summation-order drift vs the
-        JVM fold is confined to the above-cap regime). The codebook
-        ships closure-side as compact numpy arrays under the same
-        ``_BLAS_CLOSURE_CAP_BYTES`` ceiling as ``_assign_blas``
-        (ADVICE r10) — above it the caller keeps the JVM
-        broadcast-join encode. Dots only, no norm division, so the
-        zero-norm NaN discussion there does not arise here."""
+    def pick(brows):
+        """Exact per-subspace argmax-dot per Arrow batch against compact
+        per-``j`` codebook matrices: the first maximum over code-sorted
+        rows keeps the lowest-code tie-break. Dots only, no norm
+        division, so no zero-norm NaN case arises."""
         import numpy as np
-        from pyspark.sql.types import IntegerType, StructField, StructType
 
-        brows = books.select("j", "code", "ccv").collect()
-        lists: dict[int, tuple[list[int], list[list[float]]]] = {}
-        for r in sorted(brows, key=lambda r: (r["j"], r["code"])):
+        lists: dict[int, tuple[list[int], list]] = {}
+        for r in brows:
             cs, vs = lists.setdefault(int(r["j"]), ([], []))
             cs.append(int(r["code"]))
             vs.append(r["ccv"])
@@ -874,85 +768,78 @@ def _pq_build(
             j: (np.asarray(cs, dtype="int32"), np.asarray(vs, dtype="float64"))
             for j, (cs, vs) in lists.items()
         }
-        schema = StructType(
-            [frame.schema["_id"], frame.schema["j"], frame.schema["sv"],
-             StructField("code", IntegerType(), False)]
-        )
 
-        def gen(batches):
-            import numpy as np
-            import pandas as pd
+        def codes(pdf):
+            out = np.empty(len(pdf), dtype="int32")
+            jvals = pdf["j"].to_numpy()
+            V = np.asarray(pdf["cv"].tolist(), dtype="float64")
+            for j in np.unique(jvals):
+                sel = jvals == j
+                cs, B = mats[int(j)]
+                out[sel] = cs[(V[sel] @ B.T).argmax(axis=1)]
+            return out
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_code = np.empty(len(pdf), dtype="int32")
-                jvals = pdf["j"].to_numpy()
-                V = np.asarray(pdf["sv"].tolist(), dtype="float64")
-                for j in np.unique(jvals):
-                    sel = jvals == j
-                    cs, B = mats[int(j)]
-                    out_code[sel] = cs[(V[sel] @ B.T).argmax(axis=1)]
-                yield pd.DataFrame(
-                    {"_id": pdf["_id"], "j": pdf["j"], "sv": pdf["sv"],
-                     "code": out_code}
-                )
+        return codes
 
-        return frame.mapInPandas(gen, schema)
-
-    if (
-        train_sv is not sv
-        and width is not None
-        and m * ksub * width * 8 <= _BLAS_CLOSURE_CAP_BYTES
-    ):
-        _pq_assign = _pq_assign_blas  # noqa: F811 — the sampled/scale regime
-
-    assigned = train_sv.withColumn(
-        "code", ((F.col("_id") + F.col("j")) % ksub).cast("int")
+    return _lloyd(
+        corpus,
+        ("pq", m, ksub, iters, id_col, vec_col, dims),
+        lambda: _subvectors(corpus, "_id", m, id_col, vec_col, dims),
+        ((F.col("_id") + F.col("j")) % ksub).cast("int"),
+        pairs,
+        pick,
+        k=ksub,
+        iters=iters,
+        id_col=id_col,
+        train_sample_cap=train_sample_cap,
+        keys=("j",),
+        code="code",
+        per_vec=m,
     )
-    books = None
-    for _ in range(iters):
-        # exact integer micro-unit mean (see label_centroids / kmeans)
-        books = (
-            assigned.select("j", "code", F.posexplode("sv").alias("dim0", "x"))
-            .groupBy("j", "code", "dim0")
-            .agg(
-                F.sum(F.expr("CAST(round(x * 1000000) AS BIGINT)")).alias("sm"),
-                F.count(F.lit(1)).alias("cn"),
-            )
-            .select(
-                "j",
-                "code",
-                "dim0",
-                (F.floor(F.col("sm").cast("double") / F.col("cn")) / 1000000.0 + F.lit(0.0)).alias("mn"),
-            )
-            .groupBy("j", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("dim0", "mn"))).alias("p"))
-            .select("j", "code", F.transform("p", lambda s: s["mn"]).alias("ccv"))
-            .localCheckpoint()
-        )
-        # per-round input is `train_sv` (== sv on the full-corpus
-        # path; the md5 sample when the cap bites)
-        assigned = _pq_assign(train_sv, books)
-    if train_sv is not sv and books is None:  # iters=0: modulo init, full corpus
-        assigned = sv.withColumn(
-            "code", ((F.col("_id") + F.col("j")) % ksub).cast("int")
-        )
-    elif train_sv is not sv:
-        # sampled training: ONE exact encode pass over the full corpus
-        # against the final codebooks — identical subvectors encode
-        # identically whether or not they were sampled into training
-        assigned = _pq_assign(sv, books)
-    # EAGER for the same reason as kmeans_centroids' assignment: a lazy
-    # codes artifact would depend on the training-only subvector pin
-    # (collapse-cache hazard class); materialized, the pin can be freed.
-    codes = assigned.select(F.col("_id").alias(id_col), "j", "code").localCheckpoint(
-        eager=True
+
+
+def _adc_rerank(
+    queries: DataFrame,
+    corpus: DataFrame,
+    codes: DataFrame,
+    books: DataFrame,
+    scan,
+    k: int,
+    m: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    dims: int | None,
+) -> DataFrame:
+    """PQ's search tail: ADC-score the candidate codes that
+    ``scan(codes, partials)`` joins to the query partials, keep each
+    query's top ``shortlist`` scores with boundary ties included, and
+    re-rank those with exact cosine (see :func:`pq_topk`)."""
+    # ADC partials: dot of each query subvector with every codeword, in
+    # exact integer nano-units: identical codes ⇒ EXACTLY equal ADC sums
+    # under any partitioning
+    partials = (
+        _subvectors(queries, "query_id", m, id_col, vec_col, dims)
+        .join(F.broadcast(books), "j")
+        .withColumn("partial", dot(F.col("cv"), F.col("ccv"), dims // m if dims else None))
+        .withColumn("qpartial", F.expr("CAST(round(partial * 1e9) AS BIGINT)"))
+        .select("query_id", "j", "code", "qpartial")
     )
-    unpersist_checkpointed(sv)
-    if train_sv is not sv:  # free the training-sample pin (block hygiene)
-        unpersist_checkpointed(train_sv)
-    return codes, books
+    n = _corpus_count(corpus)
+    approx = (
+        scan(_spread_candidates(codes, id_col, n * m if n is not None else None), partials)
+        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+        .agg(F.sum("qpartial").alias("approx_sim"))
+    )
+    # rank(), score only: ADC-indistinguishable candidates tie and ALL
+    # reach the exact re-rank — never truncated by id order
+    short = _ranked(approx, shortlist, "rs", F.desc("approx_sim"), rank=F.rank)
+    return _topk(
+        short.join(F.broadcast(_vectors(queries, id_col, vec_col, "query_id", "qv")), "query_id")
+        .join(_vectors(corpus, id_col, vec_col, "neighbor_id", "cv"), "neighbor_id")
+        .withColumn("sim", cosine(F.col("qv"), F.col("cv"), dims)),
+        k,
+    )
 
 
 def pq_topk(
@@ -1003,41 +890,20 @@ def pq_topk(
     codes, books = pq_train(
         corpus, m, ksub, iters, id_col, vec_col, dims, train_sample_cap
     )
-    # ADC partials: dot of each query subvector with every codeword
-    qsub = _subvectors(queries, "query_id", m, id_col, vec_col, dims)
-    partials = (
-        qsub.join(F.broadcast(books), "j")
-        .withColumn("partial", dot(F.col("sv"), F.col("ccv"), dims // m if dims else None))
-        # exact integer nano-units: identical codes ⇒ EXACTLY equal ADC
-        # sums under any partitioning (see the tie-inclusion docstring)
-        .withColumn("qpartial", F.expr("CAST(round(partial * 1e9) AS BIGINT)"))
-        .select("query_id", "j", "code", "qpartial")
-    )
-    n = _corpus_count(corpus)
-    adc_codes = _spread_candidates(
-        codes, id_col, n * m if n is not None else None
-    )
-    approx = (
-        adc_codes.join(F.broadcast(partials), ["j", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum("qpartial").alias("approx_sim"))
-    )
-    # rank(), score only: ADC-indistinguishable candidates tie and ALL
-    # reach the exact re-rank — never truncated by id order
-    ws = Window.partitionBy("query_id").orderBy(F.desc("approx_sim"))
-    short = approx.withColumn("rs", F.rank().over(ws)).filter(F.col("rs") <= shortlist)
-    # exact re-rank of the shortlist
-    qv = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv"), dims))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
+    return _adc_rerank(
+        queries,
+        corpus,
+        codes,
+        books,
+        lambda adc, partials: adc.join(F.broadcast(partials), ["j", "code"]).filter(
+            F.col(id_col) != F.col("query_id")
+        ),
+        k,
+        m,
+        shortlist,
+        id_col,
+        vec_col,
+        dims,
     )
 
 
@@ -1081,72 +947,27 @@ def ivfpq_topk(
     (:func:`auto_kclusters`, r9) — the coarse grid keeps the ADC scan
     at ~nprobe·√N codes as the corpus grows instead of a fixed 1/8th.
     """
-    if kclusters is None:
-        kclusters = auto_kclusters(corpus)
-    assigns, cents = kmeans_centroids(
+    assigns, cents = _coarse(
         corpus, kclusters, coarse_iters, id_col, vec_col, dims, train_sample_cap
     )
     codes, books = pq_train(
         corpus, m, ksub, pq_iters, id_col, vec_col, dims, train_sample_cap
     )
-    # coarse routing: query → nprobe nearest centroids
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    routed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("sim_c", cosine(F.col("qv"), F.col("ccv"), dims))
-        .withColumn(
-            "rc",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("sim_c"), F.asc("cid"))
-            ),
+    routed = _route(queries, cents, "cid", nprobe, id_col, vec_col, dims)
+
+    def scan(adc: DataFrame, partials: DataFrame) -> DataFrame:
+        # codes restricted to the probed coarse cells: the broadcast
+        # (query, cid) pairs prune the scan before any ADC work happens —
+        # at scale this is partition pruning on the codes table
+        return (
+            adc.join(assigns.withColumnRenamed(id_col, "__aid"), adc[id_col] == F.col("__aid"))
+            .join(F.broadcast(routed), "cid")
+            .filter(F.col(id_col) != F.col("query_id"))
+            .select("query_id", id_col, "j", "code")
+            .join(F.broadcast(partials), ["query_id", "j", "code"])
         )
-        .filter(F.col("rc") <= nprobe)
-        .select("query_id", "cid")
-    )
-    # ADC partials per (query, subspace, code)
-    qsub = _subvectors(queries, "query_id", m, id_col, vec_col, dims)
-    partials = (
-        qsub.join(F.broadcast(books), "j")
-        .withColumn("partial", dot(F.col("sv"), F.col("ccv"), dims // m if dims else None))
-        # exact integer nano-units — see pq_topk's tie-inclusion notes
-        .withColumn("qpartial", F.expr("CAST(round(partial * 1e9) AS BIGINT)"))
-        .select("query_id", "j", "code", "qpartial")
-    )
-    # codes restricted to the probed coarse cells: the broadcast
-    # (query, cid) pairs prune the scan before any ADC work happens —
-    # at scale this is partition pruning on the codes table
-    n = _corpus_count(corpus)
-    adc_codes = _spread_candidates(
-        codes, id_col, n * m if n is not None else None
-    )
-    probed = (
-        adc_codes.join(assigns.withColumnRenamed(id_col, "__aid"),
-                       adc_codes[id_col] == F.col("__aid"))
-        .join(F.broadcast(routed), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, "j", "code")
-    )
-    approx = (
-        probed.join(F.broadcast(partials), ["query_id", "j", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum("qpartial").alias("approx_sim"))
-    )
-    # rank() over the score alone: ADC ties go to the exact re-rank
-    # whole, never id-truncated (pq_topk's r11 contract — the 100×
-    # probe broke the row_number cut at code-collision class 100)
-    ws = Window.partitionBy("query_id").orderBy(F.desc("approx_sim"))
-    short = approx.withColumn("rs", F.rank().over(ws)).filter(F.col("rs") <= shortlist)
-    qv = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv"), dims))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
-    )
+
+    return _adc_rerank(queries, corpus, codes, books, scan, k, m, shortlist, id_col, vec_col, dims)
 
 
 def write_ivf_layout(
@@ -1171,11 +992,7 @@ def write_ivf_layout(
     ``kclusters=None`` auto-selects ``max(8, ceil(√N))`` — ≈√N
     partition directories of ≈√N vectors each (:func:`auto_kclusters`,
     r9)."""
-    if kclusters is None:
-        kclusters = auto_kclusters(corpus)
-    assigns, cents = kmeans_centroids(
-        corpus, kclusters, iters, id_col, vec_col, dims, train_sample_cap
-    )
+    assigns, cents = _coarse(corpus, kclusters, iters, id_col, vec_col, dims, train_sample_cap)
     (
         corpus.join(assigns, id_col)
         .repartition("cid")
@@ -1202,34 +1019,11 @@ def ivf_topk_from_layout(
     not data — and placed in the scan's partition filter, so the
     FileSourceScan never lists the other directories)."""
     cents = spark.read.parquet(f"{root}/centroids")
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    routed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("sim_c", cosine(F.col("qv"), F.col("ccv"), dims))
-        .withColumn(
-            "rc",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("sim_c"), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rc") <= nprobe)
-        .select("query_id", "qv", "cid")
-    )
+    routed = _route(queries, cents, "cid", nprobe, id_col, vec_col, dims)
     # O(|queries| × nprobe) cid ids — metadata, not data
     probed_cids = sorted({r["cid"] for r in routed.select("cid").distinct().collect()})
     vectors = spark.read.parquet(f"{root}/vectors").filter(F.col("cid").isin(probed_cids))
-    sim = (
-        vectors.select(F.col(id_col).alias("neighbor_id"), "cid", _as_double(F.col(vec_col)).alias("cv"))
-        .join(F.broadcast(routed), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cosine"), "rnk")
-    )
+    return _probe(routed, _vectors(vectors, id_col, vec_col, "neighbor_id", "cv", "cid"), "cid", k)
 
 
 def mmr_rerank(

@@ -94,6 +94,56 @@ def test_oracle_sql_counts_in_decorator_and_keyed_assignment():
     assert _changed_by("pkg/queries.py", "SELECT 3 AS n", "SELECT 4 AS n") == {"c"}
 
 
+LOCAL = {
+    **PKG,
+    "pkg/local.py": '''
+from .reports import top as best
+
+register = None
+
+
+@register("d")
+def d(spark, sf, top=None):
+    fingerprint = [explode_lines for explode_lines in range(3)]
+    for top in fingerprint:
+        spark = (lambda explode_lines: explode_lines)(top)
+
+    def explode_lines(df):
+        return df
+
+    return explode_lines(spark)
+
+
+@register("e")
+def e(spark, sf):
+    global LIMIT
+    LIMIT = LIMIT + 1
+    from .text import fingerprint
+
+    return best(fingerprint(spark))
+''',
+}
+
+
+def test_local_names_do_not_reach_top_level_defs():
+    """A name bound in a definition's own scopes (an argument, an
+    assignment or loop target, a comprehension or lambda variable, a
+    nested def) means no top-level def of that name; a ``global`` name
+    and a function-level import still do."""
+    base = entrymod._fingerprints(LOCAL)
+
+    def changed(path, old, new):
+        edited = {**LOCAL, path: LOCAL[path].replace(old, new)}
+        assert edited != LOCAL
+        now = entrymod._fingerprints(edited)
+        return {n for n in base if base[n] != now[n]}
+
+    assert changed("pkg/lines.py", "return df", "return df.limit(1)") == {"a"}
+    assert changed("pkg/reports.py", "limit(15)", "limit(10)") == {"c", "e"}
+    assert changed("pkg/text.py", "return df", "return df.distinct()") == {"b", "e"}
+    assert changed("pkg/queries.py", "LIMIT = 10", "LIMIT = 20") == {"a", "e"}
+
+
 def test_package_edit_reaches_its_entries_only():
     sources = entrymod._package_sources()
     base = entrymod._fingerprints(sources)

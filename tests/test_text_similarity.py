@@ -751,7 +751,7 @@ def test_kmeans_below_cap_never_runs_python(spark, sf_dir, monkeypatch):
     assigns, cents = S.kmeans_centroids(emb, k=8, iters=2)
     assert assigns.count() == emb.count()
     assert cents.count() <= 8
-    # same gate on the repo's OTHER Lloyd (pq_train)
+    # same gate on the Lloyd driver's other caller (pq_train)
     codes, books = S.pq_train(emb, m=8, ksub=16, iters=2)
     assert codes.count() == emb.count() * 8
 
@@ -801,8 +801,8 @@ def test_sampled_train_empty_falls_back_to_full_corpus(spark, sf_dir, monkeypatc
     (forced here with a keep-nothing threshold) must fall back to
     full-corpus training, not train on nothing and lose every
     assignment. With the fallback, the sampled-cap call is
-    bit-identical to the explicit full-corpus opt-out — on BOTH
-    Lloyds."""
+    bit-identical to the explicit full-corpus opt-out — for both
+    callers of the one Lloyd driver (kmeans_centroids and pq_train)."""
     from fintrack_etl_spark import similarity as S
     from fintrack_etl_spark.io import table
     from fintrack_etl_spark.operators import sampling
@@ -866,6 +866,76 @@ def test_blas_closure_cap_falls_back_to_jvm_join(spark, sf_dir, monkeypatch):
     for r in dup.select("vec_id").collect():
         for j in range(8):
             assert gotc[(r["vec_id"], j)] == gotc[(r["vec_id"] - 100000, j)]
+
+
+def test_lloyd_frees_superseded_round_pins(spark, sf_dir, monkeypatch):
+    """Each Lloyd round pins its centroids, and only the last round's
+    are returned. Once the final assignment is pinned, only the
+    returned (assignments, centroids) pair may stay persisted: the row
+    pin and every earlier round's centroids are freed, for both
+    callers of the driver. The recorded pins stay referenced here, so
+    the JVM's cleaner cannot free a leaked one behind the test's back."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from fintrack_etl_spark import similarity as S
+    from fintrack_etl_spark.io import table
+
+    def rdd_id(df):
+        return df._jdf.queryExecution().analyzed().rdd().id()
+
+    pinned = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *a, **kw):
+        out = checkpoint(self, *a, **kw)
+        pinned.append(out)
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    emb = table(spark, "embeddings", sf_dir)
+    for train in (
+        lambda: S.kmeans_centroids(emb, k=8, iters=3),
+        lambda: S.pq_train(emb, m=8, ksub=16, iters=3),
+    ):
+        memo.clear("train")  # so the build really runs
+        pinned.clear()
+        pair = train()
+        assert len(pinned) == 5  # rows, three rounds' centroids, assignment
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
+        left = {rdd_id(df) for df in pinned if persistent.containsKey(rdd_id(df))}
+        assert left == {rdd_id(df) for df in pair}
+    memo.clear("train")
+
+
+def test_one_lloyd_loop_and_one_search_tail():
+    """Stdlib tripwire over similarity.py: one function holds the
+    ``for _ in range(iters)`` Lloyd loop, one the ``F.rank`` ADC
+    shortlist cut, and one builds the ``Window.partitionBy("query_id")``
+    per-query cut. A second holder is a hand-written copy of the
+    shared Lloyd driver or search tail."""
+    import ast
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "fintrack_etl_spark" / "similarity.py"
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+
+    def holders(match):
+        return [
+            f.name
+            for f in tree.body
+            if isinstance(f, ast.FunctionDef) and any(match(n) for n in ast.walk(f))
+        ]
+
+    def query_window(n):
+        return (
+            isinstance(n, ast.Call)
+            and ast.unparse(n.func) == "Window.partitionBy"
+            and [ast.unparse(a) for a in n.args] == ["'query_id'"]
+        )
+
+    assert holders(lambda n: isinstance(n, ast.For) and ast.unparse(n.iter) == "range(iters)") == ["_lloyd"]
+    assert holders(lambda n: isinstance(n, ast.Attribute) and ast.unparse(n) == "F.rank") == ["_adc_rerank"]
+    assert holders(query_window) == ["_ranked"]
 
 
 def test_spread_candidates_scale_partitioning(spark, sf_dir, tmp_path):
