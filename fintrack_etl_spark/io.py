@@ -17,9 +17,12 @@ atomicity, are what the correctness gate checks — SURVEY.md §7).
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .operators.memo import file_signature, memoized
 
 #: Fixture tables generated by the driver (TESTDATA.md).
 FIXTURE_TABLES = (
@@ -38,9 +41,74 @@ FIXTURE_TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S3/S12 parquet scan — columnar, predicate-pushdown-capable."""
-    return spark.read.parquet(path)
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """S3/S12 parquet scan — columnar, predicate-pushdown-capable — and
+    the package's only parquet reader.
+
+    A read with no schema makes Spark run a footer-inference job
+    (``mergeSchemasInParallel``) before it plans anything, every time.
+    Here a path set's schema is inferred once per session (memo site
+    ``"schema"``, key :func:`_schema_key`) and later reads pass it to
+    ``spark.read.schema``; ``lake_tx.commit_table`` seeds the entry of
+    each version it writes. Only the schema is kept, never the
+    DataFrame: every call returns a fresh relation with fresh attribute
+    ids, so two reads of one table still self-join."""
+    key = _schema_key(spark, paths)
+    if key is None:
+        return spark.read.parquet(*paths)
+    schema = memoized("schema", key, lambda: spark.read.parquet(*paths).schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _data_files(path: str) -> list[str] | None:
+    """The files Spark would list under a local ``path`` (hidden names
+    — ``.crc``, ``_SUCCESS``, a sidecar — left out, ``_k=v`` partition
+    directories kept), or None where the read cannot be keyed: a
+    non-local URI, a glob, a missing path."""
+    if path.startswith("file:"):
+        path = unquote(urlparse(path).path)
+    elif "://" in path or any(c in path for c in "*?[{"):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    files = []
+    for d, dirs, names in os.walk(path):
+        dirs[:] = [n for n in dirs if not hidden(n)]
+        files += [os.path.join(d, n) for n in names if not hidden(n)]
+    return files
+
+
+def _schema_key(spark: SparkSession, paths) -> tuple | None:
+    """A parquet path set's identity: applicationId + the paths as
+    given (a partitioned root and its leaf files read different
+    schemas) + the signature of every listed data file. An in-session
+    overwrite, ``compact``'s rename or a clobbered commit directory is
+    a new key; a path that cannot be listed locally is None (inferred
+    every time)."""
+    files = []
+    for p in paths:
+        listed = _data_files(p)
+        if listed is None:
+            return None
+        files += listed
+    return (spark.sparkContext.applicationId, paths, file_signature(files))
+
+
+def seed_schema(spark: SparkSession, path: str, schema) -> None:
+    """Record ``schema`` as ``path``'s inferred one, for a directory
+    this session has just written with that schema. Spark reads a given
+    schema as nullable, as inference does, so the next
+    :func:`read_parquet` of ``path`` equals an inferred read and runs
+    no inference job."""
+    key = _schema_key(spark, (path,))
+    if key is not None:
+        memoized("schema", key, lambda: schema)
 
 
 def local_rows(spark: SparkSession, rows, ddl: str) -> DataFrame:
@@ -131,7 +199,7 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
     """
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -45,6 +45,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import read_parquet, seed_schema
+
 MANIFEST = "_latest"
 
 
@@ -97,7 +99,7 @@ def read_table(spark: SparkSession, root: str, version: int | None = None) -> Da
         raise FileNotFoundError(
             f"version {version} was vacuumed (expire_versions); retained max is {m['version']}"
         )
-    return spark.read.parquet(_version_dir(root, version))
+    return read_parquet(spark, _version_dir(root, version))
 
 
 def table_changes(
@@ -179,12 +181,16 @@ def commit_table(df: DataFrame, root: str, batch_id: int | None = None) -> int:
     the commit point. A crashed earlier attempt may have left a
     partial directory for the same version — it was never visible, and
     ``mode("overwrite")`` clobbers it before this attempt publishes.
-    ``batch_id=None`` keeps the last recorded one.
+    ``batch_id=None`` keeps the last recorded one. The new version's
+    schema is ``df``'s, so it is seeded into ``read_parquet``'s memo
+    and the first read of the version infers nothing.
     """
     os.makedirs(root, exist_ok=True)
     m = read_manifest(root)
     n = (m["version"] if m else 0) + 1
-    df.write.mode("overwrite").parquet(_version_dir(root, n))
+    vdir = _version_dir(root, n)
+    df.write.mode("overwrite").parquet(vdir)
+    seed_schema(df.sparkSession, vdir, df.schema)
     _write_manifest(root, n, batch_id, m)
     return n
 
@@ -231,7 +237,7 @@ def compact_table(
     ]
     total_bytes = sum(os.path.getsize(f) for f in data_files)
     n_out = max(1, -(-total_bytes // max(1, target_file_bytes)))
-    df = spark.read.parquet(vdir)
+    df = read_parquet(spark, vdir)
     if cluster_by:
         df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(*cluster_by)
     else:
@@ -544,7 +550,7 @@ def write_file_stats(
         raise FileNotFoundError(f"no committed version at {root}")
     v = m["version"] if version is None else version
     vdir = _version_dir(root, v)
-    df = spark.read.parquet(vdir)
+    df = read_parquet(spark, vdir)
     aggs = []
     for c in columns:
         aggs.append(F.min(c).alias(f"min_{c}"))
@@ -594,16 +600,16 @@ def read_table_pruned(
     spath = os.path.join(vdir, _STATS_FILE)
     pred = F.col(column).between(lo, hi)
     if not os.path.exists(spath):
-        return spark.read.parquet(vdir).filter(pred)
+        return read_parquet(spark, vdir).filter(pred)
     with open(spath, encoding="utf-8") as f:
         sidecar = json.load(f)
     if column not in sidecar["columns"]:
-        return spark.read.parquet(vdir).filter(pred)
+        return read_parquet(spark, vdir).filter(pred)
     keep = []
     for path, bounds in sidecar["files"].items():
         mn, mx = bounds[column]
         if mn is None or mx is None or not (mx < lo or mn > hi):
             keep.append(path)
     if not keep:
-        return spark.read.parquet(vdir).filter(pred).limit(0)
-    return spark.read.parquet(*keep).filter(pred)
+        return read_parquet(spark, vdir).filter(pred).limit(0)
+    return read_parquet(spark, *keep).filter(pred)

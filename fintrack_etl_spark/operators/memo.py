@@ -4,7 +4,7 @@ per query.
 
 ``memoized(site, key, build)`` is the only store. A site names its key
 and its build; this module owns the dicts, the bound (``MEMO_MAX``
-entries per site, FIFO) and the eviction. The seven sites:
+entries per site, FIFO) and the eviction. The eight sites:
 
 * ``"train"`` — ``similarity.kmeans_centroids`` / ``pq_train``: the
   IVF coarse quantizer and the PQ codebooks, model artifacts that
@@ -19,12 +19,20 @@ entries per site, FIFO) and the eviction. The seven sites:
 * ``"bpe"`` — ``queries_ext._bpe_words_enc``: the trained BPE
   dictionary;
 * ``"lanc"`` — ``queries_reports._lancamentos``: the categorized
-  lançamentos.
+  lançamentos;
+* ``"schema"`` — ``io.read_parquet``: a parquet path set's inferred
+  schema (never the DataFrame, whose attribute ids must stay fresh),
+  keyed by applicationId + the paths + the ``file_signature`` of every
+  listed data file, ``None`` for a path that cannot be listed locally.
+  ``lake_tx.commit_table`` seeds each version it writes with the
+  committed DataFrame's schema (``io.seed_schema``), so reading a
+  fresh version runs no inference job.
 
 Each site has its own dict, so filling one evicts nothing from another
 (a cheap count can never push out a trained model, ADVICE r9). The
 first four key on :func:`df_memo_key`, the fixture sites on
-:func:`fixture_key`; a ``None`` key builds and stores nothing.
+:func:`fixture_key`, ``"schema"`` on :func:`file_signature`; a
+``None`` key builds and stores nothing.
 
 Two hazards these helpers close (ADVICE r6):
 

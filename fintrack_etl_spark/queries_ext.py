@@ -720,13 +720,14 @@ def ext_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the handful of files whose stats overlap the box."""
     import os as _os
 
+    from .io import read_parquet
     from .operators.layout import cluster_write
 
     li = T(spark, sf_dir, "lineitem")
     path = f"/tmp/fintrack_zorder_{_os.path.basename(sf_dir.rstrip('/'))}"
     cluster_write(li, ["l_partkey", "l_suppkey"], path, n_files=8, bits_per_dim=4)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.expr(_ZORDER_PRED_SQL))
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -28,6 +28,7 @@ from .parse import (
     parse_bradesco_bill,
     parse_bradesco_resumo,
 )
+from .queries import T
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -41,12 +42,6 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .io import table
-
-    return table(spark, name, sf_dir)
 
 
 def _brl(col) -> F.Column:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from . import reports, rules
 from .forms import normalize_forms
 from .operators.memo import fixture_key, memoized
+from .queries import T
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -29,12 +30,6 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .io import table
-
-    return table(spark, name, sf_dir)
 
 
 # ---------------------------------------------------------------------------

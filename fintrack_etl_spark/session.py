@@ -86,6 +86,13 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # be set at session build, not via spark.conf.set.
     "spark.ui.showConsoleProgress": "false",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
+    # Generated-class cache (static, JVM-wide). Spark's default of 100
+    # is a Guava cache split over 4 segments, so a working set near 100
+    # does not stay cached: the perfbench `reports` warm-up compiles 96
+    # classes and each later pass recompiled 46 of them with Janino
+    # (10-16 ms each), while `doc_ingest`'s 89 recompiled 0. At 256
+    # both workloads recompile 0 per pass (4-core host, PySpark 4.1.2).
+    "spark.sql.codegen.cache.maxEntries": "256",
 }
 
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .io import read_parquet
 from .operators.memo import df_memo_key, memoized, unpersist_checkpointed
 
 
@@ -243,28 +244,29 @@ def label_centroids(corpus: DataFrame, label_col: str = "label", vec_col: str = 
     """Element-wise mean vector per label — the IVF coarse-quantizer
     building block (posexplode → per-(label, dim) mean).
 
-    Components are quantized to EXACT integer micro-units before the
-    sum (``round(x·1e6)`` of identical doubles is engine-exact), so the
-    mean is a floor division of exact integers — no float-sum partial-
-    order dependence, bit-identical across engines and partitionings
-    (avg-of-doubles merges partials in partition order; its last ulps
-    flipped x19's driver hash in r5). ``+ 0.0`` canonicalizes -0.0.
+    The mean is :func:`_micro_mean`'s exact one, bit-identical across
+    engines and partitionings (avg-of-doubles merges partials in
+    partition order; its last ulps flipped x19's driver hash in r5).
     """
     v = _as_double(F.col(vec_col))
     ex = corpus.select(F.col(label_col).alias("label"), F.posexplode(v).alias("dim0", "x"))
+    return _micro_mean(ex, ["label", (F.col("dim0") + 1).alias("dim")], "centroid")
+
+
+def _micro_mean(ex: DataFrame, keys: list, out: str) -> DataFrame:
+    """Per-``keys`` mean of column ``x``, exact: each component is
+    quantized to integer micro-units (``round(x·1e6)``, engine-exact on
+    identical doubles), summed as BIGINT and floor-divided by the
+    count, so no float-sum partial order can move a bit. ``+ 0.0``
+    canonicalizes -0.0. Returns the key columns and ``out``."""
     return (
-        ex.groupBy("label", (F.col("dim0") + 1).alias("dim"))
+        ex.groupBy(*keys)
         .agg(
             F.sum(F.expr("CAST(round(x * 1000000) AS BIGINT)")).alias("sm"),
             F.count(F.lit(1)).alias("cn"),
         )
-        .select(
-            "label",
-            "dim",
-            (
-                F.floor(F.col("sm").cast("double") / F.col("cn")) / 1000000.0 + F.lit(0.0)
-            ).alias("centroid"),
-        )
+        .withColumn(out, F.floor(F.col("sm").cast("double") / F.col("cn")) / 1000000.0 + F.lit(0.0))
+        .drop("sm", "cn")
     )
 
 
@@ -442,8 +444,8 @@ def _lloyd(
     allowing ulp-level summation-order drift vs the JVM fold. Below
     the cap (every gate/bench fixture) the path is the bit-identical
     full-corpus JVM loop. Init is the caller's ``init``; each round's
-    centroids are exact integer micro-unit means (see
-    :func:`label_centroids`), ``localCheckpoint``-pinned to cut the
+    centroids are exact integer micro-unit means
+    (:func:`_micro_mean`), ``localCheckpoint``-pinned to cut the
     iterated lineage. The final assignment is pinned eagerly; then the
     row pin, the sample pin and every superseded round's centroids are
     freed.
@@ -515,17 +517,10 @@ def _lloyd(
         rounds = []
         for _ in range(iters):
             cents = (
-                assigned.select(*keys, code, F.posexplode("cv").alias("dim0", "x"))
-                .groupBy(*keys, code, "dim0")
-                .agg(
-                    F.sum(F.expr("CAST(round(x * 1000000) AS BIGINT)")).alias("sm"),
-                    F.count(F.lit(1)).alias("cn"),
-                )
-                .select(
-                    *keys,
-                    code,
-                    "dim0",
-                    (F.floor(F.col("sm").cast("double") / F.col("cn")) / 1000000.0 + F.lit(0.0)).alias("m"),
+                _micro_mean(
+                    assigned.select(*keys, code, F.posexplode("cv").alias("dim0", "x")),
+                    [*keys, code, "dim0"],
+                    "m",
                 )
                 .groupBy(*keys, code)
                 .agg(F.array_sort(F.collect_list(F.struct("dim0", "m"))).alias("p"))
@@ -1018,11 +1013,11 @@ def ivf_topk_from_layout(
     partitions (the probed-cid list is collected — O(kclusters) ids,
     not data — and placed in the scan's partition filter, so the
     FileSourceScan never lists the other directories)."""
-    cents = spark.read.parquet(f"{root}/centroids")
+    cents = read_parquet(spark, f"{root}/centroids")
     routed = _route(queries, cents, "cid", nprobe, id_col, vec_col, dims)
     # O(|queries| × nprobe) cid ids — metadata, not data
     probed_cids = sorted({r["cid"] for r in routed.select("cid").distinct().collect()})
-    vectors = spark.read.parquet(f"{root}/vectors").filter(F.col("cid").isin(probed_cids))
+    vectors = read_parquet(spark, f"{root}/vectors").filter(F.col("cid").isin(probed_cids))
     return _probe(routed, _vectors(vectors, id_col, vec_col, "neighbor_id", "cv", "cid"), "cid", k)
 
 

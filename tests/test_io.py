@@ -108,3 +108,38 @@ def test_read_csv_quarantined_splits_bad_rows(spark, tmp_path):
     assert len(quarantined) == 1
     assert "not_an_int" in quarantined[0]["raw_line"]
     assert quarantined[0]["quarantine_reason"] == "csv parse failure"
+
+
+def test_read_parquet_is_the_only_parquet_reader():
+    """One reader: no package module calls ``.parquet(`` on a
+    ``spark.read`` chain except ``io.read_parquet``, so every parquet
+    read shares its once-per-session schema memo."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(fio.__file__).resolve().parent
+
+    def on_reader(node) -> bool:
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.value if isinstance(node, ast.Attribute) else node.func
+        return False
+
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        allowed = set()
+        if path.name == "io.py" and path.parent == pkg:
+            fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "read_parquet")
+            allowed = {id(n) for n in ast.walk(fn)}
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "parquet"
+                and on_reader(n.func.value)
+                and id(n) not in allowed
+            ):
+                hits.append(f"{path.relative_to(pkg)}:{n.lineno}")
+    assert hits == []

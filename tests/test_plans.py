@@ -674,3 +674,51 @@ def test_prefix_sum_window_sorts_are_bounded(spark):
     ):
         assert "Scan ExistingRDD" in _phys(out)  # window behind checkpoint
         assert out.rdd.getNumPartitions() == 6, out.rdd.getNumPartitions()
+
+
+
+#: The perfbench ``reports`` workload's registry entries.
+_REPORTS = (
+    "r1_monthly_by_category", "r4_top_gastos", "r6_compare_budget",
+    "a1_group_sum_flagship", "j3_merge_upsert", "ext_sql_entry_q3",
+)
+
+
+def test_repeated_reports_compile_no_generated_class(spark, tmp_path):
+    """Generated classes stay in Spark's codegen cache: once the reports
+    have run, a repeated round compiles none with Janino. The rounds
+    follow the perfbench ``reports`` run over its own generated tables
+    (sf 0.002, seed 1): one collecting round (the checked warm-up), then
+    noop writes. Their working set is ~96 classes; under Spark's default
+    ``spark.sql.codegen.cache.maxEntries`` (100, a Guava cache split
+    over 4 segments) it does not stay cached: the last round recompiled
+    49 classes on a 4-core host and this failed, which is why
+    ``session._LOCAL_DEFAULTS`` raises the bound."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    from __spark_entry__ import queries
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_datagen", Path(__file__).resolve().parents[1] / "perfbench" / "datagen.py"
+    )
+    datagen = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(datagen)
+    sf_dir = str(tmp_path / "tables")
+    datagen.write_tables(sf_dir, 1, 0.002)
+    registry = queries()
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+
+    def round_of_reports(action) -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in _REPORTS:
+            action(registry[name](spark, sf_dir))
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    round_of_reports(lambda df: df.toPandas())
+    round_of_reports(noop)
+    assert round_of_reports(noop) == 0
