@@ -8,7 +8,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 Query implementations live in four modules: ``fintrack_etl_spark.queries``
 (relational core, SURVEY.md §2), ``queries_ext`` (text analysis / dedup /
 similarity-search extensions), ``queries_parse`` (bank-document parsers)
-and ``queries_reports`` (the reference's end-user reports).
+and ``queries_reports`` (the reference's end-user reports). All four
+register into one registry, ``queries.QUERIES`` / ``ORACLES``.
 """
 
 from __future__ import annotations
@@ -44,14 +45,21 @@ _GATE_DIR = Path(__file__).resolve().parent
 _PACKAGE = "fintrack_etl_spark"
 
 
-def _registry(attr: str) -> dict:
-    from fintrack_etl_spark import queries as core
-    from fintrack_etl_spark import queries_ext, queries_parse, queries_reports
+#: The modules that register queries, in registry order.
+_MODULES = ("queries", "queries_ext", "queries_parse", "queries_reports")
 
-    merged = dict(getattr(core, attr))
-    for mod in (queries_ext, queries_parse, queries_reports):
-        merged.update(getattr(mod, attr))
-    return merged
+
+def _registry(attr: str) -> dict:
+    """``queries.QUERIES`` (or ``ORACLES``), the one registry all four
+    modules fill, in registry order: module by module, each in its
+    registration order, whichever module a process imported first."""
+    from importlib import import_module
+
+    mods = [import_module(f"{_PACKAGE}.{m}") for m in _MODULES]
+    rank = {mod.__name__: i for i, mod in enumerate(mods)}
+    builders, reg = mods[0].QUERIES, getattr(mods[0], attr)
+    order = sorted(builders, key=lambda n: rank[builders[n].__module__])
+    return {n: reg[n] for n in order if n in reg}
 
 
 def _last_green() -> dict[str, int]:

@@ -49,10 +49,11 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     (``mergeSchemasInParallel``) before it plans anything, every time.
     Here a path set's schema is inferred once per session (memo site
     ``"schema"``, key :func:`_schema_key`) and later reads pass it to
-    ``spark.read.schema``; ``lake_tx.commit_table`` seeds the entry of
-    each version it writes. Only the schema is kept, never the
-    DataFrame: every call returns a fresh relation with fresh attribute
-    ids, so two reads of one table still self-join."""
+    ``spark.read.schema``. Every ``lake_tx`` publish (its one path,
+    ``commit_table_cas``) seeds the entry of the version it writes.
+    Only the schema is kept, never the DataFrame: every call returns a
+    fresh relation with fresh attribute ids, so two reads of one table
+    still self-join."""
     key = _schema_key(spark, paths)
     if key is None:
         return spark.read.parquet(*paths)
@@ -346,7 +347,10 @@ def compact(
     """Small-files compaction (lake maintenance, I5's other half): read
     a parquet directory, rewrite it at the target file size, return the
     new file count. The read→overwrite round-trips through a temp
-    subdir because Spark cannot overwrite a path it is reading.
+    subdir because Spark cannot overwrite a path it is reading; the
+    old directory is renamed aside before the new one is renamed in and
+    deleted only after, so a crash or a reader never meets ``path``
+    holding part of its files.
 
     At scale this runs per partition directory (compact the partitions
     a streaming sink fragmented, leave the rest untouched) — full-table
@@ -359,8 +363,10 @@ def compact(
     n = ideal_partitions(df, target_mb)
     tmp = tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path) or ".")
     df.repartition(n).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
+    old = f"{tmp}.old"
+    os.rename(path, old)
     os.rename(tmp, path)
+    shutil.rmtree(old)
     return n
 
 

@@ -1,14 +1,37 @@
 """Atomic multi-version parquet tables — a minimal commit log.
 
 Semantics modeled on the PUBLIC Delta/Iceberg commit protocols: all
-data for version N is fully written into its own immutable directory
-``v{N:08d}/`` BEFORE one atomic pointer swap (``os.replace`` of the
-``_latest`` manifest file) makes it visible. Consequences:
+data for version N is fully written BEFORE one atomic pointer swap
+(``os.replace`` of the ``_latest`` manifest file) makes it visible.
+
+Every commit takes one path, :func:`commit_table_cas`:
+
+1. the parquet write goes to a unique ``.stage-<uuid>/`` directory,
+   never to a ``v{N:08d}/`` path another writer could publish;
+2. under the ``_commit.lock`` file (``O_CREAT|O_EXCL``) the manifest is
+   re-read; if the table moved past the version the commit was derived
+   from, it raises :class:`CommitConflictError` and publishes nothing;
+3. otherwise the staging directory is renamed to ``v{N+1}/`` and the
+   manifest swapped (tmp file + fsync + ``os.replace``) — THE commit
+   point — and the new version's schema is seeded into
+   ``io.read_parquet``'s memo.
+
+``commit_table`` is this path against the version current when it is
+called (a blind append of a new state); ``merge_latest_wins_versioned``,
+``replace_by_source_key_versioned``, ``delete_rows`` and
+``compact_table`` commit against the version they read, so a version
+published in between makes them raise instead of being superseded.
+Consequences:
 
 - a reader resolves the manifest once, then reads only that version's
-  directory — it can never observe a half-written table state;
-- a crash anywhere before the swap leaves the previous version intact
-  (the orphaned directory is invisible and gets clobbered/vacuumed);
+  directory — it can never observe a half-written table state, and a
+  version above the manifest's is refused (``ValueError``);
+- a published version is never rewritten;
+- what a crash leaves behind is invisible: before the rename, a
+  ``.stage-*`` directory (removed by the writer unless the process
+  died); between the rename and the swap, a ``v{N+1}/`` directory above
+  the manifest's version, which the next commit of that number clears
+  before its own rename. The previous version stays current;
 - streaming replay is exactly-once: the manifest records the last
   applied ``batch_id`` at the SAME commit point as the data, so the
   ``*_sink_stream_versioned`` sinks (the fold driver of
@@ -83,11 +106,11 @@ def last_batch_id(root: str) -> int:
     return -1 if b is None else int(b)
 
 
-def read_table(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
-    """Read the current committed version — or, with ``version``, TIME
-    TRAVEL to any still-retained snapshot (immutable version dirs make
-    every un-vacuumed state readable forever, the same contract as
-    Delta's ``versionAsOf``/Iceberg's snapshot reads)."""
+def _resolve(root: str, version: int | None = None) -> tuple[int, str]:
+    """The committed ``version`` of ``root`` (default: the current one)
+    and its directory. Raises ``FileNotFoundError`` before the first
+    commit or for a vacuumed version, ``ValueError`` above the
+    manifest's version (an unpublished directory is never read)."""
     m = read_manifest(root)
     if m is None:
         raise FileNotFoundError(f"no committed version at {root}")
@@ -95,11 +118,29 @@ def read_table(spark: SparkSession, root: str, version: int | None = None) -> Da
         version = m["version"]
     elif version > m["version"]:
         raise ValueError(f"version {version} not committed (current {m['version']})")
-    elif not os.path.isdir(_version_dir(root, version)):
+    vdir = _version_dir(root, version)
+    if not os.path.isdir(vdir):
         raise FileNotFoundError(
             f"version {version} was vacuumed (expire_versions); retained max is {m['version']}"
         )
-    return read_parquet(spark, _version_dir(root, version))
+    return version, vdir
+
+
+def read_table(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
+    """Read the current committed version — or, with ``version``, TIME
+    TRAVEL to any still-retained snapshot (immutable version dirs make
+    every un-vacuumed state readable forever, the same contract as
+    Delta's ``versionAsOf``/Iceberg's snapshot reads)."""
+    return read_parquet(spark, _resolve(root, version)[1])
+
+
+def _snapshot(spark: SparkSession, root: str) -> tuple[int, DataFrame | None]:
+    """The current version and its data, ``(0, None)`` before the first
+    commit: what a read-modify-write derives from and commits against."""
+    if not table_exists(root):
+        return 0, None
+    v, vdir = _resolve(root)
+    return v, read_parquet(spark, vdir)
 
 
 def table_changes(
@@ -159,40 +200,26 @@ def table_changes(
     return inserts.unionByName(changed).unionByName(deletes)
 
 
-def _write_manifest(root: str, version: int, batch_id: int | None, prev: dict | None) -> None:
-    """Atomically point the table at ``version`` — THE commit point.
-    ``batch_id=None`` keeps ``prev``'s (the manifest the caller read),
-    so a commit outside the stream keeps the stream's watermark."""
-    if batch_id is None and prev is not None:
-        batch_id = prev.get("batch_id")
-    tmp = os.path.join(root, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
+def _write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON atomically: a unique tmp
+    file beside it, fsync, one ``os.replace``."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"version": version, "batch_id": batch_id}, f)
+        json.dump(obj, f, default=str)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(root))
+    os.replace(tmp, path)
 
 
 def commit_table(df: DataFrame, root: str, batch_id: int | None = None) -> int:
-    """Write ``df`` as the next version and atomically publish it.
-
-    The parquet write happens entirely inside the (invisible) new
-    version directory; the single ``os.replace`` of the manifest is
-    the commit point. A crashed earlier attempt may have left a
-    partial directory for the same version — it was never visible, and
-    ``mode("overwrite")`` clobbers it before this attempt publishes.
-    ``batch_id=None`` keeps the last recorded one. The new version's
-    schema is ``df``'s, so it is seeded into ``read_parquet``'s memo
-    and the first read of the version infers nothing.
-    """
-    os.makedirs(root, exist_ok=True)
-    m = read_manifest(root)
-    n = (m["version"] if m else 0) + 1
-    vdir = _version_dir(root, n)
-    df.write.mode("overwrite").parquet(vdir)
-    seed_schema(df.sparkSession, vdir, df.schema)
-    _write_manifest(root, n, batch_id, m)
-    return n
+    """Publish ``df`` as the next version: :func:`commit_table_cas`
+    against the version current now, for a writer whose data does not
+    derive from the table (a seed, a stream fold's one writer per
+    checkpoint). A version another writer publishes before this one's
+    swap makes it raise :class:`CommitConflictError`; a published
+    version is never rewritten. ``batch_id=None`` keeps the last
+    recorded one."""
+    return commit_table_cas(df, root, current_version(root), batch_id)
 
 
 def compact_table(
@@ -225,16 +252,8 @@ def compact_table(
     DFS swap in the Hadoop FileSystem ``getContentSummary`` — the
     planning logic is unchanged. Returns
     ``(new_version, n_files_before, n_files_after)``."""
-    m = read_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed version at {root}")
-    vdir = _version_dir(root, m["version"])
-    data_files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(vdir)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
+    v, vdir = _resolve(root)
+    data_files = _parquet_files(vdir)
     total_bytes = sum(os.path.getsize(f) for f in data_files)
     n_out = max(1, -(-total_bytes // max(1, target_file_bytes)))
     df = read_parquet(spark, vdir)
@@ -242,14 +261,12 @@ def compact_table(
         df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(*cluster_by)
     else:
         df = df.coalesce(n_out)
-    n = commit_table(df, root, batch_id)
-    n_after = sum(
-        1
-        for dp, _, fs in os.walk(_version_dir(root, n))
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    return n, len(data_files), n_after
+    n = commit_table_cas(df, root, v, batch_id)
+    return n, len(data_files), len(_parquet_files(_version_dir(root, n)))
+
+
+def _parquet_files(vdir: str) -> list[str]:
+    return [os.path.join(dp, f) for dp, _, fs in os.walk(vdir) for f in fs if f.endswith(".parquet")]
 
 
 def expire_versions(root: str, retain_last: int = 1) -> list[int]:
@@ -257,7 +274,7 @@ def expire_versions(root: str, retain_last: int = 1) -> list[int]:
     ``datatrack_spark_utils.py:756-768``): delete committed version
     directories older than the newest ``retain_last``; the current
     version always survives. Uncommitted (future-numbered) directories
-    are left alone — a concurrent commit may be writing one.
+    are left alone — a concurrent commit may be renaming one in.
 
     Returns the versions removed."""
     if retain_last < 1:
@@ -288,8 +305,10 @@ def merge_latest_wins_versioned(
     batch_id: int | None = None,
     evolve: bool = False,
 ) -> int:
-    """J3 MERGE with a real commit point: read vN, merge, publish vN+1.
-    First commit seeds the table with the deduped source. With
+    """J3 MERGE with a real commit point: read vN, merge, publish vN+1
+    (a version published after the read raises
+    :class:`CommitConflictError`). First commit seeds the table with
+    the deduped source. With
     ``evolve=True`` a source carrying new columns widens the committed
     schema (NULL backfill on historical rows — the reference's
     ``evoluir_schema`` + merge flow, ``datatrack_spark_utils.py:
@@ -298,12 +317,13 @@ def merge_latest_wins_versioned(
     from .operators.upsert import merge_latest_wins, merge_latest_wins_evolving
     from .operators.windows import dedup_latest
 
-    if table_exists(root):
-        op = merge_latest_wins_evolving if evolve else merge_latest_wins
-        merged = op(read_table(spark, root), source, keys, order_col, tie_breakers)
-    else:
+    v, cur = _snapshot(spark, root)
+    if cur is None:
         merged = dedup_latest(source, keys, order_col, tie_breakers)
-    return commit_table(merged, root, batch_id)
+    else:
+        op = merge_latest_wins_evolving if evolve else merge_latest_wins
+        merged = op(cur, source, keys, order_col, tie_breakers)
+    return commit_table_cas(merged, root, v, batch_id)
 
 
 def replace_by_source_key_versioned(
@@ -317,11 +337,9 @@ def replace_by_source_key_versioned(
     same input converges to identical committed state."""
     from .operators.upsert import replace_by_source_key
 
-    if table_exists(root):
-        out = replace_by_source_key(read_table(spark, root), source, lineage_key)
-    else:
-        out = source
-    return commit_table(out, root, batch_id)
+    v, cur = _snapshot(spark, root)
+    out = source if cur is None else replace_by_source_key(cur, source, lineage_key)
+    return commit_table_cas(out, root, v, batch_id)
 
 
 def upsert_sink_stream_versioned(
@@ -392,7 +410,9 @@ def commit_table_cas(
     top of this module says) the current version is re-read, the next
     version number assigned, the staging dir renamed into place, and
     the manifest swapped — so the loser's data never touches a
-    published path. A lock older than ``lock_timeout_s`` is presumed
+    published path. The published version's schema is ``df``'s, so it
+    is seeded into ``read_parquet``'s memo and its first read infers
+    nothing. A lock older than ``lock_timeout_s`` is presumed
     abandoned by a crashed writer and broken — versions are immutable
     and the manifest swap is atomic, so breaking a stale lock can
     duplicate no data; the worst case is two writers racing the SAME
@@ -406,8 +426,13 @@ def commit_table_cas(
             f"{root}: expected version {expected_version}, found {cur}"
         )
     staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    return _publish_staged(root, staging, expected_version, batch_id, lock_timeout_s)
+    try:
+        df.write.parquet(staging)
+        n = _publish_staged(root, staging, expected_version, batch_id, lock_timeout_s)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)  # a failed write's; no-op once renamed
+    seed_schema(df.sparkSession, _version_dir(root, n), df.schema)
+    return n
 
 
 def _publish_staged(
@@ -454,11 +479,13 @@ def _publish_staged(
             )
         n = expected_version + 1
         vdir = _version_dir(root, n)
-        # a crashed earlier attempt may have left a partial dir for this
-        # never-published version; it was never visible
+        # a writer that crashed between its rename and its swap left this
+        # never-published version behind; it was never visible
         shutil.rmtree(vdir, ignore_errors=True)
         os.replace(staging, vdir)
-        _write_manifest(root, n, batch_id, m)
+        if batch_id is None and m is not None:
+            batch_id = m.get("batch_id")  # keep the stream's watermark
+        _write_json(_manifest_path(root), {"version": n, "batch_id": batch_id})
     finally:
         os.close(fd)
         try:
@@ -478,7 +505,7 @@ def delete_rows(
     """Row-level DELETE through the commit log — the
     right-to-be-forgotten path (``forms_main.py:408-413``'s DELETE
     WHERE, versioned): write a new version WITHOUT the matching rows
-    and atomically publish it. Readers never see a half-deleted table;
+    and atomically publish it against the version it read. Readers never see a half-deleted table;
     the change-data-feed (``table_changes``) reports exactly the
     removed rows as deletes, which is the audit artifact an erasure
     request needs.
@@ -489,13 +516,12 @@ def delete_rows(
     erasure = delete_rows + expire_versions(retain_last=1), exactly
     like Delta/Iceberg VACUUM semantics.
     """
-    cur = read_table(spark, root)
+    v, vdir = _resolve(root)
+    cur = read_parquet(spark, vdir)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    doomed = cur.filter(cond)
-    n = doomed.count()
+    n = cur.filter(cond).count()
     kept = cur.filter(~cond | cond.isNull())
-    v = commit_table(kept, root, batch_id=batch_id)
-    return v, n
+    return commit_table_cas(kept, root, v, batch_id), n
 
 
 def cdc_sink_stream_versioned(
@@ -545,11 +571,7 @@ def write_file_stats(
     on unclustered data every file may overlap every predicate and
     skipping degrades to reading everything (correct, just not
     faster) — identical to Iceberg's behavior."""
-    m = read_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed version at {root}")
-    v = m["version"] if version is None else version
-    vdir = _version_dir(root, v)
+    vdir = _resolve(root, version)[1]
     df = read_parquet(spark, vdir)
     aggs = []
     for c in columns:
@@ -566,12 +588,7 @@ def write_file_stats(
         }
         for r in rows
     }
-    tmp = os.path.join(vdir, f".{_STATS_FILE}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"columns": columns, "files": stats}, f, default=str)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(vdir, _STATS_FILE))
+    _write_json(os.path.join(vdir, _STATS_FILE), {"columns": columns, "files": stats})
     return len(stats)
 
 
@@ -592,11 +609,7 @@ def read_table_pruned(
     exists, so the call is always correct. At 100 TB this is the
     difference between listing 50 files and scanning a partition's
     thousand."""
-    m = read_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed version at {root}")
-    v = m["version"] if version is None else version
-    vdir = _version_dir(root, v)
+    vdir = _resolve(root, version)[1]
     spath = os.path.join(vdir, _STATS_FILE)
     pred = F.col(column).between(lo, hi)
     if not os.path.exists(spath):

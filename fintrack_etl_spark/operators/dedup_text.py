@@ -562,11 +562,12 @@ def minhash_lsh_verified(
     threshold: float = 0.6,
 ) -> DataFrame:
     """The full LSH→verify dedup pipeline with ONE shingling pass: the
-    tokenize+shingle projection is cached and shared by the signature
-    stage and the verification joins — at corpus scale that's one scan
-    of the documents instead of two (shingling is the dominant map-side
-    cost; the cache holds only (id, shingle-array))."""
-    sh = _shingled(df, id_col, text_col, n).cache()
+    tokenize+shingle projection (``_shingled``'s lazy checkpoint in the
+    ``"shingle"`` memo site, which bounds and frees it) is shared by the
+    signature stage and the verification joins — at corpus scale that's
+    one scan of the documents instead of two (shingling is the dominant
+    map-side cost; the checkpoint holds only (id, shingle-array))."""
+    sh = _shingled(df, id_col, text_col, n)
     cand = minhash_lsh_candidates(
         df, id_col, text_col, n, num_hashes, bands, shingled=sh
     )

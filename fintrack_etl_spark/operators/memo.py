@@ -24,9 +24,11 @@ entries per site, FIFO) and the eviction. The eight sites:
   schema (never the DataFrame, whose attribute ids must stay fresh),
   keyed by applicationId + the paths + the ``file_signature`` of every
   listed data file, ``None`` for a path that cannot be listed locally.
-  ``lake_tx.commit_table`` seeds each version it writes with the
-  committed DataFrame's schema (``io.seed_schema``), so reading a
-  fresh version runs no inference job.
+  Every ``lake_tx`` publish seeds the version it writes with the
+  committed DataFrame's schema (``io.seed_schema``, on the one publish
+  path ``commit_table_cas`` that ``commit_table`` and the
+  read-modify-write faces go through), so reading a fresh version runs
+  no inference job.
 
 Each site has its own dict, so filling one evicts nothing from another
 (a cheap count can never push out a trained model, ADVICE r9). The

@@ -42,11 +42,18 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return table(spark, name, sf_dir)
 
 
+#: The one query registry: ``queries_ext``, ``queries_parse`` and
+#: ``queries_reports`` register into these dicts too.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
+    """Add the decorated builder (and its DuckDB oracle SQL) to the
+    registry; a name registered twice raises."""
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:

@@ -10,8 +10,6 @@ with ``doc_id + 100000`` — both engines apply the identical union.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -19,21 +17,8 @@ from . import textops as TX
 from .operators import dedup_text as DD
 from .operators import graph as GR
 from .operators.memo import fixture_key, memoized
-from .queries import T
+from .queries import ORACLES, QUERIES, T, register
 from .similarity import cosine_topk_bruteforce, cosine_topk_lsh, ivf_topk, label_centroids
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _with_recrawl(docs: DataFrame) -> DataFrame:

@@ -14,8 +14,6 @@ Reference parity targets: ``extractors/bb_statement.py:84-202``,
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,20 +26,7 @@ from .parse import (
     parse_bradesco_bill,
     parse_bradesco_resumo,
 )
-from .queries import T
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .queries import ORACLES, QUERIES, T, register
 
 
 def _brl(col) -> F.Column:

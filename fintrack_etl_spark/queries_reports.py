@@ -8,28 +8,13 @@ compute every expected report from the same fixture rows.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import reports, rules
 from .forms import normalize_forms
 from .operators.memo import fixture_key, memoized
-from .queries import T
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .queries import ORACLES, QUERIES, T, register
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,20 @@ def test_every_oracle_has_a_query():
         assert name in qs, f"oracle without query: {name}"
 
 
+def test_one_registry_refuses_a_duplicate_name():
+    """The four query modules share ``queries.QUERIES``; registering a
+    name twice raises instead of silently replacing the first builder."""
+    import pytest
+
+    from fintrack_etl_spark import queries, queries_ext
+
+    assert queries_ext.QUERIES is queries.QUERIES
+    first = queries.QUERIES["x4_minhash_lsh"]
+    with pytest.raises(ValueError, match="already registered"):
+        queries.register("x4_minhash_lsh")(lambda spark, sf_dir: None)
+    assert entrymod.queries()["x4_minhash_lsh"] is first
+
+
 def test_queries_run_at_smallest_sf(spark, sf_dir):
     for name, fn in entrymod.queries().items():
         df = fn(spark, sf_dir)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fintrack_etl_spark import io as fio
@@ -73,6 +74,28 @@ def test_compact_rewrites_to_target_file_count(spark, sf_dir, tmp_path):
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == n and n < 40
     assert read_parquet(spark, out).count() == before
+
+
+def test_compact_crash_while_deleting_leaves_a_whole_table(spark, tmp_path, monkeypatch):
+    """A crash in the middle of compact's delete (injected: one file
+    removed, then an error) must leave ``path`` holding a whole table,
+    never part of one."""
+    import shutil
+
+    out = str(tmp_path / "frag")
+    spark.range(0, 1000, numPartitions=8).selectExpr("id", "id % 7 AS g").write.parquet(out)
+    real_rmtree = shutil.rmtree
+
+    def crash_midway(path, *args, **kwargs):
+        os.remove(sorted(glob.glob(os.path.join(path, "part-*.parquet")))[0])
+        raise OSError("injected crash while deleting")
+
+    monkeypatch.setattr(shutil, "rmtree", crash_midway)
+    with pytest.raises(OSError, match="injected"):
+        fio.compact(spark, out, target_mb=256)
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    got = spark.read.parquet(out).agg(F.count("*"), F.sum("id")).first()
+    assert tuple(got) == (1000, 499500)
 
 
 def test_orc_roundtrip_with_partitioning(spark, tmp_path):

@@ -11,6 +11,8 @@ only invisible history. Reference semantics:
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 
 import pytest
@@ -63,14 +65,112 @@ def test_crash_before_swap_leaves_previous_version_visible(spark, tmp_path, monk
         lake_tx.commit_table(_mk(spark, [(1, "new", 20)]), root)
     monkeypatch.setattr(lake_tx.os, "replace", real_replace)
 
-    # v2 data exists on disk but was never committed — invisible
-    assert os.path.isdir(os.path.join(root, "v00000002"))
+    # the failed commit leaves neither a version directory nor staging
+    assert not os.path.exists(os.path.join(root, "v00000002"))
+    assert not glob.glob(os.path.join(root, ".stage-*"))
     assert lake_tx.current_version(root) == 1
     assert _rows(lake_tx.read_table(spark, root)) == [(1, "old", 10)]
 
-    # retry clobbers the orphan and publishes
+    # a retry publishes
     assert lake_tx.commit_table(_mk(spark, [(1, "new", 20)]), root) == 2
     assert _rows(lake_tx.read_table(spark, root)) == [(1, "new", 20)]
+
+
+def test_blind_commit_loser_cannot_rewrite_published_version(spark, tmp_path, monkeypatch):
+    """Two blind ``commit_table`` writers read the same version: the
+    slower one raises instead of rewriting the v2 the faster one
+    published."""
+    root = str(tmp_path / "t")
+    lake_tx.commit_table(_mk(spark, [(1, "a", 10)]), root)
+    v1_manifest = lake_tx.read_manifest(root)
+    assert lake_tx.commit_table(_mk(spark, [(2, "winner", 20)]), root) == 2
+
+    # the loser's first manifest read predates the winner's publish;
+    # every later read tells the truth
+    real = lake_tx.read_manifest
+    calls = {"n": 0}
+
+    def stale_first_read(r):
+        calls["n"] += 1
+        return v1_manifest if calls["n"] == 1 else real(r)
+
+    monkeypatch.setattr(lake_tx, "read_manifest", stale_first_read)
+    with pytest.raises(lake_tx.CommitConflictError):
+        lake_tx.commit_table(_mk(spark, [(9, "loser", 90)]), root)
+    monkeypatch.undo()
+
+    assert lake_tx.current_version(root) == 2
+    assert _rows(lake_tx.read_table(spark, root, 2)) == [(2, "winner", 20)]
+    assert not glob.glob(os.path.join(root, ".stage-*"))
+
+
+@pytest.mark.parametrize("face", ["merge", "delete"])
+def test_face_raises_when_a_version_lands_after_its_read(spark, tmp_path, monkeypatch, face):
+    """A version published between a face's read and its commit makes
+    the face raise; the winner's version stays current and intact (no
+    lost update)."""
+    root = str(tmp_path / face)
+    lake_tx.commit_table(_mk(spark, [(1, "a", 10), (2, "b", 10)]), root)
+    winner = [(1, "a", 10), (2, "b", 10), (3, "winner", 30)]
+    real = lake_tx.read_parquet
+    published = []
+
+    def read_then_publish(*paths):
+        # another writer publishes right after the face reads its snapshot
+        df = real(*paths)
+        if not published:
+            published.append(lake_tx.commit_table(_mk(spark, winner), root))
+        return df
+
+    monkeypatch.setattr(lake_tx, "read_parquet", read_then_publish)
+    with pytest.raises(lake_tx.CommitConflictError):
+        if face == "merge":
+            lake_tx.merge_latest_wins_versioned(
+                spark, root, _mk(spark, [(1, "merged", 20)]), ["pk"], "ts"
+            )
+        else:
+            lake_tx.delete_rows(spark, root, F.col("pk") == 2)
+    monkeypatch.undo()
+
+    assert published == [2] and lake_tx.current_version(root) == 2
+    assert _rows(lake_tx.read_table(spark, root)) == winner
+
+
+def test_pruned_read_and_file_stats_refuse_unpublished_versions(spark, tmp_path):
+    """``read_table_pruned`` and ``write_file_stats`` resolve versions
+    like ``read_table``: a directory above the manifest's version (what
+    a writer that died before its swap leaves) is never read."""
+    root = str(tmp_path / "t")
+    lake_tx.commit_table(_mk(spark, [(1, "a", 10)]), root)
+    _mk(spark, [(2, "uncommitted", 20)]).write.parquet(os.path.join(root, "v00000002"))
+    with pytest.raises(ValueError, match="not committed"):
+        lake_tx.read_table(spark, root, 2)
+    with pytest.raises(ValueError, match="not committed"):
+        lake_tx.read_table_pruned(spark, root, "pk", 0, 9, version=2)
+    with pytest.raises(ValueError, match="not committed"):
+        lake_tx.write_file_stats(spark, root, ["pk"], version=2)
+    assert not os.path.exists(os.path.join(root, "v00000002", "_file_stats.json"))
+
+
+def test_one_publish_path_tripwire():
+    """``lake_tx.py`` writes a DataFrame in one place, into the staging
+    directory, and calls ``os.replace`` only in the critical section
+    and the atomic JSON writer: a second way to publish a version
+    shows up here first."""
+    tree = ast.parse(open(lake_tx.__file__, encoding="utf-8").read())
+    writes, targets, replaces = [], [], []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Attribute) and n.attr == "write":
+                writes.append(fn.name)
+            elif isinstance(n, ast.Call) and ast.unparse(n.func) == "os.replace":
+                replaces.append(fn.name)
+            elif isinstance(n, ast.Call) and ".write." in ast.unparse(n.func):
+                targets.append(ast.unparse(n.args[0]))
+    assert writes == ["commit_table_cas"] and targets == ["staging"]
+    assert sorted(replaces) == ["_publish_staged", "_write_json"]
 
 
 def test_partial_garbage_version_dir_is_invisible(spark, tmp_path):

@@ -13,6 +13,7 @@ import os
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from fintrack_etl_spark import io as fio
@@ -176,6 +177,18 @@ def test_clear_frees_the_sites_blocks(spark):
     assert _freed(spark, rdd_id), "clear must free the site's checkpoint blocks"
 
 
+def test_cleared_shingle_site_leaves_no_cache_entry(spark, sf_dir):
+    """The "shingle" site owns x4's shingle frame: once the site is
+    cleared, no CacheManager entry keeps a second copy of it alive."""
+    from fintrack_etl_spark.queries_ext import x4_minhash_lsh
+
+    spark.catalog.clearCache()
+    clear("shingle")
+    x4_minhash_lsh(spark, sf_dir)
+    clear("shingle")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
+
+
 # ---------------------------------------------------------------------------
 # "schema": io.read_parquet infers a path set's schema once per session
 # ---------------------------------------------------------------------------
@@ -294,8 +307,16 @@ def test_partitioned_write_keeps_column_order_and_types(spark, tmp_path):
     assert "part" not in _reads_as_inferred(spark, *leaf).names
 
 
-def test_committed_versions_read_as_inferred(spark, tmp_path):
-    """commit_table seeds each version's schema; the seeded read equals
+@pytest.mark.parametrize(
+    "commit",
+    [
+        lambda df, root: lake_tx.commit_table(df, root),
+        lambda df, root: lake_tx.commit_table_cas(df, root, lake_tx.current_version(root)),
+    ],
+    ids=["commit_table", "commit_table_cas"],
+)
+def test_committed_versions_read_as_inferred(spark, tmp_path, commit):
+    """Every publish seeds the version's schema; the seeded read equals
     inference on nested, decimal and NTZ columns, with no inference job."""
     root = str(tmp_path / "lake")
     df = spark.sql(
@@ -310,7 +331,7 @@ def test_committed_versions_read_as_inferred(spark, tmp_path):
                   CAST(CAST(id AS string) AS binary) AS bin
            FROM range(5)"""
     )
-    v = lake_tx.commit_table(df, root)
+    v = commit(df, root)
     vdir = os.path.join(root, f"v{v:08d}")
     assert _group_job_count(spark, lambda: lake_tx.read_table(spark, root).schema) == 0
     _reads_as_inferred(spark, vdir)
