@@ -8,13 +8,33 @@ Scale design:
 * MinHash+LSH makes the candidate set ~linear: signature (one scan) →
   band buckets (explode b rows/doc) → candidates only within buckets;
 * everything JVM-side (xxhash64 / array exprs), no Python UDFs.
+
+Each scoring step is written once, and every batch and store face
+calls it:
+* :func:`_jaccard_kept` — the exact ``inter / uni >= threshold`` filter
+  and the floor-scaled basis-point ``jaccard`` (the rule the x3/x4/x33/
+  x63 oracles replay): ``ngram_jaccard_pairs``, ``prefix_filter_pairs``
+  and ``verify_pairs_exact_jaccard`` (so ``minhash_lsh_verified`` and
+  ``dedup_against_store``);
+* :func:`_band_buckets` — MinHash signature → ``(id, band, bh)``:
+  ``minhash_lsh_candidates`` joins it to itself, ``signature_store``
+  persists it and ``dedup_against_store`` probes that store with the
+  batch's;
+* :func:`_coverage` — the union-of-intervals substring coverage:
+  ``substring_dedup`` (hits = grams shared by two docs) and
+  ``substring_dedup_against_store`` (hits = grams in the store); the
+  stream twin ``streaming.substring_dedup_stream`` folds the same sum
+  with ``aggregate``, since streams run no window;
+* cosine — ``similarity.dot`` and ``similarity.l2_norm``:
+  ``embedding_cosine_pairs`` and ``semdedup``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import similarity
 from ..textops import fingerprint, shingles, tokens
 from .memo import df_memo_key, memoized
 
@@ -391,29 +411,35 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter_rare"))
     )
-    inter = (F.col("inter_rare") + F.size(F.array_intersect("hot_a", "hot_b"))).cast("long")
-    uni = F.col("sza") + F.col("szb") - inter
-    jac = inter / uni
-    # emission is floor-scaled basis points from exact integers:
-    # round(inter/union, 4) lands exactly on .xxxx5 for power-of-two
-    # unions (1/32 = 0.03125...) where Spark's HALF_UP and DuckDB's
-    # banker-ish double rounding disagree — the r5 x19 class. The
-    # threshold FILTER stays a float compare: both engines divide the
-    # same exact ints (correctly-rounded IEEE -> identical doubles).
-    jac_bp = F.floor((inter * 10000).cast("double") / uni) / 10000.0
-    rep_pairs = (
-        pairs.join(
-            sizes.select(F.col("id").alias("doc_a"), F.col("sz").alias("sza"), F.col("hot").alias("hot_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("id").alias("doc_b"), F.col("sz").alias("szb"), F.col("hot").alias("hot_b")),
-            "doc_b",
-        )
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", jac_bp.alias("jaccard"))
+    sized = pairs.join(
+        sizes.select(F.col("id").alias("doc_a"), F.col("sz").alias("sza"), F.col("hot").alias("hot_a")),
+        "doc_a",
+    ).join(
+        sizes.select(F.col("id").alias("doc_b"), F.col("sz").alias("szb"), F.col("hot").alias("hot_b")),
+        "doc_b",
     )
+    inter = (F.col("inter_rare") + F.size(F.array_intersect("hot_a", "hot_b"))).cast("long")
+    rep_pairs = _jaccard_kept(sized, inter, threshold)
     return _mark_route(_expand_rep_pairs(rep_pairs, groups), route)
+
+
+def _jaccard_kept(pairs: DataFrame, inter: Column, threshold: float) -> DataFrame:
+    """The one Jaccard verify step: ``(doc_a, doc_b, jaccard)`` for the
+    rows of ``pairs`` (which carry the set sizes ``sza``/``szb``) whose
+    intersection count ``inter`` reaches ``threshold``.
+
+    The threshold filter is the exact ``inter / uni`` float compare
+    (both engines divide the same exact ints, and a correctly-rounded
+    IEEE division gives identical doubles). The emission is
+    floor-scaled basis points from exact integers: round(inter/union, 4)
+    lands exactly on .xxxx5 for power-of-two unions (1/32 = 0.03125...)
+    where Spark's HALF_UP and DuckDB's banker-ish double rounding
+    disagree — the r5 x19 class. The x3/x4/x33/x63 oracles replay this
+    rule."""
+    uni = F.col("sza") + F.col("szb") - inter
+    return pairs.filter(inter / uni >= threshold).select(
+        "doc_a", "doc_b", (F.floor((inter * 10000).cast("double") / uni) / 10000.0).alias("jaccard")
+    )
 
 
 def _seeded_hash(i: int):
@@ -430,6 +456,25 @@ def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
     )
 
 
+def _band_buckets(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """The one LSH banding step: each shingled ``(id, sh)`` row's
+    MinHash signature split into ``bands`` bands of
+    ``num_hashes/bands`` rows, each band hashed, exploded to
+    ``(id, band, bh)`` — one row per doc and band."""
+    rows_per_band = num_hashes // bands
+    sig = sh.select("id", minhash_signature(F.col("sh"), num_hashes).alias("sig"))
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(*[F.element_at("sig", b * rows_per_band + r + 1) for r in range(rows_per_band)]).alias("bh"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select("id", F.explode(F.array(*band_cols)).alias("bb")).select(
+        "id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -441,25 +486,13 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """MinHash + LSH banding: candidate near-dup pairs.
 
-    signature (num_hashes mins) → split into ``bands`` bands of
-    ``num_hashes/bands`` rows → hash each band → explode to
-    (band_id, band_hash) → docs colliding in ANY band pair up.
+    ``_band_buckets`` (signature → ``bands`` hashed bands per doc) →
+    docs colliding in ANY band pair up.
     Output: (doc_a, doc_b, n_bands_shared) — feed to
-    ``ngram_jaccard_pairs`` on the candidate subset to verify.
+    ``verify_pairs_exact_jaccard`` to verify.
     """
-    rows_per_band = num_hashes // bands
     sh = _shingled(df, id_col, text_col, n) if shingled is None else shingled
-    sig = sh.select("id", minhash_signature(F.col("sh"), num_hashes).alias("sig"))
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.element_at("sig", b * rows_per_band + r + 1) for r in range(rows_per_band)]).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    buckets = sig.select("id", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
+    buckets = _band_buckets(sh, num_hashes, bands)
     return (
         buckets.alias("a")
         .join(
@@ -495,18 +528,12 @@ def verify_pairs_exact_jaccard(
     sh = (_shingled(df, id_col, text_col, n) if shingled is None else shingled).select(
         "id", "sh", F.size("sh").alias("sz")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-    uni = F.col("sza") + F.col("szb") - inter
-    jac = inter / uni
-    # floor-scaled bp emission — see ngram_jaccard_pairs
-    jac_bp = F.floor((inter * 10000).cast("double") / uni) / 10000.0
-    return (
+    sized = (
         pairs.select("doc_a", "doc_b")
         .join(sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sza")), "doc_a")
         .join(sh.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("szb")), "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", jac_bp.alias("jaccard"))
     )
+    return _jaccard_kept(sized, F.size(F.array_intersect("sh_a", "sh_b")).cast("long"), threshold)
 
 
 def decontaminate(
@@ -721,16 +748,14 @@ def embedding_cosine_pairs(
     also the right 100 TB strategy: equally-sized self-join sides, no
     per-partition hash-build memory risk on a hot block."""
     v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
     blk = F.concat_ws(
         "",
         *[F.when(F.element_at(v, i + 1) >= 0, "1").otherwise("0") for i in range(block_bits)],
     )
     base = df.select(
-        F.col(id_col).alias("id"), v.alias("v"), norm.alias("nrm"), blk.alias("blk")
+        F.col(id_col).alias("id"), v.alias("v"), similarity.l2_norm(v).alias("nrm"), blk.alias("blk")
     ).hint("merge")
-    dot = F.aggregate(F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-    cos = dot / (F.col("a.nrm") * F.col("b.nrm"))
+    cos = similarity.dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
     return (
         base.alias("a")
         .join(base.alias("b"), (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
@@ -764,7 +789,7 @@ def semdedup(
 
     Scale: both self-join sides hash-partition on the cluster column,
     so the quadratic is per-cluster; pick #clusters ~ sqrt(N) to bound
-    it. The dot product is a sequential ``F.aggregate`` fold — same
+    it. The dot product is ``similarity.dot``'s sequential fold — same
     association as DuckDB's ``list_dot_product``, so the oracle
     compares bit-identical doubles. At 100 TB, swap the inner pair
     loop for a per-cluster BLAS matmul via applyInPandas (same
@@ -772,18 +797,13 @@ def semdedup(
     the whole plan JVM-side and oracle-exact.
     """
     v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(cluster_col).alias("cluster"),
         v.alias("v"),
-        norm.alias("nrm"),
+        similarity.l2_norm(v).alias("nrm"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    dot = similarity.dot(F.col("a.v"), F.col("b.v"))
     cos = F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 4)
     hits = (
         base.alias("a")
@@ -821,21 +841,7 @@ def signature_store(
     written once at ingest (bucketed/partitioned by ``(band, bh)``)
     and every future batch probes it instead of re-hashing the corpus.
     """
-    rows_per_band = num_hashes // bands
-    sh = _shingled(df, id_col, text_col, n)
-    sig = sh.select("id", minhash_signature(F.col("sh"), num_hashes).alias("sig"))
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.element_at("sig", b * rows_per_band + r + 1) for r in range(rows_per_band)]
-            ).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select("id", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
+    return _band_buckets(_shingled(df, id_col, text_col, n), num_hashes, bands)
 
 
 def dedup_against_store(
@@ -1032,7 +1038,7 @@ def prefix_filter_pairs(
     #     t/(1+t) * (|A|+|B|).
     # Output pairs re-orient to doc_a < doc_b by id (the size order
     # used for the asymmetric join is an internal detail).
-    need = F.lit(threshold / (1.0 + threshold)) * (F.col("sz_a") + F.col("sz_b"))
+    need = F.lit(threshold / (1.0 + threshold)) * (F.col("sza") + F.col("szb"))
     smaller_first = (F.col("a.sz") < F.col("b.sz")) | (
         (F.col("a.sz") == F.col("b.sz")) & (F.col("a.id") < F.col("b.id"))
     )
@@ -1046,10 +1052,10 @@ def prefix_filter_pairs(
             F.greatest(F.col("a.id"), F.col("b.id")).alias("doc_b"),
             F.when(F.col("a.id") < F.col("b.id"), F.col("a.sz"))
             .otherwise(F.col("b.sz"))
-            .alias("sz_a"),
+            .alias("sza"),
             F.when(F.col("a.id") < F.col("b.id"), F.col("b.sz"))
             .otherwise(F.col("a.sz"))
-            .alias("sz_b"),
+            .alias("szb"),
             # (pa, pb) packed into ONE long, pa in the high 32 bits —
             # order-isomorphic to the (pa, pb) struct (positions are
             # 0-based ints < 2^31), so min(packed) IS the lexicographic
@@ -1071,36 +1077,28 @@ def prefix_filter_pairs(
                 )
             ).alias("pp"),
         )
-        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
+        .groupBy("doc_a", "doc_b", "sza", "szb")
         .agg(F.min("pp").alias("fm"))
         .withColumn(
             "ub",
             1
             + F.least(
-                F.col("sz_a") - F.shiftright("fm", 32) - 1,
-                F.col("sz_b") - F.col("fm").bitwiseAND(F.lit(4294967295)) - 1,
+                F.col("sza") - F.shiftright("fm", 32) - 1,
+                F.col("szb") - F.col("fm").bitwiseAND(F.lit(4294967295)) - 1,
             ),
         )
         .filter(F.col("ub") >= need - 1e-9)
-        .select("doc_a", "doc_b", "sz_a", "sz_b")
+        .select("doc_a", "doc_b", "sza", "szb")
     )
     full = sh.select(F.col("id"), F.col("sh"))
+    # a column, not an expression: the emission then reads this one
+    # intersect instead of computing it twice more
     verified = (
         cand.join(full.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
         .join(full.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
-        .withColumn("uni", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        .filter(F.col("inter") / F.col("uni") >= threshold)
     )
-    # floor-scaled bp emission — see ngram_jaccard_pairs
-    rep_pairs = verified.select(
-        "doc_a",
-        "doc_b",
-        (F.floor((F.col("inter") * 10000).cast("double") / F.col("uni")) / 10000.0).alias(
-            "jaccard"
-        ),
-    )
-    return _expand_rep_pairs(rep_pairs, groups)
+    return _expand_rep_pairs(_jaccard_kept(verified, F.col("inter"), threshold), groups)
 
 
 def _expand_rep_pairs(rep_pairs: DataFrame, groups: DataFrame) -> DataFrame:
@@ -1159,11 +1157,9 @@ def gram_store(
     (bucketed by g) and every future batch probes it instead of
     re-scanning the corpus (the exact-substring twin of the LSH
     ``signature_store``). One let-bound split pass per doc."""
-    from ..similarity import _let
-
     empty = "array<struct<p:bigint,g:bigint>>"
     chars = F.expr(f"filter(split({text_col}, ''), c -> c <> '')")
-    grams = _let(
+    grams = similarity._let(
         chars,
         lambda t: F.when(
             F.size(t) >= gram_len,
@@ -1201,34 +1197,10 @@ def substring_dedup_against_store(
     Returns (batch_id, n_chars, n_hit_grams, covered_chars) — grams of
     the batch doc that appear ANYWHERE in the stored corpus, and the
     batch characters covered by them (the span a cutter would drop)."""
-    from pyspark.sql import Window
-
-    bg = gram_store(batch, id_col, text_col, gram_len).localCheckpoint(eager=False)
-    store_g = store_grams.select("g").distinct()
-    w = Window.partitionBy("id").orderBy("p")
-    cov = (
-        bg.join(store_g, "g", "left_semi")
-        .withColumn("prev", F.lag("p").over(w))
-        .groupBy("id")
-        .agg(
-            F.count_distinct("g").alias("n_hit_grams"),
-            F.sum(
-                F.when(F.col("prev").isNull(), gram_len).otherwise(
-                    F.least(F.lit(gram_len), F.col("p") - F.col("prev"))
-                )
-            ).alias("covered_chars"),
-        )
+    hits = gram_store(batch, id_col, text_col, gram_len).join(
+        store_grams.select("g").distinct(), "g", "left_semi"
     )
-    return (
-        batch.select(F.col(id_col).alias("id"), F.length(text_col).alias("n_chars"))
-        .join(cov, "id", "left")
-        .select(
-            F.col("id").alias("batch_id"),
-            F.col("n_chars").cast("long").alias("n_chars"),
-            F.coalesce("n_hit_grams", F.lit(0)).cast("long").alias("n_hit_grams"),
-            F.coalesce("covered_chars", F.lit(0)).cast("long").alias("covered_chars"),
-        )
-    )
+    return _coverage(batch, hits, id_col, text_col, gram_len, "batch_id", "n_hit_grams")
 
 
 def substring_dedup(
@@ -1273,15 +1245,31 @@ def substring_dedup(
         .filter(F.col("nd") >= 2)
         .select("g")
     )
-    from pyspark.sql import Window
+    return _coverage(df, ex.join(shared, "g"), id_col, text_col, gram_len, id_col, "n_shared_grams")
 
+
+def _coverage(
+    docs: DataFrame,
+    hits: DataFrame,
+    id_col: str,
+    text_col: str,
+    gram_len: int,
+    id_out: str,
+    n_out: str,
+) -> DataFrame:
+    """The one substring-coverage step: per document of ``docs``, the
+    distinct hit grams (as ``n_out``) and the characters they cover —
+    the union of the fixed-length intervals at the sorted ``(id, p, g)``
+    ``hits`` positions (first hit ``gram_len``, each next
+    ``min(gram_len, gap)``, a per-doc window, never a self-join) — with
+    0 for documents without a hit. ``streaming.substring_dedup_stream``
+    folds the same sum with ``aggregate``, since streams run no window."""
     w = Window.partitionBy("id").orderBy("p")
     cov = (
-        ex.join(shared, "g")
-        .withColumn("prev", F.lag("p").over(w))
+        hits.withColumn("prev", F.lag("p").over(w))
         .groupBy("id")
         .agg(
-            F.count_distinct("g").alias("n_shared_grams"),
+            F.count_distinct("g").alias(n_out),
             F.sum(
                 F.when(F.col("prev").isNull(), gram_len).otherwise(
                     F.least(F.lit(gram_len), F.col("p") - F.col("prev"))
@@ -1290,14 +1278,12 @@ def substring_dedup(
         )
     )
     return (
-        df.select(
-            F.col(id_col).alias("id"), F.length(text_col).alias("n_chars")
-        )
+        docs.select(F.col(id_col).alias("id"), F.length(text_col).alias("n_chars"))
         .join(cov, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias(id_out),
             F.col("n_chars").cast("long").alias("n_chars"),
-            F.coalesce("n_shared_grams", F.lit(0)).cast("long").alias("n_shared_grams"),
+            F.coalesce(n_out, F.lit(0)).cast("long").alias(n_out),
             F.coalesce("covered_chars", F.lit(0)).cast("long").alias("covered_chars"),
         )
     )

@@ -18,7 +18,7 @@ from .operators import dedup_text as DD
 from .operators import graph as GR
 from .operators.memo import fixture_key, memoized
 from .queries import ORACLES, QUERIES, T, register
-from .similarity import cosine_topk_bruteforce, cosine_topk_lsh, ivf_topk, label_centroids
+from .similarity import cosine, cosine_topk_bruteforce, cosine_topk_lsh, ivf_topk, label_centroids
 
 
 def _with_recrawl(docs: DataFrame) -> DataFrame:
@@ -2196,8 +2196,8 @@ def x37_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-model fine-tuning. Plan mirrors x11: queries broadcast,
     corpus scanned once without a shuffle, and both per-query windows
     (top-1 by sim, bottom-3 by hash) ride one |q|-partitioned exchange
-    of partition-pruned candidates. The sequential F.aggregate dot is
-    bit-identical to DuckDB's list_dot_product."""
+    of partition-pruned candidates. ``similarity.cosine``'s sequential
+    dot fold is bit-identical to DuckDB's list_dot_product."""
     emb = T(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -2207,20 +2207,12 @@ def x37_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(col), F.lit(0.0), lambda a, x: a + x * x)
-    )
     scored = (
         c.join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
         .select(
             "query_id",
             "cand_id",
-            (dot / (nrm("qv") * nrm("cv"))).alias("sim"),
+            cosine(F.col("qv"), F.col("cv")).alias("sim"),
             F.md5(
                 F.concat_ws(":", F.col("query_id").cast("string"), F.col("cand_id").cast("string"))
             ).alias("h"),
@@ -2829,10 +2821,11 @@ def x45_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the value gate: each document's first 72 chars become the
     grayscale pixels of a genuine top-down 24-bit BMP (9×8) built
     byte-for-byte per the BITMAPINFOHEADER spec in an Arrow encode
-    pass; a separate decode pass parses the container back — magic,
-    pixel-array offset, width/height/bpp, row stride — recovers the
-    pixel matrix, and computes the 64-bit difference hash (adjacent-
-    pixel gradient signs, the standard near-dup image fingerprint).
+    pass; a separate decode pass parses the container back
+    (``parse/minipng.decode_bmp``: magic, pixel-array offset,
+    width/height/bpp, row stride), recovers the pixel matrix, and
+    computes the 64-bit difference hash (adjacent-pixel gradient
+    signs, the standard near-dup image fingerprint).
     Exact re-crawl copies collide; the oracle recomputes the hash
     arithmetically from the text so any container-layout, stride, or
     bit-order bug surfaces as a value mismatch.
@@ -2849,6 +2842,8 @@ def x45_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
     from pyspark.sql import types as TT
+
+    from .parse.minipng import decode_bmp
 
     docs = _with_recrawl(T(spark, sf_dir, "documents")).select(
         "doc_id", "text"
@@ -2882,19 +2877,12 @@ def x45_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         def dhash(blob: bytes) -> str:
-            assert blob[:2] == b"BM"
-            (off,) = struct.unpack_from("<I", blob, 10)
-            w, h = struct.unpack_from("<ii", blob, 18)
-            (bpp,) = struct.unpack_from("<H", blob, 28)
-            assert (w, h, bpp) == (W, -H, 24), (w, h, bpp)
-            st = (w * 3 + 3) & ~3
+            w, h, _, rgb = decode_bmp(blob)
+            assert (w, h) == (W, H), (w, h)
             out = []
             for r in range(H):
-                base = off + r * st
-                p = [blob[base + c * 3] for c in range(w)]
+                p = rgb[r * w * 3 : (r + 1) * w * 3 : 3]
                 byte = sum(
                     (1 << c) for c in range(w - 1) if p[c] < p[c + 1]
                 )

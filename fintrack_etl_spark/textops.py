@@ -5,11 +5,18 @@ All expressions are native Columns (codegen'd, no Python in the hot
 path) and have exact DuckDB SQL twins so every operator is
 oracle-checkable. At 100 TB these run as a single scan + projection;
 the only shuffles are the explicit groupBys/joins in the dedup ops.
+
+The lexical rankers share their steps, each written once:
+:func:`_term_stats` (token explode, ``tf``, ``df``, ``n_docs``) feeds
+``tfidf_topk``, ``bm25_topk`` and ``bm25_search``; :func:`_bm25_scored`
+(``dl``, the corpus totals and the cleared-integer BM25 score) feeds
+``bm25_topk`` and ``bm25_search``; :func:`_top_terms` (the per-document
+top-k cut) ends ``tfidf_topk`` and ``bm25_topk``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Stopword probes per language for the n-gram language-ID heuristic.
@@ -320,15 +327,7 @@ def tfidf_topk(
     already exists — Spark plans it as WindowGroupLimit, so nothing
     beyond rank ``k`` survives the shuffle read.
     """
-    from pyspark.sql import Window
-
-    tok = df.select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tok.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
+    _, tf, dfreq, n_docs = _term_stats(df, text_col, id_col)
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
@@ -338,6 +337,34 @@ def tfidf_topk(
             * (F.col("n_docs").cast("double") / F.col("df").cast("double")),
         )
     )
+    return _top_terms(scored, k, id_col)
+
+
+def _term_stats(
+    df: DataFrame, text_col: str, id_col: str, terms: list[str] | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The one term-statistics step of the lexical rankers:
+    ``(tok, tf, dfreq, n_docs)`` — the lowercased whitespace-token
+    explode ``(id_col, term)``, the per-(doc, term) count ``tf``, the
+    per-term document frequency ``df`` and the 1-row corpus size
+    ``n_docs``. With ``terms``, ``tf`` and ``df`` count only those
+    terms (the filter prunes before either aggregation)."""
+    tok = df.select(
+        F.col(id_col),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+    )
+    hit = tok if terms is None else tok.filter(F.col("term").isin(terms))
+    tf = hit.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    dfreq = hit.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return tok, tf, dfreq, df.select(F.count(F.lit(1)).alias("n_docs"))
+
+
+def _top_terms(scored: DataFrame, k: int, id_col: str, *extra: Column) -> DataFrame:
+    """The per-document top-``k`` cut of the term rankers: a
+    ``row_number`` over (score desc, tf desc, term asc) per document —
+    planned as WindowGroupLimit over the (doc, term) partitioning that
+    already exists — emitting ``tf``, ``df``, ``extra``, the score
+    rounded to 6 dp and the rank."""
     w = Window.partitionBy(id_col).orderBy(
         F.col("score").desc(), F.col("tf").desc(), F.col("term").asc()
     )
@@ -349,6 +376,7 @@ def tfidf_topk(
             "term",
             F.col("tf").cast("long").alias("tf"),
             F.col("df").cast("long").alias("df"),
+            *extra,
             F.round("score", 6).alias("score"),
             F.col("rnk").cast("int").alias("rnk"),
         )
@@ -476,19 +504,21 @@ def bm25_topk(
     shuffle with partial counts, |vocab|-row broadcast of df, 1-row
     broadcast of the corpus totals, WindowGroupLimit top-k.
     """
-    from pyspark.sql import Window
+    return _top_terms(_bm25_scored(df, text_col, id_col), k, id_col, F.col("dl").cast("long").alias("dl"))
 
-    tok = df.select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+
+def _bm25_scored(
+    df: DataFrame, text_col: str, id_col: str, terms: list[str] | None = None
+) -> DataFrame:
+    """The one BM25 step: ``_term_stats``'s tf rows joined with the
+    document length ``dl``, ``df`` and the corpus totals (``n_docs``,
+    ``total_dl``), scored into ``score`` by the cleared-integer BM25
+    expression of ``bm25_topk``'s docstring. ``terms`` as in
+    ``_term_stats``; ``dl`` and the totals always count every token."""
+    tok, tf, dfreq, n_docs = _term_stats(df, text_col, id_col, terms)
     dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
-    dfreq = tok.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    totals = df.select(F.count(F.lit(1)).alias("n_docs")).crossJoin(
-        tok.select(F.count(F.lit(1)).alias("total_dl"))
-    )
-    scored = (
+    totals = n_docs.crossJoin(tok.select(F.count(F.lit(1)).alias("total_dl")))
+    return (
         tf.join(dl, id_col)
         .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(totals))
@@ -505,22 +535,6 @@ def bm25_topk(
                     + F.lit(9) * F.col("dl") * F.col("n_docs")
                 )
             ).cast("double"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("tf").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            id_col,
-            "term",
-            F.col("tf").cast("long").alias("tf"),
-            F.col("df").cast("long").alias("df"),
-            F.col("dl").cast("long").alias("dl"),
-            F.round("score", 6).alias("score"),
-            F.col("rnk").cast("int").alias("rnk"),
         )
     )
 
@@ -543,53 +557,22 @@ def bm25_search(
     only computed for query terms (|query| x |docs-with-term| rows);
     df/dl/corpus stats broadcast; the final top-k is a TakeOrdered,
     never a full sort."""
-    from pyspark.sql import Window
-
-    tok = df.select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
-    totals = df.select(F.count(F.lit(1)).alias("n_docs")).crossJoin(
-        tok.select(F.count(F.lit(1)).alias("total_dl"))
-    )
-    qt = tok.filter(F.col("term").isin(query_terms))
-    tf = qt.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = qt.select(id_col, "term").distinct().groupBy("term").agg(
-        F.count(F.lit(1)).alias("df")
-    )
     scored = (
-        tf.join(dl, id_col)
-        .join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(totals))
-        .withColumn(
-            "s",
-            (F.lit(22) * F.col("tf") * F.col("total_dl") * F.col("n_docs")).cast(
-                "double"
-            )
-            / (
-                F.col("df")
-                * (
-                    F.lit(10) * F.col("tf") * F.col("total_dl")
-                    + F.lit(3) * F.col("total_dl")
-                    + F.lit(9) * F.col("dl") * F.col("n_docs")
-                )
-            ).cast("double"),
-        )
+        _bm25_scored(df, text_col, id_col, query_terms)
         .groupBy(id_col)
         .agg(
             # double addition is not associative: fold the per-term
             # scores SEQUENTIALLY in term order (sort_array + aggregate
             # — bit-identical to a DuckDB list_reduce over the same
             # ordering), never F.sum whose partial-agg order floats
-            F.sort_array(F.collect_list(F.struct("term", "s"))).alias("arr"),
+            F.sort_array(F.collect_list(F.struct("term", "score"))).alias("arr"),
             F.count(F.lit(1)).cast("long").alias("n_terms_hit"),
         )
         .select(
             id_col,
             F.round(
                 F.aggregate(
-                    F.transform("arr", lambda x: x.getField("s")),
+                    F.transform("arr", lambda x: x.getField("score")),
                     F.lit(0.0),
                     lambda a, x: a + x,
                 ),

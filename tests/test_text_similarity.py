@@ -432,6 +432,89 @@ def test_lsh_verify_equals_exact_jaccard(spark):
     assert exact and verified == exact
 
 
+def test_lsh_store_faces_equal_batch_face(spark):
+    """Incremental LSH dedup (x33's shape) scores a batch exactly as
+    the batch face scores the whole corpus: ``dedup_against_store``
+    over ``signature_store(corpus)`` equals ``minhash_lsh_verified``
+    on corpus ∪ batch, restricted to corpus × batch pairs. Both faces
+    band through one builder, so a pair is a candidate on one face iff
+    it is on the other."""
+    corpus = docs_df(spark)
+    batch = spark.createDataFrame(
+        [
+            (10, "completely different text about spark query engines and shuffle plans here"),
+            (11, "the quick brown fox jumps over the lazy dog near the river bank yesterday"),
+            (12, "an unrelated batch document that only repeats itself within the batch"),
+            (13, "an unrelated batch document that only repeats itself within the batch"),
+        ],
+        ["doc_id", "text"],
+    )
+    corpus_ids = {r["doc_id"] for r in corpus.collect()}
+    whole = {
+        (frozenset((r["doc_a"], r["doc_b"])), r["jaccard"])
+        for r in DD.minhash_lsh_verified(corpus.unionByName(batch), "doc_id", "text").collect()
+    }
+    want = {(p, j) for p, j in whole if len(p & corpus_ids) == 1}
+    got = {
+        (frozenset((r["dup_of"], r["batch_id"])), r["jaccard"])
+        for r in DD.dedup_against_store(
+            batch, DD.signature_store(corpus, "doc_id", "text"), corpus, "doc_id", "text"
+        ).collect()
+    }
+    # the batch has a corpus copy, a corpus near dup and an intra-batch
+    # pair that the store face must not report
+    assert frozenset((12, 13)) in {p for p, _ in whole}
+    assert {frozenset((4, 10)), frozenset((1, 11))} <= {p for p, _ in want}
+    assert got == want
+
+
+def test_one_scoring_step_per_text_measure():
+    """Stdlib tripwire over the text-similarity family: each scoring
+    step has one definition that every face calls — one
+    ``minhash_signature(`` call (the LSH banding), one basis-point
+    Jaccard emission (``* 10000``), one substring-coverage interval
+    step (``F.least(F.lit(gram_len)``), one cleared BM25 numerator
+    (``F.lit(22)``), and no ``F.zip_with`` dot fold outside
+    ``similarity.py``. A second holder is a hand-written copy."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "fintrack_etl_spark"
+    dedup = (pkg / "operators" / "dedup_text.py").read_text(encoding="utf-8")
+    textops = (pkg / "textops.py").read_text(encoding="utf-8")
+
+    def nodes(src, match):
+        return [n for n in ast.walk(ast.parse(src)) if match(n)]
+
+    def dot_fold(n):
+        return (
+            isinstance(n, ast.Call)
+            and ast.unparse(n.func) == "F.zip_with"
+            and any(
+                isinstance(a, ast.Lambda)
+                and isinstance(a.body, ast.BinOp)
+                and isinstance(a.body.op, ast.Mult)
+                for a in n.args
+            )
+        )
+
+    def signature_call(n):
+        return isinstance(n, ast.Call) and ast.unparse(n.func) == "minhash_signature"
+
+    def times_bp(n):
+        return isinstance(n, ast.BinOp) and isinstance(n.op, ast.Mult) and ast.unparse(n.right) == "10000"
+
+    assert len(nodes(dedup, signature_call)) == 1
+    assert len(nodes(dedup, times_bp)) == 1
+    assert dedup.count("F.least(F.lit(gram_len)") == 1
+    assert textops.count("F.lit(22)") == 1
+    folds = {
+        str(p.relative_to(pkg)): len(nodes(p.read_text(encoding="utf-8"), dot_fold))
+        for p in sorted(pkg.rglob("*.py"))
+    }
+    assert {f: k for f, k in folds.items() if k} == {"similarity.py": 1}
+
+
 def test_decontaminate_flags_eval_overlap(spark):
     """13-gram decontamination: a train doc embedding a verbatim eval
     passage is flagged; clean docs are not; hit counts are distinct
@@ -1576,6 +1659,30 @@ def test_bm25_ranks_rare_terms_above_common(spark):
     # scores positive and ranked by score desc
     scores = [top[(1, i)][1] for i in range(1, 5)]
     assert all(s > 0 for s in scores) and scores == sorted(scores, reverse=True)
+
+
+def test_bm25_search_scores_equal_bm25_topk(spark):
+    """One-term ``bm25_search`` and ``bm25_topk`` share one BM25 step:
+    each hit's score equals ``bm25_topk``'s score for that (doc, term)
+    when ``k`` covers the whole vocabulary."""
+    from fintrack_etl_spark.textops import bm25_search, bm25_topk
+
+    rows = [
+        (1, "common rare common xx yy"),
+        (2, "common aa bb cc dd ee ff"),
+        (3, "Common gg"),
+        (4, "no match here"),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    vocab = df.select(F.explode(TX.tokens(F.lower("text")))).distinct().count()
+    topk = {
+        r["doc_id"]: r["score"]
+        for r in bm25_topk(df, k=vocab).filter(F.col("term") == "common").collect()
+    }
+    hits = bm25_search(df, ["common"], k=len(rows)).collect()
+    assert {r["doc_id"] for r in hits} == {1, 2, 3}
+    assert all(r["n_terms_hit"] == 1 for r in hits)
+    assert {r["doc_id"]: r["score"] for r in hits} == topk
 
 
 def test_prefix_filter_completeness_vs_unfiltered(spark):
