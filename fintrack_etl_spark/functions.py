@@ -78,20 +78,23 @@ def null_if_blank(c: Column | str) -> Column:
     return F.when(F.trim(c) == "", None).otherwise(c)
 
 
-def find_first(c: Column | str, pattern: str, group: int = 1) -> Column:
-    """F5 — first regex group match or NULL (``bb_bill.py:43-45``)."""
+def find_first(c: Column | str, pattern: str, flags: str = "im", group: int = 1) -> Column:
+    """F5 — first regex group match, trimmed, or NULL
+    (``bb_bill.py:43-45``). The reference defaults to
+    IGNORECASE|MULTILINE; ``flags`` is embedded as ``(?flags)``."""
     c = F.col(c) if isinstance(c, str) else c
-    return null_if_blank(F.regexp_extract(c, pattern, group))
+    return F.nullif(F.trim(F.regexp_extract(c, f"(?{flags}){pattern}", group)), F.lit(""))
 
 
-def find_date_after_keyword(c: Column | str, keyword: str, window: int = 40) -> Column:
-    """F6 — first ``dd/mm/aaaa`` within ``window`` chars after keyword
-    (``bb_bill.py:48-58``)."""
+def find_date_after_keyword(c: Column | str, keyword: str, window: int = 160) -> Column:
+    """F6 — first ``dd/mm/aaaa`` within ``window`` chars after the
+    keyword (``bb_bill.py:48-58``) — for labels split from values by a
+    page break."""
     c = F.col(c) if isinstance(c, str) else c
-    tail = F.substring(F.substr(c, F.locate(keyword, c) + len(keyword)), 1, window)
+    after = F.substring(c, F.locate(keyword, c) + len(keyword), window)
     return F.when(
         F.locate(keyword, c) > 0,
-        null_if_blank(F.regexp_extract(tail, r"(\d{2}/\d{2}/\d{4})", 1)),
+        F.nullif(F.regexp_extract(after, r"(\d{2}/\d{2}/\d{4})", 1), F.lit("")),
     )
 
 

@@ -1,8 +1,11 @@
 """Multimodal column plumbing (engine extension; SURVEY.md §7 Phase 4).
 
 Image/audio/video travel as opaque ``binary`` columns with typed
-metadata; decode / feature-extract / resize / frame-sample run as
-Arrow-batched Pandas UDFs over ``mapInPandas``.
+metadata. Decode / feature-extract / resize / frame-sample are row
+functions run by ``operators/rows.map_rows``, the engine's one
+Arrow-batched ``mapInPandas`` pass; a query that builds its payloads
+in Python composes its encoder with these row functions, so the
+payload never leaves the Python worker.
 
 Codec status (honest inventory):
 
@@ -10,10 +13,14 @@ Codec status (honest inventory):
   PNG per the public spec, CRC-checked, all five filter types) plus a
   24-bit BMP path; ``decode_image`` and ``resize_image`` run them
   end-to-end, quarantining undecodable rows as ``decode_error``.
-- **audio: REAL container parse + REAL compressed codec** — RIFF/WAVE
-  chunk walk in ``sniff_media_metadata`` (and x49's segmenter), plus
-  IMA/DVI ADPCM (wFormatTag 0x11, the standard step/index tables,
-  fact-chunk lengths) encode AND four-table state-machine decode
+- **RIFF: REAL** — one chunk writer (``riff_chunk``/``riff_list``/
+  ``riff_file``, pad byte on odd sizes) and one chunk walker
+  (``riff_walk``) serve every WAVE and AVI container below.
+- **audio: REAL container parse + REAL compressed codec** — PCM WAV
+  write (``encode_wav_pcm``) and fmt/data chunk walk in
+  ``sniff_media_metadata`` (and x49's segmenter), plus IMA/DVI ADPCM
+  (wFormatTag 0x11, the standard step/index tables, fact-chunk
+  lengths) encode AND four-table state-machine decode
   (``encode_wav_adpcm``/``parse_wav_adpcm``, gated by x79). Transform
   codecs (mp3 etc.) remain out of scope.
 - **video: REAL container codec + REAL compressed codec** —
@@ -30,11 +37,14 @@ Codec status (honest inventory):
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .operators.rows import map_rows
 
 #: Canonical multimodal record: one row per media object.
 MEDIA_SCHEMA = T.StructType(
@@ -70,31 +80,23 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
 
 
 def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
-    """Feature extraction over binary content via ``mapInPandas``
-    (Arrow-batched). The default extractor is a deterministic fake
-    (byte length / head bytes / mean byte value); swap ``_extract`` for
-    a real decoder where codecs exist."""
+    """Feature extraction over binary content, one ``map_rows`` pass.
+    The default extractor is a deterministic fake (byte length / head
+    bytes / mean byte value); swap ``_features`` for a real decoder
+    where codecs exist."""
 
-    def _extract(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _features(media_id, media_type, b):
+        # floor-scaled bp from exact ints: Python round() is BANKER'S —
+        # diverges from both engines on halfway
+        return [(
+            media_id,
+            media_type,
+            len(b) if b is not None else None,
+            b[:4].hex() if b else None,
+            (sum(b) * 10000 // len(b)) / 10000.0 if b else None,
+        )]
 
-        for pdf in batches:
-            content = pdf["content"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": content.map(lambda b: len(b) if b is not None else None),
-                    "head_hex": content.map(lambda b: b[:4].hex() if b else None),
-                    # floor-scaled bp from exact ints: Python round() is
-                    # BANKER'S — diverges from both engines on halfway
-                    "byte_mean": content.map(
-                        lambda b: (sum(b) * 10000 // len(b)) / 10000.0 if b else None
-                    ),
-                }
-            )
-
-    return media.mapInPandas(_extract, FEATURE_SCHEMA)
+    return map_rows(media.select("media_id", "media_type", "content"), _features, FEATURE_SCHEMA)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -130,7 +132,7 @@ def _decode_raster(b: bytes | None) -> tuple:
         else:
             return None, None, None, None, f"unknown container: {bytes(b[:4]).hex()}"
         return w, h, _MODE[ct], px, None
-    except (PngError, IndexError) as exc:
+    except (PngError, IndexError, struct.error) as exc:  # struct: truncated header
         return None, None, None, None, f"decode_error: {exc}"
 
 
@@ -141,26 +143,13 @@ def decode_image(media: DataFrame) -> DataFrame:
     24-bit BMP path, emitting the raw row-major raster plus
     (width, height, mode). Undecodable rows quarantine as
     ``decode_error`` rows instead of failing the job — the same
-    discipline as the PDF scan. One narrow mapInPandas pass; the
+    discipline as the PDF scan. One narrow ``map_rows`` pass; the
     decoded raster never shuffles unless the caller asks it to."""
-
-    def _decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [_decode_raster(x) for x in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [r[0] for r in rows],
-                    "height": [r[1] for r in rows],
-                    "mode": [r[2] for r in rows],
-                    "pixels": [r[3] for r in rows],
-                    "decode_error": [r[4] for r in rows],
-                }
-            )
-
-    return media.mapInPandas(_decode, DECODED_SCHEMA)
+    return map_rows(
+        media.select("media_id", "content"),
+        lambda media_id, b: [(media_id, *_decode_raster(b))],
+        DECODED_SCHEMA,
+    )
 
 
 def _resize_raster(
@@ -212,20 +201,11 @@ def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
             return (bytes(b) * (need // len(b) + 1))[:need]
         return _resize_raster(w0, h0, mode, px, width, height)
 
-    def _resize(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "pixels": pdf["content"].map(_resize_one),
-                }
-            )
-
-    return media.mapInPandas(_resize, RESIZED_SCHEMA)
+    return map_rows(
+        media.select("media_id", "content"),
+        lambda media_id, b: [(media_id, width, height, _resize_one(b))],
+        RESIZED_SCHEMA,
+    )
 
 
 FRAME_SCHEMA = T.StructType(
@@ -250,23 +230,14 @@ def sample_video_frames(
     ``every_n_seconds`` of pretended footage.
     """
 
-    def _frames(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _frames(media_id, b):
+        if b is None:
+            return
+        for i in range(max(1, len(b) // frame_bytes)):
+            frame = b[i * frame_bytes : (i + 1) * frame_bytes]
+            yield media_id, i, round(i * every_n_seconds, 6), frame
 
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "frame_no": [], "frame_ts": [], "frame": []}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                if b is None:
-                    continue
-                n = max(1, len(b) // frame_bytes)
-                for i in range(n):
-                    out["media_id"].append(mid)
-                    out["frame_no"].append(i)
-                    out["frame_ts"].append(round(i * every_n_seconds, 6))
-                    out["frame"].append(b[i * frame_bytes : (i + 1) * frame_bytes])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_frames, FRAME_SCHEMA)
+    return map_rows(media.select("media_id", "content"), _frames, FRAME_SCHEMA)
 
 
 SNIFF_SCHEMA = T.StructType(
@@ -284,6 +255,59 @@ SNIFF_SCHEMA = T.StructType(
 )
 
 
+# ---------------------------------------------------------------------------
+# RIFF chunk codec — the one writer and the one walker that every RIFF
+# container here (WAVE, AVI) goes through. A chunk is a fourcc, a
+# little-endian u32 body size and the body, then one pad byte when the
+# size is odd (the size never counts the pad). LIST chunks and the RIFF
+# form itself are chunks whose body starts with a type fourcc.
+# ---------------------------------------------------------------------------
+
+
+def riff_chunk(fourcc: bytes, body: bytes) -> bytes:
+    """One chunk: ``fourcc``, size, ``body`` and the pad byte on odd sizes."""
+    return fourcc + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
+
+
+def riff_list(list_type: bytes, *chunks: bytes) -> bytes:
+    """A LIST chunk of ``list_type`` holding ``chunks``."""
+    return riff_chunk(b"LIST", list_type + b"".join(chunks))
+
+
+def riff_file(form_type: bytes, *chunks: bytes) -> bytes:
+    """A RIFF file of ``form_type`` (``WAVE``, ``AVI ``) holding ``chunks``."""
+    return riff_chunk(b"RIFF", form_type + b"".join(chunks))
+
+
+def riff_form_type(blob: bytes) -> bytes | None:
+    """The form type of a RIFF file; None when ``blob`` is not one."""
+    return blob[8:12] if blob[:4] == b"RIFF" else None
+
+
+def riff_walk(
+    blob: bytes, pos: int = 12, end: int | None = None
+) -> Iterator[tuple[bytes, int, int]]:
+    """``(fourcc, body_offset, size)`` of each chunk from ``pos`` (by
+    default the form's first chunk) up to ``end``, stepping over pad
+    bytes. A LIST's body starts with its type; walk into it with
+    ``riff_walk(blob, body_offset + 4, body_offset + size)``. Sizes are
+    yielded as read: a chunk cut short by the end of ``blob`` slices
+    short, and a header cut short raises ``struct.error``."""
+    end = len(blob) if end is None else end
+    while pos + 8 <= end:
+        (size,) = struct.unpack_from("<I", blob, pos + 4)
+        yield blob[pos : pos + 4], pos + 8, size
+        pos += 8 + size + (size & 1)
+
+
+def encode_wav_pcm(data: bytes, channels: int, sample_rate: int, bits: int) -> bytes:
+    """A PCM WAV (wFormatTag 1) holding the interleaved samples
+    ``data``: the 16-byte fmt chunk, then the data chunk."""
+    align = channels * bits // 8
+    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, sample_rate * align, align, bits)
+    return riff_file(b"WAVE", riff_chunk(b"fmt ", fmt), riff_chunk(b"data", data))
+
+
 def _sniff_bytes(b: bytes | None) -> dict:
     """REAL (not stubbed) container-header metadata extraction, pure
     Python from the public format specs — no codec library needed:
@@ -299,8 +323,6 @@ def _sniff_bytes(b: bytes | None) -> dict:
     documented stub slots); header metadata is the part a curation
     pipeline filters on (resolution/duration thresholds, aspect-ratio
     buckets) and it is fully real here."""
-    import struct
-
     out = {k.name: None for k in SNIFF_SCHEMA.fields if k.name != "media_id"}
     if not b:
         out["sniff_error"] = "empty"
@@ -332,7 +354,7 @@ def _sniff_bytes(b: bytes | None) -> dict:
             out["format"] = "bmp"
             w, h = struct.unpack("<ii", b[18:26])
             out["width"], out["height"] = w, abs(h)
-        elif b[:4] == b"RIFF" and b[8:12] == b"AVI " and len(b) >= 72:
+        elif riff_form_type(b) == b"AVI " and len(b) >= 72:
             out["format"] = "avi"
             # avih is the first chunk inside LIST hdrl: dwMicroSecPerFrame
             # at +0, dwTotalFrames at +16, dwWidth/dwHeight at +32/+36.
@@ -341,20 +363,16 @@ def _sniff_bytes(b: bytes | None) -> dict:
                 total, = struct.unpack("<I", b[48:52])
                 out["width"], out["height"] = struct.unpack("<II", b[64:72])
                 out["duration_ms"] = (total * usec) / 1000.0  # exact int / 1000
-        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+        elif riff_form_type(b) == b"WAVE":
             out["format"] = "wav"
-            i = 12
             byte_rate = data_size = None
-            while i + 8 <= len(b):
-                cid = b[i : i + 4]
-                csz = struct.unpack("<I", b[i + 4 : i + 8])[0]
-                if cid == b"fmt " and i + 24 <= len(b):
-                    (_, out["channels"], out["sample_rate"], byte_rate, _, out["bits_per_sample"]) = struct.unpack(
-                        "<HHIIHH", b[i + 8 : i + 24]
+            for cid, at, size in riff_walk(b):
+                if cid == b"fmt " and at + 16 <= len(b):
+                    (_, out["channels"], out["sample_rate"], byte_rate, _, out["bits_per_sample"]) = struct.unpack_from(
+                        "<HHIIHH", b, at
                     )
                 elif cid == b"data":
-                    data_size = csz
-                i += 8 + csz + (csz % 2)  # chunks are word-aligned
+                    data_size = size
             if byte_rate and data_size is not None:
                 # floor-scaled micro→milli from exact ints: Python's
                 # banker's round on a .0005 halfway diverges from SQL
@@ -366,30 +384,19 @@ def _sniff_bytes(b: bytes | None) -> dict:
     return out
 
 
+def _sniff_row(media_id, b: bytes | None) -> list[tuple]:
+    """``_sniff_bytes`` as a ``SNIFF_SCHEMA`` row function."""
+    return [(media_id, *_sniff_bytes(b).values())]
+
+
 def sniff_media_metadata(media: DataFrame) -> DataFrame:
-    """Arrow-batched header sniff over opaque binary content — one
-    narrow mapInPandas pass, payload dropped on output (only metadata
+    """Header sniff over opaque binary content — one narrow
+    ``map_rows`` pass, payload dropped on output (only metadata
     crosses any downstream shuffle). Unknown or corrupt containers
     surface as ``sniff_error`` rows, never failures (quarantine
     discipline, same as the PDF scan)."""
+    return map_rows(media.select("media_id", "content"), _sniff_row, SNIFF_SCHEMA)
 
-    return media.mapInPandas(sniff_batches, SNIFF_SCHEMA)
-
-
-def sniff_batches(batches: Iterator) -> Iterator:
-    """The sniff kernel as a plain batch transform, exposed so callers
-    that GENERATE the media bytes in Python can compose
-    ``sniff_batches(encode(batches))`` into ONE mapInPandas pass —
-    the payload then never crosses the Python↔JVM boundary at all
-    (guide §4.1: only (media_id, metadata) columns cross; x22 measured
-    1.32 s → one-pass form below 0.6 s at sf0.1)."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = [_sniff_bytes(bytes(x) if x is not None else None) for x in pdf["content"]]
-        out = pd.DataFrame(rows)
-        out.insert(0, "media_id", pdf["media_id"].values)
-        yield out
 
 # ---------------------------------------------------------------------------
 # RIFF/AVI video container — REAL codec (public AVI 1.0 spec: avih /
@@ -581,8 +588,6 @@ def encode_avi(
     "compressed video" path is an actual compression format, not a
     stub. ``idx1`` offsets are relative to the ``movi`` fourcc (first
     chunk at offset 4), the convention VfW writers use."""
-    import struct
-
     stride = (width + 3) & ~3
     frame_sz = stride * height
     rle = codec == "rle8"
@@ -626,29 +631,26 @@ def encode_avi(
         )
         + palette
     )
-
-    def chunk(fourcc: bytes, body: bytes) -> bytes:
-        return fourcc + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
+    hdrl = riff_list(
+        b"hdrl",
+        riff_chunk(b"avih", avih),
+        riff_list(b"strl", riff_chunk(b"strh", strh), riff_chunk(b"strf", strf)),
+    )
     fourcc = b"00dc" if rle else b"00db"
-    rle_bodies = _rle8_encode_many(frames, width, height) if rle else None
-    movi_body, idx_entries, off = b"", [], 4  # first chunk 4 bytes past 'movi'
-    for fi, f in enumerate(frames):
-        if rle:
-            body = rle_bodies[fi] if rle_bodies is not None else rle8_encode(f, width, height)
-        else:
-            body = dib(f)
-        movi_body += chunk(fourcc, body)
+    if rle:
+        bodies = _rle8_encode_many(frames, width, height) or [
+            rle8_encode(f, width, height) for f in frames
+        ]
+    else:
+        bodies = [dib(f) for f in frames]
+    chunks = [riff_chunk(fourcc, body) for body in bodies]
+    idx_entries, off = [], 4  # first chunk 4 bytes past 'movi'
+    for body, chunk in zip(bodies, chunks):
         idx_entries.append(struct.pack("<4sIII", fourcc, _AVIIF_KEYFRAME, off, len(body)))
-        off += 8 + len(body) + (len(body) & 1)
-    movi = lst(b"movi", movi_body)
-    idx1 = chunk(b"idx1", b"".join(idx_entries))
-    payload = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(payload)) + payload
+        off += len(chunk)
+    return riff_file(
+        b"AVI ", hdrl, riff_list(b"movi", *chunks), riff_chunk(b"idx1", b"".join(idx_entries))
+    )
 
 
 def parse_avi(blob: bytes) -> dict:
@@ -662,18 +664,13 @@ def parse_avi(blob: bytes) -> dict:
     silently yielding garbage pixels. Returns ``{width, height,
     fps_rate, fps_scale, n_frames, codec, frames}`` with frames as
     top-down ``width*height`` grayscale bytes."""
-    import struct
-
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"AVI ", blob[:12]
+    assert riff_form_type(blob) == b"AVI ", blob[:12]
     meta: dict = {}
     chunks: list[tuple[int, bytes]] = []  # (offset rel to movi fourcc, frame body)
     idx: list[tuple[int, int]] = []
 
     def walk(pos: int, end: int, in_movi: bool, movi_base: int) -> None:
-        while pos + 8 <= end:
-            cid = blob[pos : pos + 4]
-            (sz,) = struct.unpack_from("<I", blob, pos + 4)
-            body_at = pos + 8
+        for cid, body_at, sz in riff_walk(blob, pos, end):
             if cid == b"LIST":
                 ltype = blob[body_at : body_at + 4]
                 walk(
@@ -699,14 +696,13 @@ def parse_avi(blob: bytes) -> dict:
                 assert (b[1], b[2]) == (meta["width"], meta["height"]), b
             elif cid in (b"00db", b"00dc") and in_movi:
                 assert (cid == b"00dc") == (meta.get("codec") == "rle8"), cid
-                chunks.append((pos - movi_base, blob[body_at : body_at + sz]))
+                chunks.append((body_at - 8 - movi_base, blob[body_at : body_at + sz]))
             elif cid == b"idx1":
                 want = b"00dc" if meta.get("codec") == "rle8" else b"00db"
                 for i in range(0, sz, 16):
                     e = struct.unpack_from("<4sIII", blob, body_at + i)
                     assert e[0] == want and e[1] == _AVIIF_KEYFRAME, e
                     idx.append((e[2], e[3]))
-            pos = body_at + sz + (sz & 1)
 
     walk(12, len(blob), False, -1)
     w, h = meta["width"], meta["height"]
@@ -744,35 +740,31 @@ AVI_FRAME_SCHEMA = T.StructType(
 )
 
 
+def _sampled_avi_frames(blob: bytes, every_n: int) -> Iterator[tuple]:
+    """``(frame_no, frame_ms, n_frames, duration_ms, frame)`` for every
+    ``every_n``-th frame of an AVI (``parse_avi``) — the one per-row
+    sampler ``sample_avi_frames`` and x55 share."""
+    v = parse_avi(blob)
+    per_ms = 1000 * v["fps_scale"] // v["fps_rate"]
+    for i in range(0, v["n_frames"], every_n):
+        yield i, i * per_ms, v["n_frames"], v["n_frames"] * per_ms, v["frames"][i]
+
+
 def sample_avi_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
     """REAL video frame-sampling: parse each AVI container
     (``parse_avi``), keep every ``every_n``-th frame, fan out one
-    OUTPUT row per sampled frame (flatMap-shaped mapInPandas — the
+    OUTPUT row per sampled frame (flatMap-shaped ``map_rows`` — the
     same fan-out contract as ``sample_video_frames``, now with a real
     codec behind it). Downstream queries should prune the ``frame``
     payload before any shuffle; only per-frame features need to cross
     the wire."""
 
-    def _frames(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _frames(media_id, b):
+        if b is not None:
+            for sampled in _sampled_avi_frames(b, every_n):
+                yield media_id, *sampled
 
-        for pdf in batches:
-            out: dict[str, list] = {k.name: [] for k in AVI_FRAME_SCHEMA.fields}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                if b is None:
-                    continue
-                v = parse_avi(bytes(b))
-                per_ms = 1000 * v["fps_scale"] // v["fps_rate"]
-                for i in range(0, v["n_frames"], every_n):
-                    out["media_id"].append(mid)
-                    out["frame_no"].append(i)
-                    out["frame_ms"].append(i * per_ms)
-                    out["n_frames"].append(v["n_frames"])
-                    out["duration_ms"].append(v["n_frames"] * per_ms)
-                    out["frame"].append(v["frames"][i])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_frames, AVI_FRAME_SCHEMA)
+    return map_rows(media.select("media_id", "content"), _frames, AVI_FRAME_SCHEMA)
 
 
 def pcm_fingerprint(
@@ -991,8 +983,6 @@ def _adpcm_encode_block_ex(samples: list[int], index: int = 0) -> tuple[bytes, i
     vectors pin) with the tables bound to locals — the per-sample
     call overhead was the hottest line in x79's profile (guide §4.4).
     """
-    import struct
-
     steps = _IMA_STEPS
     adjust = _IMA_INDEX_ADJUST
     predictor = samples[0]
@@ -1051,8 +1041,6 @@ def encode_wav_adpcm(samples: list[int], sample_rate: int = 8000) -> bytes:
     wSamplesPerBlock extension, a fact chunk carrying the TRUE sample
     count (mandatory for compressed formats), and a data chunk of
     fixed-align blocks. ~4:1 vs PCM16."""
-    import struct
-
     blocks = []
     index = 0
     for i in range(0, len(samples), _ADPCM_SAMPLES_PER_BLOCK):
@@ -1067,20 +1055,17 @@ def encode_wav_adpcm(samples: list[int], sample_rate: int = 8000) -> bytes:
         # state.
         block, index = _adpcm_encode_block_ex(chunk, index)
         blocks.append(block)
-    data = b"".join(blocks)
     byte_rate = sample_rate * _ADPCM_BLOCK_ALIGN // _ADPCM_SAMPLES_PER_BLOCK
     fmt = struct.pack(
         "<HHIIHHHH", 0x11, 1, sample_rate, byte_rate,
         _ADPCM_BLOCK_ALIGN, 4, 2, _ADPCM_SAMPLES_PER_BLOCK,
     )
-    fact = struct.pack("<I", len(samples))
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
+    return riff_file(
+        b"WAVE",
+        riff_chunk(b"fmt ", fmt),
+        riff_chunk(b"fact", struct.pack("<I", len(samples))),
+        riff_chunk(b"data", b"".join(blocks)),
     )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def adpcm_decode_block(block: bytes, n_samples: int) -> tuple[list[int], int]:
@@ -1103,8 +1088,6 @@ def adpcm_decode_block(block: bytes, n_samples: int) -> tuple[list[int], int]:
     the unit-vector reference) and the nibble fan-out only expands the
     bytes actually consumed — same per-sample cost discipline as the
     encoder (guide §4.4)."""
-    import struct
-
     if n_samples < 1:
         raise ValueError(
             f"adpcm_decode_block: n_samples must be >= 1, got {n_samples} "
@@ -1150,14 +1133,10 @@ def parse_wav_adpcm(blob: bytes) -> dict:
     reads the 0x11 fmt (+extension), takes the true length from fact,
     walks the fixed-align data blocks through the four-table IMA state
     machine. Returns {sample_rate, n_samples, samples}."""
-    import struct
-
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE", blob[:12]
-    pos, fmt, n_samples, data = 12, None, None, None
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        (sz,) = struct.unpack_from("<I", blob, pos + 4)
-        body = blob[pos + 8 : pos + 8 + sz]
+    assert riff_form_type(blob) == b"WAVE", blob[:12]
+    fmt = n_samples = data = None
+    for cid, at, sz in riff_walk(blob):
+        body = blob[at : at + sz]
         if cid == b"fmt ":
             fmt = struct.unpack_from("<HHIIHHHH", body, 0)
             assert fmt[0] == 0x11 and fmt[1] == 1 and fmt[5] == 4, fmt
@@ -1166,7 +1145,6 @@ def parse_wav_adpcm(blob: bytes) -> dict:
             (n_samples,) = struct.unpack_from("<I", body, 0)
         elif cid == b"data":
             data = body
-        pos += 8 + sz + (sz & 1)
     assert fmt is not None and n_samples is not None and data is not None
     samples: list[int] = []
     remaining = n_samples

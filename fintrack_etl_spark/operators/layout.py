@@ -33,6 +33,9 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .rows import map_rows
 
 
 def quantile_cuts(df: DataFrame, col: str, nbins: int, relative_error: float = 0.001) -> list[float]:
@@ -135,10 +138,13 @@ def parquet_footer_stats(
     strings, decimals) would need a per-type schema, so they are
     rejected eagerly rather than failing inside the Arrow conversion.
     """
-    import pandas as pd
-
     schema = (
-        "file string, row_group_id int, n_rows long, min_key long, max_key long"
+        T.StructType()
+        .add("file", "string")
+        .add("row_group_id", "integer")
+        .add("n_rows", "long")
+        .add("min_key", "long")
+        .add("max_key", "long")
     )
     if not paths:
         return spark.createDataFrame([], schema)
@@ -147,36 +153,28 @@ def parquet_footer_stats(
         [(p,) for p in sorted(paths)], ["path"]
     ).repartition(min(len(paths), 64))
 
-    def read_meta(batches):
+    def read_meta(p):
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                md = pq.ParquetFile(p).metadata
-                for i, name in enumerate(md.schema.names):
-                    if name == column and md.schema.column(i).physical_type not in (
-                        "INT32",
-                        "INT64",
-                    ):
-                        raise TypeError(
-                            f"parquet_footer_stats: {column} is "
-                            f"{md.schema.column(i).physical_type}; only "
-                            "INT32/INT64 columns fit the BIGINT stats schema"
-                        )
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    stat_min = stat_max = None
-                    for i in range(g.num_columns):
-                        c = g.column(i)
-                        if c.path_in_schema == column and c.statistics is not None:
-                            stat_min = c.statistics.min
-                            stat_max = c.statistics.max
-                    rows.append(
-                        (os.path.basename(p), rg, g.num_rows, stat_min, stat_max)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["file", "row_group_id", "n_rows", "min_key", "max_key"]
-            )
+        md = pq.ParquetFile(p).metadata
+        for i, name in enumerate(md.schema.names):
+            if name == column and md.schema.column(i).physical_type not in (
+                "INT32",
+                "INT64",
+            ):
+                raise TypeError(
+                    f"parquet_footer_stats: {column} is "
+                    f"{md.schema.column(i).physical_type}; only "
+                    "INT32/INT64 columns fit the BIGINT stats schema"
+                )
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            stat_min = stat_max = None
+            for i in range(g.num_columns):
+                c = g.column(i)
+                if c.path_in_schema == column and c.statistics is not None:
+                    stat_min = c.statistics.min
+                    stat_max = c.statistics.max
+            yield os.path.basename(p), rg, g.num_rows, stat_min, stat_max
 
-    return files_df.mapInPandas(read_meta, schema)
+    return map_rows(files_df, read_meta, schema)

@@ -185,6 +185,23 @@ def decode_png(blob: bytes) -> tuple[int, int, int, bytes]:
     return width, height, color_type, bytes(out)
 
 
+def encode_bmp(rgb: bytes, width: int, height: int) -> bytes:
+    """Write top-down row-major RGB pixels as an uncompressed 24-bit
+    BITMAPINFOHEADER BMP: negative height (top-down rows per spec),
+    BGR samples, each row zero-padded to a multiple of 4 bytes. The
+    inverse of :func:`decode_bmp`."""
+    stride = (width * 3 + 3) & ~3
+    out = []
+    for r in range(height):
+        row = bytearray(rgb[r * width * 3 : (r + 1) * width * 3])
+        row[0::3], row[2::3] = row[2::3], row[0::3]  # RGB -> BGR
+        out.append(bytes(row).ljust(stride, b"\x00"))
+    rows = b"".join(out)
+    header = b"BM" + struct.pack("<IHHI", 14 + 40 + len(rows), 0, 0, 14 + 40)
+    info = struct.pack("<IiiHHIIiiII", 40, width, -height, 1, 24, 0, len(rows), 2835, 2835, 0, 0)
+    return header + info + rows
+
+
 def decode_bmp(blob: bytes) -> tuple[int, int, int, bytes]:
     """Decode an uncompressed 24-bit BITMAPINFOHEADER BMP →
     ``(width, height, color_type=2, rgb_pixels)`` in top-down row

@@ -5,8 +5,10 @@ joins the page texts (``extractors/bb_statement.py:28-31``); every real
 user hits this step first. Here the scan is a distributed
 ``spark.read.format("binaryFile")`` over a path glob — each file is one
 row carrying (path, modificationTime, length, content) — and the
-byte→text decode runs per Arrow batch inside ``mapInPandas`` with the
-CODEC SLOT ISOLATED (same discipline as ``multimodal.py``): pdfplumber
+byte→text decode is one row function (``_extract_row``) run by
+``operators/rows.map_rows``, the engine's one Arrow-batched
+``mapInPandas`` pass, with the CODEC SLOT ISOLATED (same discipline
+as ``multimodal.py``): pdfplumber
 is used if importable; otherwise only the deterministic ``%FAKEPDF``
 envelope (fixtures/tests) decodes, and undecodable payloads surface as
 ``decode_error`` rows instead of failing the scan — corrupt files at
@@ -22,11 +24,12 @@ only text crosses the decode's own exchange.
 from __future__ import annotations
 
 import uuid
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.rows import map_rows
 
 #: Deterministic fixture envelope: marker + utf-8 payload.
 FAKE_PDF_MARKER = b"%FAKEPDF\n"
@@ -87,26 +90,12 @@ def _decode_doc_bytes(b: bytes | None) -> tuple[str | None, str | None]:
     return None, f"unknown format: {b[:4].hex()}"
 
 
-def extract_batches(
-    batches: Iterator, path_col: str = "path", content_col: str = "content"
-) -> Iterator:
-    """The decode kernel as a plain batch transform, exposed so callers
-    that BUILD the binary payload in Python can compose
-    ``extract_batches(encode(batches))`` into ONE ``mapInPandas`` pass —
-    the payload then never crosses the Python↔JVM boundary at all
-    (guide §4.1; the p8/p9/p10 round-trips measured ~2x on this)."""
-    import pandas as pd
-
-    for pdf_batch in batches:
-        texts: list[str | None] = []
-        errs: list[str | None] = []
-        for b in pdf_batch[content_col]:
-            t, e = _decode_doc_bytes(bytes(b) if b is not None else None)
-            texts.append(t)
-            errs.append(e)
-        yield pd.DataFrame(
-            {"doc_path": pdf_batch[path_col], "text": texts, "decode_error": errs}
-        )
+def _extract_row(path: str, content: bytes | None) -> list[tuple]:
+    """``_decode_doc_bytes`` as an ``EXTRACT_SCHEMA`` row function. A
+    query that builds PDF bytes in Python composes its encoder with it
+    inside one ``map_rows`` pass, so the payload never leaves the
+    Python worker."""
+    return [(path, *_decode_doc_bytes(content))]
 
 
 def binary_docs_to_text(
@@ -127,14 +116,9 @@ def binary_docs_to_text(
     after the first action through the returned frame's ``observation``
     (a :class:`pyspark.sql.Observation`; its name is unique per call,
     so decoded directories can be unioned)."""
-
-    def _extract(batches: Iterator) -> Iterator:
-        return extract_batches(batches, path_col, content_col)
-
     observation = Observation(f"pdf_source-{uuid.uuid4()}")
     decoded = (
-        df.select(path_col, content_col)
-        .mapInPandas(_extract, EXTRACT_SCHEMA)
+        map_rows(df.select(path_col, content_col), _extract_row, EXTRACT_SCHEMA)
         .repartition("doc_path")
         .observe(
             observation,

@@ -4,7 +4,8 @@ The reference builds one dataclass per document with ~30 ordered
 ``find_first`` regex probes over the full PDF text
 (``bb_bill.py:95-166`` FaturaResumo, ``bb_statement.py:44-82``
 ExtratoHeader, ``bradesco_bill.py:58-104`` BradescoResumo). Here each
-probe is an F5/F6 ``regexp_extract`` Column over the raw ``text`` —
+probe is an F5/F6 ``regexp_extract`` Column over the raw ``text``
+(``functions.find_first`` / ``find_date_after_keyword``) —
 one narrow projection per document row, no explode, no shuffle, fully
 codegen'd.
 
@@ -18,25 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import brl_to_double, normalize_space
+from ..functions import brl_to_double, find_date_after_keyword, find_first, normalize_space
 
 MONTHS = "JANEIRO|FEVEREIRO|MARÇO|MARCO|ABRIL|MAIO|JUNHO|JULHO|AGOSTO|SETEMBRO|OUTUBRO|NOVEMBRO|DEZEMBRO"
-
-
-def find_first(c: Column, pattern: str, flags: str = "im", group: int = 1) -> Column:
-    """F5 — first regex group match or NULL (``bb_bill.py:43-45``)."""
-    return F.nullif(F.trim(F.regexp_extract(c, f"(?{flags}){pattern}", group)), F.lit(""))
-
-
-def find_date_after_keyword(c: Column, keyword: str, window: int = 160) -> Column:
-    """F6 — first ``dd/mm/aaaa`` within ``window`` chars after the
-    keyword (``bb_bill.py:48-58``) — for labels split from values by a
-    page break."""
-    after = F.substring(c, F.locate(keyword, c) + len(keyword), window)
-    return F.when(
-        F.locate(keyword, c) > 0,
-        F.nullif(F.regexp_extract(after, r"(\d{2}/\d{2}/\d{4})", 1), F.lit("")),
-    )
 
 
 def _money(c: Column, pattern: str, flags: str = "im") -> Column:

@@ -1049,45 +1049,24 @@ def x22_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk-walk bug cannot hide. Image formats (PNG/JPEG/GIF/BMP
     dimensions) are covered by hand-built headers in pytest.
 
-    r11: encode and sniff compose into ONE mapInPandas pass
-    (``sniff_batches(_encode(batches))``) — the WAV payload previously
-    crossed Python→JVM→Python between two passes just to be parsed
-    back; now only (doc_id, text) enters and (media_id, metadata)
-    leaves Python (guide §4.1). Both real codec steps still run
-    unchanged. 1.29 → 0.51 s same-session at sf0.1."""
-    from collections.abc import Iterator
+    Encode and sniff compose into ONE ``map_rows`` pass (the WAV
+    writer feeds ``multimodal._sniff_row`` per row): only (doc_id,
+    text) enters and (media_id, metadata) leaves Python, so the WAV
+    payload never crosses back to the JVM just to be parsed (guide
+    §4.1). Both real codec steps still run unchanged."""
+    from . import multimodal as MM
+    from .operators.rows import map_rows
 
-    import pandas as pd
-
-    from .multimodal import SNIFF_SCHEMA, sniff_batches
-
-    docs = T(spark, sf_dir, "documents")
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        def wav(data: bytes) -> bytes:
-            fmt = struct.pack("<HHIIHH", 1, 2, 44100, 176400, 4, 16)
-            return (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"],
-                    "content": [wav(t.encode("utf-8")) for t in b["text"]],
-                }
-            )
-
-    def _encode_and_sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return sniff_batches(_encode(batches))
-
-    media = docs.select("doc_id", "text").repartition(
+    docs = T(spark, sf_dir, "documents").select("doc_id", "text").repartition(
         spark.sparkContext.defaultParallelism  # codec CPU >> I/O
-    ).mapInPandas(_encode_and_sniff, SNIFF_SCHEMA)
+    )
+    media = map_rows(
+        docs,
+        lambda doc_id, text: MM._sniff_row(
+            doc_id, MM.encode_wav_pcm(text.encode("utf-8"), 2, 44100, 16)
+        ),
+        MM.SNIFF_SCHEMA,
+    )
     return media.select(
         "media_id", "format", "sample_rate", "channels", "bits_per_sample", "duration_ms"
     )
@@ -2820,8 +2799,8 @@ def x45_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash (dHash) image dedup with REAL container plumbing
     under the value gate: each document's first 72 chars become the
     grayscale pixels of a genuine top-down 24-bit BMP (9×8) built
-    byte-for-byte per the BITMAPINFOHEADER spec in an Arrow encode
-    pass; a separate decode pass parses the container back
+    byte-for-byte per the BITMAPINFOHEADER spec
+    (``parse/minipng.encode_bmp``); the decode parses the container back
     (``parse/minipng.decode_bmp``: magic, pixel-array offset,
     width/height/bpp, row stride), recovers the pixel matrix, and
     computes the 64-bit difference hash (adjacent-pixel gradient
@@ -2830,78 +2809,38 @@ def x45_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically from the text so any container-layout, stride, or
     bit-order bug surfaces as a value mismatch.
 
-    Scale: both passes are mapInPandas (Arrow-batched, zero
-    row-Python); the only shuffle is the final hash groupBy — the
-    image bytes themselves never shuffle. Swap the deterministic
-    text→pixels stub for a real JPEG/PNG decode (Pillow slot,
-    ``multimodal.decode_image``) and nothing else changes: dHash
-    bucketing at 100 TB is one scan + one |distinct-hash| exchange;
-    a Hamming-ball near-dup variant adds the SimHash rotate-and-block
-    tables from x5 on the SAME 64-bit codes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    Scale: encode, decode and hash are one row function in ONE
+    ``map_rows`` pass (Arrow-batched; the image bytes never leave the
+    Python worker); the only shuffle is the final hash groupBy. Swap
+    the deterministic text→pixels stub for a real JPEG/PNG decode
+    (Pillow slot, ``multimodal.decode_image``) and nothing else
+    changes: dHash bucketing at 100 TB is one scan + one
+    |distinct-hash| exchange; a Hamming-ball near-dup variant adds the
+    SimHash rotate-and-block tables from x5 on the SAME 64-bit codes."""
     from pyspark.sql import types as TT
 
-    from .parse.minipng import decode_bmp
+    from .operators.rows import map_rows
+    from .parse.minipng import decode_bmp, encode_bmp
 
     docs = _with_recrawl(T(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     ).repartition(spark.sparkContext.defaultParallelism)  # codec CPU >> I/O
     W, H = 9, 8
-    stride = (W * 3 + 3) & ~3  # BMP rows pad to 4 bytes
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def _phash(doc_id, text):
+        s = (text + "x" * (W * H))[: W * H]
+        gray_rgb = bytes(ord(c) % 256 for c in s for _ in range(3))
+        w, h, _, rgb = decode_bmp(encode_bmp(gray_rgb, W, H))
+        assert (w, h) == (W, H), (w, h)
+        out = []
+        for r in range(H):
+            p = rgb[r * w * 3 : (r + 1) * w * 3 : 3]
+            byte = sum((1 << c) for c in range(w - 1) if p[c] < p[c + 1])
+            out.append(f"{byte:02X}")
+        return [(doc_id, "".join(out))]
 
-        def bmp(text: str) -> bytes:
-            s = (text + "x" * (W * H))[: W * H]
-            px = [ord(c) % 256 for c in s]
-            rows = b""
-            for r in range(H):  # negative height => top-down row order
-                row = b"".join(
-                    bytes((v, v, v)) for v in px[r * W : (r + 1) * W]
-                )
-                rows += row + b"\x00" * (stride - W * 3)
-            header = b"BM" + struct.pack(
-                "<IHHI", 14 + 40 + len(rows), 0, 0, 14 + 40
-            )
-            info = struct.pack(
-                "<IiiHHIIiiII", 40, W, -H, 1, 24, 0, len(rows), 2835, 2835, 0, 0
-            )
-            return header + info + rows
-
-        for b in batches:
-            yield pd.DataFrame(
-                {"media_id": b["doc_id"], "content": [bmp(t) for t in b["text"]]}
-            )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def dhash(blob: bytes) -> str:
-            w, h, _, rgb = decode_bmp(blob)
-            assert (w, h) == (W, H), (w, h)
-            out = []
-            for r in range(H):
-                p = rgb[r * w * 3 : (r + 1) * w * 3 : 3]
-                byte = sum(
-                    (1 << c) for c in range(w - 1) if p[c] < p[c + 1]
-                )
-                out.append(f"{byte:02X}")
-            return "".join(out)
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "phash": [dhash(x) for x in b["content"]],
-                }
-            )
-
-    media = docs.mapInPandas(
-        _encode, TT.StructType().add("media_id", "long").add("content", "binary")
-    )
-    hashed = media.mapInPandas(
-        _decode, TT.StructType().add("media_id", "long").add("phash", "string")
+    hashed = map_rows(
+        docs, _phash, TT.StructType().add("media_id", "long").add("phash", "string")
     )
     return hashed.groupBy("phash").agg(
         F.min("media_id").alias("keep_id"),
@@ -3252,86 +3191,47 @@ def _x49_oracle() -> str:
 def x49_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voice-activity segmentation over REAL audio container plumbing:
     each document's bytes become 8-bit mono 8 kHz PCM inside a genuine
-    RIFF/WAVE file (fmt + data chunks per spec) in an Arrow encode
-    pass; the decode pass re-parses the container — chunk walk, fmt
-    validation, sample extraction — then runs the standard
-    energy-threshold VAD (voiced iff |s−128| ≥ 16) and counts
-    silence→speech transitions (segments), voiced samples, and
-    duration. The oracle recomputes everything arithmetically from the
-    text bytes, so a header, chunk-offset, or threshold bug is a value
-    mismatch. Swap the byte stub for a real audio decode and the
-    segmentation pass is unchanged — this is the frame-level pipeline
-    shape (VAD → segment → per-segment features) of speech-corpus
-    curation, Arrow-batched, with the only shuffle being whatever
-    aggregation consumes the per-doc rows."""
-    from collections.abc import Iterator
+    RIFF/WAVE file (``multimodal.encode_wav_pcm``: fmt + data chunks
+    per spec); the decode re-parses the container — chunk walk
+    (``multimodal.riff_walk``), fmt validation, sample extraction —
+    then runs the standard energy-threshold VAD (voiced iff
+    |s−128| ≥ 16) and counts silence→speech transitions (segments),
+    voiced samples, and duration. The oracle recomputes everything
+    arithmetically from the text bytes, so a header, chunk-offset, or
+    threshold bug is a value mismatch. Swap the byte stub for a real
+    audio decode and the segmentation step is unchanged — this is the
+    frame-level pipeline shape (VAD → segment → per-segment features)
+    of speech-corpus curation. Encode and decode are one row function
+    in ONE Arrow-batched ``map_rows`` pass, so the WAV payload never
+    crosses the Python↔JVM boundary (guide §4.1); the only shuffle is
+    whatever aggregation consumes the per-doc rows."""
+    import struct
 
-    import pandas as pd
     from pyspark.sql import types as TT
+
+    from . import multimodal as MM
+    from .operators.rows import map_rows
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text").repartition(
         spark.sparkContext.defaultParallelism  # codec CPU >> I/O
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        def wav(data: bytes) -> bytes:
-            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-            return (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"],
-                    "content": [
-                        wav(bytes(ord(c) % 256 for c in t)) for t in b["text"]
-                    ],
-                }
-            )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        def vad(blob: bytes):
-            assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-            pos, samples = 12, None
-            while pos + 8 <= len(blob):
-                cid, sz = blob[pos : pos + 4], struct.unpack_from("<I", blob, pos + 4)[0]
-                body = blob[pos + 8 : pos + 8 + sz]
-                if cid == b"fmt ":
-                    fmt = struct.unpack("<HHIIHH", body[:16])
-                    assert fmt == (1, 1, 8000, 8000, 1, 8), fmt
-                elif cid == b"data":
-                    samples = body
-                pos += 8 + sz + (sz & 1)
-            n = len(samples)
-            voiced = [1 if (s <= 112 or s >= 144) else 0 for s in samples]
-            segs = sum(
-                1 for i, v in enumerate(voiced) if v and (i == 0 or not voiced[i - 1])
-            )
-            return n, sum(voiced), segs, n * 1000 // 8000
-
-        for b in batches:
-            rows = [vad(x) for x in b["content"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["media_id"],
-                    "n_samples": [r[0] for r in rows],
-                    "n_voiced": [r[1] for r in rows],
-                    "n_segments": [r[2] for r in rows],
-                    "duration_ms": [r[3] for r in rows],
-                }
-            )
-
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # r11: encode+decode composed into ONE mapInPandas pass — the
-        # WAV payload never crosses the Python↔JVM boundary (guide §4.1)
-        return _decode(_encode(batches))
+    def _vad(doc_id, text):
+        blob = MM.encode_wav_pcm(bytes(ord(c) % 256 for c in text), 1, 8000, 8)
+        assert MM.riff_form_type(blob) == b"WAVE"
+        samples = None
+        for cid, at, sz in MM.riff_walk(blob):
+            if cid == b"fmt ":
+                fmt = struct.unpack_from("<HHIIHH", blob, at)
+                assert fmt == (1, 1, 8000, 8000, 1, 8), fmt
+            elif cid == b"data":
+                samples = blob[at : at + sz]
+        n = len(samples)
+        voiced = [1 if (s <= 112 or s >= 144) else 0 for s in samples]
+        segs = sum(
+            1 for i, v in enumerate(voiced) if v and (i == 0 or not voiced[i - 1])
+        )
+        return [(doc_id, n, sum(voiced), segs, n * 1000 // 8000)]
 
     out_schema = (
         TT.StructType()
@@ -3341,7 +3241,7 @@ def x49_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .add("n_segments", "long")
         .add("duration_ms", "long")
     )
-    return docs.mapInPandas(_roundtrip, out_schema)
+    return map_rows(docs, _vad, out_schema)
 
 
 @register(
@@ -3848,15 +3748,15 @@ def x52_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same discipline as x45's BMP path, but exercising the full
     PNG filter suite.
 
-    Scale: ONE narrow Arrow-batched mapInPandas pass (r11: the encode →
-    decode → resize chain is composed per batch, so the PNG bytes and
-    the decoded raster never cross the Python↔JVM boundary and the old
-    decode⋈resize id join — which re-ran the encode pass on both sides
-    — is gone; guide §4.1). Python is unavoidable here by design (it
-    IS the codec), and batches are Arrow-sized."""
+    Scale: ONE narrow Arrow-batched ``map_rows`` pass: the encode →
+    decode → resize chain is one row function, so the PNG bytes and
+    the decoded raster never cross the Python↔JVM boundary (guide
+    §4.1). Python is unavoidable here by design (it IS the codec), and
+    batches are Arrow-sized."""
     from pyspark.sql import types as TT
 
     from .multimodal import _decode_raster, _resize_raster
+    from .operators.rows import map_rows
     from .parse.minipng import encode_png
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text").repartition(
@@ -3864,26 +3764,19 @@ def x52_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     W, H = 9, 8
 
-    def _roundtrip(batches):
-        import pandas as pd
+    def _roundtrip(doc_id, t):
+        s = ((t or "") + "x" * (W * H))[: W * H]
+        px = bytes(ord(c) % 256 for c in s)
+        blob = encode_png(px, W, H, color_type=0, filters=[0, 1, 2, 3, 4])
+        w0, h0, mode, raster, err = _decode_raster(blob)
+        if err is not None:  # quarantine parity with decode_image/
+            out = (blob * (16 // len(blob) + 1))[:16]  # resize_image
+        else:
+            out = _resize_raster(w0, h0, mode, raster, 4, 4)
+        return [(doc_id, w0, h0, mode, out)]
 
-        for b in batches:
-            rows = []
-            for did, t in zip(b["doc_id"], b["text"]):
-                s = ((t or "") + "x" * (W * H))[: W * H]
-                px = bytes(ord(c) % 256 for c in s)
-                blob = encode_png(px, W, H, color_type=0, filters=[0, 1, 2, 3, 4])
-                w0, h0, mode, raster, err = _decode_raster(blob)
-                if err is not None:  # quarantine parity with decode_image/
-                    out = (blob * (16 // len(blob) + 1))[:16]  # resize_image
-                else:
-                    out = _resize_raster(w0, h0, mode, raster, 4, 4)
-                rows.append((did, w0, h0, mode, out))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "src_w", "src_h", "mode", "pixels"]
-            )
-
-    fused = docs.mapInPandas(
+    fused = map_rows(
+        docs,
         _roundtrip,
         TT.StructType()
         .add("media_id", "long", False)
@@ -4159,29 +4052,28 @@ def x54_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x55_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling over a REAL RIFF/AVI container codec
-    (multimodal.encode_avi / parse_avi / sample_avi_frames — avih +
-    strl headers, bottom-up 8-bpp DIB '00db' frames, idx1 offsets
-    cross-checked on decode): each document's chars become 8x8
-    grayscale frames at 8 fps, packed into a spec-compliant AVI in an
-    Arrow encode pass; ``sample_avi_frames`` re-parses the container
-    and fans out one row per 4th frame (the flatMap sampling
-    contract); a feature pass reduces each sampled frame to integer
-    luma sums BEFORE the only shuffle (per-doc aggregation), so raw
-    pixels never cross the wire. The oracle recomputes everything
-    arithmetically from the text bytes — a header-layout, row-flip,
-    stride, idx1, or sampling-cadence bug is a value mismatch (the
-    toprow_sum column exists precisely to catch a bottom-up/top-down
-    flip that luma_sum alone would miss). Swap the text→pixels stub
-    for a real compressed-video decode and the sampling pipeline is
-    unchanged — this is the keyframe-extraction shape of video-corpus
-    curation. Reference analog: none (engine extension; the reference
-    has no media path at all)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    (multimodal.encode_avi / parse_avi and the per-row sampler
+    ``sample_avi_frames`` runs — avih + strl headers, bottom-up 8-bpp
+    DIB '00db' frames, idx1 offsets cross-checked on decode): each
+    document's chars become 8x8 grayscale frames at 8 fps, packed into
+    a spec-compliant AVI; the sampler re-parses the container and fans
+    out one row per 4th frame (the flatMap sampling contract), each
+    reduced to integer luma sums BEFORE the only shuffle (per-doc
+    aggregation), so raw pixels never cross the wire. Encode, sample
+    and features are one row function in ONE ``map_rows`` pass: the
+    AVI bytes and the frames never leave the Python worker. The oracle
+    recomputes everything arithmetically from the text bytes — a
+    header-layout, row-flip, stride, idx1, or sampling-cadence bug is
+    a value mismatch (the toprow_sum column exists precisely to catch
+    a bottom-up/top-down flip that luma_sum alone would miss). Swap
+    the text→pixels stub for a real compressed-video decode and the
+    sampling pipeline is unchanged — this is the keyframe-extraction
+    shape of video-corpus curation. Reference analog: none (engine
+    extension; the reference has no media path at all)."""
     from pyspark.sql import types as TT
 
     from . import multimodal as MM
+    from .operators.rows import map_rows
 
     docs = (
         T(spark, sf_dir, "documents")
@@ -4190,21 +4082,12 @@ def x55_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)  # codec CPU >> I/O
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def avi(text: str) -> bytes:
-            px = bytes(ord(c) % 256 for c in text)
-            n = len(px) // 64
-            return MM.encode_avi([px[i * 64 : (i + 1) * 64] for i in range(n)], 8, 8)
-
-        for b in batches:
-            yield pd.DataFrame(
-                {"media_id": b["doc_id"], "content": [avi(t) for t in b["text"]]}
-            )
-
-    media = docs.mapInPandas(
-        _encode, TT.StructType().add("media_id", "long").add("content", "binary")
-    )
-    frames = MM.sample_avi_frames(media, every_n=4)
+    def _features(doc_id, text):
+        px = bytes(ord(c) % 256 for c in text)
+        frames = [px[i * 64 : (i + 1) * 64] for i in range(len(px) // 64)]
+        avi = MM.encode_avi(frames, 8, 8)
+        for _, _, n_frames, duration_ms, f in MM._sampled_avi_frames(avi, 4):
+            yield doc_id, n_frames, duration_ms, sum(f), sum(f[:8])
 
     feat_schema = (
         TT.StructType()
@@ -4214,20 +4097,7 @@ def x55_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .add("luma", "long")
         .add("toprow", "long")
     )
-
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["media_id"],
-                    "n_frames": b["n_frames"].astype("int64"),
-                    "duration_ms": b["duration_ms"].astype("int64"),
-                    "luma": [sum(bytes(x)) for x in b["frame"]],
-                    "toprow": [sum(bytes(x)[:8]) for x in b["frame"]],
-                }
-            )
-
-    feats = frames.mapInPandas(_feat, feat_schema)
+    feats = map_rows(docs, _features, feat_schema)
     return feats.groupBy("doc_id").agg(
         F.first("n_frames").alias("n_frames"),
         F.count(F.lit(1)).alias("n_sampled"),
@@ -5577,12 +5447,10 @@ def x78_rle_video_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats (H.264 etc.) remain out of scope like mp3.
     Scale: one Arrow-batched codec pass, per-doc integer aggregates
     computed inside it, no shuffle until the final row emit."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as TT
 
     from . import multimodal as MM
+    from .operators.rows import map_rows
 
     docs = (
         T(spark, sf_dir, "documents")
@@ -5600,24 +5468,21 @@ def x78_rle_video_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .add("rle_bytes", "long")
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows: dict[str, list] = {k: [] for k in out_schema.fieldNames()}
-        for b in batches:
-            for did, t in zip(b["doc_id"], b["text"]):
-                px = bytes(ord(c) % 256 for c in t)
-                nf = len(px) // 64
-                frames = [px[i * 64 : (i + 1) * 64] for i in range(nf)]
-                blob = MM.encode_avi(frames, 8, 8, codec="rle8")
-                v = MM.parse_avi(blob)  # decode proves the codec
-                assert v["codec"] == "rle8" and v["frames"] == frames
-                rows["doc_id"].append(did)
-                rows["n_frames"].append(nf)
-                rows["luma_sum"].append(sum(sum(f) for f in v["frames"]))
-                rows["toprow_sum"].append(sum(sum(f[:8]) for f in v["frames"]))
-                rows["rle_bytes"].append(sum(v["frame_bytes"]))
-        yield pd.DataFrame(rows)
+    def _roundtrip(doc_id, t):
+        px = bytes(ord(c) % 256 for c in t)
+        nf = len(px) // 64
+        frames = [px[i * 64 : (i + 1) * 64] for i in range(nf)]
+        v = MM.parse_avi(MM.encode_avi(frames, 8, 8, codec="rle8"))  # decode proves the codec
+        assert v["codec"] == "rle8" and v["frames"] == frames
+        return [(
+            doc_id,
+            nf,
+            sum(sum(f) for f in v["frames"]),
+            sum(sum(f[:8]) for f in v["frames"]),
+            sum(v["frame_bytes"]),
+        )]
 
-    return docs.mapInPandas(_roundtrip, out_schema)
+    return map_rows(docs, _roundtrip, out_schema)
 
 
 @register(
@@ -5659,12 +5524,10 @@ def x79_adpcm_audio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform codecs (mp3 etc.) stay out of scope.
     Scale: one Arrow-batched codec pass, per-doc integer aggregates
     computed inside it, no shuffle until the final row emit."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as TT
 
     from . import multimodal as MM
+    from .operators.rows import map_rows
 
     docs = (
         T(spark, sf_dir, "documents")
@@ -5682,25 +5545,14 @@ def x79_adpcm_audio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .add("anchor_sum", "long")
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        spb = MM._ADPCM_SAMPLES_PER_BLOCK
-        rows: dict[str, list] = {k: [] for k in out_schema.fieldNames()}
-        for b in batches:
-            for did, t in zip(b["doc_id"], b["text"]):
-                pcm = [(ord(c) % 256 - 128) * 256 for c in t]
-                blob = MM.encode_wav_adpcm(pcm)
-                v = MM.parse_wav_adpcm(blob)  # full decode proves the codec
-                dec = v["samples"]
-                rows["doc_id"].append(did)
-                rows["n_samples"].append(v["n_samples"])
-                rows["adpcm_data_bytes"].append(v["data_bytes"])
-                rows["first_sample"].append(dec[0])
-                rows["anchor_sum"].append(
-                    sum(dec[i] for i in range(0, len(dec), spb))
-                )
-        yield pd.DataFrame(rows)
+    def _roundtrip(doc_id, t):
+        pcm = [(ord(c) % 256 - 128) * 256 for c in t]
+        v = MM.parse_wav_adpcm(MM.encode_wav_adpcm(pcm))  # full decode proves the codec
+        dec = v["samples"]
+        anchors = dec[:: MM._ADPCM_SAMPLES_PER_BLOCK]
+        return [(doc_id, v["n_samples"], v["data_bytes"], dec[0], sum(anchors))]
 
-    return docs.mapInPandas(_roundtrip, out_schema)
+    return map_rows(docs, _roundtrip, out_schema)
 
 
 @register(

@@ -520,37 +520,23 @@ def p7_binary_pdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pdf_roundtrip(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     """Shared p8/p9/p10 body: build each document's PDF bytes and decode
-    them back in ONE ``mapInPandas`` pass (``extract_batches(_encode())``
-    composition — r11, guide §4.1). The PDF payload previously crossed
-    Python→JVM→Arrow→Python between the encode pass and
-    ``binary_docs_to_text`` solely to be parsed back; now only
-    (doc_id, text) enters Python and (doc_path, text, decode_error)
-    leaves. Both real codec steps run unchanged."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from .parse.pdf_source import EXTRACT_SCHEMA, extract_batches
+    them back in ONE ``map_rows`` pass (``build`` composed with
+    ``pdf_source._extract_row`` — guide §4.1). Only (doc_id, text)
+    enters Python and (doc_path, text, decode_error) leaves; the PDF
+    payload never crosses back to the JVM. Both real codec steps run
+    unchanged."""
+    from .operators.rows import map_rows
+    from .parse.pdf_source import EXTRACT_SCHEMA, _extract_row
 
     docs = T(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.rtrim(F.col("text"), F.lit("\n")) != "")
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "path": "/docs/" + b["doc_id"].astype(str) + ".pdf",
-                    "content": [build(t) for t in b["text"]],
-                }
-            )
-
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return extract_batches(_encode(batches))
-
-    decoded = docs.select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism  # codec CPU >> I/O: fan the
-    ).mapInPandas(_roundtrip, EXTRACT_SCHEMA)  # single-file scan out over every core
+    decoded = map_rows(
+        # codec CPU >> I/O: fan the single-file scan out over every core
+        docs.select("doc_id", "text").repartition(spark.sparkContext.defaultParallelism),
+        lambda doc_id, text: _extract_row(f"/docs/{doc_id}.pdf", build(text)),
+        EXTRACT_SCHEMA,
+    )
     return decoded.filter(F.col("decode_error").isNull()).select(
         F.regexp_extract("doc_path", r"/docs/(\d+)\.pdf", 1).cast("bigint").alias("doc_id"),
         F.md5(F.encode("text", "utf-8")).alias("fp"),
@@ -579,7 +565,7 @@ def p8_real_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference: ``extractors/bb_statement.py:28-31``). Empty docs are
     excluded on both sides: a PDF with no text shown yields no text.
 
-    Scale: encode and decode compose into ONE Arrow-batched mapInPandas
+    Scale: encode and decode compose into ONE Arrow-batched ``map_rows``
     pass over whatever partitioning the scan produced — no shuffle, no
     collect; the PDF bytes never leave the Python worker (r11,
     ``_pdf_roundtrip``)."""
@@ -612,7 +598,7 @@ def p9_cid_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end (ref first-touch: ``extractors/bb_statement.py:28-31``;
     real bank PDFs ship exactly these structures).
 
-    Scale: identical to p8 — one fused Arrow-batched mapInPandas pass,
+    Scale: identical to p8 — one fused Arrow-batched ``map_rows`` pass,
     no shuffle, payload never leaves the worker (r11,
     ``_pdf_roundtrip``)."""
     from .parse.minipdf import build_pdf_cid
@@ -642,7 +628,7 @@ def p10_encrypted_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole §7.6.3 path; a key-derivation or RC4 bug yields zlib garbage
     and a decode_error, failing the row count.
 
-    Scale: identical to p8/p9 — one fused Arrow-batched mapInPandas
+    Scale: identical to p8/p9 — one fused Arrow-batched ``map_rows``
     pass, no shuffle, payload never leaves the worker (r11,
     ``_pdf_roundtrip``)."""
     from .parse.minipdf import build_pdf_encrypted
@@ -694,16 +680,14 @@ def p11_bank_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the five-stage chain (key derivation, CMap, regex, forward-fill,
     rule order, money parse) lands in a wrong count or cent sum.
 
-    Scale: the two codec passes are Arrow-batched mapInPandas with a
+    Scale: the two codec passes are Arrow-batched ``map_rows`` with a
     repartition fan-out (payload dropped at decode); the decoded text
     crosses one exchange that the parser's branches share, so the codec
     runs once per document; parse and categorize are native column
     expressions; the report is a |categories|-row final groupBy."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as TT
 
+    from .operators.rows import map_rows
     from .parse.minipdf import build_pdf_encrypted
     from .parse.pdf_source import binary_docs_to_text
 
@@ -745,17 +729,9 @@ def p11_bank_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- stage 2: seal into encrypted PDF containers
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "path": "/bank/" + b["doc_id"].astype(str) + ".pdf",
-                    "content": [build_pdf_encrypted(t) for t in b["text"]],
-                }
-            )
-
-    binary = docs.select("doc_id", "text").mapInPandas(
-        _encode,
+    binary = map_rows(
+        docs.select("doc_id", "text"),
+        lambda doc_id, text: [(f"/bank/{doc_id}.pdf", build_pdf_encrypted(text))],
         TT.StructType(
             [
                 TT.StructField("path", TT.StringType(), False),

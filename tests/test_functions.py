@@ -71,6 +71,15 @@ def test_find_first_and_date_after_keyword(spark):
     assert one(spark, FX.find_first(line, r"Total R\$ ([\d.,]+)")) == "1.234,56"
     assert one(spark, FX.find_date_after_keyword(line, "Vencimento:")) == "10/06/2024"
     assert one(spark, FX.find_date_after_keyword(line, "Ausente:")) is None
+    # (?im) by default, group trimmed, blank -> NULL
+    assert one(spark, FX.find_first(F.lit("a\nTOTAL:  9,90 \n"), r"^total:(.*)$")) == "9,90"
+    assert one(spark, FX.find_first(F.lit("Total:   "), r"Total:(.*)")) is None
+    assert one(spark, FX.find_first(F.lit("TOTAL: 1"), r"total: (\d)", "s")) is None
+
+
+def test_null_if_blank(spark):
+    assert one(spark, FX.null_if_blank(F.lit("   "))) is None
+    assert one(spark, FX.null_if_blank(F.lit(" x "))) == " x "
 
 
 def test_assemble_partial_date(spark):

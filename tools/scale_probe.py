@@ -587,8 +587,8 @@ def probe_codec(spark, sf_dir: str, mult: int, tmp: str) -> None:
     """Python-codec family at mult x documents — the one family whose
     scale story had bench points but no scaling row. Each entry
     encodes every document into a REAL container (PDF / PNG / RLE8
-    AVI / ADPCM WAV / RIFF) and decodes it back through the
-    Arrow-batched mapInPandas passes, so work is per-document
+    AVI / ADPCM WAV / RIFF / BMP) and decodes it back through one
+    Arrow-batched ``map_rows`` pass, so work is per-document
     Python-bound: the pass criterion is throughput (docs/s) holding
     flat-or-better as the corpus grows (no shuffle, no collect — the
     plan is embarrassingly parallel, fixed spawn cost amortizes).
@@ -600,6 +600,8 @@ def probe_codec(spark, sf_dir: str, mult: int, tmp: str) -> None:
     qs = registry()
     names = [
         "x22_media_metadata",        # RIFF/WAVE header build + sniff-back
+        "x45_image_phash_dedup",     # BMP encode/decode + dHash
+        "x55_video_frame_sample",    # DIB AVI frames, every 4th sampled
         "p8_real_pdf_roundtrip",     # real %PDF write + extract
         "x52_png_roundtrip",         # PNG encode/decode, all filters
         "x78_rle_video_roundtrip",   # MS-RLE8 AVI frames
